@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import hashlib
 import os
-import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,12 +52,18 @@ def bucketed_table(
     The pre-write ``repartition(n_buckets, bucket_cols)`` aligns the
     task partitioning with the bucket hash (both are Murmur3 on the
     columns), so each bucket lands in ONE file — the layout that also
-    permits sorted-scan reads. ``corpus_key`` must change when the
-    source data does (callers pass path + mtime).
+    permits sorted-scan reads. ``corpus_key`` is required and must
+    change when the source data does (callers pass path + mtime).
+
+    The layout keeps its own path scheme rather than
+    ``staging.stored_index``: the directory backs a registered catalog
+    table, which an index-root sweep must never reap.
     """
+    if not corpus_key:
+        raise ValueError("bucketed_table: corpus key is required")
     cols = list(bucket_cols)
     digest = hashlib.md5(
-        repr((base_name, cols, n_buckets, corpus_key or "anon")).encode()
+        repr((base_name, cols, n_buckets, corpus_key)).encode()
     ).hexdigest()[:20]
     name = f"bkt_{base_name}_{digest}"
     if spark.catalog.tableExists(name):

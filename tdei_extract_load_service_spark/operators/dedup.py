@@ -1437,7 +1437,6 @@ def embedding_lsh_pairs(
 
 
 _FP_INDEX_ROOT = "/tmp/spark_graft_fp_index"
-_FP_INDEX_CACHE: dict = {}
 
 
 def build_fingerprint_index(
@@ -1450,49 +1449,30 @@ def build_fingerprint_index(
     """Write-once stored exact-dedup state (VERDICT r9 #5): one row per
     distinct content hash with its survivor id and duplicate count —
     ``dedup_exact_groups``'s output — as parquet partitioned by an
-    xxhash64 bucket of the content hash, atomically published via
-    ``staged_build``. This is the state a nightly 100 TB ingest carries
-    BETWEEN runs: tonight's delta shard joins against it instead of
-    re-scanning yesterday's corpus.
+    xxhash64 bucket of the content hash, published through
+    ``staging.stored_index`` (``corpus_key`` is required). This is the
+    state a nightly 100 TB ingest carries BETWEEN runs: tonight's delta
+    shard joins against it instead of re-scanning yesterday's corpus.
 
     Scale shape: the index rows are (hash, id, count) — never document
     payloads — so even a trillion-doc survivor state is a compact
     hash-wide table; the bucket partitioning gives membership probes a
     pruned read and keeps any downstream equi-join's shuffle aligned."""
-    import hashlib
-    import os
+    from tdei_extract_load_service_spark.operators.staging import stored_index
 
-    from tdei_extract_load_service_spark.operators.staging import (
-        staged_build,
-        sweep_index_root,
-        touch_snapshot,
-    )
+    def build(tmp: str) -> None:
+        dedup_exact_groups(df, id_col, content_cols).withColumn(
+            "fp_bucket",
+            F.pmod(F.xxhash64("content_hash"), F.lit(n_buckets)).cast("int"),
+        ).write.mode("overwrite").partitionBy("fp_bucket").parquet(tmp)
 
     # id_col is part of the key (ADVICE r10): two builds over the same
     # corpus differing only in survivor-id column are DIFFERENT indexes.
-    key = (corpus_key or "anon", id_col, tuple(content_cols), n_buckets)
-    hit = _FP_INDEX_CACHE.get(key)
-    if hit is not None and os.path.exists(os.path.join(hit, "_SUCCESS")):
-        return touch_snapshot(hit)
-    digest = hashlib.md5(repr(key).encode()).hexdigest()[:24]
-    path = os.path.join(_FP_INDEX_ROOT, digest)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        groups = dedup_exact_groups(df, id_col, content_cols)
-        with staged_build(path) as tmp:
-            groups.withColumn(
-                "fp_bucket",
-                F.pmod(F.xxhash64("content_hash"), F.lit(n_buckets)).cast(
-                    "int"
-                ),
-            ).write.mode("overwrite").partitionBy("fp_bucket").parquet(tmp)
-        # index lifecycle (VERDICT r10 #6): every publish sweeps its
-        # root — tombstone cold snapshots beyond retention, reap ripe
-        # tombstones and dead builders' orphans
-        sweep_index_root(_FP_INDEX_ROOT, keep_latest=8)
-    else:
-        touch_snapshot(path)
-    _FP_INDEX_CACHE[key] = path
-    return path
+    return stored_index(
+        _FP_INDEX_ROOT,
+        (corpus_key, id_col, tuple(content_cols), n_buckets),
+        build,
+    )
 
 
 def dedup_incremental(
@@ -1550,7 +1530,6 @@ def merge_survivor_states(current: DataFrame, delta: DataFrame) -> DataFrame:
 
 
 _EMB_LSH_INDEX_ROOT = "/tmp/spark_graft_emb_lsh"
-_EMB_LSH_INDEX_CACHE: dict = {}
 
 
 def build_embedding_lsh_index(
@@ -1570,7 +1549,8 @@ def build_embedding_lsh_index(
     postings (``text.bm25_topk_stored``): the banded frame
     ``(id, vec, _nrm, _b0.._b{n-1})`` is materialized ONCE per corpus as
     parquet partitioned by ``_pre`` (the top ``prefix_bits`` bits of the
-    band-0 bucket) and atomically published via ``staged_build``.
+    band-0 bucket) and published through ``staging.stored_index``
+    (``corpus_key`` is required).
 
     What the store buys at steady state: the banding computation —
     ``n_bands * planes_per_band`` 64-wide dot-product folds per row plus
@@ -1605,7 +1585,7 @@ def build_embedding_lsh_index(
     import os
 
     from tdei_extract_load_service_spark.operators.similarity import make_planes
-    from tdei_extract_load_service_spark.operators.staging import staged_build
+    from tdei_extract_load_service_spark.operators.staging import stored_index
 
     if planes_per_band is None:
         if planes is not None:
@@ -1619,35 +1599,9 @@ def build_embedding_lsh_index(
     if len(planes) != n_bands * planes_per_band:
         raise ValueError("need n_bands * planes_per_band planes")
     planes_key = hashlib.md5(repr(planes).encode()).hexdigest()[:16]
-    # id_col/vec_col/prefix_bits are part of the key (ADVICE r10): a
-    # cache hit on a key omitting them would silently serve an index
-    # built with a different id column or partition-prefix width.
-    from tdei_extract_load_service_spark.operators.staging import (
-        sweep_index_root,
-        touch_snapshot,
-    )
-
-    key = (
-        corpus_key or "anon",
-        id_col,
-        vec_col,
-        n_bands,
-        planes_per_band,
-        dim,
-        prefix_bits,
-        planes_key,
-        replicate_bands,
-    )
-    hit = _EMB_LSH_INDEX_CACHE.get(key)
-    if hit is not None and os.path.exists(os.path.join(hit, "_meta.json")):
-        return touch_snapshot(hit)
-    digest = hashlib.md5(repr(key).encode()).hexdigest()[:24]
-    path = os.path.join(_EMB_LSH_INDEX_ROOT, digest)
     shift = max(planes_per_band - prefix_bits, 0)
-    fresh_build = not os.path.exists(os.path.join(path, "_meta.json"))
-    if not fresh_build:
-        touch_snapshot(path)
-    if fresh_build:
+
+    def build(tmp: str) -> None:
         banded = spread(df).select(
             _col(id_col).alias("id"),
             _col(vec_col).alias("vec"),
@@ -1675,26 +1629,35 @@ def build_embedding_lsh_index(
                 "_pre", F.shiftright(F.col("_b0"), shift)
             )
             part_cols = ["_pre"]
-        with staged_build(path, marker="_meta.json") as tmp:
-            banded.write.mode("overwrite").partitionBy(*part_cols).parquet(
-                tmp
+        banded.write.mode("overwrite").partitionBy(*part_cols).parquet(tmp)
+        with open(os.path.join(tmp, "_meta.json"), "w") as fh:
+            json.dump(
+                {
+                    "n_bands": n_bands,
+                    "planes_per_band": planes_per_band,
+                    "dim": dim,
+                    "prefix_shift": shift,
+                    "planes": planes,
+                    "replicated": replicate_bands,
+                },
+                fh,
             )
-            with open(os.path.join(tmp, "_meta.json"), "w") as fh:
-                json.dump(
-                    {
-                        "n_bands": n_bands,
-                        "planes_per_band": planes_per_band,
-                        "dim": dim,
-                        "prefix_shift": shift,
-                        "planes": planes,
-                        "replicated": replicate_bands,
-                    },
-                    fh,
-                )
-        # index lifecycle (VERDICT r10 #6): sweep on publish
-        sweep_index_root(_EMB_LSH_INDEX_ROOT, keep_latest=8)
-    _EMB_LSH_INDEX_CACHE[key] = path
-    return path
+
+    # id_col/vec_col/prefix_bits are part of the key (ADVICE r10): a
+    # hit on a key omitting them would silently serve an index built
+    # with a different id column or partition-prefix width.
+    key = (
+        corpus_key,
+        id_col,
+        vec_col,
+        n_bands,
+        planes_per_band,
+        dim,
+        prefix_bits,
+        planes_key,
+        replicate_bands,
+    )
+    return stored_index(_EMB_LSH_INDEX_ROOT, key, build, marker="_meta.json")
 
 
 def _emb_lsh_meta(index_path: str) -> dict:

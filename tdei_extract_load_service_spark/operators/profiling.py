@@ -583,7 +583,6 @@ def heavy_hitters(
 
 
 _HLL_ROLLUP_ROOT = "/tmp/spark_graft_hll_rollup"
-_HLL_ROLLUP_CACHE: dict = {}
 
 
 def build_distinct_sketch_partials(
@@ -599,40 +598,26 @@ def build_distinct_sketch_partials(
     Datasketches HLL per bucket (``hll_sketch_agg`` — register-max
     merge, associative/commutative, so executor order cannot change a
     register), and the (bucket, sketch) frame — KBs per bucket — is
-    published via ``staged_build``. Every later window query merges the
+    published through ``staging.stored_index`` (``corpus_key`` is
+    required). Every later window query merges the
     stored partials instead of re-scanning the facts; HLL union is
     LOSSLESS w.r.t. the sketch (union of sketches == sketch of the
     union, register-for-register), so a rollup answer is bit-identical
     to sketching the raw window — pinned in pytest, alongside the
     error bound against exact distinct counts."""
-    import hashlib
-    import os
+    from tdei_extract_load_service_spark.operators.staging import stored_index
 
-    from tdei_extract_load_service_spark.operators.staging import (
-        staged_build,
-        sweep_index_root,
-        touch_snapshot,
-    )
-
-    key = (corpus_key or "anon", key_col, lg_k)
-    hit = _HLL_ROLLUP_CACHE.get(key)
-    if hit is not None and os.path.exists(os.path.join(hit, "_SUCCESS")):
-        return touch_snapshot(hit)
-    digest = hashlib.md5(repr(key).encode()).hexdigest()[:24]
-    path = os.path.join(_HLL_ROLLUP_ROOT, digest)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        partials = (
+    def build(tmp: str) -> None:
+        (
             df.select(bucket.alias("bucket"), F.col(key_col).alias("_k"))
             .groupBy("bucket")
             .agg(F.hll_sketch_agg("_k", F.lit(lg_k)).alias("sketch"))
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(tmp)
         )
-        with staged_build(path) as tmp:
-            partials.coalesce(1).write.mode("overwrite").parquet(tmp)
-        sweep_index_root(_HLL_ROLLUP_ROOT, keep_latest=8)
-    else:
-        touch_snapshot(path)
-    _HLL_ROLLUP_CACHE[key] = path
-    return path
+
+    return stored_index(_HLL_ROLLUP_ROOT, (corpus_key, key_col, lg_k), build)
 
 
 def distinct_rollup(

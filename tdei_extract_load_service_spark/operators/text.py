@@ -10,7 +10,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from tdei_extract_load_service_spark.operators.staging import staged_build
 
 #: BPE-ish token pattern: letter runs, single digits, single punctuation —
 #: the shape (not the vocab) of byte-pair pretokenizers.  The whitespace
@@ -1326,9 +1325,6 @@ def lm_bigram_score(
     )
 
 
-#: session-lifetime BM25 index cache: (corpus_key, n_buckets) -> meta
-_BM25_INDEX_CACHE: dict = {}
-
 #: (app id, terms, n_buckets) -> sorted bucket ids. The buckets are the
 #: ENGINE's xxhash64 over the QUERY LITERALS (never over corpus data),
 #: so memoizing them is plan construction, not result caching — but the
@@ -1420,31 +1416,17 @@ def build_bm25_index(
     100 TB the inline form re-tokenizes the corpus per query and is not
     a query at all; the stored form is — the PQ lesson again.
 
-    Caching: content-addressed under /tmp, reused across processes
-    (postings are a pure function of the corpus), concurrent builders
-    atomically rename; ``corpus_key`` must change when the corpus does
-    (callers pass source path + mtime)."""
-    import hashlib
+    Caching: ``staging.stored_index`` keyed on (corpus, n_buckets),
+    reused across processes (postings are a pure function of the
+    corpus); N and avgdl are read back from the directory's
+    ``_meta.json``. ``corpus_key`` is required and must change when the
+    corpus does (callers pass source path + mtime)."""
     import json
     import os
 
-    from tdei_extract_load_service_spark.operators.staging import (
-        sweep_index_root,
-        touch_snapshot,
-    )
+    from tdei_extract_load_service_spark.operators.staging import stored_index
 
-    key = (corpus_key or "anon", n_buckets)
-    hit = _BM25_INDEX_CACHE.get(key)
-    if hit is not None and os.path.exists(
-        os.path.join(hit[0], "_meta.json")
-    ):
-        touch_snapshot(hit[0])
-        return hit
-    digest = hashlib.md5(repr(key).encode()).hexdigest()[:24]
-    root = "/tmp/spark_graft_bm25_index"
-    path = os.path.join(root, digest)
-    meta_path = os.path.join(path, "_meta.json")
-    if not os.path.exists(meta_path):
+    def build(tmp: str) -> None:
         ws = _WS_CLASS
         dl = docs.select(
             _col(id_col).alias("doc_id"),
@@ -1475,27 +1457,27 @@ def build_bm25_index(
         dfreq = tf.groupBy("term", "term_bucket").agg(
             F.count("*").alias("df")
         )
-        with staged_build(path, marker="_meta.json") as tmp:
+        try:
             tf.write.mode("overwrite").partitionBy("term_bucket").parquet(
                 os.path.join(tmp, "postings")
             )
             dfreq.write.mode("overwrite").partitionBy(
                 "term_bucket"
             ).parquet(os.path.join(tmp, "df"))
+        finally:
             tf.unpersist()
-            with open(os.path.join(tmp, "_meta.json"), "w") as fh:
-                json.dump(
-                    {"n_docs": int(n_docs), "avgdl": float(avgdl)}, fh
-                )
-        # index lifecycle (VERDICT r10 #6): sweep on publish
-        sweep_index_root(root, keep_latest=8)
-    else:
-        touch_snapshot(path)
-    with open(meta_path) as fh:
+        with open(os.path.join(tmp, "_meta.json"), "w") as fh:
+            json.dump({"n_docs": int(n_docs), "avgdl": float(avgdl)}, fh)
+
+    path = stored_index(
+        "/tmp/spark_graft_bm25_index",
+        (corpus_key, n_buckets),
+        build,
+        marker="_meta.json",
+    )
+    with open(os.path.join(path, "_meta.json")) as fh:
         meta = json.load(fh)
-    out = (path, meta["n_docs"], meta["avgdl"])
-    _BM25_INDEX_CACHE[key] = out
-    return out
+    return path, meta["n_docs"], meta["avgdl"]
 
 
 def bm25_topk_stored(

@@ -25,18 +25,12 @@ Everything is exact-integer and engine-independent:
 
 from __future__ import annotations
 
-import hashlib
-import os
-import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tdei_extract_load_service_spark.operators.staging import staged_build
-
-#: (spec, corpus_key) -> path, mirroring _PQ_INDEX_CACHE
-_ZORDER_CACHE: dict[tuple, str] = {}
+from tdei_extract_load_service_spark.operators.staging import stored_index
 
 
 @dataclass(frozen=True)
@@ -94,40 +88,24 @@ def build_zorder_layout(
     df: DataFrame, spec: ZorderSpec, corpus_key: str
 ) -> str:
     """Materialize ``df`` partitioned by its z-order directory id —
-    write-once per (corpus, spec), content-addressed under /tmp and
-    atomically renamed (concurrent builders produce identical bytes; the
-    loser's tmp dir is dropped), exactly the stored-PQ-index discipline.
+    write-once per (corpus, spec) through ``staging.stored_index``,
+    exactly the stored-PQ-index discipline (``corpus_key`` is required).
 
     Scale shape: ONE pass — the z_dir column is a pure integer
     projection, the write's only movement is the partitioned file
     routing. The directory count is bounded by 2^(2*bits - dir_shift)
     (64 for the defaults), independent of data volume."""
-    from tdei_extract_load_service_spark.operators.staging import (
-        sweep_index_root,
-        touch_snapshot,
-    )
+    if not corpus_key:
+        raise ValueError("build_zorder_layout: corpus key is required")
 
-    key = (spec, corpus_key)
-    hit = _ZORDER_CACHE.get(key)
-    if hit is not None and os.path.exists(os.path.join(hit, "_SUCCESS")):
-        return touch_snapshot(hit)
-    digest = hashlib.md5(repr(key).encode()).hexdigest()[:24]
-    root = "/tmp/spark_graft_zorder"
-    path = os.path.join(root, digest)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        # staged_build reaps the tmp dir on failure and re-raises a
-        # rename error unless a concurrent winner published (ADVICE r9:
-        # never cache a path the rename did not actually produce)
-        with staged_build(path) as tmp:
-            df.withColumn("z_dir", z_dir_expr(spec)).write.mode(
-                "overwrite"
-            ).partitionBy("z_dir").parquet(tmp)
-        # index lifecycle (VERDICT r10 #6): sweep on publish
-        sweep_index_root(root, keep_latest=8)
-    else:
-        touch_snapshot(path)
-    _ZORDER_CACHE[key] = path
-    return path
+    def build(tmp: str) -> None:
+        df.withColumn("z_dir", z_dir_expr(spec)).write.mode(
+            "overwrite"
+        ).partitionBy("z_dir").parquet(tmp)
+
+    # key order predates stored_index's corpus-key-first convention;
+    # kept so published layouts keep their paths
+    return stored_index("/tmp/spark_graft_zorder", (spec, corpus_key), build)
 
 
 def zorder_dirs_for_rect(

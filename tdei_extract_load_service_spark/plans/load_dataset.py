@@ -280,6 +280,9 @@ def load_dataset(
         else:
             overwrite_by_key(df, os.path.join(warehouse, table))
 
+    # the persisted frames are released on EVERY exit — a failed load
+    # (malformed entry, sink error) must not leak its cached blocks
+    entries = features = None
     try:
         # -- pre-delete: wipe all prior rows of this dataset (O17,
         # delete_dataset_records_by_id extract-load-service.ts:290-295 —
@@ -552,8 +555,6 @@ def load_dataset(
             txn.commit()
             timings["commit"] = time.perf_counter() - t0
 
-        features.unpersist()
-        entries.unpersist()
         return LoadResult(
             success=True,
             message="Extract load request processed successfully",
@@ -582,3 +583,7 @@ def load_dataset(
             tdei_dataset_id=tdei_dataset_id,
             timings={k: round(v, 4) for k, v in timings.items()},
         )
+    finally:
+        for cached in (features, entries):
+            if cached is not None:
+                cached.unpersist()

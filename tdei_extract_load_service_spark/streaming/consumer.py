@@ -49,9 +49,19 @@ def process_request(
     the reference's one DB transaction per message."""
     data = message.get("data") or {}
     data_type = data.get("data_type")
+    # a field the file source could not find arrives as null; either
+    # fault must publish a failure, not fail the whole micro-batch
+    missing = [
+        f for f in ("file_upload_path", "tdei_dataset_id")
+        if not isinstance(data.get(f), str) or not data[f]
+    ]
     if data_type not in SUPPORTED_DATA_TYPES:
         # reference behavior: flex/pathways throw "Method not implemented."
         result_success, result_message = False, f"Method not implemented for data_type: {data_type}"
+    elif missing:
+        result_success, result_message = (
+            False, f"Invalid request: {', '.join(missing)} must be a non-empty string"
+        )
     else:
         result = load_dataset(
             spark,

@@ -226,6 +226,23 @@ def test_malformed_geojson_entry_fails(spark, tmp_path):
     assert "lines.geojson" in result.message
 
 
+def test_failed_loads_release_cached_frames(spark, tmp_path):
+    """A load that fails after persisting its frames (here: the malformed
+    gate, which runs after the entries are cached) must unpersist them —
+    a consumer draining many bad archives must not grow the cache."""
+    jsc = spark.sparkContext._jsc
+    start = jsc.getPersistentRDDs().size()
+    for i in range(3):
+        archive = str(tmp_path / f"bad{i}.zip")
+        make_zip(archive, {
+            "nodes.geojson": json.dumps(NODES),
+            f"broken{i}.geojson": '{"type": "FeatureCollection", [' + "x" * i,
+        })
+        result = load_dataset(spark, archive, f"ds-leak-{i}", "u", str(tmp_path / "wh"))
+        assert not result.success and f"broken{i}.geojson" in result.message
+        assert jsc.getPersistentRDDs().size() == start
+
+
 def test_reload_clears_disappeared_kind(spark, tmp_path):
     # O17 pre-delete semantics: a kind present in load 1 but absent in
     # load 2 must leave NO stale rows (dynamic overwrite alone would)

@@ -225,6 +225,38 @@ def test_stored_index_serving_matches_inline(spark, tmp_path):
     assert probe_centroids(model_rows, query, 3)  # model rows round-trip
 
 
+def test_stored_pq_hit_reads_model_from_meta(spark, tmp_path):
+    """The centroid model is stored beside the codes: a call that finds
+    the index on disk (any later call, or a fresh process) runs NO Spark
+    job and returns the same model the build collected."""
+    from tests.conftest import SF_SMOKE
+
+    from tdei_extract_load_service_spark.operators.similarity import (
+        build_pq_index,
+        ivf_centroids,
+    )
+
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    cbs = make_codebooks()
+    kw = dict(num_centroids=8, corpus_key=f"test-meta:{tmp_path}")
+    path, built = build_pq_index(emb, "vec_id", "embedding", cbs, **kw)
+    sc = spark.sparkContext
+    group = f"pq-hit-{tmp_path.name}"
+    sc.setJobGroup(group, "stored PQ hit")
+    try:
+        again, rows = build_pq_index(emb, "vec_id", "embedding", cbs, **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert again == path
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    want = [
+        (int(r["centroid_id"]), [float(x) for x in r["centroid_vec"]])
+        for r in ivf_centroids(emb, "vec_id", "embedding", 8).collect()
+    ]
+    for got in (built, rows):
+        assert [(r.centroid_id, r.centroid_vec) for r in got] == want
+
+
 def test_trained_entry_uplift_pinned_at_sf001(spark):
     """The similarity_pq_trained catalog entry's exact config (m=16,
     sample=1024, iters=5) must keep its measured uplift at the driver's

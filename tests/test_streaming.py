@@ -378,6 +378,37 @@ def test_consumer_arg_validation_before_side_effects(spark, tmp_path):
     assert not (tmp_path / "resp").exists()
 
 
+def test_invalid_request_publishes_failure_without_loading(spark, monkeypatch):
+    """A request without a usable file_upload_path or tdei_dataset_id is
+    answered with a failure response and never reaches the load: a
+    missing key used to raise KeyError (failing the whole foreachBatch),
+    and a null dataset id — what the file source delivers for an absent
+    field — ran the pre-delete and the persists before failing."""
+    from tdei_extract_load_service_spark.streaming import consumer
+
+    def no_load(*args, **kwargs):
+        raise AssertionError("an invalid request must not start a load")
+
+    monkeypatch.setattr(consumer, "load_dataset", no_load)
+    base = {"data_type": "osw", "file_upload_path": "/x.zip",
+            "tdei_dataset_id": "ds-1", "user_id": "u1"}
+    cases = [
+        ("file_upload_path", {k: v for k, v in base.items() if k != "file_upload_path"}),
+        ("file_upload_path", {**base, "file_upload_path": ""}),
+        ("tdei_dataset_id", {**base, "tdei_dataset_id": None}),
+        ("tdei_dataset_id", {**base, "tdei_dataset_id": 7}),
+    ]
+    for field, data in cases:
+        message = {"messageId": "m", "messageType": "workflow", "data": data}
+        response = consumer.process_request(spark, message, "/unused")
+        assert response["messageId"] == "m"
+        assert response["data"]["success"] is False
+        assert "Invalid request" in response["data"]["message"]
+        assert field in response["data"]["message"]
+        # the response is the request mutated, never a new envelope
+        assert {k: response["data"][k] for k in data} == data
+
+
 def test_failure_publish_soak_concurrent_malformed(spark, tmp_path):
     """Failure-path publish ordering soak (VERDICT r8 #5; reference test
     'should publish message if any error occurs',
