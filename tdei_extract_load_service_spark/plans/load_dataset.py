@@ -4,29 +4,36 @@ recomposed Spark-first.
 Reference lifecycle (extract-load-service.ts:242-345): message → pre-delete
 → BEGIN → zip stream → per-entry token pipeline → per-kind batched INSERTs
 → per-file metadata → COMMIT → stats proc → publish. Here the same
-semantics are one declarative plan per stage:
+semantics run as one pass over the data plus one job per sink:
 
-    binaryFile → zip_fanout → route_case → explode(features) →
-    decompose → strip-Z/elevation → per-kind key-scoped overwrite →
-    metadata pivot → stats aggregation → result dict
+    binaryFile → zip_fanout (entry text + header) → route_case → cache
+    → gate pass (malformed entries, headers, feature count per entry)
+    → per kind: explode(features) → decompose → strip-Z/elevation →
+      key-scoped overwrite (elevation count observed on the write)
+    → extension-file rows, dataset metadata row, stats row → result dict
+
+Nothing is read twice just to count it: the gate's per-entry counts size
+the writes and fill the stats, and an archive of at most 1 MB runs at
+most ``1 + kinds + 3`` jobs with no shuffle.
 
 Atomicity: the reference wraps all inserts in one Postgres transaction
 (O18). Spark's analogue here is per-sink dynamic-partition overwrite keyed
 on the dataset (each dataset's partition directory swap is the commit
 point), with ``sinks.writers.staged_swap_write`` available when one commit
 must span sinks. Stage timers mirror the reference's ``console.time``
-instrumentation (:301,:322,:327,:336).
+instrumentation (:301,:322,:327,:336); ``transform`` times plan
+construction only, since its execution happens inside the ``load`` writes.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import time
 from dataclasses import dataclass, field
+from functools import partial
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -37,7 +44,7 @@ from tdei_extract_load_service_spark.sources.geojson import (
     assemble_feature_json,
     decompose_feature,
     explode_features,
-    header_json,
+    feature_count,
 )
 from tdei_extract_load_service_spark.sources.zip_fanout import (
     read_zip_archives,
@@ -132,23 +139,6 @@ class LoadResult:
     tdei_dataset_id: str
     feature_counts: dict[str, int] = field(default_factory=dict)
     timings: dict[str, float] = field(default_factory=dict)
-
-
-@F.pandas_udf(T.StringType())
-def _meta_json_udf(header: pd.Series) -> pd.Series:
-    """Metadata projection value coercion: null header values -> ''
-    (updateAdditionalFileData/updateExtensionFileData,
-    extract-load-service.ts:500,:521)."""
-
-    def one(h: str | None) -> str | None:
-        if h is None:
-            return None
-        doc = json.loads(h)
-        return json.dumps(
-            {k: ("" if v is None else v) for k, v in doc.items()}, separators=(", ", ": ")
-        )
-
-    return pd.Series([one(h) for h in header])
 
 
 #: Memoized transform expression trees, keyed by fidelity. Building the
@@ -280,9 +270,9 @@ def load_dataset(
         else:
             overwrite_by_key(df, os.path.join(warehouse, table))
 
-    # the persisted frames are released on EVERY exit — a failed load
+    # the cached entries are released on EVERY exit — a failed load
     # (malformed entry, sink error) must not leak its cached blocks
-    entries = features = None
+    entries = None
     try:
         # -- pre-delete: wipe all prior rows of this dataset (O17,
         # delete_dataset_records_by_id extract-load-service.ts:290-295 —
@@ -303,25 +293,24 @@ def load_dataset(
         # -- extract: archive -> routed entries -------------------------
         t0 = time.perf_counter()
         entries = routed_entries(zip_fanout(read_zip_archives(spark, archive_path)))
-        # entries feed features, headers and stats: one fan-out, cached
+        # entries feed the gate and every kind write: one fan-out, cached
         entries = entries.persist()
-        # ONE materializing pass returns the malformed-entry gate (O21,
-        # geoJsonPipeError extract-load-service.ts:41-49) AND the per-file
+        # ONE materializing pass returns, per FILE, the malformed-entry
+        # gate (O21, geoJsonPipeError extract-load-service.ts:41-49), the
         # header metadata that the extension-registration (O16) and
-        # metadata (O15) stages consume — previously each of those ran its
-        # own job re-scanning the persisted entries through the header
-        # UDF.  Collected volume is ONE small row per FILE (kind, entry
-        # name, header scalars — never feature data), the same O(files)
-        # bound the metadata stage always collected; header extraction is
-        # null-safe on malformed JSON, so running it before the gate check
-        # costs nothing on the failure path.
+        # metadata (O15) stages consume, and the feature count that sizes
+        # the writes and fills the stats (O19). Its only Python runner is
+        # the fan-out generator, which parses the headers itself: each
+        # Python task pays its worker set-up before any row moves.
+        # Collected volume is one small row per file, never feature data.
         is_bad = F.from_json("entry_text", "map<string,string>").isNull()
         per_entry = entries.select(
             "kind",
             "entry",
             is_bad.alias("bad"),
-            _meta_json_udf(header_json("entry_text")).alias("meta"),
+            "meta",
             F.length("entry_text").alias("entry_bytes"),
+            feature_count("entry_text").alias("n_features"),
         ).collect()
         n_entries = len(per_entry)
         if n_entries == 0:
@@ -333,11 +322,23 @@ def load_dataset(
             raise MalformedGeoJsonError(
                 f"Unable to parse GeoJSON: invalid JSON in entry {bad_entry}"
             )
+        # per kind: features, and the distinct entries that hold any
+        # (zero-feature files add no stats row and no sink file)
+        counts: dict[str, int] = {}
+        kind_files: dict[str, set[str]] = {}
+        for r in per_entry:
+            if r["n_features"] > 0:
+                counts[r["kind"]] = counts.get(r["kind"], 0) + r["n_features"]
+                kind_files.setdefault(r["kind"], set()).add(r["entry"])
         n_ext = sum(1 for r in per_entry if r["kind"] == "extension")
         total_entry_bytes = sum(r["entry_bytes"] or 0 for r in per_entry)
         timings["extract"] = time.perf_counter() - t0
 
-        # -- transform: features + per-kind routing ---------------------
+        # -- transform: plan construction only. Nothing is cached here:
+        # each kind write below runs the transform for its own kind
+        # straight from the cached entries (the kind filter lands on the
+        # cache scan, below the explode), so its execution is billed to
+        # "load".
         t0 = time.perf_counter()
         features = explode_features(entries)
         # explode-skew fix: feature rows inherit the ENTRY partitioning
@@ -350,14 +351,15 @@ def load_dataset(
         # the archive (one task per ~1 MB of entry text, bounded by 4x
         # parallelism): a fixed defaultParallelism width put 32
         # near-empty tasks under a 10k-feature load and their scheduling
-        # overhead dominated the stage (r10 A/B: 0.45s vs 0.80s per
-        # dataset at bench scale), while a 300 MB single-file archive
-        # still fans out to hundreds of tasks.
+        # overhead dominated the stage, while a 300 MB single-file archive
+        # still fans out to hundreds of tasks. An archive of at most
+        # 1 MB needs no shuffle at all.
         n_repart = min(
-            max(4, -(-total_entry_bytes // (1 << 20))),
+            -(-total_entry_bytes // (1 << 20)),
             4 * spark.sparkContext.defaultParallelism,
         )
-        features = features.repartition(n_repart)
+        if n_repart > 1:
+            features = features.repartition(n_repart)
         features = transform_features(features, fidelity=fidelity)
         features = features.withColumns(
             {
@@ -375,64 +377,60 @@ def load_dataset(
                 F.xxhash64(F.lit(tdei_dataset_id), F.col("entry")),
             ),
         )
-        features = features.persist()
-        # ONE materializing aggregation returns the per-kind counts AND the
-        # per-kind statistics (O19) — previously a second full pass over
-        # the persisted features recomputed them in the stats stage. Rows
-        # collected = kinds present (bounded taxonomy): a model, not data.
-        kind_aggs = (
-            features.groupBy("kind")
-            .agg(
-                F.count("*").alias("n"),
-                F.countDistinct("entry").alias("n_files"),
-                F.sum(
-                    F.when(F.col("feature").contains('"ext:elevation"'), 1).otherwise(0)
-                ).alias("n_with_elevation"),
-            )
-            .collect()
-        )
-        counts = {r["kind"]: r["n"] for r in kind_aggs}
         timings["transform"] = time.perf_counter() - t0
 
         # -- load: one parameterized writer, 7 sinks (O12) ---------------
-        # the per-kind writes are independent jobs on disjoint sink roots —
-        # submit them concurrently (the reference necessarily serialized
-        # its 7 bulkInsert* calls on one DB transaction; Spark's scheduler
-        # interleaves the write stages, and per-path locks in the writer
-        # keep same-table commits safe)
+        # the kind writes, the extension-file registration and the dataset
+        # row are independent jobs on disjoint sink roots — submit them
+        # concurrently (the reference necessarily serialized its
+        # bulkInsert* calls on one DB transaction; Spark's scheduler
+        # interleaves the write stages, per-path locks in the writer keep
+        # same-table commits safe and ManifestTxn.write is thread-safe)
         t0 = time.perf_counter()
         from concurrent.futures import ThreadPoolExecutor
 
-        def write_kind(kind_table: tuple[str, str]) -> None:
-            kind, table = kind_table
+        # the stats' elevation count rides each kind's write as an
+        # observed metric instead of a separate aggregation job
+        elevation = {kind: Observation() for kind in counts}
+
+        def write_kind(kind: str) -> None:
             sink_cols = ["tdei_dataset_id", "feature", "requested_by", "entry"]
             if kind == "extension":
                 sink_cols.insert(1, "ext_file_id")
-            kind_df = features.where(F.col("kind") == kind).select(*sink_cols)
-            # file sizing: the filtered frame inherits the transform's full
-            # partitioning, so a small kind would write one near-empty file
-            # per partition (32 tiny files for 5k rows here; at scale, tiny
-            # files x kinds x datasets is the classic small-files problem).
-            # counts[kind] is already known — coalesce (narrow, no shuffle)
-            # to ~250k rows/file, floor 1.
-            n_files = max(1, counts.get(kind, 0) // 250_000)
-            sink_write(table, kind_df.coalesce(n_files))
+            kind_df = (
+                features.where(F.col("kind") == kind)
+                .select(*sink_cols)
+                .observe(
+                    elevation[kind],
+                    F.sum(
+                        F.when(F.col("feature").contains('"ext:elevation"'), 1).otherwise(0)
+                    ).alias("n_with_elevation"),
+                )
+            )
+            # file sizing: ~250k rows/file, floor 1 (tiny files x kinds x
+            # datasets is the classic small-files problem). When the skew
+            # shuffle is wider than that, a second shuffle makes the files:
+            # coalescing would pull the transform back onto one task per
+            # file.
+            n_files = max(1, counts[kind] // 250_000)
+            if n_repart > n_files:
+                kind_df = kind_df.repartition(n_files)
+            else:
+                kind_df = kind_df.coalesce(n_files)
+            sink_write(SINK_TABLES[kind], kind_df)
 
         # pre-delete already cleared any prior rows; an empty
-        # dynamic-overwrite write is a no-op Spark job — skip it
-        nonempty = [(k, t) for k, t in SINK_TABLES.items() if counts.get(k, 0) > 0]
-        if nonempty:
-            with ThreadPoolExecutor(max_workers=min(len(nonempty), 4)) as pool:
-                list(pool.map(write_kind, nonempty))
+        # dynamic-overwrite write is a no-op Spark job — only kinds with
+        # features are written
+        writes = [partial(write_kind, kind) for kind in counts]
 
         # extension-file registration (O16, extract-load-service.ts:515-536):
         # one row per extension entry, created even when it has 0 features
         # (empty-insert fallback O14, :230). The gate pass already collected
         # each extension entry's header meta, so the write's input is an
-        # Arrow-backed local frame — no re-scan of the archive, no second
-        # pandas-UDF job; only the id keeps Spark's xxhash64 so it matches
-        # the ext_file_id stamped on the feature rows above. Zero extension
-        # entries skip the write job outright.
+        # Arrow-backed local frame — no re-scan of the archive; only the id
+        # keeps Spark's xxhash64 so it matches the ext_file_id stamped on
+        # the feature rows above. Zero extension entries skip the write.
         if n_ext > 0:
             ext_pdf = pd.DataFrame(
                 [[r["entry"], r["meta"]] for r in per_entry if r["kind"] == "extension"],
@@ -455,20 +453,16 @@ def load_dataset(
             )
             # one row per extension entry — bounded; don't scatter it over
             # the full shuffle partitioning as near-empty files
-            sink_write(
-                "extension_file", ext_files.coalesce(max(1, n_ext // 250_000))
+            writes.append(
+                lambda: sink_write("extension_file", ext_files.coalesce(max(1, n_ext // 250_000)))
             )
-        timings["load"] = time.perf_counter() - t0
 
         # -- metadata: per-kind header -> dataset row (O15) --------------
         # an archive of only extension files updates no metadata column in
-        # the reference's per-kind switch — skip the write job outright
-        t0 = time.perf_counter()
+        # the reference's per-kind switch — skip the write job outright.
+        # "metadata" times this row's write, which runs in the pool above.
+        timings["metadata"] = 0.0
         if n_entries - n_ext > 0:
-            # header extraction already ran distributed in the extract
-            # gate pass (one small header-JSON string per FILE came to the
-            # driver there) — this stage is now pure driver-side assembly
-            # plus the one-row Arrow write, no Spark job over the entries.
             # Several files of one kind each overwrite the same column in
             # the reference's sequential processing — last write wins;
             # entry-name order is the deterministic distributed equivalent
@@ -489,24 +483,36 @@ def load_dataset(
                 ),
                 sink_schema("dataset"),
             )
-            # exactly one row per dataset -> one file; the write itself
-            # is submitted below, concurrently with the stats write
-            meta_write = lambda: sink_write("dataset", dataset_row.coalesce(1))  # noqa: E731
-        else:
-            meta_write = None
-        timings["metadata"] = time.perf_counter() - t0
+
+            def write_metadata() -> None:
+                t = time.perf_counter()
+                # exactly one row per dataset -> one file
+                sink_write("dataset", dataset_row.coalesce(1))
+                timings["metadata"] = time.perf_counter() - t
+
+            writes.append(write_metadata)
+
+        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+            # list() re-raises the first failed write
+            list(pool.map(lambda write: write(), writes))
+        timings["load"] = time.perf_counter() - t0
 
         # -- stats: the tdei_update_osw_stats analogue (O19) -------------
-        # already aggregated in the counts pass — materialize the bounded
-        # (dataset, kind) rows without re-scanning the features
+        # every figure is already known: feature and file counts from the
+        # gate pass, elevation counts observed on the kind writes
         t0 = time.perf_counter()
-        stats_write = None
-        if kind_aggs:
+        if counts:
             stats_df = spark.createDataFrame(
                 pd.DataFrame(
                     [
-                        [tdei_dataset_id, r["kind"], r["n"], r["n_files"], r["n_with_elevation"]]
-                        for r in kind_aggs
+                        [
+                            tdei_dataset_id,
+                            kind,
+                            n,
+                            len(kind_files[kind]),
+                            elevation[kind].get["n_with_elevation"] or 0,
+                        ]
+                        for kind, n in counts.items()
                     ],
                     columns=[
                         "tdei_dataset_id", "kind", "n_features", "n_files", "n_with_elevation",
@@ -514,39 +520,8 @@ def load_dataset(
                 ),
                 sink_schema("dataset_stats"),
             )
-            stats_write = lambda: sink_write("dataset_stats", stats_df.coalesce(1))  # noqa: E731
-        # the two one-file writes touch DISJOINT sink roots and are both
-        # tiny scheduled jobs — submit them together (the same rationale
-        # as the concurrent per-kind loads; writers hold per-path locks
-        # and ManifestTxn.write is thread-safe). Each future times ITSELF
-        # into its own stage key (ADVICE r10: the deferred metadata write
-        # must not be billed to "stats") — so "metadata"/"stats" stay
-        # attribution-honest while overlapping in wall-clock; the
-        # concurrent section's sum of stages may exceed elapsed time.
+            sink_write("dataset_stats", stats_df.coalesce(1))
         timings["stats"] = time.perf_counter() - t0
-
-        def _timed(key: str, fn) -> object:
-            def run() -> None:
-                t = time.perf_counter()
-                fn()
-                timings[key] = timings.get(key, 0.0) + (
-                    time.perf_counter() - t
-                )
-
-            return run
-
-        pending = [
-            _timed(key, w)
-            for key, w in (("metadata", meta_write), ("stats", stats_write))
-            if w is not None
-        ]
-        if len(pending) == 2:
-            from concurrent.futures import ThreadPoolExecutor as _TPE
-
-            with _TPE(max_workers=2) as pool:
-                list(pool.map(lambda w: w(), pending))
-        elif pending:
-            pending[0]()
 
         # -- commit: in manifest mode, ONE pointer swap publishes every
         # sink written above (the reference's single COMMIT) -------------
@@ -584,6 +559,5 @@ def load_dataset(
             timings={k: round(v, 4) for k, v in timings.items()},
         )
     finally:
-        for cached in (features, entries):
-            if cached is not None:
-                cached.unpersist()
+        if entries is not None:
+            entries.unpersist()

@@ -4,9 +4,9 @@ Replaces the reference's streaming JSON token pipeline (O6-O8:
 ``parser()`` → header-capture transform → ``pick('features')`` →
 ``streamArray`` → batch, extract-load-service.ts:130-227). The token
 plumbing existed so one Node thread could read a huge file once with O(1)
-memory; on Spark the same semantics are two declarative parses of the entry
-text (header + features), both JVM-side Jackson, executed per *entry row*
-(cheap — entries are O(files), features are O(rows)).
+memory; on Spark the features are one declarative JVM-side (Jackson) parse
+of the entry text per *entry row*, and the header is parsed where the text
+is decoded (``sources.zip_fanout``'s ``meta`` column).
 
 Key trick: ``from_json`` captures any JSON subtree addressed as a
 ``string`` field verbatim — so ``features array<string>`` yields each
@@ -15,26 +15,19 @@ captures ``coordinates``/``properties`` as raw text able to hold every
 geometry arity / open property schema in fixed columns.
 
 Late headers (keys after the features array — ref test :293-322) are free:
-column access is order-independent.
+both parses read the whole document, so key order does not matter.
 """
 
 from __future__ import annotations
 
-import json
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 #: Decomposed per-feature schema: one from_json per feature row.
 FEATURE_SCHEMA = "type string, geometry struct<type string, coordinates string>, properties string"
 
 #: Entry-level schema capturing each feature as raw text.
 FEATURES_RAW_SCHEMA = "features array<string>"
-
-#: Root keys excluded from headers (extract-load-service.ts:159,165).
-HEADER_EXCLUDE = ("features", "type")
 
 
 def explode_features(entries_df: DataFrame, entry_text: str = "entry_text") -> DataFrame:
@@ -47,6 +40,14 @@ def explode_features(entries_df: DataFrame, entry_text: str = "entry_text") -> D
     """
     feats = F.from_json(F.col(entry_text), FEATURES_RAW_SCHEMA)["features"]
     return entries_df.withColumn("feature_raw", F.explode(feats)).drop(entry_text)
+
+
+def feature_count(entry_text: str = "entry_text") -> Column:
+    """Rows ``explode_features`` makes from one entry: the size of the same
+    ``features`` array, 0 when it is missing or null. Null-safe both under
+    ANSI (``size(null)`` is null) and legacy ``sizeOfNull`` (-1)."""
+    feats = F.from_json(F.col(entry_text), FEATURES_RAW_SCHEMA)["features"]
+    return F.greatest(F.coalesce(F.size(feats), F.lit(0)), F.lit(0))
 
 
 def decompose_feature(feature_raw: str | Column = "feature_raw") -> Column:
@@ -85,40 +86,3 @@ def assemble_feature_json(
         F.coalesce(F.concat(F.lit(', "properties": '), props_json), F.lit("")),
         F.lit("}"),
     )
-
-
-@F.pandas_udf(T.StringType())
-def _header_json_udf(entry_text: pd.Series) -> pd.Series:
-    """Type-preserving header extraction: root scalars minus
-    ``features``/``type`` — the reference's header capture keeps numeric
-    values as numbers (stringValue/numberValue handling,
-    extract-load-service.ts:157-170), which a map<string,string> parse
-    would flatten; Python json round-trips them exactly.
-
-    Runs once per *entry* (file), so Python cost is O(files), invisible
-    next to the per-feature work.
-    """
-
-    def one(text: str | None) -> str | None:
-        if text is None:
-            return None
-        try:
-            doc = json.loads(text)
-        except (ValueError, TypeError):
-            return None
-        if not isinstance(doc, dict):
-            return None
-        return json.dumps(
-            {k: v for k, v in doc.items() if k not in HEADER_EXCLUDE},
-            separators=(", ", ": "),
-        )
-
-    return pd.Series([one(t) for t in entry_text])
-
-
-def header_json(entry_text: str | Column = "entry_text") -> Column:
-    """Header (root keys minus features/type) as a JSON object string —
-    O7 (extract-load-service.ts:139-178) + the metadata projection's key
-    exclusion (:496-502)."""
-    c = F.col(entry_text) if isinstance(entry_text, str) else entry_text
-    return _header_json_udf(c)

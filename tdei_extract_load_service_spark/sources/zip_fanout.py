@@ -15,6 +15,15 @@ Deliberate departures from the reference (SURVEY.md §4):
   are simply never decoded (``zipfile`` reads the central directory and
   seeks to matched members only).
 
+Each entry row also carries ``meta``, the entry's header (O7: root keys
+minus ``features``/``type``, null values -> ``''`` as the metadata
+projection writes them, extract-load-service.ts:139-178, :496-502) as a
+JSON object string, or null when the text is not a JSON object. The
+generator already holds the decoded text, so the header is parsed there
+instead of in a second Python runner over the entry rows; ``json``
+round-trips numeric header values exactly, which a ``map<string,string>``
+parse would flatten.
+
 Scale notes: a single ZIP is not splittable, so intra-archive parallelism
 is bounded by 1 task until after the fan-out — many archives (the 100 TB
 case is many datasets × many files) parallelize naturally. Peak memory per
@@ -25,6 +34,7 @@ per archive).
 
 from __future__ import annotations
 
+import json
 from collections.abc import Iterator
 
 import pandas as pd
@@ -33,7 +43,10 @@ from pyspark.sql import DataFrame, SparkSession
 from tdei_extract_load_service_spark.operators.relational import OSW_ROUTES, route_case
 
 #: Output schema of the fan-out.
-ENTRY_SCHEMA = "archive string, entry string, entry_text string"
+ENTRY_SCHEMA = "archive string, entry string, entry_text string, meta string"
+
+#: Root keys excluded from headers (extract-load-service.ts:159,165).
+HEADER_EXCLUDE = ("features", "type")
 
 #: Entry filter, ported from extract-load-service.ts:303.
 GEOJSON_SUFFIX = ".geojson"
@@ -56,12 +69,25 @@ def zip_fanout(
     entry_suffix: str = GEOJSON_SUFFIX,
     exclude_substring: str = MACOSX_PREFIX,
 ) -> DataFrame:
-    """Fan each archive row out into ``(archive, entry, entry_text)`` rows.
+    """Fan each archive row out into ``(archive, entry, entry_text, meta)``
+    rows.
 
     The suffix/exclude filter runs inside the generator (entry bytes of
     filtered entries are never decompressed — the moral equivalent of the
     reference's autodrain at :310-316, but free).
     """
+
+    def header_meta(text: str) -> str | None:
+        try:
+            doc = json.loads(text)
+        except ValueError:
+            return None
+        if not isinstance(doc, dict):
+            return None
+        return json.dumps(
+            {k: "" if v is None else v for k, v in doc.items() if k not in HEADER_EXCLUDE},
+            separators=(", ", ": "),
+        )
 
     def fan_out(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import io
@@ -81,7 +107,12 @@ def zip_fanout(
                         # one entry per yielded batch → downstream pipelines
                         # per entry, peak memory = one entry, not one archive
                         yield pd.DataFrame(
-                            {"archive": [archive_path], "entry": [name], "entry_text": [text]}
+                            {
+                                "archive": [archive_path],
+                                "entry": [name],
+                                "entry_text": [text],
+                                "meta": [header_meta(text)],
+                            }
                         )
 
     return binary_df.mapInPandas(fan_out, schema=ENTRY_SCHEMA)

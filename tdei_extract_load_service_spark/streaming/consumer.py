@@ -17,9 +17,10 @@ response-publish contract. Bounded intake (``maxFilesPerTrigger`` /
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
-import uuid
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -78,6 +79,28 @@ def process_request(
         **message,
         "data": {**data, "success": result_success, "message": result_message},
     }
+
+
+def publish_response(response_dir: str, batch_id: int, response: dict) -> None:
+    """Write one response file atomically and idempotently.
+
+    The name is keyed on the micro-batch and the request's ``messageId``
+    (hashed: an id may contain ``/``), and the file appears through an
+    ``os.replace`` of a fully written temp file. A micro-batch replayed
+    after a crash therefore rewrites the same file instead of publishing
+    a second response, and a crash mid-write leaves no torn file under a
+    response name."""
+    key = hashlib.sha1(str(response.get("messageId")).encode()).hexdigest()
+    fd, tmp = tempfile.mkstemp(dir=response_dir, prefix=".response-", suffix=".tmp")
+    try:
+        with os.fdopen(fd, "w") as fh:
+            json.dump(response, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, os.path.join(response_dir, f"response-{batch_id}-{key}.json"))
+    except BaseException:
+        os.unlink(tmp)
+        raise
 
 
 def request_stream_from_files(
@@ -184,10 +207,9 @@ def run_queue_consumer(
         from concurrent.futures import ThreadPoolExecutor
 
         def run_one(message: dict) -> None:
-            response = process_request(spark, message, warehouse, commit_mode)
-            out = os.path.join(response_dir, f"response-{batch_id}-{uuid.uuid4().hex}.json")
-            with open(out, "w") as fh:
-                json.dump(response, fh)
+            publish_response(
+                response_dir, batch_id, process_request(spark, message, warehouse, commit_mode)
+            )
 
         messages = [row.asDict(recursive=True) for row in batch_df.collect()]
         if not messages:

@@ -259,3 +259,142 @@ def test_reload_clears_disappeared_kind(spark, tmp_path):
     zones = read_sink(spark, warehouse, "zone").where(F.col("tdei_dataset_id") == "ds-r")
     assert zones.count() == 0
     assert spark.read.parquet(os.path.join(warehouse, "node")).count() == 3
+
+
+def _engine_jobs(spark) -> dict[int, list[int]]:
+    """job id -> stage ids, from Spark's status store once every queued
+    listener event has been applied."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    seq = sc.statusStore().jobsList(None)
+    jobs = {}
+    for i in range(seq.size()):
+        job = seq.apply(i)
+        ids = job.stageIds()
+        jobs[job.jobId()] = [ids.apply(k) for k in range(ids.size())]
+    return jobs
+
+
+def _shuffle_write_bytes(spark, stage_ids) -> int:
+    sc = spark.sparkContext
+    no_quantiles = sc._gateway.new_array(sc._gateway.jvm.double, 0)
+    seq = sc._jsc.sc().statusStore().stageList(None, False, False, no_quantiles, None)
+    wanted = set(stage_ids)
+    return sum(
+        seq.apply(i).shuffleWriteBytes()
+        for i in range(seq.size())
+        if seq.apply(i).stageId() in wanted
+    )
+
+
+def test_small_archive_runs_one_job_per_sink_and_no_shuffle(spark, tmp_path):
+    """An archive of at most 1 MB loads in one gate pass plus one job per
+    sink write: the per-kind counts come from the gate and the elevation
+    counts ride the kind writes, so no job re-reads the data to count it."""
+    archive = str(tmp_path / "osw.zip")
+    make_zip(archive, {
+        "data/nodes.geojson": json.dumps(NODES),
+        "data/edges.geojson": EDGES_TEXT,
+        "data/custom.geojson": json.dumps(EXTENSION),
+        "data/points.geojson": json.dumps(EMPTY_POINTS),
+    })
+    before = set(_engine_jobs(spark))
+    result = load_dataset(spark, archive, "ds-jobs", "u", str(tmp_path / "wh"))
+    after = _engine_jobs(spark)
+    assert result.success, result.message
+    assert result.feature_counts == {"nodes": 3, "edges": 1, "extension": 2}
+    new = sorted(set(after) - before)
+    # gate, three kinds, extension_file, dataset, dataset_stats
+    assert len(new) == 1 + 3 + 1 + 1 + 1, new
+    assert _shuffle_write_bytes(spark, [s for j in new for s in after[j]]) == 0
+
+
+def _line(i, coords, props):
+    return {"type": "Feature", "geometry": {"type": "LineString", "coordinates": coords},
+            "properties": {"_id": f"e{i}", **props}}
+
+
+@pytest.mark.parametrize("commit_mode", ["partition", "manifest"])
+def test_counts_and_stats_definitions(spark, tmp_path, commit_mode):
+    """Stats keep their definitions: ``n_features`` counts feature rows,
+    ``n_files`` the files of a kind that hold any feature, and
+    ``n_with_elevation`` the written features carrying ``ext:elevation``
+    (extracted from Z or already in the properties)."""
+    from tdei_extract_load_service_spark.plans.load_dataset import SINK_TABLES, read_sink
+
+    edges = {"type": "FeatureCollection", "features": [
+        _line(0, [[0.0, 0.0], [1.0, 1.0]], {"ext:elevation": 12}),  # kept as is
+        _line(1, [[0.0, 0.0, 3.0], [1.0, 1.0, 4.0]], {}),           # strip-only
+    ]}
+    archive = str(tmp_path / "osw.zip")
+    make_zip(archive, {
+        "a/nodes.geojson": json.dumps(NODES),
+        "b/nodes.geojson": json.dumps(NODES),
+        "edges.geojson": json.dumps(edges),
+        "points.geojson": json.dumps({"type": "FeatureCollection", "features": []}),
+        "lines.geojson": json.dumps({"type": "FeatureCollection", "features": None}),
+    })
+    warehouse = str(tmp_path / "wh")
+    result = load_dataset(spark, archive, "ds-def", "u", warehouse, commit_mode=commit_mode)
+    assert result.success, result.message
+    assert result.feature_counts == {"nodes": 6, "edges": 2}
+
+    landed = {
+        kind: read_sink(spark, warehouse, table).where(F.col("tdei_dataset_id") == "ds-def").count()
+        for kind, table in SINK_TABLES.items()
+    }
+    assert landed == {k: result.feature_counts.get(k, 0) for k in SINK_TABLES}
+
+    stats = {
+        r.kind: (r.n_features, r.n_files, r.n_with_elevation)
+        for r in read_sink(spark, warehouse, "dataset_stats").collect()
+    }
+    # nodes: n1 extracted + n3 pre-existing, in each of the two files
+    assert stats == {"nodes": (6, 2, 4), "edges": (2, 1, 1)}
+
+    # the zero-feature files wrote no sink file
+    if commit_mode == "manifest":
+        from tdei_extract_load_service_spark.sinks.manifest import read_manifest
+
+        tables = read_manifest(warehouse)["tables"]
+        written = {t for t, datasets in tables.items() if "ds-def" in datasets}
+    else:
+        written = {
+            t for t in os.listdir(warehouse)
+            if os.path.isdir(os.path.join(warehouse, t, "tdei_dataset_id=ds-def"))
+        }
+    assert "extension_point" not in written and "extension_line" not in written
+    assert {"node", "edge", "dataset", "dataset_stats"} <= written
+
+
+def test_large_entry_spreads_transform_and_writes_one_file(spark, tmp_path):
+    """A single entry over 1 MB is spread over several tasks for the
+    transform, then shuffled back into one file per kind (its ~250k-row
+    file size), with the stats intact."""
+    n = 12_000
+    doc = {"type": "FeatureCollection", "name": "big", "features": [
+        {"type": "Feature",
+         "geometry": {"type": "Point", "coordinates": [-122.0, 47.0, float(i % 3)]},
+         "properties": {"_id": f"n{i}", "note": "x" * 64}}
+        for i in range(n)
+    ]}
+    text = json.dumps(doc)
+    assert len(text) > 1 << 20
+    archive = str(tmp_path / "big.zip")
+    make_zip(archive, {"nodes.geojson": text})
+    warehouse = str(tmp_path / "wh")
+    result = load_dataset(spark, archive, "ds-big", "u", warehouse)
+    assert result.success, result.message
+    assert result.feature_counts == {"nodes": n}
+
+    part = os.path.join(warehouse, "node", "tdei_dataset_id=ds-big")
+    files = [f for f in os.listdir(part) if f.endswith(".parquet")]
+    assert len(files) == 1, files
+    nodes = spark.read.parquet(os.path.join(part, files[0]))
+    assert nodes.count() == n
+    assert nodes.select("feature").distinct().count() == n
+    stats = spark.read.parquet(os.path.join(warehouse, "dataset_stats")).collect()
+    # zero Z means missing elevation: every third node carries none
+    assert [(r.kind, r.n_features, r.n_files, r.n_with_elevation) for r in stats] == [
+        ("nodes", n, 1, n - n // 3)
+    ]

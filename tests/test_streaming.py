@@ -498,3 +498,51 @@ def test_failure_publish_soak_concurrent_malformed(spark, tmp_path):
         for r in nodes.select("tdei_dataset_id").distinct().collect()
     }
     assert landed == {"ds-ok-0", "ds-ok-3", "ds-ok-7"}
+
+
+def test_replayed_batch_publishes_one_response_per_message(spark, tmp_path):
+    """A micro-batch replayed after a crash (its offsets logged, its commit
+    not) must not publish a second response: each response file is keyed
+    on its message, including ids that are not valid file names."""
+    import time as _time
+
+    archive = str(tmp_path / "osw.zip")
+    make_zip(archive, {"nodes.geojson": json.dumps(NODES)})
+    request_dir = tmp_path / "requests"
+    request_dir.mkdir()
+    ids = ["p0", "tenant/p1", "p2"]
+    base = _time.time() - 100
+    for i, mid in enumerate(ids):
+        p = request_dir / f"msg{i}.json"
+        p.write_text(json.dumps({"messageId": mid, "messageType": "workflow", "data": {
+            "data_type": "osw", "file_upload_path": archive,
+            "tdei_dataset_id": f"ds-p{i}", "user_id": "u1"}}))
+        os.utime(p, (base + i, base + i))
+    response_dir = str(tmp_path / "responses")
+    checkpoint = tmp_path / "ckpt"
+    common = dict(
+        request_dir=str(request_dir),
+        response_dir=response_dir,
+        warehouse=str(tmp_path / "wh"),
+        checkpoint_dir=str(checkpoint),
+        available_now=True,
+        max_messages_per_trigger=2,
+    )
+    run_queue_consumer(spark, **common)
+
+    # crash after the last batch published but before it committed
+    commits = checkpoint / "commits"
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        if (commits / name).exists():
+            (commits / name).unlink()
+    run_queue_consumer(spark, **common)
+
+    names = os.listdir(response_dir)
+    assert all(n.startswith("response-") and n.endswith(".json") for n in names), names
+    per_id: dict[str, int] = {}
+    for name in names:
+        with open(os.path.join(response_dir, name)) as fh:
+            mid = json.load(fh)["messageId"]
+        per_id[mid] = per_id.get(mid, 0) + 1
+    assert per_id == {mid: 1 for mid in ids}
