@@ -4,38 +4,43 @@ recomposed Spark-first.
 Reference lifecycle (extract-load-service.ts:242-345): message → pre-delete
 → BEGIN → zip stream → per-entry token pipeline → per-kind batched INSERTs
 → per-file metadata → COMMIT → stats proc → publish. Here the same
-semantics run as one pass over the data plus one job per sink:
+semantics run as one pass over the data and at most three Spark jobs,
+whatever the number of kinds:
 
     binaryFile → zip_fanout (entry text + header) → route_case → cache
-    → gate pass (malformed entries, headers, feature count per entry)
-    → per kind: explode(features) → decompose → strip-Z/elevation →
-      key-scoped overwrite (elevation count observed on the write)
-    → extension-file rows, dataset metadata row, stats row → result dict
+    → gate job (malformed entries, headers, feature count, extension-file
+      id and name per entry)
+    → explode(features) → decompose → strip-Z/elevation
+    → one job writes the six non-extension kinds (each row names its sink
+      table), one job writes extensions (their rows add ``ext_file_id``);
+      the two run concurrently and observe the per-kind elevation counts
+    → extension-file rows, dataset metadata row, stats row: rows the driver
+      already holds, written as Arrow files without a job → result dict
 
 Nothing is read twice just to count it: the gate's per-entry counts size
-the writes and fill the stats, and an archive of at most 1 MB runs at
-most ``1 + kinds + 3`` jobs with no shuffle.
+the writes and fill the stats, and an archive of at most 1 MB runs no
+shuffle.
 
 Atomicity: the reference wraps all inserts in one Postgres transaction
-(O18). Spark's analogue here is per-sink dynamic-partition overwrite keyed
-on the dataset (each dataset's partition directory swap is the commit
-point), with ``sinks.writers.staged_swap_write`` available when one commit
-must span sinks. Stage timers mirror the reference's ``console.time``
-instrumentation (:301,:322,:327,:336); ``transform`` times plan
-construction only, since its execution happens inside the ``load`` writes.
+(O18). The default here is a key-scoped partition swap per sink table
+(``sinks.writers.overwrite_by_key``: stage, then delete-and-rename each
+dataset partition), and ``commit_mode="manifest"`` publishes every table
+with one pointer swap. Stage timers mirror the reference's
+``console.time`` instrumentation (:301,:322,:327,:336); ``transform``
+times plan construction only, since its execution happens inside the
+``load`` writes, and ``metadata``/``stats`` time Arrow writes.
 """
 
 from __future__ import annotations
 
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from functools import partial
 
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from tdei_extract_load_service_spark.functions.feature_json import process_feature_json
 from tdei_extract_load_service_spark.functions.geometry import process_geometry_elevation_cols
@@ -63,6 +68,9 @@ SINK_TABLES = {
     "zones": "zone",
     "extension": "extension",
 }
+
+#: Column of the non-extension write that names each row's sink table.
+TABLE_COL = "sink_table"
 
 #: kind -> content.dataset metadata column (extract-load-service.ts:89-118;
 #: note edges → event_info is the reference's own mapping).
@@ -221,9 +229,10 @@ def load_dataset(
 
     ``commit_mode``:
 
-    - ``"partition"`` (default) — each sink commits independently via
-      dynamic partition overwrite. Crash-safe per table, but a reader
-      racing the load can see table A updated before table B.
+    - ``"partition"`` (default) — each sink table commits independently
+      by swapping in the dataset's staged partition directory
+      (``sinks.writers.overwrite_by_key``). Crash-safe per table, but a
+      reader racing the load can see table A updated before table B.
     - ``"manifest"`` — the full multi-sink load publishes through ONE
       atomic pointer swap (``sinks.manifest``), matching the reference's
       single-transaction visibility (O18, data-source.ts:33-65): a reader
@@ -264,11 +273,18 @@ def load_dataset(
     else:
         raise ValueError(f"unknown commit_mode {commit_mode!r}")
 
-    def sink_write(table: str, df) -> None:
+    def sink_write(df, table: str | None = None) -> None:
+        # table=None: a Spark frame whose rows name their table in
+        # TABLE_COL. A pandas frame is typed by its table's sink_schema.
         if txn is not None:
-            txn.write(table, df, tdei_dataset_id)
+            if table is None:
+                txn.write_tables(df, TABLE_COL, tdei_dataset_id)
+            else:
+                txn.write(table, df, tdei_dataset_id, schema=sink_schema(table))
+        elif table is None:
+            overwrite_by_key(df, warehouse, table_col=TABLE_COL)
         else:
-            overwrite_by_key(df, os.path.join(warehouse, table))
+            overwrite_by_key(df, os.path.join(warehouse, table), schema=sink_schema(table))
 
     # the cached entries are released on EVERY exit — a failed load
     # (malformed entry, sink error) must not leak its cached blocks
@@ -293,16 +309,22 @@ def load_dataset(
         # -- extract: archive -> routed entries -------------------------
         t0 = time.perf_counter()
         entries = routed_entries(zip_fanout(read_zip_archives(spark, archive_path)))
-        # entries feed the gate and every kind write: one fan-out, cached
+        # entries feed the gate and both writes: one fan-out, cached
         entries = entries.persist()
+        # extension features carry the extension_file FK
+        # (extract-load-service.ts:473-479); surrogate id = stable hash of
+        # (dataset, entry) instead of a DB sequence — distributed-safe
+        ext_file_id = F.xxhash64(F.lit(tdei_dataset_id), F.col("entry"))
         # ONE materializing pass returns, per FILE, the malformed-entry
         # gate (O21, geoJsonPipeError extract-load-service.ts:41-49), the
         # header metadata that the extension-registration (O16) and
-        # metadata (O15) stages consume, and the feature count that sizes
-        # the writes and fills the stats (O19). Its only Python runner is
-        # the fan-out generator, which parses the headers itself: each
-        # Python task pays its worker set-up before any row moves.
-        # Collected volume is one small row per file, never feature data.
+        # metadata (O15) stages consume, the feature count that sizes the
+        # writes and fills the stats (O19), and the extension-file id and
+        # name, computed by Spark so they match the features' FK. Its only
+        # Python runner is the fan-out generator, which parses the headers
+        # itself: each Python task pays its worker set-up before any row
+        # moves. Collected volume is one small row per file, never
+        # feature data.
         is_bad = F.from_json("entry_text", "map<string,string>").isNull()
         per_entry = entries.select(
             "kind",
@@ -311,6 +333,11 @@ def load_dataset(
             "meta",
             F.length("entry_text").alias("entry_bytes"),
             feature_count("entry_text").alias("n_features"),
+            ext_file_id.alias("ext_file_id"),
+            # name = basename sans extension (ref :531)
+            F.regexp_extract(
+                F.element_at(F.split("entry", "/"), -1), r"^(.*?)(\.[^.]*)?$", 1
+            ).alias("ext_name"),
         ).collect()
         n_entries = len(per_entry)
         if n_entries == 0:
@@ -330,15 +357,14 @@ def load_dataset(
             if r["n_features"] > 0:
                 counts[r["kind"]] = counts.get(r["kind"], 0) + r["n_features"]
                 kind_files.setdefault(r["kind"], set()).add(r["entry"])
-        n_ext = sum(1 for r in per_entry if r["kind"] == "extension")
+        ext_entries = [r for r in per_entry if r["kind"] == "extension"]
         total_entry_bytes = sum(r["entry_bytes"] or 0 for r in per_entry)
         timings["extract"] = time.perf_counter() - t0
 
         # -- transform: plan construction only. Nothing is cached here:
-        # each kind write below runs the transform for its own kind
-        # straight from the cached entries (the kind filter lands on the
-        # cache scan, below the explode), so its execution is billed to
-        # "load".
+        # each write below runs the transform for its own kinds straight
+        # from the cached entries (the kind filter lands on the cache
+        # scan, below the explode), so its execution is billed to "load".
         t0 = time.perf_counter()
         features = explode_features(entries)
         # explode-skew fix: feature rows inherit the ENTRY partitioning
@@ -367,160 +393,127 @@ def load_dataset(
                 "requested_by": F.lit(user_id),
             }
         )
-        # extension features carry the extension_file FK
-        # (extract-load-service.ts:473-479); surrogate id = stable hash of
-        # (dataset, entry) instead of a DB sequence — distributed-safe
-        features = features.withColumn(
-            "ext_file_id",
-            F.when(
-                F.col("kind") == "extension",
-                F.xxhash64(F.lit(tdei_dataset_id), F.col("entry")),
-            ),
-        )
         timings["transform"] = time.perf_counter() - t0
 
-        # -- load: one parameterized writer, 7 sinks (O12) ---------------
-        # the kind writes, the extension-file registration and the dataset
-        # row are independent jobs on disjoint sink roots — submit them
-        # concurrently (the reference necessarily serialized its
-        # bulkInsert* calls on one DB transaction; Spark's scheduler
-        # interleaves the write stages, per-path locks in the writer keep
-        # same-table commits safe and ManifestTxn.write is thread-safe)
+        # -- load: one parameterized writer (O12), two Spark jobs ---------
+        # the six non-extension kinds share one schema, so one job writes
+        # them all (each row names its table); extension rows add
+        # ext_file_id and keep their own job. The two jobs are independent
+        # and run concurrently (the reference necessarily serialized its
+        # bulkInsert* calls on one DB transaction; each write stages into
+        # its own directory and only same-table swaps serialize).
         t0 = time.perf_counter()
-        from concurrent.futures import ThreadPoolExecutor
+        # ~250k rows per file, floor 1 per table (tiny files x kinds x
+        # datasets is the classic small-files problem)
+        n_files = {kind: max(1, n // 250_000) for kind, n in counts.items()}
 
-        # the stats' elevation count rides each kind's write as an
-        # observed metric instead of a separate aggregation job
-        elevation = {kind: Observation() for kind in counts}
+        def by_kind(values: dict) -> Column:
+            return F.create_map(*[F.lit(x) for item in values.items() for x in item])[F.col("kind")]
 
-        def write_kind(kind: str) -> None:
-            sink_cols = ["tdei_dataset_id", "feature", "requested_by", "entry"]
-            if kind == "extension":
-                sink_cols.insert(1, "ext_file_id")
-            kind_df = (
-                features.where(F.col("kind") == kind)
-                .select(*sink_cols)
-                .observe(
-                    elevation[kind],
-                    F.sum(
-                        F.when(F.col("feature").contains('"ext:elevation"'), 1).otherwise(0)
-                    ).alias("n_with_elevation"),
-                )
+        def spark_write(kinds: list[str], cols: list[Column], table: str | None) -> dict:
+            """Write ``kinds`` in one job; returns each kind's count of
+            features carrying ``ext:elevation``, observed on the write
+            instead of a separate aggregation job."""
+            observed = Observation()
+            has_elevation = F.col("feature").contains('"ext:elevation"')
+            df = features.where(F.col("kind").isin(kinds)).observe(
+                observed,
+                *[
+                    F.sum(F.when(has_elevation & (F.col("kind") == k), 1).otherwise(0)).alias(k)
+                    for k in kinds
+                ],
             )
-            # file sizing: ~250k rows/file, floor 1 (tiny files x kinds x
-            # datasets is the classic small-files problem). When the skew
-            # shuffle is wider than that, a second shuffle makes the files:
-            # coalescing would pull the transform back onto one task per
-            # file.
-            n_files = max(1, counts[kind] // 250_000)
-            if n_repart > n_files:
-                kind_df = kind_df.repartition(n_files)
+            # file sizing: an archive of at most 1 MB is written by one
+            # task, one file per table; past that, one shuffle gives each
+            # kind at most n_files[kind] files (coalescing the skew
+            # shuffle's partitions would pull the transform back onto one
+            # task per file)
+            if n_repart <= 1:
+                df = df.coalesce(1)
             else:
-                kind_df = kind_df.coalesce(n_files)
-            sink_write(SINK_TABLES[kind], kind_df)
+                df = df.repartition(
+                    sum(n_files[k] for k in kinds),
+                    "kind",
+                    F.pmod(F.xxhash64("feature"), by_kind({k: n_files[k] for k in kinds})),
+                )
+            sink_write(df.select(*cols), table)
+            return observed.get
 
-        # pre-delete already cleared any prior rows; an empty
-        # dynamic-overwrite write is a no-op Spark job — only kinds with
-        # features are written
-        writes = [partial(write_kind, kind) for kind in counts]
+        sink_cols = [F.col(c) for c in ("tdei_dataset_id", "feature", "requested_by", "entry")]
+        writes = []
+        base_kinds = [k for k in counts if k != "extension"]
+        if base_kinds:
+            table_of = by_kind(SINK_TABLES).alias(TABLE_COL)
+            writes.append((base_kinds, [table_of, *sink_cols], None))
+        if "extension" in counts:
+            ext_cols = [sink_cols[0], ext_file_id.alias("ext_file_id"), *sink_cols[1:]]
+            writes.append((["extension"], ext_cols, "extension"))
 
-        # extension-file registration (O16, extract-load-service.ts:515-536):
-        # one row per extension entry, created even when it has 0 features
-        # (empty-insert fallback O14, :230). The gate pass already collected
-        # each extension entry's header meta, so the write's input is an
-        # Arrow-backed local frame — no re-scan of the archive; only the id
-        # keeps Spark's xxhash64 so it matches the ext_file_id stamped on
-        # the feature rows above. Zero extension entries skip the write.
-        if n_ext > 0:
-            ext_pdf = pd.DataFrame(
-                [[r["entry"], r["meta"]] for r in per_entry if r["kind"] == "extension"],
-                columns=["entry", "file_meta"],
-            )
-            ext_files = spark.createDataFrame(
-                ext_pdf,
-                T.StructType(
-                    [
-                        T.StructField("entry", T.StringType()),
-                        T.StructField("file_meta", T.StringType()),
-                    ]
-                ),
-            ).select(
-                F.xxhash64(F.lit(tdei_dataset_id), F.col("entry")).alias("id"),
-                F.lit(tdei_dataset_id).alias("tdei_dataset_id"),
-                F.regexp_extract(F.element_at(F.split("entry", "/"), -1), r"^(.*?)(\.[^.]*)?$", 1).alias("name"),
-                F.col("file_meta"),
-                F.lit(user_id).alias("requested_by"),
-            )
-            # one row per extension entry — bounded; don't scatter it over
-            # the full shuffle partitioning as near-empty files
-            writes.append(
-                lambda: sink_write("extension_file", ext_files.coalesce(max(1, n_ext // 250_000)))
-            )
-
-        # -- metadata: per-kind header -> dataset row (O15) --------------
-        # an archive of only extension files updates no metadata column in
-        # the reference's per-kind switch — skip the write job outright.
-        # "metadata" times this row's write, which runs in the pool above.
         timings["metadata"] = 0.0
-        if n_entries - n_ext > 0:
-            # Several files of one kind each overwrite the same column in
-            # the reference's sequential processing — last write wins;
-            # entry-name order is the deterministic distributed equivalent
-            # (== the previous max_by(meta, entry) pivot)
-            last_meta: dict[str, str] = {}
-            for r in sorted(
-                (r for r in per_entry if r["kind"] != "extension"),
-                key=lambda r: r["entry"],
-            ):
-                last_meta[r["kind"]] = r["meta"]
-            # Arrow-backed local frame: a plain Python-list createDataFrame
-            # scans through a pickled Python RDD — measured 3.5s per 2-row
-            # write vs 0.2s for the Arrow path
-            dataset_row = spark.createDataFrame(
-                pd.DataFrame(
-                    [[tdei_dataset_id, *[last_meta.get(k) for k in META_COLUMNS]]],
-                    columns=["tdei_dataset_id", *META_COLUMNS.values()],
-                ),
-                sink_schema("dataset"),
-            )
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            running = [pool.submit(spark_write, *w) for w in writes]
 
-            def write_metadata() -> None:
+            # extension-file registration (O16, extract-load-service.ts:
+            # 515-536): one row per extension entry, created even when it
+            # has 0 features (empty-insert fallback O14, :230). Zero
+            # extension entries write nothing.
+            if ext_entries:
+                sink_write(
+                    pd.DataFrame(
+                        {
+                            "id": [r["ext_file_id"] for r in ext_entries],
+                            "tdei_dataset_id": tdei_dataset_id,
+                            "name": [r["ext_name"] for r in ext_entries],
+                            "file_meta": [r["meta"] for r in ext_entries],
+                            "requested_by": user_id,
+                        }
+                    ),
+                    "extension_file",
+                )
+
+            # -- metadata: per-kind header -> dataset row (O15) ----------
+            # an archive of only extension files updates no metadata
+            # column in the reference's per-kind switch — no row
+            if n_entries > len(ext_entries):
                 t = time.perf_counter()
-                # exactly one row per dataset -> one file
-                sink_write("dataset", dataset_row.coalesce(1))
+                # Several files of one kind each overwrite the same column
+                # in the reference's sequential processing — last write
+                # wins; entry-name order is the deterministic distributed
+                # equivalent (== the previous max_by(meta, entry) pivot)
+                last_meta: dict[str, str] = {}
+                for r in sorted(
+                    (r for r in per_entry if r["kind"] != "extension"),
+                    key=lambda r: r["entry"],
+                ):
+                    last_meta[r["kind"]] = r["meta"]
+                dataset_row = {col: [last_meta.get(k)] for k, col in META_COLUMNS.items()}
+                sink_write(
+                    pd.DataFrame({"tdei_dataset_id": [tdei_dataset_id], **dataset_row}),
+                    "dataset",
+                )
                 timings["metadata"] = time.perf_counter() - t
 
-            writes.append(write_metadata)
-
-        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-            # list() re-raises the first failed write
-            list(pool.map(lambda write: write(), writes))
+            # result() re-raises a failed write
+            elevation = {k: v or 0 for job in running for k, v in job.result().items()}
         timings["load"] = time.perf_counter() - t0
 
         # -- stats: the tdei_update_osw_stats analogue (O19) -------------
         # every figure is already known: feature and file counts from the
-        # gate pass, elevation counts observed on the kind writes
+        # gate pass, elevation counts observed on the writes
         t0 = time.perf_counter()
         if counts:
-            stats_df = spark.createDataFrame(
+            sink_write(
                 pd.DataFrame(
-                    [
-                        [
-                            tdei_dataset_id,
-                            kind,
-                            n,
-                            len(kind_files[kind]),
-                            elevation[kind].get["n_with_elevation"] or 0,
-                        ]
-                        for kind, n in counts.items()
-                    ],
-                    columns=[
-                        "tdei_dataset_id", "kind", "n_features", "n_files", "n_with_elevation",
-                    ],
+                    {
+                        "tdei_dataset_id": tdei_dataset_id,
+                        "kind": list(counts),
+                        "n_features": list(counts.values()),
+                        "n_files": [len(kind_files[k]) for k in counts],
+                        "n_with_elevation": [elevation[k] for k in counts],
+                    }
                 ),
-                sink_schema("dataset_stats"),
+                "dataset_stats",
             )
-            sink_write("dataset_stats", stats_df.coalesce(1))
         timings["stats"] = time.perf_counter() - t0
 
         # -- commit: in manifest mode, ONE pointer swap publishes every

@@ -31,10 +31,21 @@ snapshot readers that interval to finish (the same grace-period contract
 as Delta's ``VACUUM``, with the retention measured in commits instead of
 hours). ``keep_commits`` widens it.
 
+A load stages with the same three-job shape as the partition layout
+(``sinks.writers.overwrite_by_key``): one Spark job writes several
+same-schema tables partitioned by a table column, and each of its
+``<table_col>=T`` directories is renamed to ``data/T/<dataset>-<txn>``
+(``write_tables``); rows the driver already holds are written as one
+Arrow file straight into their version directory (``write`` with a
+pandas frame). Either way the version directories keep the
+``data/<table>/<version>`` layout that ``gc_orphans`` and
+``read_table_at`` walk.
+
 At 100 TB nothing here is driver-heavy: data moves only through
-distributed parquet writes into fresh directories (no renames of data
-files at all — object-store friendly, where directory rename is a copy);
-the pointer swap is one small-file replace; the manifest itself is
+distributed parquet writes into fresh directories; the only renames are
+of this transaction's own staged directories into their version paths,
+before the pointer swap makes them visible. The pointer swap is one
+small-file replace; the manifest itself is
 O(tables x datasets), the same cardinality the reference keeps as rows in
 its ``content.dataset`` table.
 """
@@ -49,9 +60,10 @@ import re
 import shutil
 import uuid
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from tdei_extract_load_service_spark.sinks.writers import _path_lock
+from tdei_extract_load_service_spark.sinks.writers import _path_lock, staged_tables, write_arrow
 
 MANIFEST_NAME = "_MANIFEST.json"
 LOCK_NAME = "_MANIFEST.lock"
@@ -180,10 +192,11 @@ class ManifestTxn:
             txn.abort()
             raise
 
-    ``write``/``delete`` may be called from concurrent threads (the
-    per-kind writers): the data writes go to disjoint fresh directories
-    and the bookkeeping appends are GIL-atomic. Only ``commit`` touches
-    shared state, under the warehouse lock.
+    ``write``/``write_tables``/``delete`` may be called from concurrent
+    threads (the load's concurrent sink writes): the data writes go to
+    disjoint fresh directories and the bookkeeping appends are
+    GIL-atomic. Only ``commit`` touches shared state, under the warehouse
+    lock.
     """
 
     def __init__(self, root: str, keep_commits: int = 1) -> None:
@@ -194,15 +207,47 @@ class ManifestTxn:
         self._deletes: list[tuple[str, str]] = []
         self._done = False
 
-    def write(self, table: str, df: DataFrame, dataset_id: str) -> None:
-        """Stage one (table, dataset) version: a distributed parquet write
-        into a directory unique to this transaction. Caller controls file
-        count via coalesce/repartition on ``df``."""
-        reldir = os.path.join(
+    def _version_dir(self, table: str, dataset_id: str) -> str:
+        return os.path.join(
             "data", _safe_component(table), f"{_safe_component(dataset_id)}-{self.txn_id}"
         )
-        df.write.mode("overwrite").parquet(os.path.join(self.root, reldir))
+
+    def write(
+        self,
+        table: str,
+        df: DataFrame | pd.DataFrame,
+        dataset_id: str,
+        schema: str | None = None,
+    ) -> None:
+        """Stage one (table, dataset) version in a directory unique to this
+        transaction: a distributed parquet write of a Spark frame (caller
+        controls file count via coalesce/repartition on ``df``), or one
+        Arrow file of a driver-side pandas frame typed by the DDL
+        ``schema`` (no Spark job)."""
+        reldir = self._version_dir(table, dataset_id)
+        path = os.path.join(self.root, reldir)
+        if isinstance(df, pd.DataFrame):
+            write_arrow(df, schema, path)
+        else:
+            df.write.mode("overwrite").parquet(path)
         self._writes.append((table, str(dataset_id), reldir))
+
+    def write_tables(self, df: DataFrame, table_col: str, dataset_id: str) -> None:
+        """Stage one dataset's version of SEVERAL same-schema tables in one
+        Spark job: each row names its table in ``table_col``; the job
+        writes partitioned by it into a private staging directory, and
+        each ``<table_col>=T`` directory is renamed to T's version
+        directory."""
+        staging = os.path.join(self.root, "data", f".load-{self.txn_id}-{uuid.uuid4().hex[:8]}")
+        try:
+            df.write.partitionBy(table_col).parquet(staging)
+            for table, staged in staged_tables(staging, table_col):
+                reldir = self._version_dir(table, dataset_id)
+                os.makedirs(os.path.dirname(os.path.join(self.root, reldir)), exist_ok=True)
+                os.rename(staged, os.path.join(self.root, reldir))
+                self._writes.append((table, str(dataset_id), reldir))
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
 
     def delete(self, table: str, dataset_id: str) -> None:
         """Stage removal of a dataset's rows from a table (O17,

@@ -5,17 +5,25 @@ Replaces the reference's seven near-identical 38-line bulk-insert methods
 its delete-then-reload-inside-a-transaction pattern (O17/O18,
 :290-295 + data-source.ts:33-65) with two Spark-native atomicity patterns:
 
-- ``overwrite_by_key``: dynamic partition overwrite — rewriting exactly the
-  partitions present in the incoming frame (per-dataset replace) and
-  leaving all other datasets' partitions untouched; the swap of each
-  partition directory is the commit point.
+- ``overwrite_by_key``: key-scoped partition overwrite — rewriting exactly
+  the partitions present in the incoming frame (per-dataset replace) and
+  leaving all other datasets' partitions untouched. The frame lands in a
+  private staging directory first (one Spark job, or one Arrow file per
+  partition for a driver-side pandas frame), then each staged partition
+  directory is swapped in: delete the live partition, rename the staged
+  one — the step Spark's dynamic partition overwrite commits with. One
+  job can fill several same-schema tables when each row names its table
+  (``table_col``); a dataset load is therefore at most three Spark jobs.
 - ``staged_swap_write``: write everything to a staging location, then one
   atomic rename into place — single-table replace with a two-rename
   visibility window on existing targets.
 - For a single commit point covering SEVERAL sinks at once (the
   reference's one-transaction load), use ``sinks.manifest.ManifestTxn``:
-  versioned directories + one atomic pointer-file swap, no rename of data
-  paths at all.
+  versioned directories + one atomic pointer-file swap.
+
+Every partition directory the driver names comes from ``partition_dir``,
+the escaped name Spark's writer gives it, so an id holding ``/`` or
+``..`` can never address a path outside its table.
 
 JDBC writing (the reference's actual sink) is supported but not exercised
 in tests (no Postgres in the container); the 1,000-row batch default is
@@ -24,11 +32,14 @@ carried from BULK_INSERT_BATCH_SIZE (environment.ts:26).
 
 from __future__ import annotations
 
+import functools
 import os
+import re
 import shutil
 import threading
 import uuid
 
+import pandas as pd
 from pyspark.sql import DataFrame
 
 from tdei_extract_load_service_spark.errors import classify_db_error
@@ -36,13 +47,11 @@ from tdei_extract_load_service_spark.errors import classify_db_error
 #: Reference default: BULK_INSERT_BATCH_SIZE (environment.ts:26).
 DEFAULT_BATCH_SIZE = 1000
 
-#: Per-sink-root locks: two concurrent write jobs on ONE root would collide
-#: in the Hadoop committer's shared ``_temporary`` dir, so writes to the
-#: same path serialize; writes to different sinks (different kinds,
-#: different warehouses) overlap freely. The overwrite MODE is passed as a
-#: per-write option, not a session conf, so no global serialization is
-#: needed. Concurrent loads (queue consumer, maxConcurrentMessages=2)
-#: overlap everything except same-table commits.
+#: Per-sink-root locks: the partition swaps into one table serialize, so
+#: two writers never delete and rename the same live directory at once.
+#: The write jobs themselves run unlocked — each stages into its own
+#: directory — so concurrent loads (queue consumer,
+#: maxConcurrentMessages=2) overlap everything except same-table swaps.
 _PATH_LOCKS: dict[str, threading.Lock] = {}
 _PATH_LOCKS_GUARD = threading.Lock()
 
@@ -94,27 +103,143 @@ def write_batched(
     writer.parquet(path)
 
 
+#: Characters Spark's writer escapes in a partition directory name as
+#: ``%XX`` (``ExternalCatalogUtils.escapePathName``): control characters,
+#: DEL and these specials.
+_PATH_ESCAPES = frozenset(map(chr, range(0x20))) | frozenset('"#%\'*/:=?\\\x7f{[]^')
+
+#: Spark's directory value for a null or empty partition value.
+_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _escape_path_name(name: str) -> str:
+    return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPES else c for c in name)
+
+
+def _unescape_path_name(name: str) -> str:
+    return re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), name)
+
+
+def partition_dir(key_col: str, value) -> str:
+    """The directory name ``partitionBy(key_col)`` gives ``value`` —
+    Spark's ``ExternalCatalogUtils.getPartitionPathString``: both sides
+    ``%XX``-escaped, a null or empty value mapped to the default
+    partition. A path joined from it stays inside its table whatever the
+    value holds (``/`` and ``..`` become plain characters of one name)."""
+    text = "" if value is None else str(value)
+    escaped = _escape_path_name(text) if text else _DEFAULT_PARTITION
+    return f"{_escape_path_name(key_col)}={escaped}"
+
+
+def staged_tables(staging: str, table_col: str):
+    """``(table, directory)`` for each ``table_col=<table>`` directory that
+    a write partitioned by ``table_col`` left in ``staging``."""
+    prefix = f"{_escape_path_name(table_col)}="
+    for name in sorted(os.listdir(staging)):
+        if name.startswith(prefix):
+            yield _unescape_path_name(name[len(prefix):]), os.path.join(staging, name)
+
+
+@functools.lru_cache(maxsize=64)
+def _arrow_schema(schema: str):
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    return to_arrow_schema(StructType.fromDDL(schema))
+
+
+def write_arrow(
+    pdf: pd.DataFrame, schema: str, directory: str, partition_cols: tuple[str, ...] = ()
+) -> None:
+    """Write a driver-side pandas frame as parquet without a Spark job:
+    one file per combination of ``partition_cols`` values, in the
+    directories a Spark ``partitionBy`` write makes. Columns are typed by
+    the Spark DDL ``schema`` (an all-null column keeps its declared type),
+    partition columns live only in the path, and neither pandas nor
+    Arrow schema metadata is stored (Spark reads the parquet types back
+    as ``schema``; the footer stays as small as a Spark-written one)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    arrow = pa.schema([f for f in _arrow_schema(schema) if f.name not in partition_cols])
+    groups = (
+        pdf.groupby(list(partition_cols), sort=False, dropna=False)
+        if partition_cols
+        else [((), pdf)]
+    )
+    for values, rows in groups:
+        leaf = os.path.join(
+            directory,
+            *(partition_dir(c, None if pd.isna(v) else v) for c, v in zip(partition_cols, values)),
+        )
+        os.makedirs(leaf, exist_ok=True)
+        table = pa.Table.from_pandas(rows[arrow.names], schema=arrow, preserve_index=False)
+        pq.write_table(
+            table.replace_schema_metadata(None),
+            os.path.join(leaf, f"part-00000-{uuid.uuid4()}.snappy.parquet"),
+            store_schema=False,
+        )
+
+
+def _swap_partitions(staged: str, table_path: str, partition_cols: tuple[str, ...]) -> None:
+    """Move every leaf partition directory of ``staged`` into the live
+    table: delete the live partition, then rename the staged one in."""
+    leaves = [""]
+    for col in partition_cols:
+        prefix = f"{_escape_path_name(col)}="
+        leaves = [
+            os.path.join(rel, name)
+            for rel in leaves
+            for name in sorted(os.listdir(os.path.join(staged, rel)))
+            if name.startswith(prefix)
+        ]
+    with _path_lock(table_path):
+        for rel in leaves:
+            live = os.path.join(table_path, rel)
+            if os.path.exists(live):
+                shutil.rmtree(live)
+            os.makedirs(os.path.dirname(live), exist_ok=True)
+            os.rename(os.path.join(staged, rel), live)
+
+
 def overwrite_by_key(
-    df: DataFrame,
+    df: DataFrame | pd.DataFrame,
     path: str,
     key_col: str = "tdei_dataset_id",
     extra_partition_cols: tuple[str, ...] = (),
+    table_col: str | None = None,
+    schema: str | None = None,
 ) -> None:
     """Idempotent delete-then-reload keyed on ``key_col`` (O17,
     ``delete_dataset_records_by_id`` extract-load-service.ts:290-295).
 
-    Dynamic partition overwrite rewrites only the partitions present in
-    ``df`` — a re-run of the same dataset replaces exactly that dataset's
-    directory, other datasets are untouched, and readers see the old data
-    until each partition's swap commits.
+    Only the partitions present in ``df`` are replaced — a re-run of the
+    same dataset replaces exactly that dataset's directory, other
+    datasets are untouched, and readers see the old data until each
+    partition's swap. ``df`` is written to ``path/.load-<uuid>`` first:
+    a Spark frame in one job, a pandas frame (rows the driver already
+    holds, typed by the DDL ``schema``) by ``write_arrow`` with no job.
+    A failed write leaves every live partition as it was.
+
+    ``table_col``: ``path`` is a warehouse root and each row names its
+    sink table in that column, so one job fills several same-schema
+    tables; ``table_col=T/<partition>`` is swapped into ``path/T``.
     """
-    with _path_lock(path):
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")  # per-write, not session conf
-            .partitionBy(key_col, *extra_partition_cols)
-            .parquet(path)
-        )
+    partition_cols = (key_col, *extra_partition_cols)
+    staged_cols = (table_col, *partition_cols) if table_col else partition_cols
+    staging = os.path.join(path, f".load-{uuid.uuid4().hex}")
+    try:
+        if isinstance(df, pd.DataFrame):
+            write_arrow(df, schema, staging, staged_cols)
+        else:
+            df.write.partitionBy(*staged_cols).parquet(staging)
+        if table_col is None:
+            _swap_partitions(staging, path, partition_cols)
+        else:
+            for table, staged in staged_tables(staging, table_col):
+                _swap_partitions(staged, os.path.join(path, table), partition_cols)
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
 
 
 def _replace_where_predicate(key_col: str, keys: list) -> str:
@@ -366,9 +491,10 @@ def delete_by_key(path: str, key_value: str, key_col: str = "tdei_dataset_id") -
     catalog tables use ``DELETE WHERE`` / Delta ``replaceWhere`` — same
     contract.
     """
-    part_dir = os.path.join(path, f"{key_col}={key_value}")
-    if os.path.exists(part_dir):
-        shutil.rmtree(part_dir)
+    part_dir = os.path.join(path, partition_dir(key_col, key_value))
+    with _path_lock(path):
+        if os.path.exists(part_dir):
+            shutil.rmtree(part_dir)
 
 
 def compact_table(

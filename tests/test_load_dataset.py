@@ -287,10 +287,13 @@ def _shuffle_write_bytes(spark, stage_ids) -> int:
     )
 
 
-def test_small_archive_runs_one_job_per_sink_and_no_shuffle(spark, tmp_path):
-    """An archive of at most 1 MB loads in one gate pass plus one job per
-    sink write: the per-kind counts come from the gate and the elevation
-    counts ride the kind writes, so no job re-reads the data to count it."""
+@pytest.mark.parametrize("commit_mode", ["partition", "manifest"])
+def test_small_archive_runs_three_jobs_and_no_shuffle(spark, tmp_path, commit_mode):
+    """An archive of at most 1 MB loads in three jobs in either commit
+    mode: the gate pass, one write for every non-extension kind and one
+    for extensions. The counts come from the gate, the elevation counts
+    ride the writes, and the extension-file, dataset and stats rows are
+    written from the driver without a job."""
     archive = str(tmp_path / "osw.zip")
     make_zip(archive, {
         "data/nodes.geojson": json.dumps(NODES),
@@ -299,13 +302,15 @@ def test_small_archive_runs_one_job_per_sink_and_no_shuffle(spark, tmp_path):
         "data/points.geojson": json.dumps(EMPTY_POINTS),
     })
     before = set(_engine_jobs(spark))
-    result = load_dataset(spark, archive, "ds-jobs", "u", str(tmp_path / "wh"))
+    result = load_dataset(
+        spark, archive, "ds-jobs", "u", str(tmp_path / "wh"), commit_mode=commit_mode
+    )
     after = _engine_jobs(spark)
     assert result.success, result.message
     assert result.feature_counts == {"nodes": 3, "edges": 1, "extension": 2}
     new = sorted(set(after) - before)
-    # gate, three kinds, extension_file, dataset, dataset_stats
-    assert len(new) == 1 + 3 + 1 + 1 + 1, new
+    # gate, base kinds, extension
+    assert len(new) == 3, new
     assert _shuffle_write_bytes(spark, [s for j in new for s in after[j]]) == 0
 
 
@@ -398,3 +403,123 @@ def test_large_entry_spreads_transform_and_writes_one_file(spark, tmp_path):
     assert [(r.kind, r.n_features, r.n_files, r.n_with_elevation) for r in stats] == [
         ("nodes", n, 1, n - n // 3)
     ]
+
+
+# ids that Spark's partition writer escapes: ':', '/', '%', '=', a space,
+# plus non-ASCII characters (left as they are)
+ESCAPED_IDS = ["org:1/a b", "50%=ü 数据"]
+
+
+def test_partition_dir_matches_spark_escaping(spark):
+    from tdei_extract_load_service_spark.sinks.writers import partition_dir
+
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    every_ascii = "".join(map(chr, range(1, 128)))
+    for value in [every_ascii, *ESCAPED_IDS, "x/../../.."]:
+        assert partition_dir("k", value) == "k=" + utils.escapePathName(value)
+    assert partition_dir("k", "") == partition_dir("k", None) == "k=__HIVE_DEFAULT_PARTITION__"
+
+
+def test_reload_clears_disappeared_kind_for_escaped_id(spark, tmp_path):
+    """The pre-delete must find the directory Spark wrote for an id it
+    escapes: a reload without edges leaves no stale edge row."""
+    from tdei_extract_load_service_spark.plans.load_dataset import read_sink
+
+    ds = "org:1/a b"
+    warehouse = str(tmp_path / "wh")
+    a1 = str(tmp_path / "v1.zip")
+    make_zip(a1, {"nodes.geojson": json.dumps(NODES), "edges.geojson": EDGES_TEXT})
+    assert load_dataset(spark, a1, ds, "u", warehouse).success
+    a2 = str(tmp_path / "v2.zip")
+    make_zip(a2, {"nodes.geojson": json.dumps(NODES)})
+    assert load_dataset(spark, a2, ds, "u", warehouse).success
+    assert read_sink(spark, warehouse, "edge").where(F.col("tdei_dataset_id") == ds).count() == 0
+    assert read_sink(spark, warehouse, "node").where(F.col("tdei_dataset_id") == ds).count() == 3
+
+
+def test_delete_by_key_stays_inside_the_table(tmp_path):
+    """A dataset id from the request message cannot walk the pre-delete out
+    of its table: ``x/../../..`` names one (escaped) partition, not the
+    warehouse's parent directory."""
+    from tdei_extract_load_service_spark.sinks.writers import delete_by_key
+
+    sandbox = tmp_path / "sandbox"
+    table = sandbox / "wh" / "node"
+    (table / "tdei_dataset_id=x").mkdir(parents=True)
+    (table / "tdei_dataset_id=x" / "part-0.parquet").write_bytes(b"x")
+    sibling = sandbox / "keep.txt"
+    sibling.write_text("keep")
+    delete_by_key(str(table), "x/../../..")
+    assert sibling.read_text() == "keep"
+    assert (table / "tdei_dataset_id=x" / "part-0.parquet").exists()
+
+
+@pytest.mark.parametrize("commit_mode", ["partition", "manifest"])
+def test_escaped_ids_land_where_spark_puts_them(spark, tmp_path, commit_mode):
+    """Directory names and file types of every sink table match a direct
+    Spark write, for ids Spark escapes, whether the rows came from a
+    Spark job or from an Arrow write of driver-held rows."""
+    from pyspark.sql.types import StructType
+
+    from tdei_extract_load_service_spark.plans.load_dataset import (
+        SINK_TABLES,
+        read_sink,
+        sink_schema,
+    )
+    from tdei_extract_load_service_spark.sinks.manifest import read_manifest
+
+    full = str(tmp_path / "full.zip")
+    make_zip(full, {
+        "data/nodes.geojson": json.dumps(NODES),
+        "data/edges.geojson": EDGES_TEXT,
+        "data/zones.geojson": json.dumps(ZONES),
+        "data/custom.geojson": json.dumps(EXTENSION),
+    })
+    nodes_only = str(tmp_path / "nodes.zip")
+    make_zip(nodes_only, {"data/nodes.geojson": json.dumps(NODES)})
+    tables = ["node", "edge", "zone", "extension", "extension_file", "dataset", "dataset_stats"]
+    warehouse = str(tmp_path / "wh")
+    for ds in ESCAPED_IDS:
+        result = load_dataset(spark, full, ds, "u", warehouse, commit_mode=commit_mode)
+        assert result.success, result.message
+
+    for ds in ESCAPED_IDS:
+        for table in tables:
+            rows = read_sink(spark, warehouse, table).where(F.col("tdei_dataset_id") == ds)
+            assert rows.count() > 0, (ds, table)
+    if commit_mode == "partition":
+        probe = str(tmp_path / "probe")
+        spark.createDataFrame([(ds, 1) for ds in ESCAPED_IDS], "tdei_dataset_id string, v int") \
+            .write.partitionBy("tdei_dataset_id").parquet(probe)
+        spark_dirs = sorted(d for d in os.listdir(probe) if not d.startswith(("_", ".")))
+        for table in tables:
+            assert sorted(os.listdir(os.path.join(warehouse, table))) == spark_dirs, table
+    else:
+        manifest = read_manifest(warehouse)["tables"]
+        assert all(sorted(manifest[t]) == sorted(ESCAPED_IDS) for t in tables)
+
+    # the Arrow-written tables read back as their declared schema
+    for table in ("extension_file", "dataset", "dataset_stats"):
+        declared = StructType.fromDDL(sink_schema(table))
+        if commit_mode == "partition":
+            inferred = spark.read.parquet(os.path.join(warehouse, table)).schema
+            # the partition column comes last in a partitioned read
+            key = declared["tdei_dataset_id"]
+            declared = StructType([f for f in declared if f is not key] + [key])
+        else:
+            reldir = read_manifest(warehouse)["tables"][table][ESCAPED_IDS[0]]
+            inferred = spark.read.parquet(os.path.join(warehouse, reldir)).schema
+        assert inferred == declared, table
+
+    # a reload drops the kinds the new archive lacks
+    ds = ESCAPED_IDS[0]
+    assert load_dataset(spark, nodes_only, ds, "u", warehouse, commit_mode=commit_mode).success
+    landed = {
+        table: read_sink(spark, warehouse, table).where(F.col("tdei_dataset_id") == ds).count()
+        for table in (*SINK_TABLES.values(), "extension_file")
+    }
+    assert landed == {t: 3 if t == "node" else 0 for t in landed}
+    stats = read_sink(spark, warehouse, "dataset_stats").where(F.col("tdei_dataset_id") == ds)
+    assert [r.kind for r in stats.collect()] == ["nodes"]
+    other = read_sink(spark, warehouse, "edge").where(F.col("tdei_dataset_id") == ESCAPED_IDS[1])
+    assert other.count() == 1
