@@ -821,9 +821,10 @@ def q_etl_load_dataset(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = tempfile.mkdtemp(prefix="etl_catalog_")
     archive = write_osw_archive(f"{root}/synthetic.zip", n_nodes=100, n_edges=50)
-    # manifest mode: the whole multi-sink load publishes through ONE
-    # atomic pointer swap (sinks/manifest.py) — the driver's hash gate
-    # therefore certifies the production single-commit-point path
+    # manifest mode (the service's default is partition mode): the
+    # whole multi-sink load publishes through ONE atomic pointer swap
+    # (sinks/manifest.py), so the oracle certifies the load's rows as
+    # read back through that manifest
     result = load_dataset(
         spark, archive, "catalog-ds", "catalog-user", f"{root}/warehouse",
         commit_mode="manifest",
@@ -1024,13 +1025,8 @@ def q_table_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _read_events(spark, sf_dir).select("event_type", "value")
     root = tempfile.mkdtemp(prefix="compact_catalog_")
-    txn = ManifestTxn(root)
-    try:
+    with ManifestTxn(root) as txn:
         txn.write("events_copy", ev.repartition(64), "ds")
-        txn.commit()
-    except Exception:
-        txn.abort()
-        raise
     stats = compact_table(spark, root, "events_copy", "ds")
     if stats["files_after"] >= stats["files_before"]:
         raise RuntimeError(f"compaction did not reduce files: {stats}")
@@ -1101,19 +1097,17 @@ def q_table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
             _shutil.rmtree(root, ignore_errors=True)
         orders = _read(spark, sf_dir, "orders").select(*cols)
-        t1 = ManifestTxn(root, keep_commits=10)
-        t1.write("ord_slice", orders.where(F.col("o_orderkey") <= 320).coalesce(1), "ds-tt")
-        t1.commit()
-        t2 = ManifestTxn(root, keep_commits=10)
-        t2.delete("ord_slice", "ds-tt")
-        t2.write(
-            "ord_slice",
-            orders.where(
-                (F.col("o_orderkey") > 320) & (F.col("o_orderkey") <= 640)
-            ).coalesce(1),
-            "ds-tt",
-        )
-        t2.commit()
+        with ManifestTxn(root, keep_commits=10) as t1:
+            t1.write("ord_slice", orders.where(F.col("o_orderkey") <= 320).coalesce(1), "ds-tt")
+        with ManifestTxn(root, keep_commits=10) as t2:
+            t2.delete("ord_slice", "ds-tt")
+            t2.write(
+                "ord_slice",
+                orders.where(
+                    (F.col("o_orderkey") > 320) & (F.col("o_orderkey") <= 640)
+                ).coalesce(1),
+                "ds-tt",
+            )
     v1 = read_table_at(spark, root, "ord_slice", 1).withColumn(
         "version", F.lit(1)
     )
@@ -1223,17 +1217,15 @@ def q_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         )
-        t1 = ManifestTxn(root, keep_commits=10)
-        t1.write(
-            "ord_cdf",
-            orders.where(F.col("o_orderkey") <= 640).coalesce(1),
-            "ds-cdf",
-        )
-        t1.commit()
-        t2 = ManifestTxn(root, keep_commits=10)
-        t2.delete("ord_cdf", "ds-cdf")
-        t2.write("ord_cdf", v2_frame.coalesce(1), "ds-cdf")
-        t2.commit()
+        with ManifestTxn(root, keep_commits=10) as t1:
+            t1.write(
+                "ord_cdf",
+                orders.where(F.col("o_orderkey") <= 640).coalesce(1),
+                "ds-cdf",
+            )
+        with ManifestTxn(root, keep_commits=10) as t2:
+            t2.delete("ord_cdf", "ds-cdf")
+            t2.write("ord_cdf", v2_frame.coalesce(1), "ds-cdf")
     feed = table_changes(
         read_table_at(spark, root, "ord_cdf", 1),
         read_table_at(spark, root, "ord_cdf", 2),

@@ -33,6 +33,7 @@ times plan construction only, since its execution happens inside the
 
 from __future__ import annotations
 
+import contextlib
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -290,238 +291,242 @@ def load_dataset(
     # (malformed entry, sink error) must not leak its cached blocks
     entries = None
     try:
-        # -- pre-delete: wipe all prior rows of this dataset (O17,
-        # delete_dataset_records_by_id extract-load-service.ts:290-295 —
-        # runs before the load, so a kind absent from the new archive
-        # can't leave stale rows behind). In manifest mode the deletes are
-        # STAGED and land atomically with the writes at commit.
-        t0 = time.perf_counter()
-        if txn is not None:
-            for table in all_tables:
-                txn.delete(table, tdei_dataset_id)
-        else:
-            from tdei_extract_load_service_spark.sinks.writers import delete_by_key
-
-            for table in all_tables:
-                delete_by_key(os.path.join(warehouse, table), tdei_dataset_id)
-        timings["delete"] = time.perf_counter() - t0
-
-        # -- extract: archive -> routed entries -------------------------
-        t0 = time.perf_counter()
-        entries = routed_entries(zip_fanout(read_zip_archives(spark, archive_path)))
-        # entries feed the gate and both writes: one fan-out, cached
-        entries = entries.persist()
-        # extension features carry the extension_file FK
-        # (extract-load-service.ts:473-479); surrogate id = stable hash of
-        # (dataset, entry) instead of a DB sequence — distributed-safe
-        ext_file_id = F.xxhash64(F.lit(tdei_dataset_id), F.col("entry"))
-        # ONE materializing pass returns, per FILE, the malformed-entry
-        # gate (O21, geoJsonPipeError extract-load-service.ts:41-49), the
-        # header metadata that the extension-registration (O16) and
-        # metadata (O15) stages consume, the feature count that sizes the
-        # writes and fills the stats (O19), and the extension-file id and
-        # name, computed by Spark so they match the features' FK. Its only
-        # Python runner is the fan-out generator, which parses the headers
-        # itself: each Python task pays its worker set-up before any row
-        # moves. Collected volume is one small row per file, never
-        # feature data.
-        is_bad = F.from_json("entry_text", "map<string,string>").isNull()
-        per_entry = entries.select(
-            "kind",
-            "entry",
-            is_bad.alias("bad"),
-            "meta",
-            F.length("entry_text").alias("entry_bytes"),
-            feature_count("entry_text").alias("n_features"),
-            ext_file_id.alias("ext_file_id"),
-            # name = basename sans extension (ref :531)
-            F.regexp_extract(
-                F.element_at(F.split("entry", "/"), -1), r"^(.*?)(\.[^.]*)?$", 1
-            ).alias("ext_name"),
-        ).collect()
-        n_entries = len(per_entry)
-        if n_entries == 0:
-            raise NoGeoJsonEntriesError(
-                f"No GeoJSON files found in the archive for dataset {tdei_dataset_id}"
-            )
-        bad_entry = min((r["entry"] for r in per_entry if r["bad"]), default=None)
-        if bad_entry is not None:
-            raise MalformedGeoJsonError(
-                f"Unable to parse GeoJSON: invalid JSON in entry {bad_entry}"
-            )
-        # per kind: features, and the distinct entries that hold any
-        # (zero-feature files add no stats row and no sink file)
-        counts: dict[str, int] = {}
-        kind_files: dict[str, set[str]] = {}
-        for r in per_entry:
-            if r["n_features"] > 0:
-                counts[r["kind"]] = counts.get(r["kind"], 0) + r["n_features"]
-                kind_files.setdefault(r["kind"], set()).add(r["entry"])
-        ext_entries = [r for r in per_entry if r["kind"] == "extension"]
-        total_entry_bytes = sum(r["entry_bytes"] or 0 for r in per_entry)
-        timings["extract"] = time.perf_counter() - t0
-
-        # -- transform: plan construction only. Nothing is cached here:
-        # each write below runs the transform for its own kinds straight
-        # from the cached entries (the kind filter lands on the cache
-        # scan, below the explode), so its execution is billed to "load".
-        t0 = time.perf_counter()
-        features = explode_features(entries)
-        # explode-skew fix: feature rows inherit the ENTRY partitioning
-        # (one task per input file), so one giant .geojson would pin its
-        # millions of features to a single core through the whole
-        # parse/transform. A round-robin shuffle of the raw feature text
-        # right after the explode spreads the per-feature work across the
-        # cluster; its cost is one pass over bytes we are about to parse,
-        # re-serialize and write anyway. The shuffle WIDTH is sized to
-        # the archive (one task per ~1 MB of entry text, bounded by 4x
-        # parallelism): a fixed defaultParallelism width put 32
-        # near-empty tasks under a 10k-feature load and their scheduling
-        # overhead dominated the stage, while a 300 MB single-file archive
-        # still fans out to hundreds of tasks. An archive of at most
-        # 1 MB needs no shuffle at all.
-        n_repart = min(
-            -(-total_entry_bytes // (1 << 20)),
-            4 * spark.sparkContext.defaultParallelism,
-        )
-        if n_repart > 1:
-            features = features.repartition(n_repart)
-        features = transform_features(features, fidelity=fidelity)
-        features = features.withColumns(
-            {
-                "tdei_dataset_id": F.lit(tdei_dataset_id),
-                "requested_by": F.lit(user_id),
-            }
-        )
-        timings["transform"] = time.perf_counter() - t0
-
-        # -- load: one parameterized writer (O12), two Spark jobs ---------
-        # the six non-extension kinds share one schema, so one job writes
-        # them all (each row names its table); extension rows add
-        # ext_file_id and keep their own job. The two jobs are independent
-        # and run concurrently (the reference necessarily serialized its
-        # bulkInsert* calls on one DB transaction; each write stages into
-        # its own directory and only same-table swaps serialize).
-        t0 = time.perf_counter()
-        # ~250k rows per file, floor 1 per table (tiny files x kinds x
-        # datasets is the classic small-files problem)
-        n_files = {kind: max(1, n // 250_000) for kind, n in counts.items()}
-
-        def by_kind(values: dict) -> Column:
-            return F.create_map(*[F.lit(x) for item in values.items() for x in item])[F.col("kind")]
-
-        def spark_write(kinds: list[str], cols: list[Column], table: str | None) -> dict:
-            """Write ``kinds`` in one job; returns each kind's count of
-            features carrying ``ext:elevation``, observed on the write
-            instead of a separate aggregation job."""
-            observed = Observation()
-            has_elevation = F.col("feature").contains('"ext:elevation"')
-            df = features.where(F.col("kind").isin(kinds)).observe(
-                observed,
-                *[
-                    F.sum(F.when(has_elevation & (F.col("kind") == k), 1).otherwise(0)).alias(k)
-                    for k in kinds
-                ],
-            )
-            # file sizing: an archive of at most 1 MB is written by one
-            # task, one file per table; past that, one shuffle gives each
-            # kind at most n_files[kind] files (coalescing the skew
-            # shuffle's partitions would pull the transform back onto one
-            # task per file)
-            if n_repart <= 1:
-                df = df.coalesce(1)
+        # manifest mode: a failure anywhere below aborts the transaction
+        # (the pointer was never swapped, so no reader saw anything)
+        with txn or contextlib.nullcontext():
+            # -- pre-delete: wipe all prior rows of this dataset (O17,
+            # delete_dataset_records_by_id extract-load-service.ts:290-295 —
+            # runs before the load, so a kind absent from the new archive
+            # can't leave stale rows behind). In manifest mode the deletes are
+            # STAGED and land atomically with the writes at commit.
+            t0 = time.perf_counter()
+            if txn is not None:
+                for table in all_tables:
+                    txn.delete(table, tdei_dataset_id)
             else:
-                df = df.repartition(
-                    sum(n_files[k] for k in kinds),
-                    "kind",
-                    F.pmod(F.xxhash64("feature"), by_kind({k: n_files[k] for k in kinds})),
+                from tdei_extract_load_service_spark.sinks.writers import delete_by_key
+
+                for table in all_tables:
+                    delete_by_key(os.path.join(warehouse, table), tdei_dataset_id)
+            timings["delete"] = time.perf_counter() - t0
+
+            # -- extract: archive -> routed entries -------------------------
+            t0 = time.perf_counter()
+            entries = routed_entries(zip_fanout(read_zip_archives(spark, archive_path)))
+            # entries feed the gate and both writes: one fan-out, cached
+            entries = entries.persist()
+            # extension features carry the extension_file FK
+            # (extract-load-service.ts:473-479); surrogate id = stable hash of
+            # (dataset, entry) instead of a DB sequence — distributed-safe
+            ext_file_id = F.xxhash64(F.lit(tdei_dataset_id), F.col("entry"))
+            # ONE materializing pass returns, per FILE, the malformed-entry
+            # gate (O21, geoJsonPipeError extract-load-service.ts:41-49), the
+            # header metadata that the extension-registration (O16) and
+            # metadata (O15) stages consume, the feature count that sizes the
+            # writes and fills the stats (O19), and the extension-file id and
+            # name, computed by Spark so they match the features' FK. Its only
+            # Python runner is the fan-out generator, which parses the headers
+            # itself: each Python task pays its worker set-up before any row
+            # moves. Collected volume is one small row per file, never
+            # feature data.
+            is_bad = F.from_json("entry_text", "map<string,string>").isNull()
+            per_entry = entries.select(
+                "kind",
+                "entry",
+                is_bad.alias("bad"),
+                "meta",
+                F.length("entry_text").alias("entry_bytes"),
+                feature_count("entry_text").alias("n_features"),
+                ext_file_id.alias("ext_file_id"),
+                # name = basename sans extension (ref :531)
+                F.regexp_extract(
+                    F.element_at(F.split("entry", "/"), -1), r"^(.*?)(\.[^.]*)?$", 1
+                ).alias("ext_name"),
+            ).collect()
+            n_entries = len(per_entry)
+            if n_entries == 0:
+                raise NoGeoJsonEntriesError(
+                    f"No GeoJSON files found in the archive for dataset {tdei_dataset_id}"
                 )
-            sink_write(df.select(*cols), table)
-            return observed.get
+            bad_entry = min((r["entry"] for r in per_entry if r["bad"]), default=None)
+            if bad_entry is not None:
+                raise MalformedGeoJsonError(
+                    f"Unable to parse GeoJSON: invalid JSON in entry {bad_entry}"
+                )
+            # per kind: features, and the distinct entries that hold any
+            # (zero-feature files add no stats row and no sink file)
+            counts: dict[str, int] = {}
+            kind_files: dict[str, set[str]] = {}
+            for r in per_entry:
+                if r["n_features"] > 0:
+                    counts[r["kind"]] = counts.get(r["kind"], 0) + r["n_features"]
+                    kind_files.setdefault(r["kind"], set()).add(r["entry"])
+            ext_entries = [r for r in per_entry if r["kind"] == "extension"]
+            total_entry_bytes = sum(r["entry_bytes"] or 0 for r in per_entry)
+            timings["extract"] = time.perf_counter() - t0
 
-        sink_cols = [F.col(c) for c in ("tdei_dataset_id", "feature", "requested_by", "entry")]
-        writes = []
-        base_kinds = [k for k in counts if k != "extension"]
-        if base_kinds:
-            table_of = by_kind(SINK_TABLES).alias(TABLE_COL)
-            writes.append((base_kinds, [table_of, *sink_cols], None))
-        if "extension" in counts:
-            ext_cols = [sink_cols[0], ext_file_id.alias("ext_file_id"), *sink_cols[1:]]
-            writes.append((["extension"], ext_cols, "extension"))
+            # -- transform: plan construction only. Nothing is cached here:
+            # each write below runs the transform for its own kinds straight
+            # from the cached entries (the kind filter lands on the cache
+            # scan, below the explode), so its execution is billed to "load".
+            t0 = time.perf_counter()
+            features = explode_features(entries)
+            # explode-skew fix: feature rows inherit the ENTRY partitioning
+            # (one task per input file), so one giant .geojson would pin its
+            # millions of features to a single core through the whole
+            # parse/transform. A round-robin shuffle of the raw feature text
+            # right after the explode spreads the per-feature work across the
+            # cluster; its cost is one pass over bytes we are about to parse,
+            # re-serialize and write anyway. The shuffle WIDTH is sized to
+            # the archive (one task per ~1 MB of entry text, bounded by 4x
+            # parallelism): a fixed defaultParallelism width put 32
+            # near-empty tasks under a 10k-feature load and their scheduling
+            # overhead dominated the stage, while a 300 MB single-file archive
+            # still fans out to hundreds of tasks. An archive of at most
+            # 1 MB needs no shuffle at all.
+            n_repart = min(
+                -(-total_entry_bytes // (1 << 20)),
+                4 * spark.sparkContext.defaultParallelism,
+            )
+            if n_repart > 1:
+                features = features.repartition(n_repart)
+            features = transform_features(features, fidelity=fidelity)
+            features = features.withColumns(
+                {
+                    "tdei_dataset_id": F.lit(tdei_dataset_id),
+                    "requested_by": F.lit(user_id),
+                }
+            )
+            timings["transform"] = time.perf_counter() - t0
 
-        timings["metadata"] = 0.0
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            running = [pool.submit(spark_write, *w) for w in writes]
+            # -- load: one parameterized writer (O12), two Spark jobs ---------
+            # the six non-extension kinds share one schema, so one job writes
+            # them all (each row names its table); extension rows add
+            # ext_file_id and keep their own job. The two jobs are independent
+            # and run concurrently (the reference necessarily serialized its
+            # bulkInsert* calls on one DB transaction; each write stages into
+            # its own directory and only same-table swaps serialize).
+            t0 = time.perf_counter()
+            # ~250k rows per file, floor 1 per table (tiny files x kinds x
+            # datasets is the classic small-files problem)
+            n_files = {kind: max(1, n // 250_000) for kind, n in counts.items()}
 
-            # extension-file registration (O16, extract-load-service.ts:
-            # 515-536): one row per extension entry, created even when it
-            # has 0 features (empty-insert fallback O14, :230). Zero
-            # extension entries write nothing.
-            if ext_entries:
+            def by_kind(values: dict) -> Column:
+                pairs = [F.lit(x) for item in values.items() for x in item]
+                return F.create_map(*pairs)[F.col("kind")]
+
+            def spark_write(kinds: list[str], cols: list[Column], table: str | None) -> dict:
+                """Write ``kinds`` in one job; returns each kind's count of
+                features carrying ``ext:elevation``, observed on the write
+                instead of a separate aggregation job."""
+                observed = Observation()
+                has_elevation = F.col("feature").contains('"ext:elevation"')
+                df = features.where(F.col("kind").isin(kinds)).observe(
+                    observed,
+                    *[
+                        F.sum(F.when(has_elevation & (F.col("kind") == k), 1).otherwise(0)).alias(k)
+                        for k in kinds
+                    ],
+                )
+                # file sizing: an archive of at most 1 MB is written by one
+                # task, one file per table; past that, one shuffle gives each
+                # kind at most n_files[kind] files (coalescing the skew
+                # shuffle's partitions would pull the transform back onto one
+                # task per file)
+                if n_repart <= 1:
+                    df = df.coalesce(1)
+                else:
+                    df = df.repartition(
+                        sum(n_files[k] for k in kinds),
+                        "kind",
+                        F.pmod(F.xxhash64("feature"), by_kind({k: n_files[k] for k in kinds})),
+                    )
+                sink_write(df.select(*cols), table)
+                return observed.get
+
+            sink_cols = [F.col(c) for c in ("tdei_dataset_id", "feature", "requested_by", "entry")]
+            writes = []
+            base_kinds = [k for k in counts if k != "extension"]
+            if base_kinds:
+                table_of = by_kind(SINK_TABLES).alias(TABLE_COL)
+                writes.append((base_kinds, [table_of, *sink_cols], None))
+            if "extension" in counts:
+                ext_cols = [sink_cols[0], ext_file_id.alias("ext_file_id"), *sink_cols[1:]]
+                writes.append((["extension"], ext_cols, "extension"))
+
+            timings["metadata"] = 0.0
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                running = [pool.submit(spark_write, *w) for w in writes]
+
+                # extension-file registration (O16, extract-load-service.ts:
+                # 515-536): one row per extension entry, created even when it
+                # has 0 features (empty-insert fallback O14, :230). Zero
+                # extension entries write nothing.
+                if ext_entries:
+                    sink_write(
+                        pd.DataFrame(
+                            {
+                                "id": [r["ext_file_id"] for r in ext_entries],
+                                "tdei_dataset_id": tdei_dataset_id,
+                                "name": [r["ext_name"] for r in ext_entries],
+                                "file_meta": [r["meta"] for r in ext_entries],
+                                "requested_by": user_id,
+                            }
+                        ),
+                        "extension_file",
+                    )
+
+                # -- metadata: per-kind header -> dataset row (O15) ----------
+                # an archive of only extension files updates no metadata
+                # column in the reference's per-kind switch — no row
+                if n_entries > len(ext_entries):
+                    t = time.perf_counter()
+                    # Several files of one kind each overwrite the same column
+                    # in the reference's sequential processing — last write
+                    # wins; entry-name order is the deterministic distributed
+                    # equivalent (== the previous max_by(meta, entry) pivot)
+                    last_meta: dict[str, str] = {}
+                    for r in sorted(
+                        (r for r in per_entry if r["kind"] != "extension"),
+                        key=lambda r: r["entry"],
+                    ):
+                        last_meta[r["kind"]] = r["meta"]
+                    dataset_row = {col: [last_meta.get(k)] for k, col in META_COLUMNS.items()}
+                    sink_write(
+                        pd.DataFrame({"tdei_dataset_id": [tdei_dataset_id], **dataset_row}),
+                        "dataset",
+                    )
+                    timings["metadata"] = time.perf_counter() - t
+
+                # result() re-raises a failed write
+                elevation = {k: v or 0 for job in running for k, v in job.result().items()}
+            timings["load"] = time.perf_counter() - t0
+
+            # -- stats: the tdei_update_osw_stats analogue (O19) -------------
+            # every figure is already known: feature and file counts from the
+            # gate pass, elevation counts observed on the writes
+            t0 = time.perf_counter()
+            if counts:
                 sink_write(
                     pd.DataFrame(
                         {
-                            "id": [r["ext_file_id"] for r in ext_entries],
                             "tdei_dataset_id": tdei_dataset_id,
-                            "name": [r["ext_name"] for r in ext_entries],
-                            "file_meta": [r["meta"] for r in ext_entries],
-                            "requested_by": user_id,
+                            "kind": list(counts),
+                            "n_features": list(counts.values()),
+                            "n_files": [len(kind_files[k]) for k in counts],
+                            "n_with_elevation": [elevation[k] for k in counts],
                         }
                     ),
-                    "extension_file",
+                    "dataset_stats",
                 )
+            timings["stats"] = time.perf_counter() - t0
 
-            # -- metadata: per-kind header -> dataset row (O15) ----------
-            # an archive of only extension files updates no metadata
-            # column in the reference's per-kind switch — no row
-            if n_entries > len(ext_entries):
-                t = time.perf_counter()
-                # Several files of one kind each overwrite the same column
-                # in the reference's sequential processing — last write
-                # wins; entry-name order is the deterministic distributed
-                # equivalent (== the previous max_by(meta, entry) pivot)
-                last_meta: dict[str, str] = {}
-                for r in sorted(
-                    (r for r in per_entry if r["kind"] != "extension"),
-                    key=lambda r: r["entry"],
-                ):
-                    last_meta[r["kind"]] = r["meta"]
-                dataset_row = {col: [last_meta.get(k)] for k, col in META_COLUMNS.items()}
-                sink_write(
-                    pd.DataFrame({"tdei_dataset_id": [tdei_dataset_id], **dataset_row}),
-                    "dataset",
-                )
-                timings["metadata"] = time.perf_counter() - t
-
-            # result() re-raises a failed write
-            elevation = {k: v or 0 for job in running for k, v in job.result().items()}
-        timings["load"] = time.perf_counter() - t0
-
-        # -- stats: the tdei_update_osw_stats analogue (O19) -------------
-        # every figure is already known: feature and file counts from the
-        # gate pass, elevation counts observed on the writes
-        t0 = time.perf_counter()
-        if counts:
-            sink_write(
-                pd.DataFrame(
-                    {
-                        "tdei_dataset_id": tdei_dataset_id,
-                        "kind": list(counts),
-                        "n_features": list(counts.values()),
-                        "n_files": [len(kind_files[k]) for k in counts],
-                        "n_with_elevation": [elevation[k] for k in counts],
-                    }
-                ),
-                "dataset_stats",
-            )
-        timings["stats"] = time.perf_counter() - t0
-
-        # -- commit: in manifest mode, ONE pointer swap publishes every
-        # sink written above (the reference's single COMMIT) -------------
-        if txn is not None:
-            t0 = time.perf_counter()
-            txn.commit()
-            timings["commit"] = time.perf_counter() - t0
+            # -- commit: in manifest mode, ONE pointer swap publishes every
+            # sink written above (the reference's single COMMIT) -------------
+            if txn is not None:
+                t0 = time.perf_counter()
+                txn.commit()
+                timings["commit"] = time.perf_counter() - t0
 
         return LoadResult(
             success=True,
@@ -531,10 +536,6 @@ def load_dataset(
             timings={k: round(v, 4) for k, v in timings.items()},
         )
     except Exception as exc:  # noqa: BLE001 — O21: normalize into a failure publish
-        if txn is not None:
-            # rollback: the pointer was never swapped, so no reader saw
-            # anything; just reap this transaction's staged directories
-            txn.abort()
         from tdei_extract_load_service_spark.errors import DatabaseError, classify_db_error
 
         exc = classify_db_error(exc)

@@ -26,8 +26,7 @@ from tdei_extract_load_service_spark.sinks.manifest import (
 )
 
 
-def _data_files(root: str, reldir: str) -> list[str]:
-    d = os.path.join(root, reldir)
+def _data_files(d: str) -> list[str]:
     return [p for p in os.listdir(d) if p.endswith(".parquet")]
 
 
@@ -53,7 +52,7 @@ def compact_table(
     reldir = manifest["tables"].get(table, {}).get(str(dataset_id))
     if reldir is None:
         raise ValueError(f"no committed data for ({table!r}, {dataset_id!r})")
-    files = _data_files(root, reldir)
+    files = _data_files(os.path.join(root, reldir))
     files_before = len(files)
     cur = read_table(spark, root, table, dataset_id=dataset_id)
     # Row count from the parquet footers (driver-side metadata read, the
@@ -75,17 +74,11 @@ def compact_table(
     except Exception:  # pragma: no cover - pyarrow is baked in
         rows = cur.count()
     n_files = max(1, -(-rows // target_rows_per_file))
-    txn = ManifestTxn(root)
-    try:
-        txn.write(table, cur.repartition(n_files), str(dataset_id))
-        new = txn.commit()
-    except Exception:
-        txn.abort()
-        raise
-    new_reldir = new["tables"][table][str(dataset_id)]
+    with ManifestTxn(root) as txn:
+        new_dir = txn.write(table, cur.repartition(n_files), str(dataset_id))
     return {
         "rows": rows,
         "files_before": files_before,
-        "files_after": len(_data_files(root, new_reldir)),
-        "txn": new["txn"],
+        "files_after": len(_data_files(new_dir)),
+        "txn": txn.manifest["txn"],
     }

@@ -31,15 +31,20 @@ snapshot readers that interval to finish (the same grace-period contract
 as Delta's ``VACUUM``, with the retention measured in commits instead of
 hours). ``keep_commits`` widens it.
 
+Every caller opens a transaction the same way, as a context manager
+(``with ManifestTxn(root) as txn:``): a clean exit from the block
+commits; an exception aborts (the staged directories are removed, the
+pointer is untouched) and re-raises.
+
 A load stages with the same three-job shape as the partition layout
 (``sinks.writers.overwrite_by_key``): one Spark job writes several
 same-schema tables partitioned by a table column, and each of its
 ``<table_col>=T`` directories is renamed to ``data/T/<dataset>-<txn>``
 (``write_tables``); rows the driver already holds are written as one
 Arrow file straight into their version directory (``write`` with a
-pandas frame). Either way the version directories keep the
-``data/<table>/<version>`` layout that ``gc_orphans`` and
-``read_table_at`` walk.
+pandas frame). Both stage through ``sinks.writers.write_frame``, and
+the version directories keep the ``data/<table>/<version>`` layout that
+``gc_orphans`` and ``read_table_at`` walk.
 
 At 100 TB nothing here is driver-heavy: data moves only through
 distributed parquet writes into fresh directories; the only renames are
@@ -63,7 +68,7 @@ import uuid
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from tdei_extract_load_service_spark.sinks.writers import _path_lock, staged_tables, write_arrow
+from tdei_extract_load_service_spark.sinks.writers import _path_lock, staged_tables, write_frame
 
 MANIFEST_NAME = "_MANIFEST.json"
 LOCK_NAME = "_MANIFEST.lock"
@@ -182,15 +187,15 @@ class ManifestTxn:
 
     Usage::
 
-        txn = ManifestTxn(root)
-        try:
+        with ManifestTxn(root) as txn:
             txn.delete("node", "ds-1")          # applied at commit
             txn.write("node", node_df, "ds-1")  # distributed write, staged
             txn.write("dataset_stats", stats_df, "ds-1")
-            txn.commit()
-        except Exception:
-            txn.abort()
-            raise
+        txn.manifest                            # the published manifest
+
+    The block commits when it exits cleanly and aborts (then re-raises)
+    when it raises; an explicit ``commit()`` inside the block publishes
+    once and the exit adds nothing.
 
     ``write``/``write_tables``/``delete`` may be called from concurrent
     threads (the load's concurrent sink writes): the data writes go to
@@ -206,6 +211,21 @@ class ManifestTxn:
         self._writes: list[tuple[str, str, str]] = []  # (table, dataset, reldir)
         self._deletes: list[tuple[str, str]] = []
         self._done = False
+        #: the manifest ``commit`` published (None until then)
+        self.manifest: dict | None = None
+
+    def __enter__(self) -> ManifestTxn:
+        return self
+
+    def __exit__(self, exc_type, _exc, _tb) -> None:
+        try:
+            if exc_type is None and not self._done:
+                self.commit()
+        finally:
+            # no-op once committed: reaps the staged directories of a
+            # block that raised, or of a commit that failed before its
+            # pointer swap
+            self.abort()
 
     def _version_dir(self, table: str, dataset_id: str) -> str:
         return os.path.join(
@@ -218,19 +238,17 @@ class ManifestTxn:
         df: DataFrame | pd.DataFrame,
         dataset_id: str,
         schema: str | None = None,
-    ) -> None:
+    ) -> str:
         """Stage one (table, dataset) version in a directory unique to this
         transaction: a distributed parquet write of a Spark frame (caller
         controls file count via coalesce/repartition on ``df``), or one
         Arrow file of a driver-side pandas frame typed by the DDL
-        ``schema`` (no Spark job)."""
+        ``schema`` (no Spark job). Returns the staged directory."""
         reldir = self._version_dir(table, dataset_id)
         path = os.path.join(self.root, reldir)
-        if isinstance(df, pd.DataFrame):
-            write_arrow(df, schema, path)
-        else:
-            df.write.mode("overwrite").parquet(path)
+        write_frame(df, path, schema)
         self._writes.append((table, str(dataset_id), reldir))
+        return path
 
     def write_tables(self, df: DataFrame, table_col: str, dataset_id: str) -> None:
         """Stage one dataset's version of SEVERAL same-schema tables in one
@@ -240,7 +258,7 @@ class ManifestTxn:
         directory."""
         staging = os.path.join(self.root, "data", f".load-{self.txn_id}-{uuid.uuid4().hex[:8]}")
         try:
-            df.write.partitionBy(table_col).parquet(staging)
+            write_frame(df, staging, partition_cols=(table_col,))
             for table, staged in staged_tables(staging, table_col):
                 reldir = self._version_dir(table, dataset_id)
                 os.makedirs(os.path.dirname(os.path.join(self.root, reldir)), exist_ok=True)
@@ -298,18 +316,22 @@ class ManifestTxn:
             # THE commit point: one atomic replace publishes all tables
             os.replace(tmp, _manifest_path(self.root))
             self._done = True
+            self.manifest = new
             # history snapshot for time travel (read_table_at): written
-            # AFTER the commit point, so a crash between the two leaves a
-            # valid current pointer and merely no snapshot for this txn
-            # (read_table_at reports it unavailable). Snapshots are tiny
-            # JSON pointers; the data dirs they reference live exactly as
-            # long as keep_commits lets their tombstones live.
+            # AFTER the commit point, so a failure between the two leaves
+            # a valid current pointer and merely no snapshot for this txn
+            # (read_table_at reports it unavailable) — the commit landed,
+            # so it must not raise, and the ripe tombstones (already gone
+            # from the new manifest) are reaped either way. Snapshots are
+            # tiny JSON pointers; the data dirs they reference live
+            # exactly as long as keep_commits lets their tombstones live.
             hist = os.path.join(self.root, "_history")
-            os.makedirs(hist, exist_ok=True)
-            htmp = os.path.join(hist, f".tmp-{self.txn_id}")
-            with open(htmp, "w") as fh:
-                json.dump(new, fh, indent=1, sort_keys=True)
-            os.replace(htmp, os.path.join(hist, f"manifest-{new['txn']:06d}.json"))
+            with contextlib.suppress(OSError):
+                os.makedirs(hist, exist_ok=True)
+                htmp = os.path.join(hist, f".tmp-{self.txn_id}")
+                with open(htmp, "w") as fh:
+                    json.dump(new, fh, indent=1, sort_keys=True)
+                os.replace(htmp, os.path.join(hist, f"manifest-{new['txn']:06d}.json"))
             for tomb in ripe:
                 shutil.rmtree(os.path.join(self.root, tomb["dir"]), ignore_errors=True)
             return new
@@ -331,12 +353,11 @@ def delete_dataset(root: str, dataset_id: str, tables: tuple[str, ...] | None = 
     dataset everywhere or nowhere, never mid-removal. Displaced
     directories follow the normal tombstone grace. Returns the new
     manifest."""
-    txn = ManifestTxn(root)
-    m = read_manifest(root)
-    targets = tables if tables is not None else tuple(m["tables"])
-    for table in targets:
-        txn.delete(table, dataset_id)
-    return txn.commit()
+    targets = tables if tables is not None else tuple(read_manifest(root)["tables"])
+    with ManifestTxn(root) as txn:
+        for table in targets:
+            txn.delete(table, dataset_id)
+    return txn.manifest
 
 
 def gc_orphans(root: str, min_age_seconds: float = 3600.0) -> list[str]:
@@ -496,25 +517,17 @@ def write_audit_publish(
     from tdei_extract_load_service_spark.operators.profiling import dq_check
 
     spark = df.sparkSession
-    txn = ManifestTxn(root)
     # snapshot the supersede delete set at TXN START: a concurrent
     # commit landing while the audit runs must not be swept by a
     # decision made against a manifest it was not part of
     initial_keys = list(read_manifest(root)["tables"].get(table, {}))
-    try:
-        txn.write(table, df, dataset_id)
-        _table, _dataset, reldir = txn._writes[-1]
-        staged = spark.read.parquet(os.path.join(root, reldir))
+    with ManifestTxn(root) as txn:
+        staged = spark.read.parquet(txn.write(table, df, dataset_id))
         report = dq_check(staged, rules).collect()
         failed = [r for r in report if not r["passed"]]
         if failed:
-            txn.abort()
             raise ExpectationFailedError(failed)
         if supersede:
             for k in initial_keys:
                 txn.delete(table, k)
-        txn.commit()
-        return report
-    except Exception:
-        txn.abort()  # no-op if already committed/aborted
-        raise
+    return report

@@ -181,6 +181,26 @@ def write_arrow(
         )
 
 
+def write_frame(
+    df: DataFrame | pd.DataFrame,
+    path: str,
+    schema: str | None = None,
+    partition_cols: tuple[str, ...] = (),
+) -> None:
+    """Stage ``df`` at ``path``, partitioned by ``partition_cols``: a
+    Spark frame in one distributed parquet write, a driver-side pandas
+    frame by ``write_arrow`` typed by the DDL ``schema`` (no Spark job).
+    The one staging body behind ``overwrite_by_key`` and the manifest
+    transaction's writes."""
+    if isinstance(df, pd.DataFrame):
+        write_arrow(df, schema, path, partition_cols)
+    else:
+        writer = df.write.mode("overwrite")
+        if partition_cols:
+            writer = writer.partitionBy(*partition_cols)
+        writer.parquet(path)
+
+
 def _swap_partitions(staged: str, table_path: str, partition_cols: tuple[str, ...]) -> None:
     """Move every leaf partition directory of ``staged`` into the live
     table: delete the live partition, then rename the staged one in."""
@@ -229,10 +249,7 @@ def overwrite_by_key(
     staged_cols = (table_col, *partition_cols) if table_col else partition_cols
     staging = os.path.join(path, f".load-{uuid.uuid4().hex}")
     try:
-        if isinstance(df, pd.DataFrame):
-            write_arrow(df, schema, staging, staged_cols)
-        else:
-            df.write.partitionBy(*staged_cols).parquet(staging)
+        write_frame(df, staging, schema, staged_cols)
         if table_col is None:
             _swap_partitions(staging, path, partition_cols)
         else:

@@ -1157,9 +1157,8 @@ def merge_shadow(
             F.col("c_acctbal").alias("balance"),
         )
     )
-    txn = ManifestTxn(root)
-    txn.write("balances", seed.coalesce(1), "seed")
-    txn.commit()
+    with ManifestTxn(root) as txn:
+        txn.write("balances", seed.coalesce(1), "seed")
     schema = spark.read.parquet(stage).schema
     src = (
         spark.readStream.schema(schema)

@@ -10,6 +10,9 @@ module is the streaming form of the same guarantee on plain parquet:
 each micro-batch publishes atomically through the manifest pointer
 (sinks/manifest.py), and the committed batch id rides INSIDE the same
 pointer swap — data and ledger can never disagree.
+
+Every sink keeps that ledger through one handler, ``_ledger_sink``;
+each sink supplies only the frame logic that stages its batch.
 """
 
 from __future__ import annotations
@@ -18,6 +21,33 @@ from tdei_extract_load_service_spark.sinks.manifest import (
     ManifestTxn,
     read_manifest,
 )
+
+
+def _ledger_sink(root: str, table: str, dataset_prefix: str, stage, supersede: bool):
+    """Return the ``foreachBatch`` handler shared by every sink here:
+    skip a replayed ``batch_id``, else run ``stage(txn, batch_df, key)``
+    inside one manifest transaction, ``key`` being the batch's dataset
+    key. The ledger is ``table``'s dataset keys: ``<prefix><digits>``
+    names a committed batch; any other key (a seed named 'baseline'
+    under the default prefix 'b') is not a ledger row. ``supersede``
+    deletes every dataset ``table`` held in the same transaction, so the
+    new batch's version replaces them."""
+
+    def handle(batch_df, batch_id: int) -> None:
+        existing = read_manifest(root)["tables"].get(table, {})
+        n = len(dataset_prefix)
+        committed = [
+            int(k[n:]) for k in existing if k.startswith(dataset_prefix) and k[n:].isdigit()
+        ]
+        if committed and max(committed) >= batch_id:
+            return
+        with ManifestTxn(root) as txn:
+            if supersede:
+                for k in existing:
+                    txn.delete(table, k)
+            stage(txn, batch_df, f"{dataset_prefix}{batch_id}")
+
+    return handle
 
 
 def manifest_snapshot_sink(root: str, table: str, dataset_prefix: str = "b"):
@@ -42,32 +72,10 @@ def manifest_snapshot_sink(root: str, table: str, dataset_prefix: str = "b"):
     small-file atomic replace regardless of data size.
     """
 
-    def handle(batch_df, batch_id: int) -> None:
-        manifest = read_manifest(root)
-        existing = manifest["tables"].get(table, {})
-        committed = [
-            int(k[len(dataset_prefix):])
-            for k in existing
-            if k.startswith(dataset_prefix)
-            # non-batch keys under the prefix (e.g. a seed dataset
-            # named 'baseline' with the default prefix 'b') are NOT
-            # ledger rows — skip them instead of int()-crashing the
-            # stream on every batch
-            and k[len(dataset_prefix):].isdigit()
-        ]
-        if committed and max(committed) >= batch_id:
-            return
-        txn = ManifestTxn(root)
-        try:
-            for k in existing:
-                txn.delete(table, k)
-            txn.write(table, batch_df, f"{dataset_prefix}{batch_id}")
-            txn.commit()
-        except Exception:
-            txn.abort()
-            raise
+    def stage(txn, batch_df, key: str) -> None:
+        txn.write(table, batch_df, key)
 
-    return handle
+    return _ledger_sink(root, table, dataset_prefix, stage, supersede=True)
 
 
 def manifest_merge_sink(
@@ -115,23 +123,8 @@ def manifest_merge_sink(
     from tdei_extract_load_service_spark.operators.cdc import merge_upsert
     from tdei_extract_load_service_spark.sinks.manifest import read_table
 
-    def handle(batch_df, batch_id: int) -> None:
-        manifest = read_manifest(root)
-        existing = manifest["tables"].get(table, {})
-        committed = [
-            int(k[len(dataset_prefix):])
-            for k in existing
-            if k.startswith(dataset_prefix)
-            # non-batch keys under the prefix (e.g. a seed dataset
-            # named 'baseline' with the default prefix 'b') are NOT
-            # ledger rows — skip them instead of int()-crashing the
-            # stream on every batch
-            and k[len(dataset_prefix):].isdigit()
-        ]
-        if committed and max(committed) >= batch_id:
-            return
-        spark = batch_df.sparkSession
-        current = read_table(spark, root, table)
+    def stage(txn, batch_df, key: str) -> None:
+        current = read_table(batch_df.sparkSession, root, table)
         w = Window.partitionBy(key_col).orderBy(
             *[F.col(c).desc() for c in seq_cols]
         )
@@ -149,17 +142,9 @@ def manifest_merge_sink(
             insert_values={value_col: F.col(f"s.{value_col}")},
             insert_condition=F.col(f"s.{op_col}") != delete_op,
         )
-        txn = ManifestTxn(root)
-        try:
-            for k in existing:
-                txn.delete(table, k)
-            txn.write(table, merged.coalesce(1), f"{dataset_prefix}{batch_id}")
-            txn.commit()
-        except Exception:
-            txn.abort()
-            raise
+        txn.write(table, merged.coalesce(1), key)
 
-    return handle
+    return _ledger_sink(root, table, dataset_prefix, stage, supersede=True)
 
 
 #: survivor-state schema the dedup merge sink evolves
@@ -208,35 +193,16 @@ def dedup_merge_sink(
     )
     from tdei_extract_load_service_spark.sinks.manifest import read_table
 
-    def handle(batch_df, batch_id: int) -> None:
-        manifest = read_manifest(root)
-        existing = manifest["tables"].get(table, {})
-        committed = [
-            int(k[len(dataset_prefix):])
-            for k in existing
-            if k.startswith(dataset_prefix)
-            and k[len(dataset_prefix):].isdigit()
-        ]
-        if committed and max(committed) >= batch_id:
-            return
-        spark = batch_df.sparkSession
+    def stage(txn, batch_df, key: str) -> None:
         current = read_table(
-            spark, root, table, schema=DEDUP_STATE_SCHEMA
+            batch_df.sparkSession, root, table, schema=DEDUP_STATE_SCHEMA
         )
         merged = merge_survivor_states(
             current, dedup_exact_groups(batch_df, id_col, content_cols)
         )
-        txn = ManifestTxn(root)
-        try:
-            for k in existing:
-                txn.delete(table, k)
-            txn.write(table, merged.coalesce(1), f"{dataset_prefix}{batch_id}")
-            txn.commit()
-        except Exception:
-            txn.abort()
-            raise
+        txn.write(table, merged.coalesce(1), key)
 
-    return handle
+    return _ledger_sink(root, table, dataset_prefix, stage, supersede=True)
 
 
 #: drift-history stats schema the append sink publishes
@@ -288,17 +254,7 @@ def drift_history_sink(
     )
     from tdei_extract_load_service_spark.sinks.manifest import read_table
 
-    def handle(batch_df, batch_id: int) -> None:
-        manifest = read_manifest(root)
-        existing = manifest["tables"].get(table, {})
-        committed = [
-            int(k[len(dataset_prefix):])
-            for k in existing
-            if k.startswith(dataset_prefix)
-            and k[len(dataset_prefix):].isdigit()
-        ]
-        if committed and max(committed) >= batch_id:
-            return
+    def stage(txn, batch_df, key: str) -> None:
         spark = batch_df.sparkSession
         # materialize the aggregation ONCE: the result is model-sized
         # (<= |snapshots-in-batch| x |cells| rows), and both the contract
@@ -329,17 +285,9 @@ def drift_history_sink(
                 "merge across partial batches); align the stream's "
                 "batch boundaries to snapshot boundaries"
             )
-        txn = ManifestTxn(root)
-        try:
-            txn.write(
-                table, stats.coalesce(1), f"{dataset_prefix}{batch_id}"
-            )
-            txn.commit()
-        except Exception:
-            txn.abort()
-            raise
+        txn.write(table, stats.coalesce(1), key)
 
-    return handle
+    return _ledger_sink(root, table, dataset_prefix, stage, supersede=False)
 
 
 #: streamed BM25 index schemas the append sink publishes
@@ -382,31 +330,9 @@ def bm25_index_sink(
         bm25_batch_stats,
     )
 
-    def handle(batch_df, batch_id: int) -> None:
-        manifest = read_manifest(root)
-        existing = manifest["tables"].get(postings_table, {})
-        committed = [
-            int(k[len(dataset_prefix):])
-            for k in existing
-            if k.startswith(dataset_prefix)
-            and k[len(dataset_prefix):].isdigit()
-        ]
-        if committed and max(committed) >= batch_id:
-            return
+    def stage(txn, batch_df, key: str) -> None:
         postings, dl = bm25_batch_stats(batch_df, id_col, text_col)
-        txn = ManifestTxn(root)
-        try:
-            txn.write(
-                postings_table,
-                postings.coalesce(1),
-                f"{dataset_prefix}{batch_id}",
-            )
-            txn.write(
-                doclen_table, dl.coalesce(1), f"{dataset_prefix}{batch_id}"
-            )
-            txn.commit()
-        except Exception:
-            txn.abort()
-            raise
+        txn.write(postings_table, postings.coalesce(1), key)
+        txn.write(doclen_table, dl.coalesce(1), key)
 
-    return handle
+    return _ledger_sink(root, postings_table, dataset_prefix, stage, supersede=False)

@@ -11,6 +11,7 @@ from __future__ import annotations
 import io
 import json
 import os
+import shutil
 import zipfile
 
 import pytest
@@ -636,3 +637,91 @@ def test_time_travel_entry_recovers_from_partial_history(spark):
     # guard produced was slice-1 rows labeled version 2
     v2 = [r for r in again_rows if r.version == 2]
     assert v2 and all(320 < r.o_orderkey <= 640 for r in v2)
+
+
+# --- the transaction lifecycle: ``with ManifestTxn(root) as txn:`` -------
+
+
+def _version_dirs(root: str) -> set[str]:
+    data = os.path.join(root, "data")
+    if not os.path.isdir(data):
+        return set()
+    return {
+        os.path.join("data", t, v)
+        for t in os.listdir(data)
+        for v in os.listdir(os.path.join(data, t))
+    }
+
+
+def test_raising_block_aborts_and_leaves_nothing(spark, tmp_path):
+    root = str(tmp_path / "wh")
+    with mf.ManifestTxn(root) as base:
+        base.write("a", _df(spark, [(1, "old")]), "ds")
+    pointer = mf.read_manifest(root)
+    dirs = _version_dirs(root)
+
+    with pytest.raises(RuntimeError, match="mid-block"):
+        with mf.ManifestTxn(root) as txn:
+            staged = txn.write("a", _df(spark, [(2, "new")]), "ds")
+            assert os.path.isdir(staged)
+            raise RuntimeError("mid-block failure")
+    assert mf.read_manifest(root) == pointer
+    assert _version_dirs(root) == dirs, "the aborted write left its version dir"
+    assert mf.gc_orphans(root, min_age_seconds=0) == []
+    assert {r["v"] for r in mf.read_table(spark, root, "a").collect()} == {"old"}
+
+
+def test_clean_block_commits_exactly_once(spark, tmp_path):
+    root = str(tmp_path / "wh")
+    with mf.ManifestTxn(root) as t1:
+        t1.write("a", _df(spark, [(1, "one")]), "ds")
+    assert t1.manifest["txn"] == mf.read_manifest(root)["txn"] == 1
+    # an explicit commit() inside the block publishes once; the exit
+    # adds no second commit
+    with mf.ManifestTxn(root) as t2:
+        t2.write("a", _df(spark, [(2, "two")]), "ds")
+        committed = t2.commit()
+    assert committed is t2.manifest
+    assert mf.read_manifest(root)["txn"] == 2
+    assert {r["v"] for r in mf.read_table(spark, root, "a").collect()} == {"two"}
+
+
+def test_commit_survives_a_failed_history_snapshot(spark, tmp_path):
+    """The pointer swap is the commit point: a history snapshot that
+    cannot be written afterwards (here ``_history`` is a regular file)
+    must not turn a landed commit into an error, and the ripe
+    tombstones — already dropped from the new manifest — are still
+    reaped."""
+    root = str(tmp_path / "wh")
+    t1 = mf.ManifestTxn(root)
+    t1.write("a", _df(spark, [(1, "v1")]), "ds")
+    t1.commit()
+    t2 = mf.ManifestTxn(root)
+    t2.write("a", _df(spark, [(2, "v2")]), "ds")
+    t2.commit()
+    v1_dir = mf.read_manifest(root)["tombstones"][0]["dir"]
+    assert os.path.isdir(os.path.join(root, v1_dir))
+    shutil.rmtree(os.path.join(root, "_history"))
+    open(os.path.join(root, "_history"), "w").close()
+
+    t3 = mf.ManifestTxn(root)
+    t3.write("a", _df(spark, [(3, "v3")]), "ds")
+    new = t3.commit()
+    assert new["txn"] == 3
+    assert {r["v"] for r in mf.read_table(spark, root, "a").collect()} == {"v3"}
+    assert not os.path.exists(os.path.join(root, v1_dir)), "ripe tombstone not reaped"
+
+
+def test_manifest_load_succeeds_when_history_snapshot_fails(spark, tmp_path):
+    wh = str(tmp_path / "wh")
+    a1 = str(tmp_path / "a1.zip")
+    make_zip(a1, {"nodes.geojson": _nodes_doc(3, "v1")})
+    assert load_dataset(spark, a1, "ds", "u", wh, commit_mode="manifest").success
+    shutil.rmtree(os.path.join(wh, "_history"))
+    open(os.path.join(wh, "_history"), "w").close()
+
+    a2 = str(tmp_path / "a2.zip")
+    make_zip(a2, {"nodes.geojson": _nodes_doc(6, "v2")})
+    result = load_dataset(spark, a2, "ds", "u", wh, commit_mode="manifest")
+    assert result.success, result.message
+    assert read_sink(spark, wh, "node").count() == 6

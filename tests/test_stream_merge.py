@@ -10,7 +10,10 @@ import tempfile
 import uuid
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
+
+from tests.conftest import SF_SMOKE
 
 
 def _seed(spark, root, rows):
@@ -99,26 +102,131 @@ def test_merge_sink_replayed_batch_is_noop(spark):
     assert list(live) == ["b0"]
 
 
-def test_merge_sink_tolerates_non_batch_dataset_keys(spark):
-    """ADVICE r11: a dataset key that starts with the batch prefix but
-    has a non-integer suffix (a seed named 'baseline' under the default
-    prefix 'b') is NOT a ledger row — it must be skipped, not
-    int()-crash the stream on every batch."""
-    from tdei_extract_load_service_spark.sinks.manifest import ManifestTxn
-
-    root = tempfile.mkdtemp(prefix="merge_sink_test_")
+def _merge_case(spark, root):
     seed = spark.createDataFrame(
         pd.DataFrame([(1, 10.0)], columns=["user_id", "balance"])
     )
-    txn = ManifestTxn(root)
-    txn.write("balances", seed.coalesce(1), "baseline")
-    txn.commit()
-    handle = _handler(root)
-    handle(_batch(spark, [(1, 100, 1, "U", 11.0)]), 0)
-    assert _state(spark, root) == {1: 11.0}
+    return (
+        _handler(root), "balances", seed,
+        _batch(spark, [(1, 100, 1, "U", 11.0)]),
+        _batch(spark, [(1, 999, 9, "U", 666.0)]),
+    )
+
+
+def _snapshot_case(spark, root):
+    from tdei_extract_load_service_spark.streaming.sink import (
+        manifest_snapshot_sink,
+    )
+
+    def snap(total):
+        return spark.createDataFrame(
+            pd.DataFrame([("a", total)], columns=["g", "s"])
+        )
+
+    return (
+        manifest_snapshot_sink(root, "aggs"), "aggs", snap(1.0), snap(10.0),
+        snap(-999.0),
+    )
+
+
+def _docs(spark, rows):
+    return spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
+
+
+def _dedup_case(spark, root):
+    from tdei_extract_load_service_spark.streaming.sink import (
+        DEDUP_STATE_SCHEMA,
+        dedup_merge_sink,
+    )
+
+    seed = spark.createDataFrame([("seed-hash", 999, 1)], DEDUP_STATE_SCHEMA)
+    return (
+        dedup_merge_sink(root, "dedup_state", "doc_id", ["text"]),
+        "dedup_state", seed,
+        _docs(spark, [(1, "alpha beta"), (2, "alpha beta"), (3, "gamma")]),
+        _docs(spark, [(1, "poison")]),
+    )
+
+
+def _drift_case(spark, root):
+    from tdei_extract_load_service_spark.operators.similarity import (
+        ivf_centroids,
+    )
+    from tdei_extract_load_service_spark.streaming.sink import (
+        DRIFT_HISTORY_SCHEMA,
+        drift_history_sink,
+    )
+
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    model = ivf_centroids(emb, "vec_id", "embedding", 4).collect()
+    seed = spark.createDataFrame(
+        [(99, 0, 1, [0.0] * 64)], DRIFT_HISTORY_SCHEMA
+    )
+    return (
+        drift_history_sink(
+            root, "drift_history", "vec_id", "embedding", lambda c: c % 4,
+            model,
+        ),
+        "drift_history", seed,
+        emb.where(F.col("vec_id") % 4 == 0),
+        emb.where(F.col("vec_id") % 4 == 1),
+    )
+
+
+def _bm25_case(spark, root):
+    from tdei_extract_load_service_spark.streaming.sink import (
+        BM25_POSTINGS_SCHEMA,
+        bm25_index_sink,
+    )
+
+    seed = spark.createDataFrame([(999, "seed", 1)], BM25_POSTINGS_SCHEMA)
+    return (
+        bm25_index_sink(root, "bm25_postings", "bm25_doclen", "doc_id", "text"),
+        "bm25_postings", seed,
+        _docs(spark, [(1, "alpha beta"), (2, "gamma")]),
+        _docs(spark, [(1, "poison poison")]),
+    )
+
+
+#: sink -> (case builder, whether a batch supersedes the table's datasets)
+_SINK_CASES = {
+    "merge": (_merge_case, True),
+    "snapshot": (_snapshot_case, True),
+    "dedup": (_dedup_case, True),
+    "drift": (_drift_case, False),
+    "bm25": (_bm25_case, False),
+}
+
+
+@pytest.mark.parametrize("sink", list(_SINK_CASES))
+def test_merge_sink_tolerates_non_batch_dataset_keys(spark, sink):
+    """ADVICE r11: a dataset key that starts with the batch prefix but
+    has a non-integer suffix (a seed named 'baseline' under the default
+    prefix 'b') is NOT a ledger row — every sink must skip it, not
+    int()-crash the stream on every batch, and still treat a replayed
+    batch id as a no-op."""
+    from tdei_extract_load_service_spark.sinks.manifest import (
+        ManifestTxn,
+        read_manifest,
+    )
+
+    build, supersedes = _SINK_CASES[sink]
+    root = tempfile.mkdtemp(prefix=f"{sink}_sink_test_")
+    handle, table, seed, batch, replay = build(spark, root)
+    with ManifestTxn(root) as txn:
+        txn.write(table, seed.coalesce(1), "baseline")
+    handle(batch, 0)
+    published = read_manifest(root)
+    assert set(published["tables"][table]) == (
+        {"b0"} if supersedes else {"baseline", "b0"}
+    )
+    if sink == "merge":
+        assert _state(spark, root) == {1: 11.0}
     # replay still a no-op with the odd key present
-    handle(_batch(spark, [(1, 999, 9, "U", 666.0)]), 0)
-    assert _state(spark, root) == {1: 11.0}
+    handle(replay, 0)
+    assert read_manifest(root) == published
+    if sink == "merge":
+        assert _state(spark, root) == {1: 11.0}
 
 
 def test_merge_shadow_drain_resume_converges(spark):
