@@ -16,6 +16,7 @@ Determinism rules applied throughout (SURVEY.md §7 risks):
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -28,7 +29,7 @@ from tdei_extract_load_service_spark.functions import maps as M
 from tdei_extract_load_service_spark.functions import timestamps as TS
 from tdei_extract_load_service_spark.operators import relational as R
 from tdei_extract_load_service_spark.operators.query_builder import DynamicQueryBuilder
-from tdei_extract_load_service_spark.session import spread
+from tdei_extract_load_service_spark.session import PLAN_MEMO_SIZE, spread
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -39,6 +40,7 @@ class CatalogEntry:
     oracle: str | None  # ANSI SQL for DuckDB; None -> rows-only check
 
 
+#: name -> entry; not a plan memo: it is the catalog itself.
 REGISTRY: dict[str, CatalogEntry] = {}
 
 
@@ -48,20 +50,6 @@ def register(name: str, oracle: str | None) -> Callable[[QueryFn], QueryFn]:
         return fn
 
     return deco
-
-
-#: (app id, session tz, nanosAsLong, sf_dir, table) -> the immutable
-#: frame ``_read`` built last time. A DataFrame is a logical PLAN — no
-#: rows, no cache — but building one costs 70-120 ms of driver-side work
-#: (parquet footer/schema read + file listing py4j round-trips), and the
-#: catalog re-reads the same fixture tables for every query build: ~0.1-
-#: 0.25 s of pure plan-construction tax per bench rep, ~15-25 s across
-#: the headline (r13, guide §4's Python-boundary tax applied to plan
-#: construction; the load_dataset._transform_exprs precedent). Every
-#: action on the memoized frame still scans parquet — nothing here
-#: persists data. Keyed on the session AND the two confs that change
-#: what ``_read`` builds (timezone branch, nanos vintage).
-_READ_MEMO: dict[tuple, DataFrame] = {}
 
 
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -79,17 +67,24 @@ def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     cancelled with ``from_utc_timestamp(cast(c), current_timezone())`` —
     correct everywhere, at the cost of pushdown through the arithmetic
     (acceptable: the engine's canonical sessions pin UTC in session.py)."""
-    session_tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
-    key = (
-        spark.sparkContext.applicationId,
-        session_tz,
-        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
+    return _read_plan(
+        spark,
         sf_dir,
         table,
+        spark.conf.get("spark.sql.session.timeZone", "UTC"),
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
     )
-    memo = _READ_MEMO.get(key)
-    if memo is not None:
-        return memo
+
+
+@functools.lru_cache(maxsize=PLAN_MEMO_SIZE)
+def _read_plan(
+    spark: SparkSession, sf_dir: str, table: str, session_tz: str, nanos: str
+) -> DataFrame:
+    # Memoized: building the frame costs 70-120 ms of py4j round-trips
+    # (footer/schema read, file listing), and the catalog re-reads the same
+    # fixture tables for every query build. The value is a plan, not data:
+    # every action still scans parquet. ``nanos`` is key only — it changes
+    # the schema the read infers.
     df = spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
     ntz_cols = [f.name for f in df.schema.fields if f.dataType.typeName() == "timestamp_ntz"]
     if ntz_cols:
@@ -99,8 +94,22 @@ def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
             if not utc_session:
                 c = F.from_utc_timestamp(c, F.current_timezone())
             df = df.withColumn(name, c)
-    _READ_MEMO[key] = df
     return df
+
+
+def _nanos_vintage(path: str) -> bool:
+    """Whether the parquet file at ``path`` stores a TIMESTAMP(NANOS)
+    column, read from its footer. A directory is Spark-written, and Spark
+    never writes nanos."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if not os.path.isfile(path):
+        return False
+    return any(
+        pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+        for f in pq.read_schema(path)
+    )
 
 
 def _read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -109,8 +118,11 @@ def _read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     — normalized by ``_read``); older ones carried TIMESTAMP(NANOS), which
     vanilla Spark 4 rejects (PARQUET_TYPE_ILLEGAL) unless read as int64
     nanos and rebuilt with a truncating integer DIV (no float division —
-    ns values ~1.7e18 overflow double's exact range)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ns values ~1.7e18 overflow double's exact range). Only that old
+    vintage sets ``nanosAsLong`` on the session; the scan reads the conf
+    again when it executes, so it stays set."""
+    if _nanos_vintage(os.path.join(sf_dir, "events.parquet")):
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     ev = _read(spark, sf_dir, "events")
     if dict(ev.dtypes).get("ts") == "bigint":
         ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))

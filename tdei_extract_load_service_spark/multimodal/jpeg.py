@@ -210,7 +210,7 @@ ZIGZAG = [
 ]
 
 
-@lru_cache(maxsize=1)
+@lru_cache(maxsize=1)  # one constant table, session-free
 def _idct_basis() -> list[list[float]]:
     """basis[u][x] = C(u)/2 * cos((2x+1) u pi / 16) — separable 1-D IDCT
     factors; the 2-D IDCT is basis^T S basis."""

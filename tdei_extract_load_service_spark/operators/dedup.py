@@ -2274,7 +2274,9 @@ def _bloom_probe_jvm(
 # hook; reuse is the fix). Keyed by bitmap content + applicationId (NOT
 # id(sc): CPython reuses addresses, so a new context could be served a
 # dead broadcast — r13 review finding); locked because foreachBatch
-# handlers may probe from worker threads. Capped LRU.
+# handlers may probe from worker threads. Capped LRU, hand-written rather
+# than lru_cache: eviction must unpersist the broadcast, and lru_cache has
+# no eviction hook.
 import threading as _threading  # noqa: E402  (cache lock below)
 
 _BLOOM_BCAST_CACHE: dict = {}

@@ -21,11 +21,13 @@ assignment is written ``partitionBy(centroid_id)``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import functools
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from tdei_extract_load_service_spark.operators.dedup import cosine_similarity
-from tdei_extract_load_service_spark.session import spread
+from tdei_extract_load_service_spark.session import PLAN_MEMO_SIZE, spread
 
 
 def _col(c: str | Column) -> Column:
@@ -139,18 +141,6 @@ def ivf_assign(
     return ivf_assign_model(df, rows, id_col, vec_col)
 
 
-#: (application id, vec_col, ids, centroid digest) -> the three assign
-#: Columns (vnorm, dots, best). The heavyweight piece is the dim x C
-#: transposed-centroid literal parsed from ONE ~25 KB SQL string — a
-#: py4j parse per ivf_assign_model CALL before this memo (~0.3-0.5 s of
-#: every drift/ivf/pq query BUILD, r14 profile). Columns are immutable
-#: unresolved trees (the _DECIMAL_MEAN_MEMO discipline); the key carries
-#: the collected model VALUES, so the per-rep model job still runs and a
-#: changed corpus misses the memo — plan construction is memoized, never
-#: results.
-_ASSIGN_COL_MEMO: dict[tuple, tuple[Column, Column, Column]] = {}
-
-
 def ivf_assign_model(
     df: DataFrame, rows: list, id_col: str, vec_col: str,
     keep: tuple[str, ...] = (),
@@ -161,32 +151,41 @@ def ivf_assign_model(
     ``keep`` carries extra columns through the projection (the drift
     report's side tag), so composed pipelines need no join to recover
     them."""
-    import math
-
     if not rows:
         raise ValueError("ivf_assign: empty centroid set")
-    ids = [int(r["centroid_id"]) for r in rows]
-    cvecs = [[float(x) for x in r["centroid_vec"]] for r in rows]
-    dim, n_c = len(cvecs[0]), len(ids)
-    memo_key = (
-        df.sparkSession.sparkContext.applicationId,
-        str(vec_col),
-        tuple(ids),
-        hash(tuple(x for cv in cvecs for x in cv)),
+    vnorm_col, dots_col, best = _assign_cols(
+        vec_col,
+        tuple(int(r["centroid_id"]) for r in rows),
+        tuple(tuple(float(x) for x in r["centroid_vec"]) for r in rows),
     )
-    memo = _ASSIGN_COL_MEMO.get(memo_key)
-    if memo is not None:
-        vnorm_col, dots_col, best = memo
-        pre = spread(df).select(
-            _col(id_col).alias("id"),
-            _col(vec_col).alias("vec"),
-            vnorm_col.alias("_vnorm"),
-            dots_col.alias("_dots"),
-            *[_col(c) for c in keep],
-        )
-        return pre.select(
-            "id", best["centroid_id"].alias("centroid_id"), "vec", *keep
-        )
+    # separate projection: _vnorm is referenced C times downstream, and
+    # CollapseProject keeps non-cheap multiply-referenced expressions
+    # materialized instead of inlining C copies of the fold
+    pre = spread(df).select(
+        _col(id_col).alias("id"),
+        _col(vec_col).alias("vec"),
+        vnorm_col.alias("_vnorm"),
+        dots_col.alias("_dots"),
+        *[_col(c) for c in keep],
+    )
+    return pre.select(
+        "id", best["centroid_id"].alias("centroid_id"), "vec", *keep
+    )
+
+
+@functools.lru_cache(maxsize=PLAN_MEMO_SIZE)
+def _assign_cols(
+    vec_col: str, ids: tuple[int, ...], cvecs: tuple[tuple[float, ...], ...]
+) -> tuple[Column, Column, Column]:
+    """The three assign Columns (vnorm, dots, best) for one centroid model.
+    Memoized: the dim x C transposed-centroid literal is parsed from ONE
+    ~25 KB SQL string, a py4j parse of ~0.3-0.5 s per drift/ivf/pq query
+    build. The key holds the collected model VALUES, so the per-rep model
+    job still runs and a changed corpus misses: plan construction is
+    memoized, never results."""
+    import math
+
+    dim, n_c = len(cvecs[0]), len(ids)
     # centroid norms driver-side, accumulated in position order — the same
     # left-to-right fold the engines use, so the quotient stays bit-identical
     # to cosine_similarity / the oracle's list_dot_product
@@ -211,7 +210,7 @@ def ivf_assign_model(
         )
         + ")"
     )
-    ids_lit = F.lit(ids)
+    ids_lit = F.lit(list(ids))
     cnorm_lit = F.lit(cnorms)
     vec = _col(vec_col)
 
@@ -246,21 +245,7 @@ def ivf_assign_model(
             ),
         )
     )
-    vnorm_col, dots_col = vnorm(vec), dots(vec)
-    _ASSIGN_COL_MEMO[memo_key] = (vnorm_col, dots_col, best)
-    # separate projection: _vnorm is referenced C times downstream, and
-    # CollapseProject keeps non-cheap multiply-referenced expressions
-    # materialized instead of inlining C copies of the fold
-    pre = spread(df).select(
-        _col(id_col).alias("id"),
-        vec.alias("vec"),
-        vnorm_col.alias("_vnorm"),
-        dots_col.alias("_dots"),
-        *[_col(c) for c in keep],
-    )
-    return pre.select(
-        "id", best["centroid_id"].alias("centroid_id"), "vec", *keep
-    )
+    return vnorm(vec), dots(vec), best
 
 
 def kmeans_centroids(
@@ -1102,9 +1087,7 @@ def ann_rerank_topk(
     )
 
 
-_DECIMAL_MEAN_MEMO: dict[tuple, list[Column]] = {}
-
-
+@functools.lru_cache(maxsize=PLAN_MEMO_SIZE)
 def _decimal_mean_exprs(
     dim: int, vec: str = "vec", cond: str | None = None, tag: str = ""
 ) -> list[Column]:
@@ -1117,14 +1100,8 @@ def _decimal_mean_exprs(
     64 dims). ``cond`` restricts sum and count to matching rows (the
     drift report's side pivot): a decimal SUM skips the CASE's NULLs, so
     it adds exactly the rows a pre-filtered per-side agg would have."""
-    # module-level memo (r13): Columns are immutable unresolved
-    # expression trees (the load_dataset._transform_exprs precedent), and
-    # each F.expr is a py4j parse — 64+ per drift query build. The memo
-    # returns the SAME Column objects; callers only ever embed them.
-    key = (dim, vec, cond, tag)
-    memo = _DECIMAL_MEAN_MEMO.get(key)
-    if memo is not None:
-        return memo
+    # memoized: each F.expr is a py4j parse, 64+ per drift query build;
+    # callers get the SAME Column objects and only ever embed them
     val = f"CAST(CAST({vec}[{{i}}] AS DOUBLE) AS DECIMAL(25,12))"
     if cond is None:
         body = f"round(CAST(sum({val}) AS DOUBLE) / count(1), 9)"
@@ -1133,11 +1110,9 @@ def _decimal_mean_exprs(
             f"round(CAST(sum(CASE WHEN {cond} THEN {val} END) AS DOUBLE)"
             f" / count(CASE WHEN {cond} THEN 1 END), 9)"
         )
-    out = [
+    return [
         F.expr(body.format(i=i)).alias(f"_m{tag}{i}") for i in range(dim)
     ]
-    _DECIMAL_MEAN_MEMO[key] = out
-    return out
 
 
 def embedding_drift_report(
@@ -1846,9 +1821,7 @@ def mmr_topk(
     )
 
 
-_OUTLIER_EXPR_MEMO: dict[tuple, tuple] = {}
-
-
+@functools.lru_cache(maxsize=PLAN_MEMO_SIZE)
 def _outlier_exprs(dim: int) -> tuple[list[Column], list[Column]]:
     """embedding_outliers' plan fragments as parsed SQL, memoized —
     exactly the trees the fluent form built: per-dimension
@@ -1856,16 +1829,8 @@ def _outlier_exprs(dim: int) -> tuple[list[Column], list[Column]]:
     and the round-6 cosine/norm2 projection over the ``_dot`` fold
     bodies (``aggregate(zip_with(..), 0.0D, +)`` with elementwise
     double casts). The fragments reference only the fixed pre-aliased
-    names ``__eo_id``/``__eo_v`` (ADVICE r13: raw caller names with
-    spaces/hyphens broke the parse, dotted names silently re-resolved),
-    and the memo is keyed on the application id (ADVICE r13: py4j
-    Column handles must not outlive their session)."""
-    spark = SparkSession.getActiveSession()
-    app_id = spark.sparkContext.applicationId if spark is not None else None
-    key = (app_id, dim)
-    memo = _OUTLIER_EXPR_MEMO.get(key)
-    if memo is not None:
-        return memo
+    names ``__eo_id``/``__eo_v``: raw caller names with spaces or
+    hyphens break the parse, and dotted names re-resolve as fields."""
     sum_cols = [
         F.expr(
             f"CAST(sum(CAST(CAST(__eo_v[{i}] AS DOUBLE)"
@@ -1883,9 +1848,7 @@ def _outlier_exprs(dim: int) -> tuple[list[Column], list[Column]]:
         ).alias("cos_centroid"),
         F.expr(f"round({dvv}, 6)").alias("norm2"),
     ]
-    out = (sum_cols, score_cols)
-    _OUTLIER_EXPR_MEMO[key] = out
-    return out
+    return sum_cols, score_cols
 
 
 def embedding_outliers(

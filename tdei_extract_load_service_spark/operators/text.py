@@ -7,8 +7,12 @@ oracle.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from tdei_extract_load_service_spark.session import PLAN_MEMO_SIZE
 
 
 #: BPE-ish token pattern: letter runs, single digits, single punctuation —
@@ -1325,32 +1329,13 @@ def lm_bigram_score(
     )
 
 
-#: (app id, terms, n_buckets) -> sorted bucket ids. The buckets are the
-#: ENGINE's xxhash64 over the QUERY LITERALS (never over corpus data),
-#: so memoizing them is plan construction, not result caching — but the
-#: hash itself must stay engine-computed (a Python xxhash64 twin could
-#: drift), hence the one-row job on first use per session.
-_TERM_BUCKET_MEMO: dict[tuple, list[int]] = {}
-
-#: (app id, path) -> (marker stamp, parquet read plan). Immutable
-#: logical scans of the CONTENT-ADDRESSED index directory (path embeds
-#: corpus mtime), the catalog._READ_MEMO discipline: every action
-#: still scans parquet. Storing per-path with the stamp INSIDE the
-#: value (ADVICE r13) means a refreshed index replaces — not shadows —
-#: the superseded plan.
-_INDEX_READ_MEMO: dict[tuple, tuple] = {}
-
-
+@functools.lru_cache(maxsize=PLAN_MEMO_SIZE)
 def _term_buckets(spark, terms: tuple, n_buckets: int) -> list[int]:
-    """Bucket ids for query terms via the engine's own xxhash64 —
-    computed over ONE OneRowRelation job (codegen projection, no
-    pickled-RDD local relation: ``createDataFrame(<python list>)``
-    costs a pickled scan per call — the verify-skill gotcha), memoized
-    per session: the inputs are query literals, not data."""
-    key = (spark.sparkContext.applicationId, terms, n_buckets)
-    hit = _TERM_BUCKET_MEMO.get(key)
-    if hit is not None:
-        return hit
+    """Bucket ids for query terms via the engine's own xxhash64 (a Python
+    twin could drift) — computed over ONE OneRowRelation job (codegen
+    projection, no pickled-RDD local relation: ``createDataFrame(<python
+    list>)`` costs a pickled scan per call — the verify-skill gotcha).
+    Memoized: the inputs are query literals, never corpus data."""
     row = spark.range(1).select(
         *[
             F.pmod(F.xxhash64(F.lit(t)), F.lit(n_buckets))
@@ -1359,9 +1344,7 @@ def _term_buckets(spark, terms: tuple, n_buckets: int) -> list[int]:
             for i, t in enumerate(terms)
         ]
     ).first()
-    out = sorted({int(v) for v in row})
-    _TERM_BUCKET_MEMO[key] = out
-    return out
+    return sorted({int(v) for v in row})
 
 
 def _index_read(spark, path: str) -> DataFrame:
@@ -1370,10 +1353,10 @@ def _index_read(spark, path: str) -> DataFrame:
 
     # Validate against the publish marker's (mtime, size, content
     # digest): a swept-then-rebuilt index under the SAME path gets new
-    # part files, and the memoized plan's file listing would be stale.
-    # mtime alone can tie across a rebuild on coarse-granularity
-    # filesystems, so the marker's bytes join the stamp (ADVICE r13);
-    # the marker is rewritten on every publish.
+    # part files, and a plan's file listing would be stale. mtime alone
+    # can tie across a rebuild on coarse-granularity filesystems, so the
+    # marker's bytes join the stamp; the marker is rewritten on every
+    # publish.
     marker = os.path.join(os.path.dirname(path), "_meta.json")
     try:
         st = os.stat(marker)
@@ -1382,13 +1365,14 @@ def _index_read(spark, path: str) -> DataFrame:
         stamp = (st.st_mtime_ns, st.st_size, hashlib.md5(mbytes).hexdigest())
     except OSError:
         stamp = None
-    key = (spark.sparkContext.applicationId, path)
-    hit = _INDEX_READ_MEMO.get(key)
-    if hit is not None and hit[0] == stamp:
-        return hit[1]
-    df = spark.read.parquet(path)
-    _INDEX_READ_MEMO[key] = (stamp, df)
-    return df
+    return _index_plan(spark, path, stamp)
+
+
+@functools.lru_cache(maxsize=PLAN_MEMO_SIZE)
+def _index_plan(spark, path: str, stamp) -> DataFrame:
+    # a plan of the content-addressed index directory, not data: every
+    # action still scans parquet; a superseded stamp ages out of the LRU
+    return spark.read.parquet(path)
 
 
 def build_bm25_index(

@@ -34,6 +34,7 @@ times plan construction only, since its execution happens inside the
 from __future__ import annotations
 
 import contextlib
+import functools
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -45,6 +46,7 @@ from pyspark.sql import functions as F
 
 from tdei_extract_load_service_spark.functions.feature_json import process_feature_json
 from tdei_extract_load_service_spark.functions.geometry import process_geometry_elevation_cols
+from tdei_extract_load_service_spark.session import PLAN_MEMO_SIZE
 from tdei_extract_load_service_spark.sinks.writers import overwrite_by_key
 from tdei_extract_load_service_spark.sources.geojson import (
     assemble_feature_json,
@@ -150,49 +152,40 @@ class LoadResult:
     timings: dict[str, float] = field(default_factory=dict)
 
 
-#: Memoized transform expression trees, keyed by fidelity. Building the
-#: geometry/elevation when-chains costs ~0.9s of py4j round-trips per call
-#: (measured: the "transform" bench stage was dominated by driver-side
-#: DataFrame CONSTRUCTION, not execution) — but the Columns are unresolved
-#: name-based expressions, immutable and reusable across every load in the
-#: process, so one build serves the lifetime of the queue consumer.
-_TRANSFORM_EXPRS: dict[str, tuple] = {}
-
-
+@functools.lru_cache(maxsize=PLAN_MEMO_SIZE)
 def _transform_exprs(fidelity: str) -> tuple:
-    if fidelity not in _TRANSFORM_EXPRS:
-        if fidelity == "exact":
-            _TRANSFORM_EXPRS[fidelity] = (
-                process_feature_json("feature_raw", "kind"),
-            )
-        else:
-            parsed = decompose_feature("feature_raw")
-            decompose_cols = {
-                "_ftype": parsed["type"],
-                "_gtype": parsed["geometry"]["type"],
-                "_coords": parsed["geometry"]["coordinates"],
-                "_props": parsed["properties"],
-            }
-            new_coords, new_props = process_geometry_elevation_cols(
-                "kind", "_gtype", "_coords", "_props"
-            )
-            has_geometry = (
-                F.col("_gtype").isNotNull()
-                & F.col("_coords").isNotNull()
-                & (F.trim(F.col("_coords")) != "null")
-            )
-            assembled = assemble_feature_json(
-                F.col("_ftype"), F.col("_gtype"), F.col("_coords"), F.col("_props")
-            )
-            # no geometry / null coordinates -> original document untouched
-            # (extract-load-service.ts:613-615)
-            feature = F.when(has_geometry, assembled).otherwise(F.col("feature_raw"))
-            _TRANSFORM_EXPRS[fidelity] = (
-                decompose_cols,
-                {"_coords": new_coords, "_props": new_props},
-                feature,
-            )
-    return _TRANSFORM_EXPRS[fidelity]
+    # Memoized: building the geometry/elevation when-chains costs ~0.9 s of
+    # py4j round-trips per call (the "transform" stage was dominated by
+    # Column CONSTRUCTION, not execution), and the Columns are unresolved
+    # name-based trees, so one build serves every load in the process.
+    if fidelity == "exact":
+        return (process_feature_json("feature_raw", "kind"),)
+    parsed = decompose_feature("feature_raw")
+    decompose_cols = {
+        "_ftype": parsed["type"],
+        "_gtype": parsed["geometry"]["type"],
+        "_coords": parsed["geometry"]["coordinates"],
+        "_props": parsed["properties"],
+    }
+    new_coords, new_props = process_geometry_elevation_cols(
+        "kind", "_gtype", "_coords", "_props"
+    )
+    has_geometry = (
+        F.col("_gtype").isNotNull()
+        & F.col("_coords").isNotNull()
+        & (F.trim(F.col("_coords")) != "null")
+    )
+    assembled = assemble_feature_json(
+        F.col("_ftype"), F.col("_gtype"), F.col("_coords"), F.col("_props")
+    )
+    # no geometry / null coordinates -> original document untouched
+    # (extract-load-service.ts:613-615)
+    feature = F.when(has_geometry, assembled).otherwise(F.col("feature_raw"))
+    return (
+        decompose_cols,
+        {"_coords": new_coords, "_props": new_props},
+        feature,
+    )
 
 
 def transform_features(features_df: DataFrame, fidelity: str = "jvm") -> DataFrame:

@@ -34,8 +34,19 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+#: Bound of every plan memo: ``functools.lru_cache(maxsize=PLAN_MEMO_SIZE)``
+#: on a function whose arguments are the whole key, never a module-level
+#: dict. A memo whose value is a DataFrame takes the ``SparkSession`` as an
+#: argument: a plan runs under the session that built it and dies with it,
+#: and a new or restarted session is a different object, so it never gets
+#: another session's plan. A memo whose value is only Columns or plain
+#: driver values takes no session: Columns are unresolved, name-based
+#: trees that evaluate in any session.
+PLAN_MEMO_SIZE = 128
+
 #: call-site scope -> the frame that invocation persisted (see
-#: :func:`persist_scoped`)
+#: :func:`persist_scoped`); not a plan memo: it owns persisted data and
+#: holds one generation per scope.
 _SCOPED_PERSISTS: dict[str, DataFrame] = {}
 
 

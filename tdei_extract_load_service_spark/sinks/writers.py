@@ -52,6 +52,7 @@ DEFAULT_BATCH_SIZE = 1000
 #: The write jobs themselves run unlocked — each stages into its own
 #: directory — so concurrent loads (queue consumer,
 #: maxConcurrentMessages=2) overlap everything except same-table swaps.
+#: Not a plan memo: one lock per sink root the process writes.
 _PATH_LOCKS: dict[str, threading.Lock] = {}
 _PATH_LOCKS_GUARD = threading.Lock()
 
@@ -140,7 +141,7 @@ def staged_tables(staging: str, table_col: str):
             yield _unescape_path_name(name[len(prefix):]), os.path.join(staging, name)
 
 
-@functools.lru_cache(maxsize=64)
+@functools.lru_cache(maxsize=64)  # bounded, session-free: a DDL -> Arrow schema
 def _arrow_schema(schema: str):
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType

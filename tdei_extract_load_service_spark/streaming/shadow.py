@@ -42,9 +42,6 @@ def _query_name() -> str:
         f"shadow_{os.getpid()}_{next(_QUERY_COUNTER)}_{uuid.uuid4().hex[:12]}"
     )
 
-#: session-lifetime staging cache: corpus fingerprint -> staged dir
-_STAGE_CACHE: dict[str, str] = {}
-
 
 def _stage_parquet_batches(
     spark: SparkSession,
@@ -60,9 +57,11 @@ def _stage_parquet_batches(
     ``order_cols`` total order, with strictly increasing mtimes so a
     file source with ``maxFilesPerTrigger=1`` replays a deterministic
     batch sequence. Content-addressed under /tmp (``key_suffix``
-    disambiguates fixtures sharing a path format) and reused across
-    sessions. ``fixup`` (optional) normalizes the frame post-read —
-    the events legacy-nanos rebuild lives there. ``split_expr``
+    disambiguates fixtures sharing a path format); the stage directory
+    holding ``n_batches`` files is the only cache, reused across
+    sessions and rebuilt when deleted or incomplete. ``fixup``
+    (optional) normalizes the frame post-read — the events
+    legacy-nanos rebuild lives there. ``split_expr``
     (optional) is a SQL expression yielding each row's batch index
     0..n-1; when given it REPLACES the rank-range split — the
     drift-history certification needs snapshot-ALIGNED batches (its
@@ -75,9 +74,6 @@ def _stage_parquet_batches(
         f"{src}:{st.st_size}:{st.st_mtime_ns}:{n_batches}"
         f"{key_suffix}:{split_expr}"
     )
-    hit = _STAGE_CACHE.get(key)
-    if hit is not None:
-        return hit
     digest = hashlib.md5(key.encode()).hexdigest()[:24]
     root = "/tmp/spark_graft_stream_stage"
     stage = os.path.join(root, digest)
@@ -143,7 +139,6 @@ def _stage_parquet_batches(
                 os.replace(os.path.join(chunk_dir, part), dst)
                 shutil.rmtree(chunk_dir)
                 os.utime(dst, (st.st_mtime + i, st.st_mtime + i))
-    _STAGE_CACHE[key] = stage
     return stage
 
 
