@@ -168,6 +168,9 @@ def process_geometry_elevation_cols(
     geom_type: str | Column,
     coords_json: str | Column,
     props_json: str | Column,
+    *,
+    z: str | Column | None = None,
+    n_elev: str | Column | None = None,
 ) -> tuple[Column, Column]:
     """The full O10/O11 orchestration (processGeometryElevation,
     extract-load-service.ts:613-654) over decomposed feature columns.
@@ -180,6 +183,13 @@ def process_geometry_elevation_cols(
       ``ext:elevation`` — or ``ext:elevation_<n>`` where n = count of
       existing ``ext:elevation*`` keys (:634-642) — is appended;
     - missing geometry / null coordinates pass through untouched (:613-615).
+
+    ``z`` and ``n_elev`` are the ``first_z_json`` and
+    ``count_elevation_keys`` values when the caller already projects them
+    (``n_elev`` may be null wherever ``z`` is null or 0). Both are used
+    several times here, and projection collapse keeps a non-cheap column
+    that is used more than once, so a caller that projects them in a frame
+    of their own parses each once per row instead of once per use.
     """
     k = _col(kind)
     gt, cj, pj = _col(geom_type), _col(coords_json), _col(props_json)
@@ -188,8 +198,8 @@ def process_geometry_elevation_cols(
     new_coords = F.when(has_geometry, strip_z_coords_json(cj, gt)).otherwise(cj)
 
     is_node_point = k.isin("nodes", "points")
-    z = first_z_json(cj, gt)
-    existing = count_elevation_keys(pj)
+    z = first_z_json(cj, gt) if z is None else _col(z)
+    existing = count_elevation_keys(pj) if n_elev is None else _col(n_elev)
     prop_name = F.when(existing == 0, F.lit("ext:elevation")).otherwise(
         F.concat(F.lit("ext:elevation_"), existing.cast("string"))
     )

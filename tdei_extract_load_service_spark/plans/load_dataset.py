@@ -4,12 +4,13 @@ recomposed Spark-first.
 Reference lifecycle (extract-load-service.ts:242-345): message → pre-delete
 → BEGIN → zip stream → per-entry token pipeline → per-kind batched INSERTs
 → per-file metadata → COMMIT → stats proc → publish. Here the same
-semantics run as one pass over the data and at most three Spark jobs,
+semantics run as one pass over the data and at most two Spark jobs,
 whatever the number of kinds:
 
-    binaryFile → zip_fanout (entry text + header) → route_case → cache
-    → gate job (malformed entries, headers, feature count, extension-file
-      id and name per entry)
+    driver: read the archive, decode its .geojson entries and headers
+    (zip_fanout) → Arrow local relation → route_case
+    → gate select (malformed entries, headers, feature count,
+      extension-file id and name per entry), evaluated on the driver
     → explode(features) → decompose → strip-Z/elevation
     → one job writes the six non-extension kinds (each row names its sink
       table), one job writes extensions (their rows add ``ext_file_id``);
@@ -19,7 +20,12 @@ whatever the number of kinds:
 
 Nothing is read twice just to count it: the gate's per-entry counts size
 the writes and fill the stats, and an archive of at most 1 MB runs no
-shuffle.
+shuffle. At ``fidelity='jvm'`` no Python worker runs, and nothing is
+persisted: the entry rows live in the plan as a ``LocalRelation`` (below
+``spark.sql.execution.arrow.localRelationThreshold``), whose gate select
+the optimizer folds on the driver. Past that threshold the rows are an
+RDD of one partition per entry and the gate is one JVM job; the writes
+read the same rows, so nothing is decoded twice either way.
 
 Atomicity: the reference wraps all inserts in one Postgres transaction
 (O18). The default here is a key-scoped partition swap per sink table
@@ -45,7 +51,11 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from tdei_extract_load_service_spark.functions.feature_json import process_feature_json
-from tdei_extract_load_service_spark.functions.geometry import process_geometry_elevation_cols
+from tdei_extract_load_service_spark.functions.geometry import (
+    count_elevation_keys,
+    first_z_json,
+    process_geometry_elevation_cols,
+)
 from tdei_extract_load_service_spark.session import PLAN_MEMO_SIZE
 from tdei_extract_load_service_spark.sinks.writers import overwrite_by_key
 from tdei_extract_load_service_spark.sources.geojson import (
@@ -55,7 +65,7 @@ from tdei_extract_load_service_spark.sources.geojson import (
     feature_count,
 )
 from tdei_extract_load_service_spark.sources.zip_fanout import (
-    read_zip_archives,
+    InvalidArchiveError,
     routed_entries,
     zip_fanout,
 )
@@ -159,16 +169,11 @@ def _transform_exprs(fidelity: str) -> tuple:
     # Column CONSTRUCTION, not execution), and the Columns are unresolved
     # name-based trees, so one build serves every load in the process.
     if fidelity == "exact":
-        return (process_feature_json("feature_raw", "kind"),)
-    parsed = decompose_feature("feature_raw")
-    decompose_cols = {
-        "_ftype": parsed["type"],
-        "_gtype": parsed["geometry"]["type"],
-        "_coords": parsed["geometry"]["coordinates"],
-        "_props": parsed["properties"],
-    }
+        return ({"feature": process_feature_json("feature_raw", "kind")},)
+    parsed = F.col("_parsed")
+    is_node_point = F.col("kind").isin("nodes", "points")
     new_coords, new_props = process_geometry_elevation_cols(
-        "kind", "_gtype", "_coords", "_props"
+        "kind", "_gtype", "_coords", "_props", z="_z", n_elev="_n_elev"
     )
     has_geometry = (
         F.col("_gtype").isNotNull()
@@ -178,13 +183,25 @@ def _transform_exprs(fidelity: str) -> tuple:
     assembled = assemble_feature_json(
         F.col("_ftype"), F.col("_gtype"), F.col("_coords"), F.col("_props")
     )
-    # no geometry / null coordinates -> original document untouched
-    # (extract-load-service.ts:613-615)
-    feature = F.when(has_geometry, assembled).otherwise(F.col("feature_raw"))
+    # Each dict is one projection. A column that is not cheap and is used
+    # more than once downstream stays in its own projection (CollapseProject
+    # does not re-inline it), so the feature is parsed once and the first
+    # Z (a six-branch parse) and the elevation-key count once each.
     return (
-        decompose_cols,
+        {"_parsed": decompose_feature("feature_raw")},
+        {
+            "_ftype": parsed["type"],
+            "_gtype": parsed["geometry"]["type"],
+            "_coords": parsed["geometry"]["coordinates"],
+            "_props": parsed["properties"],
+        },
+        # only nodes/points take an elevation; other kinds skip the parse
+        {"_z": F.when(is_node_point, first_z_json("_coords", "_gtype"))},
+        {"_n_elev": F.when(F.col("_z") != 0, count_elevation_keys("_props"))},
         {"_coords": new_coords, "_props": new_props},
-        feature,
+        # no geometry / null coordinates -> original document untouched
+        # (extract-load-service.ts:613-615)
+        {"feature": F.when(has_geometry, assembled).otherwise(F.col("feature_raw"))},
     )
 
 
@@ -197,13 +214,10 @@ def transform_features(features_df: DataFrame, fidelity: str = "jvm") -> DataFra
     ``fidelity='exact'``: Arrow-batched pandas UDF — byte-faithful envelope
     (unknown feature-level keys survive), arbitrary nesting depth.
     """
-    if fidelity == "exact":
-        (feature,) = _transform_exprs(fidelity)
-        return features_df.withColumn("feature", feature)
-    decompose_cols, geom_cols, feature = _transform_exprs(fidelity)
-    df = features_df.withColumns(decompose_cols)
-    df = df.withColumns(geom_cols)
-    return df.withColumn("feature", feature).drop("_ftype", "_gtype", "_coords", "_props")
+    df = features_df
+    for cols in _transform_exprs(fidelity):
+        df = df.withColumns(cols)
+    return df.drop("_parsed", "_ftype", "_gtype", "_coords", "_props", "_z", "_n_elev")
 
 
 def load_dataset(
@@ -280,9 +294,6 @@ def load_dataset(
         else:
             overwrite_by_key(df, os.path.join(warehouse, table), schema=sink_schema(table))
 
-    # the cached entries are released on EVERY exit — a failed load
-    # (malformed entry, sink error) must not leak its cached blocks
-    entries = None
     try:
         # manifest mode: a failure anywhere below aborts the transaction
         # (the pointer was never swapped, so no reader saw anything)
@@ -305,22 +316,22 @@ def load_dataset(
 
             # -- extract: archive -> routed entries -------------------------
             t0 = time.perf_counter()
-            entries = routed_entries(zip_fanout(read_zip_archives(spark, archive_path)))
-            # entries feed the gate and both writes: one fan-out, cached
-            entries = entries.persist()
+            # the driver decodes the archive once; the entries are a local
+            # relation that the gate and both writes read without a cache
+            entries = routed_entries(zip_fanout(spark, archive_path))
             # extension features carry the extension_file FK
             # (extract-load-service.ts:473-479); surrogate id = stable hash of
             # (dataset, entry) instead of a DB sequence — distributed-safe
             ext_file_id = F.xxhash64(F.lit(tdei_dataset_id), F.col("entry"))
-            # ONE materializing pass returns, per FILE, the malformed-entry
-            # gate (O21, geoJsonPipeError extract-load-service.ts:41-49), the
-            # header metadata that the extension-registration (O16) and
-            # metadata (O15) stages consume, the feature count that sizes the
-            # writes and fills the stats (O19), and the extension-file id and
-            # name, computed by Spark so they match the features' FK. Its only
-            # Python runner is the fan-out generator, which parses the headers
-            # itself: each Python task pays its worker set-up before any row
-            # moves. Collected volume is one small row per file, never
+            # ONE select returns, per FILE, the malformed-entry gate (O21,
+            # geoJsonPipeError extract-load-service.ts:41-49), the header
+            # metadata that the extension-registration (O16) and metadata
+            # (O15) stages consume, the feature count that sizes the writes
+            # and fills the stats (O19), and the extension-file id and name,
+            # computed by Spark so they match the features' FK. Over a local
+            # relation the optimizer evaluates it on the driver (no job);
+            # over a relation past the Arrow local-relation threshold it is
+            # one job. Collected volume is one small row per file, never
             # feature data.
             is_bad = F.from_json("entry_text", "map<string,string>").isNull()
             per_entry = entries.select(
@@ -360,8 +371,8 @@ def load_dataset(
 
             # -- transform: plan construction only. Nothing is cached here:
             # each write below runs the transform for its own kinds straight
-            # from the cached entries (the kind filter lands on the cache
-            # scan, below the explode), so its execution is billed to "load".
+            # from the entry rows (the kind filter lands on their scan, below
+            # the explode), so its execution is billed to "load".
             t0 = time.perf_counter()
             features = explode_features(entries)
             # explode-skew fix: feature rows inherit the ENTRY partitioning
@@ -537,6 +548,8 @@ def load_dataset(
             # typed integrity failure (23505/23503) — reference
             # data-source.ts:96-107 surfaces the class name + short message
             message = f"{type(exc).__name__}: {message}"
+        elif isinstance(exc, InvalidArchiveError):
+            pass  # already the short normalized message
         elif "JSON" in message or "Malformed" in message:
             message = f"Invalid GeoJSON content: {message[:200]}"
         return LoadResult(
@@ -545,6 +558,3 @@ def load_dataset(
             tdei_dataset_id=tdei_dataset_id,
             timings={k: round(v, 4) for k, v in timings.items()},
         )
-    finally:
-        if entries is not None:
-            entries.unpersist()

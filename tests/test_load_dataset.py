@@ -227,9 +227,9 @@ def test_malformed_geojson_entry_fails(spark, tmp_path):
 
 
 def test_failed_loads_release_cached_frames(spark, tmp_path):
-    """A load that fails after persisting its frames (here: the malformed
-    gate, which runs after the entries are cached) must unpersist them —
-    a consumer draining many bad archives must not grow the cache."""
+    """A failed load (here: the malformed gate) leaves no persisted frame
+    behind — a consumer draining many bad archives must not grow the
+    cache."""
     jsc = spark.sparkContext._jsc
     start = jsc.getPersistentRDDs().size()
     for i in range(3):
@@ -287,13 +287,26 @@ def _shuffle_write_bytes(spark, stage_ids) -> int:
     )
 
 
+def _sql_plans(spark) -> dict[int, str]:
+    """SQL execution id -> physical plan text, from Spark's status store
+    once every queued listener event has been applied."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    seq = spark._jsparkSession.sharedState().statusStore().executionsList()
+    execs = [seq.apply(i) for i in range(seq.size())]
+    return {e.executionId(): e.physicalPlanDescription() for e in execs}
+
+
+PYTHON_RUNNERS = ("MapInPandas", "PythonMapInArrow", "ArrowEvalPython")
+
+
 @pytest.mark.parametrize("commit_mode", ["partition", "manifest"])
-def test_small_archive_runs_three_jobs_and_no_shuffle(spark, tmp_path, commit_mode):
-    """An archive of at most 1 MB loads in three jobs in either commit
-    mode: the gate pass, one write for every non-extension kind and one
-    for extensions. The counts come from the gate, the elevation counts
-    ride the writes, and the extension-file, dataset and stats rows are
-    written from the driver without a job."""
+def test_small_archive_runs_two_jobs_and_no_shuffle(spark, tmp_path, commit_mode):
+    """An archive of at most 1 MB loads in two jobs in either commit mode:
+    one write for every non-extension kind and one for extensions. The
+    gate select over the driver-decoded entries runs no job, no plan of
+    the load starts a Python worker, the elevation counts ride the writes,
+    and the extension-file, dataset and stats rows are written from the
+    driver without a job."""
     archive = str(tmp_path / "osw.zip")
     make_zip(archive, {
         "data/nodes.geojson": json.dumps(NODES),
@@ -302,16 +315,22 @@ def test_small_archive_runs_three_jobs_and_no_shuffle(spark, tmp_path, commit_mo
         "data/points.geojson": json.dumps(EMPTY_POINTS),
     })
     before = set(_engine_jobs(spark))
+    plans_before = set(_sql_plans(spark))
     result = load_dataset(
         spark, archive, "ds-jobs", "u", str(tmp_path / "wh"), commit_mode=commit_mode
     )
     after = _engine_jobs(spark)
+    plans = _sql_plans(spark)
     assert result.success, result.message
     assert result.feature_counts == {"nodes": 3, "edges": 1, "extension": 2}
     new = sorted(set(after) - before)
-    # gate, base kinds, extension
-    assert len(new) == 3, new
+    # base kinds, extension
+    assert len(new) == 2, new
     assert _shuffle_write_bytes(spark, [s for j in new for s in after[j]]) == 0
+    load_plans = [p for i, p in plans.items() if i not in plans_before]
+    assert load_plans  # the gate and the two writes are SQL executions
+    for plan in load_plans:
+        assert not any(runner in plan for runner in PYTHON_RUNNERS), plan
 
 
 def _line(i, coords, props):
@@ -523,3 +542,117 @@ def test_escaped_ids_land_where_spark_puts_them(spark, tmp_path, commit_mode):
     assert [r.kind for r in stats.collect()] == ["nodes"]
     other = read_sink(spark, warehouse, "edge").where(F.col("tdei_dataset_id") == ESCAPED_IDS[1])
     assert other.count() == 1
+
+
+def test_transform_parses_each_feature_once(spark):
+    """The feature is decomposed by one parse, and the first Z and the
+    elevation-key count are projected once, so the optimized transform
+    plan holds at most 18 ``from_json`` nodes (84 when each was inlined
+    at every use)."""
+    from tdei_extract_load_service_spark.plans.load_dataset import transform_features
+
+    feature = json.dumps(NODES["features"][0])
+    # an RDD-backed frame: the optimizer would fold the whole projection
+    # over a local relation into literal rows
+    df = spark.createDataFrame([("nodes", feature)], "kind string, feature_raw string")
+    out = transform_features(df)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("from_json(") <= 18, plan
+    assert json.loads(out.first()["feature"])["properties"] == {"_id": "n1", "ext:elevation": 123.45}
+
+
+def _sink_rows(spark, warehouse) -> dict[str, list]:
+    from tdei_extract_load_service_spark.plans.load_dataset import SINK_TABLES, read_sink
+
+    tables = (*SINK_TABLES.values(), "extension_file", "dataset", "dataset_stats")
+    return {t: sorted(map(tuple, read_sink(spark, warehouse, t).collect()), key=repr) for t in tables}
+
+
+def test_directory_of_archives_loads_every_archive(spark, tmp_path):
+    src = tmp_path / "uploads"
+    src.mkdir()
+    make_zip(str(src / "a.zip"), {"nodes.geojson": json.dumps(NODES)})
+    make_zip(str(src / "b.zip"), {"edges.geojson": EDGES_TEXT})
+    (src / "notes.txt").write_text("not an archive")
+    result = load_dataset(spark, str(src), "ds-dir", "u", str(tmp_path / "wh"))
+    assert result.success, result.message
+    assert result.feature_counts == {"nodes": 3, "edges": 1}
+
+
+def test_file_uri_loads(spark, tmp_path):
+    archive = str(tmp_path / "osw.zip")
+    make_zip(archive, {"nodes.geojson": json.dumps(NODES)})
+    result = load_dataset(spark, "file:" + archive, "ds-uri", "u", str(tmp_path / "wh"))
+    assert result.success, result.message
+    assert result.feature_counts == {"nodes": 3}
+
+
+def test_non_zip_path_has_no_geojson_entries(spark, tmp_path):
+    archive = str(tmp_path / "osw.tar")
+    make_zip(archive, {"nodes.geojson": json.dumps(NODES)})
+    result = load_dataset(spark, archive, "ds-tar", "u", str(tmp_path / "wh"))
+    assert not result.success
+    assert "No GeoJSON files" in result.message
+
+
+def test_large_relation_lands_the_same_rows(spark, tmp_path):
+    """Past the Arrow local-relation threshold the entries are an RDD: the
+    gate becomes one job of its own, and the same rows land."""
+    archive = str(tmp_path / "osw.zip")
+    make_zip(archive, {
+        "data/nodes.geojson": json.dumps(NODES),
+        "data/edges.geojson": EDGES_TEXT,
+        "data/zones.geojson": json.dumps(ZONES),
+        "data/custom.geojson": json.dumps(EXTENSION),
+        "data/points.geojson": json.dumps(EMPTY_POINTS),
+    })
+    local_wh, rdd_wh = str(tmp_path / "local"), str(tmp_path / "rdd")
+    assert load_dataset(spark, archive, "ds-rel", "u", local_wh).success
+    conf = "spark.sql.execution.arrow.localRelationThreshold"
+    previous = spark.conf.get(conf)
+    spark.conf.set(conf, "1")
+    try:
+        before = set(_engine_jobs(spark))
+        result = load_dataset(spark, archive, "ds-rel", "u", rdd_wh)
+        new = set(_engine_jobs(spark)) - before
+    finally:
+        spark.conf.set(conf, previous)
+    assert result.success, result.message
+    # gate, base kinds, extension
+    assert len(new) == 3, new
+    assert _sink_rows(spark, rdd_wh) == _sink_rows(spark, local_wh)
+
+
+def test_non_utf8_entry_fails_with_short_message(spark, tmp_path):
+    archive = str(tmp_path / "latin1.zip")
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        zf.writestr("nodes.geojson", json.dumps(NODES))
+        zf.writestr("data/café.geojson", '{"name": "café"}'.encode("latin-1"))
+    with open(archive, "wb") as fh:
+        fh.write(buf.getvalue())
+    result = load_dataset(spark, archive, "ds-latin1", "u", str(tmp_path / "wh"))
+    assert not result.success
+    assert result.message == "Invalid GeoJSON content: entry data/café.geojson is not UTF-8 text"
+    assert len(result.message) < 120
+
+
+def test_not_a_zip_file_fails_with_short_message(spark, tmp_path):
+    archive = tmp_path / "upload.zip"
+    archive.write_bytes(b"PK but not really a zip archive\n" * 8)
+    result = load_dataset(spark, str(archive), "ds-notzip", "u", str(tmp_path / "wh"))
+    assert not result.success
+    assert result.message == "Invalid archive: upload.zip is not a zip file"
+    assert len(result.message) < 120
+
+
+def test_corrupt_entry_fails_with_short_message(spark, tmp_path):
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w", zipfile.ZIP_STORED) as zf:
+        zf.writestr("nodes.geojson", json.dumps(NODES))
+    data = buf.getvalue().replace(b'"FeatureCollection"', b'"FeatureCoIlection"', 1)
+    archive = tmp_path / "crc.zip"
+    archive.write_bytes(data)
+    result = load_dataset(spark, str(archive), "ds-crc", "u", str(tmp_path / "wh"))
+    assert not result.success
+    assert result.message == "Invalid archive: entry nodes.geojson of crc.zip is corrupt"
