@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tdei_extract_load_service_spark import oracles as ORACLES
-from tdei_extract_load_service_spark.functions import maps as M
 from tdei_extract_load_service_spark.functions import timestamps as TS
 from tdei_extract_load_service_spark.operators import relational as R
 from tdei_extract_load_service_spark.operators.query_builder import DynamicQueryBuilder

@@ -22,6 +22,7 @@ from tdei_extract_load_service_spark.catalog import (
 )
 from tdei_extract_load_service_spark.functions import maps as M
 from tdei_extract_load_service_spark.functions import timestamps as TS
+from tdei_extract_load_service_spark.functions.geometry import count_elevation_keys, strip_z
 from tdei_extract_load_service_spark.operators import relational as R
 from tdei_extract_load_service_spark.operators.query_builder import (
     DynamicQueryBuilder,
@@ -63,7 +64,7 @@ def q_header_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     (O7/O15, extract-load-service.ts:139-178,496-502) over the events.props
     JSON column."""
     ev = _read_events(spark, sf_dir)
-    header = M.header_map_from_json("props", exclude=("features", "type"))
+    header = M.header_map_from_json("props")
     return ev.select(
         "event_id", F.coalesce(F.element_at(header, "k"), F.lit("")).alias("k")
     )
@@ -81,7 +82,7 @@ def q_agg_prefix_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map-key prefix count (countExistingElevationProperties,
     extract-load-service.ts:543-549) summed per group."""
     ev = _read_events(spark, sf_dir)
-    n = M.count_keys_with_prefix("props", "k", is_json=True)
+    n = count_elevation_keys("props", "k")
     return R.agg_group(
         ev.select("event_type", n.alias("n")),
         ["event_type"],
@@ -109,8 +110,6 @@ def q_strip_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     %.6f is correctly-rounded from the identical binary double in both
     engines (a decimal tie at the 7th digit is not representable in binary,
     so Java's HALF_UP and C's round-to-nearest agree)."""
-    from tdei_extract_load_service_spark.functions.geometry import strip_z
-
     emb = _read(spark, sf_dir, "embeddings")
     xy = F.concat_ws(
         ",",

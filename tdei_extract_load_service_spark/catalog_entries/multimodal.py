@@ -20,7 +20,6 @@ from tdei_extract_load_service_spark.catalog import (
     _read_events,
     register,
 )
-from tdei_extract_load_service_spark.functions import maps as M
 from tdei_extract_load_service_spark.functions import timestamps as TS
 from tdei_extract_load_service_spark.operators import relational as R
 from tdei_extract_load_service_spark.operators.query_builder import (

@@ -23,7 +23,6 @@ from tdei_extract_load_service_spark.catalog import (
 from tdei_extract_load_service_spark.catalog_entries.dedup import (
     _NGRAM_JACCARD_ORACLE,
 )
-from tdei_extract_load_service_spark.functions import maps as M
 from tdei_extract_load_service_spark.functions import timestamps as TS
 from tdei_extract_load_service_spark.operators import relational as R
 from tdei_extract_load_service_spark.operators.query_builder import (

@@ -1,23 +1,19 @@
 """Column-expression library (the engine's scalar-function surface).
 
-JVM-side higher-order functions first (whole-stage codegen, no Python on
-the hot path); an Arrow-batched pandas-UDF exact-fidelity fallback lives in
-``feature_json`` for arbitrary-depth document surgery.
+JVM-side higher-order functions only (whole-stage codegen, no Python on
+the hot path). ``geometry.transform_features`` is the one feature
+transform the load runs; ``feature_json`` is the recursive pure-Python
+reference implementation that tests compare its documents against.
 """
 
 from tdei_extract_load_service_spark.functions.geometry import (  # noqa: F401
-    GEOMETRY_DEPTHS,
     add_property_json,
     count_elevation_keys,
     first_z_json,
-    process_geometry_elevation_cols,
     strip_z,
-    strip_z_coords_json,
 )
 from tdei_extract_load_service_spark.functions.maps import (  # noqa: F401
-    count_keys_with_prefix,
     header_map_from_json,
-    header_project,
 )
 from tdei_extract_load_service_spark.functions.timestamps import (  # noqa: F401
     is_valid_ts,

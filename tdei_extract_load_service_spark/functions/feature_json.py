@@ -1,20 +1,18 @@
-"""Exact-fidelity GeoJSON feature transform as an Arrow-batched pandas UDF.
+"""The reference implementation of the feature transform, for tests.
 
-This is the deliberate slow-path twin of ``functions.geometry``: a faithful
-port of the reference's recursive document surgery —
+A faithful port of the reference's recursive document surgery —
 ``stripZCoordinate`` (extract-load-service.ts:556-569),
 ``stripZAndExtractElevation`` (:577-604),
 ``countExistingElevationProperties`` (:543-549),
-``processGeometryElevation`` (:613-654) — operating on the *whole* feature
-JSON document, so feature-level keys beyond type/geometry/properties (e.g. a
-GeoJSON ``id``) survive byte-identically, coordinates of arbitrary
-(non-standard) nesting depth are handled, and property value types are
-preserved exactly as the reference's JSONB cells do.
+``processGeometryElevation`` (:613-654) — over the *whole* feature JSON
+document: feature-level keys beyond type/geometry/properties survive,
+coordinates of any nesting depth are handled, and property value types
+are kept exactly as the reference's JSONB cells keep them.
 
-Use ``functions.geometry.process_geometry_elevation_cols`` (JVM, codegen)
-for the standard five arities; use this when exact envelope fidelity or
-unknown nesting depth matters. Arrow batching keeps the Python crossing
-amortized (~10-100x over row-at-a-time UDFs).
+The load does not run it: ``functions.geometry.transform_features`` is the
+one transform, and the tests compare its whole documents against
+``process_geometry_elevation`` (pure Python) or ``process_feature_json``
+(the same function as an Arrow-batched pandas UDF, for a Spark batch).
 """
 
 from __future__ import annotations

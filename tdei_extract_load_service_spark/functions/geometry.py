@@ -1,29 +1,38 @@
-"""Geometry Z-strip + elevation extraction as JVM-side column expressions.
+"""The feature transform (O10/O11) as JVM-side column expressions.
 
-Ports the reference's recursive coordinate transforms —
-``stripZCoordinate`` (extract-load-service.ts:556-569),
-``stripZAndExtractElevation`` (:577-604),
-``countExistingElevationProperties`` (:543-549) and the orchestrating
-``processGeometryElevation`` (:613-654) — without the recursion: GeoJSON
-fixes the nesting depth per geometry type, so a ``when`` dispatch on
-``geometry.type`` plus ``transform``/``slice``/``filter`` higher-order
-functions covers every standard arity entirely inside whole-stage codegen.
-The reference's own tests only exercise these five arities
-(test/unit/extract-load-service.test.ts:905-1117), so typed dispatch is
-semantically complete; ``feature_json.process_feature_json`` remains the
-arbitrary-depth exact-fidelity fallback.
+``transform_features`` is the one port of ``processGeometryElevation``
+(extract-load-service.ts:613-654) the load runs; ``strip_z``,
+``first_z_json``, ``count_elevation_keys`` and ``add_property_json`` are its
+column building blocks. The reference's recursive coordinate transforms —
+``stripZCoordinate`` (:556-569), ``stripZAndExtractElevation`` (:577-604),
+``countExistingElevationProperties`` (:543-549) — run without the
+recursion: GeoJSON fixes the nesting depth per geometry type, so a ``when``
+dispatch on ``geometry.type`` plus ``transform``/``slice``/``filter``
+higher-order functions covers every standard arity entirely inside
+whole-stage codegen. The reference's own tests only exercise these
+arities (test/unit/extract-load-service.test.ts:905-1117).
+``feature_json.process_geometry_elevation`` is the recursive
+reference implementation the tests compare whole documents against.
 
-Representation: in the decomposed-feature layout (see ``sources.geojson``)
-``coordinates`` travels as a raw JSON array string — the only schema that
-can hold every arity in one column — and ``properties`` as a raw JSON
-object string (preserves value types exactly like the reference's JSONB
-cells).
+Decomposed-feature layout: one ``from_json`` per feature row
+(``FEATURE_SCHEMA``) captures ``coordinates`` as a raw JSON array string —
+the only schema that can hold every arity in one column — and
+``properties`` as a raw JSON object string (value types kept exactly, like
+the reference's JSONB cells); the transformed feature is re-serialized in
+the canonical envelope order (type, geometry, properties). Feature-level
+keys beyond that envelope, geometry keys beyond type/coordinates, and
+coordinates of a non-standard type or depth (passed through unstripped)
+are departures from the reference (PARITY.md O10/O11).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+import functools
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from tdei_extract_load_service_spark.session import PLAN_MEMO_SIZE
 
 #: Nesting depth of ``coordinates`` per GeoJSON geometry type.
 GEOMETRY_DEPTHS: dict[str, int] = {
@@ -163,51 +172,90 @@ def add_property_json(props_json: str | Column, key: Column, value_json: Column)
     )
 
 
-def process_geometry_elevation_cols(
-    kind: str | Column,
-    geom_type: str | Column,
-    coords_json: str | Column,
-    props_json: str | Column,
-    *,
-    z: str | Column | None = None,
-    n_elev: str | Column | None = None,
-) -> tuple[Column, Column]:
-    """The full O10/O11 orchestration (processGeometryElevation,
-    extract-load-service.ts:613-654) over decomposed feature columns.
+#: Decomposed per-feature schema, parsed once per feature row: ``from_json``
+#: captures a subtree addressed as a ``string`` field verbatim, so
+#: ``coordinates`` of every arity and the open ``properties`` object fit
+#: fixed columns as raw JSON text.
+FEATURE_SCHEMA = "type string, geometry struct<type string, coordinates string>, properties string"
 
-    Returns ``(new_coords_json, new_props_json)``:
 
-    - every kind: Z stripped at all leaves;
-    - kinds ``nodes``/``points`` additionally extract the first Z; if it is
-      non-null and ``!= 0`` (zero means "no elevation", :629) the property
-      ``ext:elevation`` — or ``ext:elevation_<n>`` where n = count of
-      existing ``ext:elevation*`` keys (:634-642) — is appended;
-    - missing geometry / null coordinates pass through untouched (:613-615).
+@functools.lru_cache(maxsize=PLAN_MEMO_SIZE)
+def _transform_exprs() -> tuple[dict[str, Column], ...]:
+    # Memoized: building the when-chains costs ~0.9 s of py4j round-trips
+    # per call, and the Columns are unresolved name-based trees, so one
+    # build serves every load in the process.
+    raw, parsed = F.col("feature_raw"), F.col("_parsed")
+    ftype, gtype, coords, props = (F.col(c) for c in ("_ftype", "_gtype", "_coords", "_props"))
+    z, n_elev = F.col("_z"), F.col("_n_elev")
 
-    ``z`` and ``n_elev`` are the ``first_z_json`` and
-    ``count_elevation_keys`` values when the caller already projects them
-    (``n_elev`` may be null wherever ``z`` is null or 0). Both are used
-    several times here, and projection collapse keeps a non-cheap column
-    that is used more than once, so a caller that projects them in a frame
-    of their own parses each once per row instead of once per use.
-    """
-    k = _col(kind)
-    gt, cj, pj = _col(geom_type), _col(coords_json), _col(props_json)
-
-    has_geometry = gt.isNotNull() & cj.isNotNull() & (F.trim(cj) != "null")
-    new_coords = F.when(has_geometry, strip_z_coords_json(cj, gt)).otherwise(cj)
-
-    is_node_point = k.isin("nodes", "points")
-    z = first_z_json(cj, gt) if z is None else _col(z)
-    existing = count_elevation_keys(pj) if n_elev is None else _col(n_elev)
-    prop_name = F.when(existing == 0, F.lit("ext:elevation")).otherwise(
-        F.concat(F.lit("ext:elevation_"), existing.cast("string"))
+    # missing geometry / null coordinates -> the document passes through
+    # untouched (extract-load-service.ts:613-615)
+    has_geometry = gtype.isNotNull() & coords.isNotNull() & (F.trim(coords) != "null")
+    # ext:elevation, or ext:elevation_<n> past n existing ext:elevation*
+    # keys (:634-642)
+    prop_name = F.when(n_elev == 0, F.lit("ext:elevation")).otherwise(
+        F.concat(F.lit("ext:elevation_"), n_elev.cast("string"))
     )
-    # Render the elevation as JSON number text: integral values print like
-    # JS (150, not 150.0) so the stored document matches the reference's.
+    # JSON number text: integral values print like JS (150, not 150.0)
     z_json = F.when(
         z == F.floor(z), z.cast("decimal(38,1)").cast("long").cast("string")
     ).otherwise(z.cast("string"))
-    should_add = has_geometry & is_node_point & z.isNotNull() & (z != 0)
-    new_props = F.when(should_add, add_property_json(pj, prop_name, z_json)).otherwise(pj)
-    return new_coords, new_props
+    # _z is null outside nodes/points and without geometry; zero Z means
+    # "no elevation" (:629)
+    new_props = F.when(z != 0, add_property_json(props, prop_name, z_json)).otherwise(props)
+    # GeoJSON requires the properties member: an explicit null stays, a
+    # missing one stays missing (only null rows look at the keys)
+    props_member = F.coalesce(
+        F.concat(F.lit(', "properties": '), new_props),
+        F.when(
+            F.array_contains(F.json_object_keys(raw), "properties"),
+            F.lit(', "properties": null'),
+        ),
+        F.lit(""),
+    )
+    # canonical envelope (type, geometry, properties): feature-level keys
+    # beyond it are not carried
+    assembled = F.concat(
+        F.lit('{"type": "'),
+        F.coalesce(ftype, F.lit("Feature")),
+        F.lit('", "geometry": {"type": "'),
+        gtype,
+        F.lit('", "coordinates": '),
+        strip_z_coords_json(coords, gtype),
+        F.lit("}"),
+        props_member,
+        F.lit("}"),
+    )
+    # Each dict is one projection. A column that is not cheap and is used
+    # more than once downstream stays in its own projection (CollapseProject
+    # does not re-inline it), so the feature is parsed once and the first
+    # Z (a six-branch parse) and the elevation-key count once each.
+    return (
+        {"_parsed": F.from_json(raw, FEATURE_SCHEMA)},
+        {
+            "_ftype": parsed["type"],
+            "_gtype": parsed["geometry"]["type"],
+            "_coords": parsed["geometry"]["coordinates"],
+            "_props": parsed["properties"],
+        },
+        # only nodes/points take an elevation; other kinds skip the parse
+        {"_z": F.when(F.col("kind").isin("nodes", "points"), first_z_json(coords, gtype))},
+        {"_n_elev": F.when(z != 0, count_elevation_keys(props))},
+        {"feature": F.when(has_geometry, assembled).otherwise(raw)},
+    )
+
+
+def transform_features(features_df: DataFrame) -> DataFrame:
+    """O10/O11 over ``(kind, feature_raw)`` rows: adds ``feature``, the
+    final JSON document for the JSONB-shaped sink column
+    (processGeometryElevation, extract-load-service.ts:613-654).
+
+    - every kind: Z stripped at every coordinate leaf;
+    - kinds ``nodes``/``points`` also take the first Z; a non-null, non-zero
+      one is appended as ``ext:elevation`` (or ``ext:elevation_<n>``);
+    - missing geometry / null coordinates: ``feature_raw`` unchanged.
+    """
+    df = features_df
+    for cols in _transform_exprs():
+        df = df.withColumns(cols)
+    return df.drop("_parsed", "_ftype", "_gtype", "_coords", "_props", "_z", "_n_elev")

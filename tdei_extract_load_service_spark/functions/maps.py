@@ -2,40 +2,32 @@
 
 Ports the reference's token-stream header capture and metadata projection:
 depth-1 root keys except ``features`` / the FeatureCollection type tag
-(extract-load-service.ts:130-178), metadata projection dropping
-``features``/``type`` with nulls coerced to ``''`` (:496-502, :517-523),
-and the ``ext:elevation*`` prefix count (:543-549).
-
-The reference needed 48 lines of stateful token plumbing so that header keys
-appearing *after* the features array are still captured in one pass
-(test :293-322); Spark column access is order-independent, so
-``header_project`` is a plain projection.
+(extract-load-service.ts:130-178), with nulls coerced to ``''``
+(:496-502, :517-523). The reference needed 48 lines of stateful token
+plumbing so that header keys appearing *after* the features array are
+still captured in one pass (test :293-322); a parse of the whole object
+is order-independent. The ``ext:elevation*`` prefix count (:543-549) is
+``functions.geometry.count_elevation_keys``.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-#: Keys the metadata projection drops (extract-load-service.ts:496-502).
-DEFAULT_EXCLUDED_KEYS = ("features", "type")
+#: Root keys a header drops (extract-load-service.ts:159,165, :496-502).
+HEADER_EXCLUDED_KEYS = ("features", "type")
 
 
 def _col(c: str | Column) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
-def header_project(df: DataFrame, exclude: Sequence[str] = DEFAULT_EXCLUDED_KEYS) -> DataFrame:
-    """Project every root column except the excluded set — the header
-    capture of O7 (extract-load-service.ts:139-178) as a plain SELECT."""
-    return df.select(*[c for c in df.columns if c not in set(exclude)])
-
-
 def header_map_from_json(
     json_col: str | Column,
-    exclude: Sequence[str] = DEFAULT_EXCLUDED_KEYS,
+    exclude: Sequence[str] = HEADER_EXCLUDED_KEYS,
     null_to_empty: bool = True,
 ) -> Column:
     """Parse a JSON object into ``map<string,string>`` keeping only
@@ -49,13 +41,3 @@ def header_map_from_json(
     if null_to_empty:
         m = F.transform_values(m, lambda _k, v: F.coalesce(v, F.lit("")))
     return m
-
-
-def count_keys_with_prefix(map_or_json: str | Column, prefix: str, is_json: bool = False) -> Column:
-    """Count map keys starting with ``prefix`` —
-    ``size(filter(map_keys(...)))``, the engine form of
-    countExistingElevationProperties (extract-load-service.ts:543-549)."""
-    c = _col(map_or_json)
-    if is_json:
-        c = F.from_json(c, "map<string,string>")
-    return F.coalesce(F.size(F.filter(F.map_keys(c), lambda k: k.startswith(prefix))), F.lit(0))

@@ -693,7 +693,7 @@ def pq_code_expr_sql(vec_col: str, codebooks: list[list[list[float]]]) -> str:
 
     Why a string: the equivalent Column-API tree (8 subspaces x 16
     centroids of zip_with/aggregate folds) costs ~4-5s of py4j
-    round-trips to BUILD per call (the load_dataset._transform_exprs
+    round-trips to BUILD per call (the geometry._transform_exprs
     lesson at 100x the node count); one ``F.expr`` ships the text in a
     single call and parses JVM-side in milliseconds. The arithmetic is
     textually parallel to the DuckDB oracle builder

@@ -11,7 +11,8 @@ whatever the number of kinds:
     (zip_fanout) → Arrow local relation → route_case
     → gate select (malformed entries, headers, feature count,
       extension-file id and name per entry), evaluated on the driver
-    → explode(features) → decompose → strip-Z/elevation
+    → explode(features) → transform_features (decompose, strip-Z/elevation,
+      reassemble; functions.geometry)
     → one job writes the six non-extension kinds (each row names its sink
       table), one job writes extensions (their rows add ``ext_file_id``);
       the two run concurrently and observe the per-kind elevation counts
@@ -20,8 +21,8 @@ whatever the number of kinds:
 
 Nothing is read twice just to count it: the gate's per-entry counts size
 the writes and fill the stats, and an archive of at most 1 MB runs no
-shuffle. At ``fidelity='jvm'`` no Python worker runs, and nothing is
-persisted: the entry rows live in the plan as a ``LocalRelation`` (below
+shuffle. No Python worker runs, and nothing is persisted: the entry rows
+live in the plan as a ``LocalRelation`` (below
 ``spark.sql.execution.arrow.localRelationThreshold``), whose gate select
 the optimizer folds on the driver. Past that threshold the rows are an
 RDD of one partition per entry and the gate is one JVM job; the writes
@@ -40,7 +41,6 @@ times plan construction only, since its execution happens inside the
 from __future__ import annotations
 
 import contextlib
-import functools
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -50,20 +50,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from tdei_extract_load_service_spark.functions.feature_json import process_feature_json
-from tdei_extract_load_service_spark.functions.geometry import (
-    count_elevation_keys,
-    first_z_json,
-    process_geometry_elevation_cols,
-)
-from tdei_extract_load_service_spark.session import PLAN_MEMO_SIZE
+from tdei_extract_load_service_spark.functions.geometry import transform_features
 from tdei_extract_load_service_spark.sinks.writers import overwrite_by_key
-from tdei_extract_load_service_spark.sources.geojson import (
-    assemble_feature_json,
-    decompose_feature,
-    explode_features,
-    feature_count,
-)
+from tdei_extract_load_service_spark.sources.geojson import explode_features, feature_count
 from tdei_extract_load_service_spark.sources.zip_fanout import (
     InvalidArchiveError,
     routed_entries,
@@ -162,71 +151,12 @@ class LoadResult:
     timings: dict[str, float] = field(default_factory=dict)
 
 
-@functools.lru_cache(maxsize=PLAN_MEMO_SIZE)
-def _transform_exprs(fidelity: str) -> tuple:
-    # Memoized: building the geometry/elevation when-chains costs ~0.9 s of
-    # py4j round-trips per call (the "transform" stage was dominated by
-    # Column CONSTRUCTION, not execution), and the Columns are unresolved
-    # name-based trees, so one build serves every load in the process.
-    if fidelity == "exact":
-        return ({"feature": process_feature_json("feature_raw", "kind")},)
-    parsed = F.col("_parsed")
-    is_node_point = F.col("kind").isin("nodes", "points")
-    new_coords, new_props = process_geometry_elevation_cols(
-        "kind", "_gtype", "_coords", "_props", z="_z", n_elev="_n_elev"
-    )
-    has_geometry = (
-        F.col("_gtype").isNotNull()
-        & F.col("_coords").isNotNull()
-        & (F.trim(F.col("_coords")) != "null")
-    )
-    assembled = assemble_feature_json(
-        F.col("_ftype"), F.col("_gtype"), F.col("_coords"), F.col("_props")
-    )
-    # Each dict is one projection. A column that is not cheap and is used
-    # more than once downstream stays in its own projection (CollapseProject
-    # does not re-inline it), so the feature is parsed once and the first
-    # Z (a six-branch parse) and the elevation-key count once each.
-    return (
-        {"_parsed": decompose_feature("feature_raw")},
-        {
-            "_ftype": parsed["type"],
-            "_gtype": parsed["geometry"]["type"],
-            "_coords": parsed["geometry"]["coordinates"],
-            "_props": parsed["properties"],
-        },
-        # only nodes/points take an elevation; other kinds skip the parse
-        {"_z": F.when(is_node_point, first_z_json("_coords", "_gtype"))},
-        {"_n_elev": F.when(F.col("_z") != 0, count_elevation_keys("_props"))},
-        {"_coords": new_coords, "_props": new_props},
-        # no geometry / null coordinates -> original document untouched
-        # (extract-load-service.ts:613-615)
-        {"feature": F.when(has_geometry, assembled).otherwise(F.col("feature_raw"))},
-    )
-
-
-def transform_features(features_df: DataFrame, fidelity: str = "jvm") -> DataFrame:
-    """O10/O11 over exploded feature rows -> adds ``feature`` (the final
-    JSON document for the JSONB-shaped sink column).
-
-    ``fidelity='jvm'``: decomposed columns + higher-order functions — whole
-    plan stays in codegen; canonical envelope on re-serialization.
-    ``fidelity='exact'``: Arrow-batched pandas UDF — byte-faithful envelope
-    (unknown feature-level keys survive), arbitrary nesting depth.
-    """
-    df = features_df
-    for cols in _transform_exprs(fidelity):
-        df = df.withColumns(cols)
-    return df.drop("_parsed", "_ftype", "_gtype", "_coords", "_props", "_z", "_n_elev")
-
-
 def load_dataset(
     spark: SparkSession,
     archive_path: str,
     tdei_dataset_id: str,
     user_id: str,
     warehouse: str,
-    fidelity: str = "jvm",
     commit_mode: str = "partition",
 ) -> LoadResult:
     """Run the full extract-load lifecycle for one dataset.
@@ -332,8 +262,12 @@ def load_dataset(
             # relation the optimizer evaluates it on the driver (no job);
             # over a relation past the Arrow local-relation threshold it is
             # one job. Collected volume is one small row per file, never
-            # feature data.
-            is_bad = F.from_json("entry_text", "map<string,string>").isNull()
+            # feature data. An entry is malformed if either parser rejects
+            # it: Jackson accepts single quotes and trailing content after
+            # the root object, which the strict header parse (null ``meta``)
+            # rejects, and Python's parse accepts nesting Jackson refuses.
+            jackson_rejects = F.from_json("entry_text", "map<string,string>").isNull()
+            is_bad = jackson_rejects | F.col("meta").isNull()
             per_entry = entries.select(
                 "kind",
                 "entry",
@@ -394,7 +328,7 @@ def load_dataset(
             )
             if n_repart > 1:
                 features = features.repartition(n_repart)
-            features = transform_features(features, fidelity=fidelity)
+            features = transform_features(features)
             features = features.withColumns(
                 {
                     "tdei_dataset_id": F.lit(tdei_dataset_id),

@@ -10,9 +10,8 @@ is decoded (``sources.zip_fanout``'s ``meta`` column).
 
 Key trick: ``from_json`` captures any JSON subtree addressed as a
 ``string`` field verbatim — so ``features array<string>`` yields each
-feature's raw document text (JSONB-fidelity), and the decomposed schema
-captures ``coordinates``/``properties`` as raw text able to hold every
-geometry arity / open property schema in fixed columns.
+feature's raw document text (JSONB-fidelity), which
+``functions.geometry.transform_features`` decomposes and transforms.
 
 Late headers (keys after the features array — ref test :293-322) are free:
 both parses read the whole document, so key order does not matter.
@@ -22,9 +21,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-#: Decomposed per-feature schema: one from_json per feature row.
-FEATURE_SCHEMA = "type string, geometry struct<type string, coordinates string>, properties string"
 
 #: Entry-level schema capturing each feature as raw text.
 FEATURES_RAW_SCHEMA = "features array<string>"
@@ -48,41 +44,3 @@ def feature_count(entry_text: str = "entry_text") -> Column:
     ANSI (``size(null)`` is null) and legacy ``sizeOfNull`` (-1)."""
     feats = F.from_json(F.col(entry_text), FEATURES_RAW_SCHEMA)["features"]
     return F.greatest(F.coalesce(F.size(feats), F.lit(0)), F.lit(0))
-
-
-def decompose_feature(feature_raw: str | Column = "feature_raw") -> Column:
-    """Parse one feature's text into the fixed envelope struct
-    (type / geometry.type / geometry.coordinates as raw JSON text /
-    properties as raw JSON text). The envelope is the only structural
-    assumption the reference makes too (extract-load-service.ts:614)."""
-    c = F.col(feature_raw) if isinstance(feature_raw, str) else feature_raw
-    return F.from_json(c, FEATURE_SCHEMA)
-
-
-def assemble_feature_json(
-    ftype: Column, geom_type: Column, coords_json: Column, props_json: Column
-) -> Column:
-    """Re-serialize a decomposed (possibly transformed) feature to one JSON
-    document for the JSONB-cell-shaped sink (reference binds the whole
-    feature as one parameter, e.g. extract-load-service.ts:373,:684).
-
-    Canonical envelope order (type, geometry, properties); feature-level
-    keys beyond the envelope are not carried by the decomposed
-    representation — use the exact-fidelity pandas-UDF path
-    (``functions.feature_json``) when they must survive.
-    """
-    geometry = F.when(
-        geom_type.isNotNull(),
-        F.concat(
-            F.lit('{"type": "'), geom_type, F.lit('", "coordinates": '),
-            F.coalesce(coords_json, F.lit("null")), F.lit("}"),
-        ),
-    )
-    return F.concat(
-        F.lit('{"type": "'),
-        F.coalesce(ftype, F.lit("Feature")),
-        F.lit('"'),
-        F.coalesce(F.concat(F.lit(', "geometry": '), geometry), F.lit("")),
-        F.coalesce(F.concat(F.lit(', "properties": '), props_json), F.lit("")),
-        F.lit("}"),
-    )

@@ -52,14 +52,12 @@ import pyarrow as pa
 import pyarrow.fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 
+from tdei_extract_load_service_spark.functions.maps import HEADER_EXCLUDED_KEYS
 from tdei_extract_load_service_spark.operators.relational import OSW_ROUTES, route_case
 
 #: Output schema of the fan-out.
 ENTRY_SCHEMA = "archive string, entry string, entry_text string, meta string"
 _ENTRY_ARROW = pa.schema([(name.split()[0], pa.string()) for name in ENTRY_SCHEMA.split(", ")])
-
-#: Root keys excluded from headers (extract-load-service.ts:159,165).
-HEADER_EXCLUDE = ("features", "type")
 
 #: Entry filter, ported from extract-load-service.ts:303.
 GEOJSON_SUFFIX = ".geojson"
@@ -106,7 +104,7 @@ def header_meta(text: str) -> str | None:
     if not isinstance(doc, dict):
         return None
     return json.dumps(
-        {k: "" if v is None else v for k, v in doc.items() if k not in HEADER_EXCLUDE},
+        {k: "" if v is None else v for k, v in doc.items() if k not in HEADER_EXCLUDED_KEYS},
         separators=(", ", ": "),
     )
 

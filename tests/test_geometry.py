@@ -1,26 +1,31 @@
 """Port of the reference's transform-semantics matrix (FIXTURES.md A4,
-reference test/unit/extract-load-service.test.ts:768-1217) against BOTH
-implementations:
+reference test/unit/extract-load-service.test.ts:768-1217), run two ways:
 
-- the JVM typed-dispatch path (functions.geometry, decomposed columns)
-- the exact-fidelity pandas-UDF path (functions.feature_json)
+- ``jvm``: ``functions.geometry.transform_features``, the transform the load
+  runs, over ``(kind, feature_raw)`` rows; each whole output document must
+  also equal the recursive reference implementation's
+  (``feature_json.process_geometry_elevation``)
+- ``udf``: that reference implementation as the pandas UDF
+  ``feature_json.process_feature_json``, a self-check of the oracle
 
-Each matrix row is one parametrized case run through both paths.
+Each matrix row is one parametrized case run both ways.
 """
 
 from __future__ import annotations
 
+import copy
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
 from tdei_extract_load_service_spark.functions import feature_json as FJ
 from tdei_extract_load_service_spark.functions import geometry as G
 
+ID = {"_id": "f1"}
 
-def _feature(geom_type, coords, properties=None, extra=None):
-    f = {"type": "Feature", "properties": properties if properties is not None else {"_id": "f1"}}
+
+def _feature(geom_type, coords, properties=ID, extra=None):
+    f = {"type": "Feature", "properties": copy.deepcopy(properties)}
     if geom_type is not None:
         f["geometry"] = {"type": geom_type, "coordinates": coords}
     if extra:
@@ -28,39 +33,43 @@ def _feature(geom_type, coords, properties=None, extra=None):
     return f
 
 
-# (name, kind, geom_type, coords_in, expected_coords, expected_props_delta)
+# (name, kind, geom_type, coords_in, props_in, expected_coords, expected_props)
 MATRIX = [
     # node/point 3D -> strip + ext:elevation (ref :768-787)
-    ("point_3d", "nodes", "Point", [-122.1355703, 47.6458165, 123.45],
-     [-122.1355703, 47.6458165], {"ext:elevation": 123.45}),
+    ("point_3d", "nodes", "Point", [-122.1355703, 47.6458165, 123.45], ID,
+     [-122.1355703, 47.6458165], {**ID, "ext:elevation": 123.45}),
     # zero Z means no elevation (ref :789-808, src :629)
-    ("point_zero_z", "points", "Point", [-122.1, 47.6, 0], [-122.1, 47.6], {}),
+    ("point_zero_z", "points", "Point", [-122.1, 47.6, 0], ID, [-122.1, 47.6], ID),
     # 2D passthrough, no property (ref :860-879)
-    ("point_2d", "nodes", "Point", [-122.1, 47.6], [-122.1, 47.6], {}),
+    ("point_2d", "nodes", "Point", [-122.1, 47.6], ID, [-122.1, 47.6], ID),
     # edges strip-only even with Z (ref :905-934)
     ("line_3d_edge", "edges", "LineString",
-     [[-122.1, 47.6, 100.0], [-122.2, 47.7, 200.0]],
-     [[-122.1, 47.6], [-122.2, 47.7]], {}),
+     [[-122.1, 47.6, 100.0], [-122.2, 47.7, 200.0]], ID,
+     [[-122.1, 47.6], [-122.2, 47.7]], ID),
     # polygon (ref :975-1016)
     ("polygon_3d", "polygons", "Polygon",
-     [[[-122.1, 47.6, 10.0], [-122.2, 47.7, 20.0], [-122.3, 47.8, 30.0], [-122.1, 47.6, 10.0]]],
-     [[[-122.1, 47.6], [-122.2, 47.7], [-122.3, 47.8], [-122.1, 47.6]]], {}),
+     [[[-122.1, 47.6, 10.0], [-122.2, 47.7, 20.0], [-122.3, 47.8, 30.0], [-122.1, 47.6, 10.0]]], ID,
+     [[[-122.1, 47.6], [-122.2, 47.7], [-122.3, 47.8], [-122.1, 47.6]]], ID),
     # MultiLineString (ref :1018-1063)
     ("multiline_3d", "lines", "MultiLineString",
-     [[[-122.1, 47.6, 1.0], [-122.2, 47.7, 2.0]], [[-122.3, 47.8, 3.0]]],
-     [[[-122.1, 47.6], [-122.2, 47.7]], [[-122.3, 47.8]]], {}),
+     [[[-122.1, 47.6, 1.0], [-122.2, 47.7, 2.0]], [[-122.3, 47.8, 3.0]]], ID,
+     [[[-122.1, 47.6], [-122.2, 47.7]], [[-122.3, 47.8]]], ID),
     # MultiPolygon (ref :1065-1117)
     ("multipolygon_3d", "zones", "MultiPolygon",
-     [[[[-122.1, 47.6, 5.0], [-122.2, 47.7, 6.0], [-122.1, 47.6, 5.0]]]],
-     [[[[-122.1, 47.6], [-122.2, 47.7], [-122.1, 47.6]]]], {}),
+     [[[[-122.1, 47.6, 5.0], [-122.2, 47.7, 6.0], [-122.1, 47.6, 5.0]]]], ID,
+     [[[[-122.1, 47.6], [-122.2, 47.7], [-122.1, 47.6]]]], ID),
     # mixed 2D/3D normalized independently (ref :1155-1181)
     ("mixed_2d_3d", "extension", "LineString",
-     [[-122.1, 47.6], [-122.2, 47.7, 50.0], [-122.3, 47.8]],
-     [[-122.1, 47.6], [-122.2, 47.7], [-122.3, 47.8]], {}),
+     [[-122.1, 47.6], [-122.2, 47.7, 50.0], [-122.3, 47.8]], ID,
+     [[-122.1, 47.6], [-122.2, 47.7], [-122.3, 47.8]], ID),
     # node first-Z from a LineString geometry (first leaf wins, src :593-599)
     ("node_line_first_z", "nodes", "LineString",
-     [[-122.1, 47.6], [-122.2, 47.7, 77.0], [-122.3, 47.8, 88.0]],
-     [[-122.1, 47.6], [-122.2, 47.7], [-122.3, 47.8]], {"ext:elevation": 77.0}),
+     [[-122.1, 47.6], [-122.2, 47.7, 77.0], [-122.3, 47.8, 88.0]], ID,
+     [[-122.1, 47.6], [-122.2, 47.7], [-122.3, 47.8]], {**ID, "ext:elevation": 77.0}),
+    # "properties": null is kept: GeoJSON requires the member
+    ("null_props_edge", "edges", "LineString",
+     [[-122.1, 47.6, 100.0], [-122.2, 47.7]], None,
+     [[-122.1, 47.6], [-122.2, 47.7]], None),
 ]
 
 
@@ -73,23 +82,11 @@ SUFFIX_CASES = [
 
 
 def _run_jvm(spark, kind, feature):
-    geom = feature.get("geometry")
-    row = {
-        "kind": kind,
-        "geom_type": geom.get("type") if geom else None,
-        "coords_json": json.dumps(geom["coordinates"]) if geom and "coordinates" in geom and geom["coordinates"] is not None else None,
-        "props_json": json.dumps(feature.get("properties")) if feature.get("properties") is not None else None,
-    }
-    df = spark.createDataFrame(
-        [row], "kind string, geom_type string, coords_json string, props_json string"
-    )
-    coords, props = G.process_geometry_elevation_cols(
-        "kind", "geom_type", "coords_json", "props_json"
-    )
-    out = df.select(coords.alias("c"), props.alias("p")).collect()[0]
-    new_coords = json.loads(out.c) if out.c is not None else None
-    new_props = json.loads(out.p) if out.p is not None else None
-    return new_coords, new_props
+    df = spark.createDataFrame([(kind, json.dumps(feature))], "kind string, feature_raw string")
+    result = json.loads(G.transform_features(df).first()["feature"])
+    assert result == FJ.process_geometry_elevation(copy.deepcopy(feature), kind)
+    geom = result.get("geometry")
+    return (geom or {}).get("coordinates"), result.get("properties")
 
 
 def _run_udf(spark, kind, feature):
@@ -102,24 +99,24 @@ def _run_udf(spark, kind, feature):
     return (geom or {}).get("coordinates"), result.get("properties")
 
 
+RUNNERS = {"jvm": _run_jvm, "udf": _run_udf}
+
+
 @pytest.mark.parametrize("path", ["jvm", "udf"])
 @pytest.mark.parametrize("case", MATRIX, ids=[c[0] for c in MATRIX])
 def test_matrix(spark, path, case):
-    _, kind, gtype, coords, want_coords, props_delta = case
-    feature = _feature(gtype, coords)
-    runner = _run_jvm if path == "jvm" else _run_udf
-    got_coords, got_props = runner(spark, kind, feature)
+    _, kind, gtype, coords, props, want_coords, want_props = case
+    feature = _feature(gtype, coords, properties=props)
+    got_coords, got_props = RUNNERS[path](spark, kind, feature)
     assert got_coords == want_coords
-    expected_props = {"_id": "f1", **props_delta}
-    assert got_props == expected_props
+    assert got_props == want_props
 
 
 @pytest.mark.parametrize("path", ["jvm", "udf"])
 @pytest.mark.parametrize("props,z,want_key", SUFFIX_CASES, ids=["one_existing", "two_existing"])
 def test_elevation_suffix_escalation(spark, path, props, z, want_key):
     feature = _feature("Point", [-122.1, 47.6, z], properties=dict(props))
-    runner = _run_jvm if path == "jvm" else _run_udf
-    got_coords, got_props = runner(spark, "nodes", feature)
+    got_coords, got_props = RUNNERS[path](spark, "nodes", feature)
     assert got_coords == [-122.1, 47.6]
     assert got_props[want_key] == z
     for k, v in props.items():  # originals kept
@@ -130,13 +127,7 @@ def test_elevation_suffix_escalation(spark, path, props, z, want_key):
 def test_missing_geometry_passthrough(spark, path):
     # ref :1183-1197: no geometry -> untouched
     feature = {"type": "Feature", "properties": {"_id": "f1"}}
-    if path == "udf":
-        _, got_props = _run_udf(spark, "nodes", feature)
-        assert got_props == {"_id": "f1"}
-    else:
-        got_coords, got_props = _run_jvm(spark, "nodes", feature)
-        assert got_coords is None
-        assert got_props == {"_id": "f1"}
+    assert RUNNERS[path](spark, "nodes", feature) == (None, {"_id": "f1"})
 
 
 @pytest.mark.parametrize("path", ["jvm", "udf"])
@@ -144,15 +135,7 @@ def test_null_coordinates_preserved(spark, path):
     # ref :1199-1217: coordinates: null preserved
     feature = {"type": "Feature", "geometry": {"type": "Point", "coordinates": None},
                "properties": {"_id": "f1"}}
-    if path == "udf":
-        df = spark.createDataFrame([(json.dumps(feature), "nodes")], "feature string, kind string")
-        out = json.loads(df.select(FJ.process_feature_json("feature", "kind").alias("f")).collect()[0].f)
-        assert out["geometry"]["coordinates"] is None
-        assert out["properties"] == {"_id": "f1"}
-    else:
-        got_coords, got_props = _run_jvm(spark, "nodes", feature)
-        assert got_coords is None
-        assert got_props == {"_id": "f1"}
+    assert RUNNERS[path](spark, "nodes", feature) == (None, {"_id": "f1"})
 
 
 def test_udf_preserves_feature_level_keys(spark):

@@ -3,8 +3,10 @@ reference's example-based suite — SURVEY.md §5 notes it has no randomized
 testing).
 
 Fast invariants run through Hypothesis on the pure-Python port; a
-seeded-random batch then proves the JVM typed-dispatch path and the
-pandas-UDF exact path agree feature-for-feature in one Spark job.
+seeded-random batch then proves that ``geometry.transform_features``, the
+transform the load runs, writes the same whole document as the recursive
+reference implementation (the ``feature_json`` pandas UDF) for every
+feature, in one Spark job.
 """
 
 from __future__ import annotations
@@ -92,7 +94,10 @@ def test_jvm_and_udf_paths_agree_on_random_batch(spark):
     rng = random.Random(42)
 
     def rand_leaf():
-        return [round(rng.uniform(-180, 180), 6) for _ in range(rng.choice([2, 3]))]
+        leaf = [round(rng.uniform(-180, 180), 6) for _ in range(rng.choice([2, 3]))]
+        if len(leaf) == 3 and rng.random() < 0.1:
+            leaf[2] = rng.choice([0, 0.0, 250])  # zero Z: no elevation; integral Z
+        return leaf
 
     def rand_coords(gtype):
         if gtype == "Point":
@@ -104,37 +109,40 @@ def test_jvm_and_udf_paths_agree_on_random_batch(spark):
         return [[[rand_leaf() for _ in range(rng.randint(3, 4))] for _ in range(rng.randint(1, 2))]
                 for _ in range(rng.randint(1, 2))]
 
+    def rand_props(i):
+        props = {"_id": f"f{i}"}
+        for key in ("ext:elevation", "ext:elevation_1", "ext:elevation_x"):
+            if rng.random() < 0.15:
+                props[key] = rng.randint(1, 500)
+        if rng.random() < 0.1:
+            props["nested"] = {"ext:elevation": 1}  # not a top-level key
+        return rng.choice([props, props, props, {}, None, "missing"])
+
     kinds_l = ["nodes", "points", "edges", "lines", "polygons", "zones", "extension"]
     gtypes_l = list(geometry_strategies)
     rows = []
-    for i in range(300):
+    for i in range(600):
+        feature = {"type": "Feature"}
         gtype = rng.choice(gtypes_l)
-        feature = {
-            "type": "Feature",
-            "geometry": {"type": gtype, "coordinates": rand_coords(gtype)},
-            "properties": {"_id": f"f{i}"},
-        }
-        rows.append((i, rng.choice(kinds_l), gtype, json.dumps(feature)))
-    df = spark.createDataFrame(rows, "i int, kind string, gtype string, feature_raw string")
+        shape = rng.random()
+        if shape < 0.9:
+            feature["geometry"] = {"type": gtype, "coordinates": rand_coords(gtype)}
+        elif shape < 0.95:
+            feature["geometry"] = {"type": gtype, "coordinates": None}
+        props = rand_props(i)
+        if props != "missing":
+            feature["properties"] = props
+        rows.append((i, rng.choice(kinds_l), json.dumps(feature)))
+    features = [json.loads(r[2]) for r in rows]
+    assert sum("properties" not in f for f in features) > 50
+    assert sum("properties" in f and f["properties"] is None for f in features) > 50
+    assert sum("geometry" not in f for f in features) > 10
 
-    from pyspark.sql import functions as F
-
-    parsed = df.select(
-        "i", "kind",
-        F.col("gtype").alias("geom_type"),
-        F.get_json_object("feature_raw", "$.geometry.coordinates").alias("coords_json"),
-        F.get_json_object("feature_raw", "$.properties").alias("props_json"),
-        "feature_raw",
+    df = spark.createDataFrame(rows, "i int, kind string, feature_raw string")
+    out = G.transform_features(df).select(
+        "i", "feature", FJ.process_feature_json("feature_raw", "kind").alias("exact")
     )
-    new_coords, new_props = G.process_geometry_elevation_cols(
-        "kind", "geom_type", "coords_json", "props_json"
-    )
-    jvm = {r.i: (r.c, r.p) for r in parsed.select("i", new_coords.alias("c"), new_props.alias("p")).collect()}
-    udf = {
-        r.i: r.f
-        for r in df.select("i", FJ.process_feature_json("feature_raw", "kind").alias("f")).collect()
-    }
-    for i, _, _, _ in rows:
-        exact = json.loads(udf[i])
-        assert json.loads(jvm[i][0]) == exact["geometry"]["coordinates"], f"coords diverge at {i}"
-        assert json.loads(jvm[i][1]) == exact["properties"], f"props diverge at {i}"
+    docs = {r.i: (json.loads(r.feature), json.loads(r.exact)) for r in out.collect()}
+    assert len(docs) == len(rows)
+    diverged = [(i, jvm, exact) for i, (jvm, exact) in sorted(docs.items()) if jvm != exact]
+    assert not diverged, f"{len(diverged)} documents diverge, first: {diverged[:3]}"

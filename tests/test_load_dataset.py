@@ -80,7 +80,8 @@ def make_zip(path: str, entries: dict[str, str]) -> None:
         fh.write(buf.getvalue())
 
 
-@pytest.fixture(scope="module", params=["jvm", "exact"])
+# one param: the id names the transform every load runs
+@pytest.fixture(scope="module", params=["jvm"])
 def loaded(spark, tmp_path_factory, request):
     root = tmp_path_factory.mktemp(f"load_{request.param}")
     archive = os.path.join(root, "osw.zip")
@@ -97,9 +98,7 @@ def loaded(spark, tmp_path_factory, request):
         },
     )
     warehouse = os.path.join(root, "warehouse")
-    result = load_dataset(
-        spark, archive, "ds-1", "user-7", warehouse, fidelity=request.param
-    )
+    result = load_dataset(spark, archive, "ds-1", "user-7", warehouse)
     return spark, warehouse, result
 
 
@@ -224,6 +223,32 @@ def test_malformed_geojson_entry_fails(spark, tmp_path):
     result = load_dataset(spark, archive, "ds-bad", "u", str(tmp_path / "wh3"))
     assert not result.success
     assert "lines.geojson" in result.message
+
+
+NODES_TEXT = json.dumps(NODES)
+
+
+@pytest.mark.parametrize(
+    "text",
+    [
+        # Jackson accepts these two, the strict header parse does not
+        NODES_TEXT.replace('"', "'"),
+        NODES_TEXT + " trailing",
+        # Python parses this one, Jackson refuses past 1000 levels
+        NODES_TEXT[:-1] + ', "deep": ' + "[" * 1200 + "]" * 1200 + "}",
+    ],
+    ids=["single_quotes", "trailing_content", "deep_nesting"],
+)
+def test_entry_either_parser_rejects_fails(spark, tmp_path, text):
+    """An entry is malformed if the gate's Spark parse or the header parse
+    rejects it, so no load writes a node row under a null header."""
+    archive = str(tmp_path / "lenient.zip")
+    make_zip(archive, {"nodes.geojson": text})
+    result = load_dataset(spark, archive, "ds-lenient", "u", str(tmp_path / "wh"))
+    assert not result.success
+    assert result.message == (
+        "Invalid GeoJSON content: Unable to parse GeoJSON: invalid JSON in entry nodes.geojson"
+    )
 
 
 def test_failed_loads_release_cached_frames(spark, tmp_path):

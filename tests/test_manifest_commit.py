@@ -262,8 +262,8 @@ def test_concurrent_dataset_loads_compose(spark, tmp_path):
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f1 = pool.submit(load_dataset, spark, a1, "ds1", "u", wh, "jvm", "manifest")
-        f2 = pool.submit(load_dataset, spark, a2, "ds2", "u", wh, "jvm", "manifest")
+        f1 = pool.submit(load_dataset, spark, a1, "ds1", "u", wh, commit_mode="manifest")
+        f2 = pool.submit(load_dataset, spark, a2, "ds2", "u", wh, commit_mode="manifest")
         assert f1.result().success and f2.result().success
     nodes = read_sink(spark, wh, "node")
     per_ds = {r["tdei_dataset_id"]: r["n"] for r in
