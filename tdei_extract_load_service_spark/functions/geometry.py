@@ -18,8 +18,12 @@ Decomposed-feature layout: one ``from_json`` per feature row
 (``FEATURE_SCHEMA``) captures ``coordinates`` as a raw JSON array string —
 the only schema that can hold every arity in one column — and
 ``properties`` as a raw JSON object string (value types kept exactly, like
-the reference's JSONB cells); the transformed feature is re-serialized in
-the canonical envelope order (type, geometry, properties). Feature-level
+the reference's JSONB cells). That text cannot tell an object from a
+string holding an object's text, so a second parse that skips every value
+reads the member's type; a non-object value is written back as JSON, or
+replaced by ``{}`` when it takes an elevation, as the reference does. The
+transformed feature is re-serialized in the canonical envelope order
+(type, geometry, properties), both types as escaped JSON strings. Feature-level
 keys beyond that envelope, geometry keys beyond type/coordinates, and
 coordinates of a non-standard type or depth (passed through unstripped)
 are departures from the reference (PARITY.md O10/O11).
@@ -179,6 +183,13 @@ def add_property_json(props_json: str | Column, key: Column, value_json: Column)
 FEATURE_SCHEMA = "type string, geometry struct<type string, coordinates string>, properties string"
 
 
+def _json_string(c: Column) -> Column:
+    """``c`` as a quoted, escaped JSON string (``to_json`` of a
+    one-element array, its brackets cut)."""
+    arr = F.to_json(F.array(c))
+    return arr.substr(F.lit(2), F.length(arr) - 2)
+
+
 @functools.lru_cache(maxsize=PLAN_MEMO_SIZE)
 def _transform_exprs() -> tuple[dict[str, Column], ...]:
     # Memoized: building the when-chains costs ~0.9 s of py4j round-trips
@@ -186,11 +197,14 @@ def _transform_exprs() -> tuple[dict[str, Column], ...]:
     # build serves every load in the process.
     raw, parsed = F.col("feature_raw"), F.col("_parsed")
     ftype, gtype, coords, props = (F.col(c) for c in ("_ftype", "_gtype", "_coords", "_props"))
-    z, n_elev = F.col("_z"), F.col("_n_elev")
+    is_object, z, n_elev = F.col("_is_object"), F.col("_z"), F.col("_n_elev")
 
     # missing geometry / null coordinates -> the document passes through
     # untouched (extract-load-service.ts:613-615)
     has_geometry = gtype.isNotNull() & coords.isNotNull() & (F.trim(coords) != "null")
+    # ``_props`` is an object's text, or a non-object's content (a string
+    # member loses its quotes); only an object takes keys (:543-549,:632)
+    object_props = F.when(is_object, props)
     # ext:elevation, or ext:elevation_<n> past n existing ext:elevation*
     # keys (:634-642)
     prop_name = F.when(n_elev == 0, F.lit("ext:elevation")).otherwise(
@@ -200,27 +214,26 @@ def _transform_exprs() -> tuple[dict[str, Column], ...]:
     z_json = F.when(
         z == F.floor(z), z.cast("decimal(38,1)").cast("long").cast("string")
     ).otherwise(z.cast("string"))
+    # any other member value (string, number, array, boolean, null) as
+    # JSON text, from a parse that only rows without an object reach; null
+    # when the member is missing
+    other_json = F.to_json(F.from_json(raw, "properties variant")["properties"])
     # _z is null outside nodes/points and without geometry; zero Z means
-    # "no elevation" (:629)
-    new_props = F.when(z != 0, add_property_json(props, prop_name, z_json)).otherwise(props)
-    # GeoJSON requires the properties member: an explicit null stays, a
-    # missing one stays missing (only null rows look at the keys)
-    props_member = F.coalesce(
-        F.concat(F.lit(', "properties": '), new_props),
-        F.when(
-            F.array_contains(F.json_object_keys(raw), "properties"),
-            F.lit(', "properties": null'),
-        ),
-        F.lit(""),
+    # "no elevation" (:629); a non-object is replaced by {} to take the key
+    new_props = F.when(z != 0, add_property_json(object_props, prop_name, z_json)).otherwise(
+        F.when(is_object, props).otherwise(other_json)
     )
+    # GeoJSON requires the properties member: an explicit null stays, a
+    # missing one stays missing
+    props_member = F.coalesce(F.concat(F.lit(', "properties": '), new_props), F.lit(""))
     # canonical envelope (type, geometry, properties): feature-level keys
     # beyond it are not carried
     assembled = F.concat(
-        F.lit('{"type": "'),
-        F.coalesce(ftype, F.lit("Feature")),
-        F.lit('", "geometry": {"type": "'),
-        gtype,
-        F.lit('", "coordinates": '),
+        F.lit('{"type": '),
+        _json_string(F.coalesce(ftype, F.lit("Feature"))),
+        F.lit(', "geometry": {"type": '),
+        _json_string(gtype),
+        F.lit(', "coordinates": '),
         strip_z_coords_json(coords, gtype),
         F.lit("}"),
         props_member,
@@ -237,10 +250,14 @@ def _transform_exprs() -> tuple[dict[str, Column], ...]:
             "_gtype": parsed["geometry"]["type"],
             "_coords": parsed["geometry"]["coordinates"],
             "_props": parsed["properties"],
+            # the member's JSON type, which ``_props`` text cannot tell (a
+            # string holding "{}" reads as {}): an empty struct skips
+            # every value, so this parse only tokenizes
+            "_is_object": F.from_json(raw, "properties struct<>")["properties"].isNotNull(),
         },
         # only nodes/points take an elevation; other kinds skip the parse
         {"_z": F.when(F.col("kind").isin("nodes", "points"), first_z_json(coords, gtype))},
-        {"_n_elev": F.when(z != 0, count_elevation_keys(props))},
+        {"_n_elev": F.when(z != 0, count_elevation_keys(object_props))},
         {"feature": F.when(has_geometry, assembled).otherwise(raw)},
     )
 
@@ -258,4 +275,4 @@ def transform_features(features_df: DataFrame) -> DataFrame:
     df = features_df
     for cols in _transform_exprs():
         df = df.withColumns(cols)
-    return df.drop("_parsed", "_ftype", "_gtype", "_coords", "_props", "_z", "_n_elev")
+    return df.drop("_parsed", "_ftype", "_gtype", "_coords", "_props", "_is_object", "_z", "_n_elev")

@@ -4,8 +4,8 @@ recomposed Spark-first.
 Reference lifecycle (extract-load-service.ts:242-345): message → pre-delete
 → BEGIN → zip stream → per-entry token pipeline → per-kind batched INSERTs
 → per-file metadata → COMMIT → stats proc → publish. Here the same
-semantics run as one pass over the data and at most two Spark jobs,
-whatever the number of kinds:
+semantics run as one pass over the data and one Spark job, whatever the
+number of kinds:
 
     driver: read the archive, decode its .geojson entries and headers
     (zip_fanout) → Arrow local relation → route_case
@@ -13,20 +13,21 @@ whatever the number of kinds:
       extension-file id and name per entry), evaluated on the driver
     → explode(features) → transform_features (decompose, strip-Z/elevation,
       reassemble; functions.geometry)
-    → one job writes the six non-extension kinds (each row names its sink
-      table), one job writes extensions (their rows add ``ext_file_id``);
-      the two run concurrently and observe the per-kind elevation counts
-    → extension-file rows, dataset metadata row, stats row: rows the driver
-      already holds, written as Arrow files without a job → result dict
+    → ONE job collects every kind's transformed features as Arrow
+    → driver: split by kind, count ``ext:elevation`` per kind, write each
+      kind table, the extension-file rows, the dataset metadata row and
+      the stats row as Arrow files without a job → result dict
 
-Nothing is read twice just to count it: the gate's per-entry counts size
-the writes and fill the stats, and an archive of at most 1 MB runs no
-shuffle. No Python worker runs, and nothing is persisted: the entry rows
-live in the plan as a ``LocalRelation`` (below
+Nothing is read twice just to count it: the gate's per-entry counts fill
+the stats, and an archive of at most 1 MB runs no shuffle. No Python
+worker runs, and nothing is persisted: the entry rows live in the plan as
+a ``LocalRelation`` (below
 ``spark.sql.execution.arrow.localRelationThreshold``), whose gate select
 the optimizer folds on the driver. Past that threshold the rows are an
-RDD of one partition per entry and the gate is one JVM job; the writes
-read the same rows, so nothing is decoded twice either way.
+RDD of one partition per entry and the gate is one JVM job of its own;
+the collect reads the same rows, so nothing is decoded twice either way.
+The driver holds one archive's entry text plus its transformed features,
+bounded by ``spark.driver.maxResultSize`` (SCALE.md).
 
 Atomicity: the reference wraps all inserts in one Postgres transaction
 (O18). The default here is a key-scoped partition swap per sink table
@@ -35,19 +36,20 @@ dataset partition), and ``commit_mode="manifest"`` publishes every table
 with one pointer swap. Stage timers mirror the reference's
 ``console.time`` instrumentation (:301,:322,:327,:336); ``transform``
 times plan construction only, since its execution happens inside the
-``load`` writes, and ``metadata``/``stats`` time Arrow writes.
+``load`` collect, and ``metadata``/``stats`` time Arrow writes.
 """
 
 from __future__ import annotations
 
 import contextlib
 import os
+import re
 import time
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tdei_extract_load_service_spark.functions.geometry import transform_features
@@ -70,9 +72,6 @@ SINK_TABLES = {
     "zones": "zone",
     "extension": "extension",
 }
-
-#: Column of the non-extension write that names each row's sink table.
-TABLE_COL = "sink_table"
 
 #: kind -> content.dataset metadata column (extract-load-service.ts:89-118;
 #: note edges → event_info is the reference's own mapping).
@@ -126,6 +125,13 @@ def read_sink(spark: SparkSession, warehouse: str, table: str) -> DataFrame:
         return spark.read.schema(sink_schema(table)).parquet(path)
     except Exception:  # noqa: BLE001 — missing directory
         return spark.createDataFrame([], sink_schema(table))
+
+
+#: Spark's reason for refusing a collect past ``spark.driver.maxResultSize``.
+_RESULT_SIZE_ERROR = re.compile(
+    r"Total size of serialized results of \d+ tasks \([^)]*\) is bigger than "
+    r"spark\.driver\.maxResultSize \([^)]*\)"
+)
 
 
 class NoGeoJsonEntriesError(Exception):
@@ -211,18 +217,19 @@ def load_dataset(
     else:
         raise ValueError(f"unknown commit_mode {commit_mode!r}")
 
-    def sink_write(df, table: str | None = None) -> None:
-        # table=None: a Spark frame whose rows name their table in
-        # TABLE_COL. A pandas frame is typed by its table's sink_schema.
+    def sink_write(table: str, **cols) -> None:
+        """Write this dataset's rows of ``table`` from the driver: ``cols``
+        are equal-length columns (lists or Arrow arrays); the dataset id
+        and the user fill the columns the table declares and ``cols``
+        leaves out, and ``sink_schema`` types them all."""
+        n = len(next(iter(cols.values())))
+        rows = pa.table(
+            {"tdei_dataset_id": [tdei_dataset_id] * n, "requested_by": [user_id] * n, **cols}
+        )
         if txn is not None:
-            if table is None:
-                txn.write_tables(df, TABLE_COL, tdei_dataset_id)
-            else:
-                txn.write(table, df, tdei_dataset_id, schema=sink_schema(table))
-        elif table is None:
-            overwrite_by_key(df, warehouse, table_col=TABLE_COL)
+            txn.write(table, rows, tdei_dataset_id, schema=sink_schema(table))
         else:
-            overwrite_by_key(df, os.path.join(warehouse, table), schema=sink_schema(table))
+            overwrite_by_key(rows, os.path.join(warehouse, table), schema=sink_schema(table))
 
     try:
         # manifest mode: a failure anywhere below aborts the transaction
@@ -247,18 +254,13 @@ def load_dataset(
             # -- extract: archive -> routed entries -------------------------
             t0 = time.perf_counter()
             # the driver decodes the archive once; the entries are a local
-            # relation that the gate and both writes read without a cache
+            # relation that the gate and the collect read without a cache
             entries = routed_entries(zip_fanout(spark, archive_path))
-            # extension features carry the extension_file FK
-            # (extract-load-service.ts:473-479); surrogate id = stable hash of
-            # (dataset, entry) instead of a DB sequence — distributed-safe
-            ext_file_id = F.xxhash64(F.lit(tdei_dataset_id), F.col("entry"))
             # ONE select returns, per FILE, the malformed-entry gate (O21,
             # geoJsonPipeError extract-load-service.ts:41-49), the header
             # metadata that the extension-registration (O16) and metadata
-            # (O15) stages consume, the feature count that sizes the writes
-            # and fills the stats (O19), and the extension-file id and name,
-            # computed by Spark so they match the features' FK. Over a local
+            # (O15) stages consume, the feature count that fills the stats
+            # (O19), and the extension-file id and name. Over a local
             # relation the optimizer evaluates it on the driver (no job);
             # over a relation past the Arrow local-relation threshold it is
             # one job. Collected volume is one small row per file, never
@@ -275,7 +277,10 @@ def load_dataset(
                 "meta",
                 F.length("entry_text").alias("entry_bytes"),
                 feature_count("entry_text").alias("n_features"),
-                ext_file_id.alias("ext_file_id"),
+                # the extension_file FK of extension features
+                # (extract-load-service.ts:473-479): a stable hash of
+                # (dataset, entry) instead of a DB sequence
+                F.xxhash64(F.lit(tdei_dataset_id), "entry").alias("ext_file_id"),
                 # name = basename sans extension (ref :531)
                 F.regexp_extract(
                     F.element_at(F.split("entry", "/"), -1), r"^(.*?)(\.[^.]*)?$", 1
@@ -303,10 +308,8 @@ def load_dataset(
             total_entry_bytes = sum(r["entry_bytes"] or 0 for r in per_entry)
             timings["extract"] = time.perf_counter() - t0
 
-            # -- transform: plan construction only. Nothing is cached here:
-            # each write below runs the transform for its own kinds straight
-            # from the entry rows (the kind filter lands on their scan, below
-            # the explode), so its execution is billed to "load".
+            # -- transform: plan construction only; its execution is the
+            # load's one collect, so it is billed to "load"
             t0 = time.perf_counter()
             features = explode_features(entries)
             # explode-skew fix: feature rows inherit the ENTRY partitioning
@@ -314,9 +317,9 @@ def load_dataset(
             # millions of features to a single core through the whole
             # parse/transform. A round-robin shuffle of the raw feature text
             # right after the explode spreads the per-feature work across the
-            # cluster; its cost is one pass over bytes we are about to parse,
-            # re-serialize and write anyway. The shuffle WIDTH is sized to
-            # the archive (one task per ~1 MB of entry text, bounded by 4x
+            # cluster; its cost is one pass over bytes we are about to parse
+            # and re-serialize anyway. The shuffle WIDTH is sized to the
+            # archive (one task per ~1 MB of entry text, bounded by 4x
             # parallelism): a fixed defaultParallelism width put 32
             # near-empty tasks under a 10k-feature load and their scheduling
             # overhead dominated the stage, while a 300 MB single-file archive
@@ -329,133 +332,75 @@ def load_dataset(
             if n_repart > 1:
                 features = features.repartition(n_repart)
             features = transform_features(features)
-            features = features.withColumns(
-                {
-                    "tdei_dataset_id": F.lit(tdei_dataset_id),
-                    "requested_by": F.lit(user_id),
-                }
-            )
             timings["transform"] = time.perf_counter() - t0
 
-            # -- load: one parameterized writer (O12), two Spark jobs ---------
-            # the six non-extension kinds share one schema, so one job writes
-            # them all (each row names its table); extension rows add
-            # ext_file_id and keep their own job. The two jobs are independent
-            # and run concurrently (the reference necessarily serialized its
-            # bulkInsert* calls on one DB transaction; each write stages into
-            # its own directory and only same-table swaps serialize).
+            # -- load: one parameterized writer (O12) over ONE collect -------
+            # every kind's transformed features come back in one job as
+            # Arrow; each kind table is then written from the driver with no
+            # job (the reference's per-kind bulkInsert calls, one
+            # transaction)
             t0 = time.perf_counter()
-            # ~250k rows per file, floor 1 per table (tiny files x kinds x
-            # datasets is the classic small-files problem)
-            n_files = {kind: max(1, n // 250_000) for kind, n in counts.items()}
+            # (an archive of zero-feature files has nothing to collect)
+            rows = features.select("kind", "entry", "feature").toArrow() if counts else None
+            ext_ids = {r["entry"]: r["ext_file_id"] for r in ext_entries}
+            elevation: dict[str, int] = {}
+            for kind in counts:
+                part = rows.filter(pc.equal(rows["kind"], kind))
+                elevation[kind] = pc.sum(
+                    pc.match_substring(part["feature"], '"ext:elevation"')
+                ).as_py() or 0
+                cols = {"feature": part["feature"], "entry": part["entry"]}
+                if kind == "extension":
+                    # the FK the gate computed for extension_file.id
+                    ids = pc.index_in(part["entry"], value_set=pa.array(list(ext_ids)))
+                    cols["ext_file_id"] = pa.array(list(ext_ids.values()), pa.int64()).take(ids)
+                sink_write(SINK_TABLES[kind], **cols)
 
-            def by_kind(values: dict) -> Column:
-                pairs = [F.lit(x) for item in values.items() for x in item]
-                return F.create_map(*pairs)[F.col("kind")]
-
-            def spark_write(kinds: list[str], cols: list[Column], table: str | None) -> dict:
-                """Write ``kinds`` in one job; returns each kind's count of
-                features carrying ``ext:elevation``, observed on the write
-                instead of a separate aggregation job."""
-                observed = Observation()
-                has_elevation = F.col("feature").contains('"ext:elevation"')
-                df = features.where(F.col("kind").isin(kinds)).observe(
-                    observed,
-                    *[
-                        F.sum(F.when(has_elevation & (F.col("kind") == k), 1).otherwise(0)).alias(k)
-                        for k in kinds
-                    ],
+            # extension-file registration (O16, extract-load-service.ts:
+            # 515-536): one row per extension entry, created even when it
+            # has 0 features (empty-insert fallback O14, :230). Zero
+            # extension entries write nothing.
+            if ext_entries:
+                sink_write(
+                    "extension_file",
+                    id=list(ext_ids.values()),
+                    name=[r["ext_name"] for r in ext_entries],
+                    file_meta=[r["meta"] for r in ext_entries],
                 )
-                # file sizing: an archive of at most 1 MB is written by one
-                # task, one file per table; past that, one shuffle gives each
-                # kind at most n_files[kind] files (coalescing the skew
-                # shuffle's partitions would pull the transform back onto one
-                # task per file)
-                if n_repart <= 1:
-                    df = df.coalesce(1)
-                else:
-                    df = df.repartition(
-                        sum(n_files[k] for k in kinds),
-                        "kind",
-                        F.pmod(F.xxhash64("feature"), by_kind({k: n_files[k] for k in kinds})),
-                    )
-                sink_write(df.select(*cols), table)
-                return observed.get
-
-            sink_cols = [F.col(c) for c in ("tdei_dataset_id", "feature", "requested_by", "entry")]
-            writes = []
-            base_kinds = [k for k in counts if k != "extension"]
-            if base_kinds:
-                table_of = by_kind(SINK_TABLES).alias(TABLE_COL)
-                writes.append((base_kinds, [table_of, *sink_cols], None))
-            if "extension" in counts:
-                ext_cols = [sink_cols[0], ext_file_id.alias("ext_file_id"), *sink_cols[1:]]
-                writes.append((["extension"], ext_cols, "extension"))
-
-            timings["metadata"] = 0.0
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                running = [pool.submit(spark_write, *w) for w in writes]
-
-                # extension-file registration (O16, extract-load-service.ts:
-                # 515-536): one row per extension entry, created even when it
-                # has 0 features (empty-insert fallback O14, :230). Zero
-                # extension entries write nothing.
-                if ext_entries:
-                    sink_write(
-                        pd.DataFrame(
-                            {
-                                "id": [r["ext_file_id"] for r in ext_entries],
-                                "tdei_dataset_id": tdei_dataset_id,
-                                "name": [r["ext_name"] for r in ext_entries],
-                                "file_meta": [r["meta"] for r in ext_entries],
-                                "requested_by": user_id,
-                            }
-                        ),
-                        "extension_file",
-                    )
-
-                # -- metadata: per-kind header -> dataset row (O15) ----------
-                # an archive of only extension files updates no metadata
-                # column in the reference's per-kind switch — no row
-                if n_entries > len(ext_entries):
-                    t = time.perf_counter()
-                    # Several files of one kind each overwrite the same column
-                    # in the reference's sequential processing — last write
-                    # wins; entry-name order is the deterministic distributed
-                    # equivalent (== the previous max_by(meta, entry) pivot)
-                    last_meta: dict[str, str] = {}
-                    for r in sorted(
-                        (r for r in per_entry if r["kind"] != "extension"),
-                        key=lambda r: r["entry"],
-                    ):
-                        last_meta[r["kind"]] = r["meta"]
-                    dataset_row = {col: [last_meta.get(k)] for k, col in META_COLUMNS.items()}
-                    sink_write(
-                        pd.DataFrame({"tdei_dataset_id": [tdei_dataset_id], **dataset_row}),
-                        "dataset",
-                    )
-                    timings["metadata"] = time.perf_counter() - t
-
-                # result() re-raises a failed write
-                elevation = {k: v or 0 for job in running for k, v in job.result().items()}
             timings["load"] = time.perf_counter() - t0
+
+            # -- metadata: per-kind header -> dataset row (O15) --------------
+            # an archive of only extension files updates no metadata column
+            # in the reference's per-kind switch — no row
+            t0 = time.perf_counter()
+            if n_entries > len(ext_entries):
+                # Several files of one kind each overwrite the same column in
+                # the reference's sequential processing — last write wins;
+                # entry-name order is the deterministic distributed
+                # equivalent (== the previous max_by(meta, entry) pivot)
+                last_meta: dict[str, str] = {}
+                for r in sorted(
+                    (r for r in per_entry if r["kind"] != "extension"),
+                    key=lambda r: r["entry"],
+                ):
+                    last_meta[r["kind"]] = r["meta"]
+                sink_write(
+                    "dataset",
+                    **{col: [last_meta.get(k)] for k, col in META_COLUMNS.items()},
+                )
+            timings["metadata"] = time.perf_counter() - t0
 
             # -- stats: the tdei_update_osw_stats analogue (O19) -------------
             # every figure is already known: feature and file counts from the
-            # gate pass, elevation counts observed on the writes
+            # gate pass, elevation counts from the collected features
             t0 = time.perf_counter()
             if counts:
                 sink_write(
-                    pd.DataFrame(
-                        {
-                            "tdei_dataset_id": tdei_dataset_id,
-                            "kind": list(counts),
-                            "n_features": list(counts.values()),
-                            "n_files": [len(kind_files[k]) for k in counts],
-                            "n_with_elevation": [elevation[k] for k in counts],
-                        }
-                    ),
                     "dataset_stats",
+                    kind=list(counts),
+                    n_features=list(counts.values()),
+                    n_files=[len(kind_files[k]) for k in counts],
+                    n_with_elevation=[elevation[k] for k in counts],
                 )
             timings["stats"] = time.perf_counter() - t0
 
@@ -484,6 +429,10 @@ def load_dataset(
             message = f"{type(exc).__name__}: {message}"
         elif isinstance(exc, InvalidArchiveError):
             pass  # already the short normalized message
+        elif too_large := _RESULT_SIZE_ERROR.search(message):
+            # the features collect is bounded by spark.driver.maxResultSize:
+            # its cause line, not the JVM stack that carries it
+            message = f"Archive too large to load: {too_large.group(0)}"
         elif "JSON" in message or "Malformed" in message:
             message = f"Invalid GeoJSON content: {message[:200]}"
         return LoadResult(

@@ -36,23 +36,19 @@ Every caller opens a transaction the same way, as a context manager
 commits; an exception aborts (the staged directories are removed, the
 pointer is untouched) and re-raises.
 
-A load stages with the same three-job shape as the partition layout
-(``sinks.writers.overwrite_by_key``): one Spark job writes several
-same-schema tables partitioned by a table column, and each of its
-``<table_col>=T`` directories is renamed to ``data/T/<dataset>-<txn>``
-(``write_tables``); rows the driver already holds are written as one
-Arrow file straight into their version directory (``write`` with a
-pandas frame). Both stage through ``sinks.writers.write_frame``, and
-the version directories keep the ``data/<table>/<version>`` layout that
-``gc_orphans`` and ``read_table_at`` walk.
+A load writes every table from the driver: each (table, dataset) version
+is staged as Arrow files straight into its version directory (``write``
+with a ``pyarrow.Table``, no Spark job); other writers stage a Spark
+frame the same way in one job. Both stage through
+``sinks.writers.write_frame``, and the version directories keep the
+``data/<table>/<version>`` layout that ``gc_orphans`` and
+``read_table_at`` walk.
 
-At 100 TB nothing here is driver-heavy: data moves only through
-distributed parquet writes into fresh directories; the only renames are
-of this transaction's own staged directories into their version paths,
-before the pointer swap makes them visible. The pointer swap is one
-small-file replace; the manifest itself is
-O(tables x datasets), the same cardinality the reference keeps as rows in
-its ``content.dataset`` table.
+The transaction itself holds no data: every write lands in a fresh
+directory before the pointer swap makes it visible, the pointer swap is
+one small-file replace, and the manifest is O(tables x datasets), the
+same cardinality the reference keeps as rows in its ``content.dataset``
+table.
 """
 
 from __future__ import annotations
@@ -65,10 +61,10 @@ import re
 import shutil
 import uuid
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
-from tdei_extract_load_service_spark.sinks.writers import _path_lock, staged_tables, write_frame
+from tdei_extract_load_service_spark.sinks.writers import _path_lock, write_frame
 
 MANIFEST_NAME = "_MANIFEST.json"
 LOCK_NAME = "_MANIFEST.lock"
@@ -197,10 +193,9 @@ class ManifestTxn:
     when it raises; an explicit ``commit()`` inside the block publishes
     once and the exit adds nothing.
 
-    ``write``/``write_tables``/``delete`` may be called from concurrent
-    threads (the load's concurrent sink writes): the data writes go to
-    disjoint fresh directories and the bookkeeping appends are
-    GIL-atomic. Only ``commit`` touches shared state, under the warehouse
+    ``write``/``delete`` may be called from concurrent threads: the data
+    writes go to disjoint fresh directories and the bookkeeping appends
+    are GIL-atomic. Only ``commit`` touches shared state, under the warehouse
     lock.
     """
 
@@ -235,37 +230,20 @@ class ManifestTxn:
     def write(
         self,
         table: str,
-        df: DataFrame | pd.DataFrame,
+        df: DataFrame | pa.Table,
         dataset_id: str,
         schema: str | None = None,
     ) -> str:
         """Stage one (table, dataset) version in a directory unique to this
         transaction: a distributed parquet write of a Spark frame (caller
-        controls file count via coalesce/repartition on ``df``), or one
-        Arrow file of a driver-side pandas frame typed by the DDL
+        controls file count via coalesce/repartition on ``df``), or Arrow
+        files of a driver-side ``pyarrow.Table`` typed by the DDL
         ``schema`` (no Spark job). Returns the staged directory."""
         reldir = self._version_dir(table, dataset_id)
         path = os.path.join(self.root, reldir)
         write_frame(df, path, schema)
         self._writes.append((table, str(dataset_id), reldir))
         return path
-
-    def write_tables(self, df: DataFrame, table_col: str, dataset_id: str) -> None:
-        """Stage one dataset's version of SEVERAL same-schema tables in one
-        Spark job: each row names its table in ``table_col``; the job
-        writes partitioned by it into a private staging directory, and
-        each ``<table_col>=T`` directory is renamed to T's version
-        directory."""
-        staging = os.path.join(self.root, "data", f".load-{self.txn_id}-{uuid.uuid4().hex[:8]}")
-        try:
-            write_frame(df, staging, partition_cols=(table_col,))
-            for table, staged in staged_tables(staging, table_col):
-                reldir = self._version_dir(table, dataset_id)
-                os.makedirs(os.path.dirname(os.path.join(self.root, reldir)), exist_ok=True)
-                os.rename(staged, os.path.join(self.root, reldir))
-                self._writes.append((table, str(dataset_id), reldir))
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
 
     def delete(self, table: str, dataset_id: str) -> None:
         """Stage removal of a dataset's rows from a table (O17,

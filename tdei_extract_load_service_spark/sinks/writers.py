@@ -8,12 +8,12 @@ its delete-then-reload-inside-a-transaction pattern (O17/O18,
 - ``overwrite_by_key``: key-scoped partition overwrite — rewriting exactly
   the partitions present in the incoming frame (per-dataset replace) and
   leaving all other datasets' partitions untouched. The frame lands in a
-  private staging directory first (one Spark job, or one Arrow file per
-  partition for a driver-side pandas frame), then each staged partition
-  directory is swapped in: delete the live partition, rename the staged
-  one — the step Spark's dynamic partition overwrite commits with. One
-  job can fill several same-schema tables when each row names its table
-  (``table_col``); a dataset load is therefore at most three Spark jobs.
+  private staging directory first (one Spark job for a Spark frame; for a
+  driver-side Arrow table, Arrow files written with no job), then each
+  staged partition directory is swapped in: delete the live partition,
+  rename the staged one — the step Spark's dynamic partition overwrite
+  commits with. A dataset load writes every sink table from the driver,
+  so its one Spark job is the collect of its transformed features.
 - ``staged_swap_write``: write everything to a staging location, then one
   atomic rename into place — single-table replace with a two-rename
   visibility window on existing targets.
@@ -34,12 +34,11 @@ from __future__ import annotations
 
 import functools
 import os
-import re
 import shutil
 import threading
 import uuid
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from tdei_extract_load_service_spark.errors import classify_db_error
@@ -117,10 +116,6 @@ def _escape_path_name(name: str) -> str:
     return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPES else c for c in name)
 
 
-def _unescape_path_name(name: str) -> str:
-    return re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), name)
-
-
 def partition_dir(key_col: str, value) -> str:
     """The directory name ``partitionBy(key_col)`` gives ``value`` —
     Spark's ``ExternalCatalogUtils.getPartitionPathString``: both sides
@@ -132,15 +127,6 @@ def partition_dir(key_col: str, value) -> str:
     return f"{_escape_path_name(key_col)}={escaped}"
 
 
-def staged_tables(staging: str, table_col: str):
-    """``(table, directory)`` for each ``table_col=<table>`` directory that
-    a write partitioned by ``table_col`` left in ``staging``."""
-    prefix = f"{_escape_path_name(table_col)}="
-    for name in sorted(os.listdir(staging)):
-        if name.startswith(prefix):
-            yield _unescape_path_name(name[len(prefix):]), os.path.join(staging, name)
-
-
 @functools.lru_cache(maxsize=64)  # bounded, session-free: a DDL -> Arrow schema
 def _arrow_schema(schema: str):
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -149,51 +135,70 @@ def _arrow_schema(schema: str):
     return to_arrow_schema(StructType.fromDDL(schema))
 
 
+#: Rows per parquet file of a driver-side write: a larger leaf is written
+#: as ``rows // ROWS_PER_FILE`` contiguous slices, a smaller one as one
+#: file (tiny files x kinds x datasets is the classic small-files problem).
+ROWS_PER_FILE = 250_000
+
+
 def write_arrow(
-    pdf: pd.DataFrame, schema: str, directory: str, partition_cols: tuple[str, ...] = ()
+    table: pa.Table, schema: str, directory: str, partition_cols: tuple[str, ...] = ()
 ) -> None:
-    """Write a driver-side pandas frame as parquet without a Spark job:
-    one file per combination of ``partition_cols`` values, in the
-    directories a Spark ``partitionBy`` write makes. Columns are typed by
-    the Spark DDL ``schema`` (an all-null column keeps its declared type),
-    partition columns live only in the path, and neither pandas nor
-    Arrow schema metadata is stored (Spark reads the parquet types back
-    as ``schema``; the footer stays as small as a Spark-written one)."""
-    import pyarrow as pa
+    """Write a driver-side Arrow table as parquet without a Spark job:
+    one leaf per combination of ``partition_cols`` values, in the
+    directories a Spark ``partitionBy`` write makes, each leaf in
+    ``max(1, rows // ROWS_PER_FILE)`` files. Columns are typed by the
+    Spark DDL ``schema`` (an all-null column keeps its declared type),
+    partition columns live only in the path, and no Arrow schema
+    metadata is stored (Spark reads the parquet types back as
+    ``schema``; the footer stays as small as a Spark-written one)."""
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     arrow = pa.schema([f for f in _arrow_schema(schema) if f.name not in partition_cols])
-    groups = (
-        pdf.groupby(list(partition_cols), sort=False, dropna=False)
-        if partition_cols
-        else [((), pdf)]
-    )
-    for values, rows in groups:
-        leaf = os.path.join(
-            directory,
-            *(partition_dir(c, None if pd.isna(v) else v) for c, v in zip(partition_cols, values)),
-        )
+    if partition_cols:
+        keys = table.select(partition_cols).group_by(list(partition_cols)).aggregate([])
+        leaves = [
+            (
+                key,
+                table.filter(
+                    functools.reduce(
+                        pc.and_,
+                        [pc.is_null(table[c]) if v is None else pc.equal(table[c], v)
+                         for c, v in key.items()],
+                    )
+                ),
+            )
+            for key in keys.to_pylist()
+        ]
+    else:
+        leaves = [({}, table)]
+    for key, rows in leaves:
+        leaf = os.path.join(directory, *(partition_dir(c, v) for c, v in key.items()))
         os.makedirs(leaf, exist_ok=True)
-        table = pa.Table.from_pandas(rows[arrow.names], schema=arrow, preserve_index=False)
-        pq.write_table(
-            table.replace_schema_metadata(None),
-            os.path.join(leaf, f"part-00000-{uuid.uuid4()}.snappy.parquet"),
-            store_schema=False,
-        )
+        rows = rows.select(arrow.names).cast(arrow)
+        n_files = max(1, rows.num_rows // ROWS_PER_FILE)
+        bounds = [i * rows.num_rows // n_files for i in range(n_files + 1)]
+        for lo, hi in zip(bounds, bounds[1:]):
+            pq.write_table(
+                rows.slice(lo, hi - lo),
+                os.path.join(leaf, f"part-00000-{uuid.uuid4()}.snappy.parquet"),
+                store_schema=False,
+            )
 
 
 def write_frame(
-    df: DataFrame | pd.DataFrame,
+    df: DataFrame | pa.Table,
     path: str,
     schema: str | None = None,
     partition_cols: tuple[str, ...] = (),
 ) -> None:
     """Stage ``df`` at ``path``, partitioned by ``partition_cols``: a
-    Spark frame in one distributed parquet write, a driver-side pandas
-    frame by ``write_arrow`` typed by the DDL ``schema`` (no Spark job).
+    Spark frame in one distributed parquet write, a driver-side Arrow
+    table by ``write_arrow`` typed by the DDL ``schema`` (no Spark job).
     The one staging body behind ``overwrite_by_key`` and the manifest
     transaction's writes."""
-    if isinstance(df, pd.DataFrame):
+    if isinstance(df, pa.Table):
         write_arrow(df, schema, path, partition_cols)
     else:
         writer = df.write.mode("overwrite")
@@ -224,11 +229,10 @@ def _swap_partitions(staged: str, table_path: str, partition_cols: tuple[str, ..
 
 
 def overwrite_by_key(
-    df: DataFrame | pd.DataFrame,
+    df: DataFrame | pa.Table,
     path: str,
     key_col: str = "tdei_dataset_id",
     extra_partition_cols: tuple[str, ...] = (),
-    table_col: str | None = None,
     schema: str | None = None,
 ) -> None:
     """Idempotent delete-then-reload keyed on ``key_col`` (O17,
@@ -238,24 +242,15 @@ def overwrite_by_key(
     same dataset replaces exactly that dataset's directory, other
     datasets are untouched, and readers see the old data until each
     partition's swap. ``df`` is written to ``path/.load-<uuid>`` first:
-    a Spark frame in one job, a pandas frame (rows the driver already
-    holds, typed by the DDL ``schema``) by ``write_arrow`` with no job.
-    A failed write leaves every live partition as it was.
-
-    ``table_col``: ``path`` is a warehouse root and each row names its
-    sink table in that column, so one job fills several same-schema
-    tables; ``table_col=T/<partition>`` is swapped into ``path/T``.
+    a Spark frame in one job, an Arrow table (rows the driver holds,
+    typed by the DDL ``schema``) by ``write_arrow`` with no job. A failed
+    write leaves every live partition as it was.
     """
     partition_cols = (key_col, *extra_partition_cols)
-    staged_cols = (table_col, *partition_cols) if table_col else partition_cols
     staging = os.path.join(path, f".load-{uuid.uuid4().hex}")
     try:
-        write_frame(df, staging, schema, staged_cols)
-        if table_col is None:
-            _swap_partitions(staging, path, partition_cols)
-        else:
-            for table, staged in staged_tables(staging, table_col):
-                _swap_partitions(staged, os.path.join(path, table), partition_cols)
+        write_frame(df, staging, schema, partition_cols)
+        _swap_partitions(staging, path, partition_cols)
     finally:
         shutil.rmtree(staging, ignore_errors=True)
 

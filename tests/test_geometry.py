@@ -33,7 +33,8 @@ def _feature(geom_type, coords, properties=ID, extra=None):
     return f
 
 
-# (name, kind, geom_type, coords_in, props_in, expected_coords, expected_props)
+# (name, kind, geom_type, coords_in, props_in, expected_coords, expected_props
+#  [, feature-level overrides])
 MATRIX = [
     # node/point 3D -> strip + ext:elevation (ref :768-787)
     ("point_3d", "nodes", "Point", [-122.1355703, 47.6458165, 123.45], ID,
@@ -70,6 +71,33 @@ MATRIX = [
     ("null_props_edge", "edges", "LineString",
      [[-122.1, 47.6, 100.0], [-122.2, 47.7]], None,
      [[-122.1, 47.6], [-122.2, 47.7]], None),
+    # a non-object properties value is kept as it is without an elevation,
+    # and replaced by {} to take one (src :632-634)
+    ("string_props", "nodes", "Point", [-122.1, 47.6], "abc", [-122.1, 47.6], "abc"),
+    ("string_props_z", "nodes", "Point", [-122.1, 47.6, 3.0], "abc",
+     [-122.1, 47.6], {"ext:elevation": 3.0}),
+    ("object_text_props", "edges", "LineString",
+     [[-122.1, 47.6, 1.0], [-122.2, 47.7]], '{"ext:elevation": 1}',
+     [[-122.1, 47.6], [-122.2, 47.7]], '{"ext:elevation": 1}'),
+    ("object_text_props_z", "points", "Point", [-122.1, 47.6, 3.0], '{"ext:elevation": 1}',
+     [-122.1, 47.6], {"ext:elevation": 3.0}),
+    ("array_props", "nodes", "Point", [-122.1, 47.6], [1], [-122.1, 47.6], [1]),
+    ("array_props_z", "nodes", "Point", [-122.1, 47.6, 3.0], [1],
+     [-122.1, 47.6], {"ext:elevation": 3.0}),
+    ("number_props", "points", "Point", [-122.1, 47.6], 5, [-122.1, 47.6], 5),
+    ("number_props_z", "points", "Point", [-122.1, 47.6, 3.0], 5,
+     [-122.1, 47.6], {"ext:elevation": 3.0}),
+    # types are written as escaped JSON strings; an unknown geometry type
+    # passes its coordinates through (2D here, as the oracle strips any)
+    ("quote_in_geometry_type", "edges", 'Line"String', [[-122.1, 47.6], [-122.2, 47.7]], ID,
+     [[-122.1, 47.6], [-122.2, 47.7]], ID),
+    ("backslash_in_geometry_type", "nodes", "Po\\int", [-122.1, 47.6], ID,
+     [-122.1, 47.6], ID),
+    ("quote_in_feature_type", "nodes", "Point", [-122.1, 47.6, 5.0], ID,
+     [-122.1, 47.6], {**ID, "ext:elevation": 5.0}, {"type": 'Fea"ture'}),
+    ("backslash_in_feature_type", "edges", "LineString",
+     [[-122.1, 47.6, 1.0], [-122.2, 47.7]], ID,
+     [[-122.1, 47.6], [-122.2, 47.7]], ID, {"type": "Fea\\ture"}),
 ]
 
 
@@ -105,8 +133,8 @@ RUNNERS = {"jvm": _run_jvm, "udf": _run_udf}
 @pytest.mark.parametrize("path", ["jvm", "udf"])
 @pytest.mark.parametrize("case", MATRIX, ids=[c[0] for c in MATRIX])
 def test_matrix(spark, path, case):
-    _, kind, gtype, coords, props, want_coords, want_props = case
-    feature = _feature(gtype, coords, properties=props)
+    _, kind, gtype, coords, props, want_coords, want_props, *extra = case
+    feature = _feature(gtype, coords, properties=props, extra=extra[0] if extra else None)
     got_coords, got_props = RUNNERS[path](spark, kind, feature)
     assert got_coords == want_coords
     assert got_props == want_props

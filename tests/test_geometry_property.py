@@ -116,7 +116,9 @@ def test_jvm_and_udf_paths_agree_on_random_batch(spark):
                 props[key] = rng.randint(1, 500)
         if rng.random() < 0.1:
             props["nested"] = {"ext:elevation": 1}  # not a top-level key
-        return rng.choice([props, props, props, {}, None, "missing"])
+        # non-object values, one a string holding an object's text
+        other = rng.choice(["abc", '{"ext:elevation": 1}', [1, 2], 5, 2.5, True])
+        return rng.choice([props, props, props, {}, None, "missing", other])
 
     kinds_l = ["nodes", "points", "edges", "lines", "polygons", "zones", "extension"]
     gtypes_l = list(geometry_strategies)
@@ -137,6 +139,7 @@ def test_jvm_and_udf_paths_agree_on_random_batch(spark):
     assert sum("properties" not in f for f in features) > 50
     assert sum("properties" in f and f["properties"] is None for f in features) > 50
     assert sum("geometry" not in f for f in features) > 10
+    assert sum(not isinstance(f.get("properties", {}), (dict, type(None))) for f in features) > 50
 
     df = spark.createDataFrame(rows, "i int, kind string, feature_raw string")
     out = G.transform_features(df).select(

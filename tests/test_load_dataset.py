@@ -325,13 +325,12 @@ PYTHON_RUNNERS = ("MapInPandas", "PythonMapInArrow", "ArrowEvalPython")
 
 
 @pytest.mark.parametrize("commit_mode", ["partition", "manifest"])
-def test_small_archive_runs_two_jobs_and_no_shuffle(spark, tmp_path, commit_mode):
-    """An archive of at most 1 MB loads in two jobs in either commit mode:
-    one write for every non-extension kind and one for extensions. The
-    gate select over the driver-decoded entries runs no job, no plan of
-    the load starts a Python worker, the elevation counts ride the writes,
-    and the extension-file, dataset and stats rows are written from the
-    driver without a job."""
+def test_small_archive_runs_one_job_and_no_shuffle(spark, tmp_path, commit_mode):
+    """An archive of at most 1 MB loads in one job in either commit mode:
+    the collect of every kind's transformed features. The gate select over
+    the driver-decoded entries runs no job, no plan of the load starts a
+    Python worker, and every sink table (kind tables, extension files,
+    dataset and stats rows) is written from the driver without a job."""
     archive = str(tmp_path / "osw.zip")
     make_zip(archive, {
         "data/nodes.geojson": json.dumps(NODES),
@@ -349,13 +348,69 @@ def test_small_archive_runs_two_jobs_and_no_shuffle(spark, tmp_path, commit_mode
     assert result.success, result.message
     assert result.feature_counts == {"nodes": 3, "edges": 1, "extension": 2}
     new = sorted(set(after) - before)
-    # base kinds, extension
-    assert len(new) == 2, new
+    # the features collect
+    assert len(new) == 1, new
     assert _shuffle_write_bytes(spark, [s for j in new for s in after[j]]) == 0
     load_plans = [p for i, p in plans.items() if i not in plans_before]
-    assert load_plans  # the gate and the two writes are SQL executions
+    assert load_plans  # the gate and the collect are SQL executions
     for plan in load_plans:
         assert not any(runner in plan for runner in PYTHON_RUNNERS), plan
+
+
+@pytest.mark.parametrize("commit_mode", ["partition", "manifest"])
+def test_kind_past_rows_per_file_lands_in_slices(spark, tmp_path, monkeypatch, commit_mode):
+    """A kind past the rows-per-file rule lands as ``n // ROWS_PER_FILE``
+    files that together hold exactly its rows; a kind under it lands as
+    one file. Each file reads back with exactly the table's
+    ``sink_schema`` (the dataset key lives in the path in partition
+    mode)."""
+    from pyspark.sql.types import StructType
+
+    from tdei_extract_load_service_spark.plans.load_dataset import sink_schema
+    from tdei_extract_load_service_spark.sinks import writers
+
+    monkeypatch.setattr(writers, "ROWS_PER_FILE", 4)
+    sizes = {"node": 11, "extension": 9, "edge": 1}
+    doc = {
+        kind: {"type": "FeatureCollection", "features": [
+            {"type": "Feature",
+             "geometry": {"type": "Point", "coordinates": [1.0, 2.0, 3.0]},
+             "properties": {"_id": f"{kind}{i}"}}
+            for i in range(n)
+        ]}
+        for kind, n in sizes.items()
+    }
+    archive = str(tmp_path / "osw.zip")
+    make_zip(archive, {
+        "nodes.geojson": json.dumps(doc["node"]),
+        "custom.geojson": json.dumps(doc["extension"]),
+        "edges.geojson": json.dumps(doc["edge"]),
+    })
+    warehouse = str(tmp_path / "wh")
+    result = load_dataset(spark, archive, "ds-files", "u", warehouse, commit_mode=commit_mode)
+    assert result.success, result.message
+
+    for table, n in sizes.items():
+        schema = StructType.fromDDL(sink_schema(table))
+        if commit_mode == "manifest":
+            from tdei_extract_load_service_spark.sinks.manifest import read_manifest
+
+            leaf = os.path.join(warehouse, read_manifest(warehouse)["tables"][table]["ds-files"])
+        else:
+            leaf = os.path.join(warehouse, table, "tdei_dataset_id=ds-files")
+            schema = StructType([f for f in schema if f.name != "tdei_dataset_id"])
+        files = [os.path.join(leaf, f) for f in os.listdir(leaf) if f.endswith(".parquet")]
+        assert len(files) == max(1, n // 4), (table, files)
+        per_file = [spark.read.parquet(f) for f in files]
+        for df in per_file:
+            assert df.schema == schema, (table, df.schema)
+        # contiguous slices of near-equal size
+        assert max(df.count() for df in per_file) - min(df.count() for df in per_file) <= 1
+        ids = sorted(
+            json.loads(r.feature)["properties"]["_id"]
+            for df in per_file for r in df.select("feature").collect()
+        )
+        assert ids == sorted(f"{table}{i}" for i in range(n)), table
 
 
 def _line(i, coords, props):
@@ -622,7 +677,8 @@ def test_non_zip_path_has_no_geojson_entries(spark, tmp_path):
 
 def test_large_relation_lands_the_same_rows(spark, tmp_path):
     """Past the Arrow local-relation threshold the entries are an RDD: the
-    gate becomes one job of its own, and the same rows land."""
+    gate becomes one job of its own next to the features collect, and the
+    same rows land."""
     archive = str(tmp_path / "osw.zip")
     make_zip(archive, {
         "data/nodes.geojson": json.dumps(NODES),
@@ -643,9 +699,39 @@ def test_large_relation_lands_the_same_rows(spark, tmp_path):
     finally:
         spark.conf.set(conf, previous)
     assert result.success, result.message
-    # gate, base kinds, extension
-    assert len(new) == 3, new
+    # gate, features collect
+    assert len(new) == 2, new
     assert _sink_rows(spark, rdd_wh) == _sink_rows(spark, local_wh)
+
+
+def test_archive_past_max_result_size_fails_with_short_message(spark, tmp_path):
+    """The features collect is bounded by ``spark.driver.maxResultSize``:
+    an archive past it fails with Spark's one-line reason, not the JVM
+    stack, and writes no feature."""
+    doc = {"type": "FeatureCollection", "features": [
+        {"type": "Feature", "geometry": {"type": "Point", "coordinates": [1.0, 2.0, 3.0]},
+         "properties": {"_id": f"n{i}", "note": "x" * 200}}
+        for i in range(8_000)
+    ]}
+    archive = str(tmp_path / "big.zip")
+    make_zip(archive, {"nodes.geojson": json.dumps(doc)})
+    warehouse = str(tmp_path / "wh")
+    # the live SparkConf, which each job's task set reads when it starts
+    conf = spark.sparkContext._jsc.sc().conf()
+    previous = conf.get("spark.driver.maxResultSize", "1g")
+    conf.set("spark.driver.maxResultSize", "1m")
+    try:
+        result = load_dataset(spark, archive, "ds-max", "u", warehouse)
+    finally:
+        conf.set("spark.driver.maxResultSize", previous)
+    assert not result.success
+    assert result.message.startswith(
+        "Archive too large to load: Total size of serialized results of "
+    ), result.message[:300]
+    assert result.message.endswith("is bigger than spark.driver.maxResultSize (1024.0 KiB)")
+    from tdei_extract_load_service_spark.plans.load_dataset import read_sink
+
+    assert read_sink(spark, warehouse, "node").count() == 0
 
 
 def test_non_utf8_entry_fails_with_short_message(spark, tmp_path):
