@@ -23,8 +23,9 @@ string holding an object's text, so a second parse that skips every value
 reads the member's type; a non-object value is written back as JSON, or
 replaced by ``{}`` when it takes an elevation, as the reference does. The
 transformed feature is re-serialized in the canonical envelope order
-(type, geometry, properties), both types as escaped JSON strings. Feature-level
-keys beyond that envelope, geometry keys beyond type/coordinates, and
+(type, geometry, properties): the feature ``type`` as the JSON value it
+was (``"Feature"`` when missing), ``geometry.type`` as an escaped JSON
+string. Feature-level keys beyond that envelope, geometry keys beyond type/coordinates, and
 coordinates of a non-standard type or depth (passed through unstripped)
 are departures from the reference (PARITY.md O10/O11).
 """
@@ -179,8 +180,10 @@ def add_property_json(props_json: str | Column, key: Column, value_json: Column)
 #: Decomposed per-feature schema, parsed once per feature row: ``from_json``
 #: captures a subtree addressed as a ``string`` field verbatim, so
 #: ``coordinates`` of every arity and the open ``properties`` object fit
-#: fixed columns as raw JSON text.
-FEATURE_SCHEMA = "type string, geometry struct<type string, coordinates string>, properties string"
+#: fixed columns as raw JSON text. The feature ``type`` is a ``variant``,
+#: so any JSON value (a number, an explicit null) is written back as it
+#: was, and only a missing member reads as SQL null.
+FEATURE_SCHEMA = "type variant, geometry struct<type string, coordinates string>, properties string"
 
 
 def _json_string(c: Column) -> Column:
@@ -230,7 +233,7 @@ def _transform_exprs() -> tuple[dict[str, Column], ...]:
     # beyond it are not carried
     assembled = F.concat(
         F.lit('{"type": '),
-        _json_string(F.coalesce(ftype, F.lit("Feature"))),
+        F.coalesce(F.to_json(ftype), F.lit('"Feature"')),
         F.lit(', "geometry": {"type": '),
         _json_string(gtype),
         F.lit(', "coordinates": '),

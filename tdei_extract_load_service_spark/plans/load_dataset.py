@@ -5,27 +5,27 @@ Reference lifecycle (extract-load-service.ts:242-345): message → pre-delete
 → BEGIN → zip stream → per-entry token pipeline → per-kind batched INSERTs
 → per-file metadata → COMMIT → stats proc → publish. Here the same
 semantics run as one pass over the data and one Spark job, whatever the
-number of kinds:
+number of kinds or the size of the archive:
 
-    driver: read the archive, decode its .geojson entries and headers
-    (zip_fanout) → Arrow local relation → route_case
-    → gate select (malformed entries, headers, feature count,
-      extension-file id and name per entry), evaluated on the driver
-    → explode(features) → transform_features (decompose, strip-Z/elevation,
-      reassemble; functions.geometry)
-    → ONE job collects every kind's transformed features as Arrow
-    → driver: split by kind, count ``ext:elevation`` per kind, write each
-      kind table, the extension-file rows, the dataset metadata row and
-      the stats row as Arrow files without a job → result dict
+    driver: read the archive, decode its .geojson entries, route each
+    entry and parse its header (zip_fanout) → gate: no entries, a header
+    that does not parse, extension-file ids and names
+    → Arrow entry relation → explode(features) → transform_features
+      (decompose, strip-Z/elevation, reassemble; functions.geometry)
+    → ONE job collects every kind's transformed features and Jackson's
+      verdict on each entry as Arrow
+    → driver: reject an entry Jackson refused, count features, files and
+      ``ext:elevation`` per kind, write each kind table, the
+      extension-file rows, the dataset metadata row and the stats row as
+      Arrow files without a job → result dict
 
-Nothing is read twice just to count it: the gate's per-entry counts fill
-the stats, and an archive of at most 1 MB runs no shuffle. No Python
-worker runs, and nothing is persisted: the entry rows live in the plan as
-a ``LocalRelation`` (below
-``spark.sql.execution.arrow.localRelationThreshold``), whose gate select
-the optimizer folds on the driver. Past that threshold the rows are an
-RDD of one partition per entry and the gate is one JVM job of its own;
-the collect reads the same rows, so nothing is decoded twice either way.
+Each entry is parsed once by Python (its header, on the driver) and once
+by Jackson (its features, in the job); a load the driver's gate rejects
+runs no Spark job at all. Nothing is read twice just to count it: every
+count comes from the collected rows, and an archive of at most 1 MB runs
+no shuffle. No Python worker runs, and nothing is persisted: below
+``spark.sql.execution.arrow.localRelationThreshold`` the entry rows are a
+``LocalRelation`` in the plan, past it an RDD of one partition per entry.
 The driver holds one archive's entry text plus its transformed features,
 bounded by ``spark.driver.maxResultSize`` (SCALE.md).
 
@@ -42,7 +42,10 @@ times plan construction only, since its execution happens inside the
 from __future__ import annotations
 
 import contextlib
+import hashlib
+import json
 import os
+import posixpath
 import re
 import time
 from dataclasses import dataclass, field
@@ -50,16 +53,11 @@ from dataclasses import dataclass, field
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from tdei_extract_load_service_spark.functions.geometry import transform_features
 from tdei_extract_load_service_spark.sinks.writers import overwrite_by_key
-from tdei_extract_load_service_spark.sources.geojson import explode_features, feature_count
-from tdei_extract_load_service_spark.sources.zip_fanout import (
-    InvalidArchiveError,
-    routed_entries,
-    zip_fanout,
-)
+from tdei_extract_load_service_spark.sources.geojson import explode_features
+from tdei_extract_load_service_spark.sources.zip_fanout import InvalidArchiveError, zip_fanout
 
 #: kind -> sink table name (content.<table>, extract-load-service.ts:378,
 #: 426,478,689,736,783,830).
@@ -132,6 +130,22 @@ _RESULT_SIZE_ERROR = re.compile(
     r"Total size of serialized results of \d+ tasks \([^)]*\) is bigger than "
     r"spark\.driver\.maxResultSize \([^)]*\)"
 )
+
+
+def ext_file_id(tdei_dataset_id: str, entry: str) -> int:
+    """The extension_file surrogate id and the FK of its features
+    (extract-load-service.ts:473-479): a stable signed 64-bit digest of
+    (dataset, entry) instead of a DB sequence. The JSON pair keeps the two
+    fields apart, so ``("a/b", "c")`` and ``("a", "b/c")`` differ."""
+    digest = hashlib.blake2b(json.dumps([tdei_dataset_id, entry]).encode(), digest_size=8)
+    return int.from_bytes(digest.digest(), "big", signed=True)
+
+
+def ext_file_name(entry: str) -> str:
+    """extension_file.name: the entry's basename without its extension
+    (ref :531)."""
+    m = re.search(r"^(.*?)(\.[^.]*)?$", posixpath.basename(entry))
+    return m.group(1) if m else ""
 
 
 class NoGeoJsonEntriesError(Exception):
@@ -251,61 +265,26 @@ def load_dataset(
                     delete_by_key(os.path.join(warehouse, table), tdei_dataset_id)
             timings["delete"] = time.perf_counter() - t0
 
-            # -- extract: archive -> routed entries -------------------------
+            # -- extract: archive -> routed entries and the gate ------------
             t0 = time.perf_counter()
-            # the driver decodes the archive once; the entries are a local
-            # relation that the gate and the collect read without a cache
-            entries = routed_entries(zip_fanout(spark, archive_path))
-            # ONE select returns, per FILE, the malformed-entry gate (O21,
-            # geoJsonPipeError extract-load-service.ts:41-49), the header
-            # metadata that the extension-registration (O16) and metadata
-            # (O15) stages consume, the feature count that fills the stats
-            # (O19), and the extension-file id and name. Over a local
-            # relation the optimizer evaluates it on the driver (no job);
-            # over a relation past the Arrow local-relation threshold it is
-            # one job. Collected volume is one small row per file, never
-            # feature data. An entry is malformed if either parser rejects
-            # it: Jackson accepts single quotes and trailing content after
-            # the root object, which the strict header parse (null ``meta``)
-            # rejects, and Python's parse accepts nesting Jackson refuses.
-            jackson_rejects = F.from_json("entry_text", "map<string,string>").isNull()
-            is_bad = jackson_rejects | F.col("meta").isNull()
-            per_entry = entries.select(
-                "kind",
-                "entry",
-                is_bad.alias("bad"),
-                "meta",
-                F.length("entry_text").alias("entry_bytes"),
-                feature_count("entry_text").alias("n_features"),
-                # the extension_file FK of extension features
-                # (extract-load-service.ts:473-479): a stable hash of
-                # (dataset, entry) instead of a DB sequence
-                F.xxhash64(F.lit(tdei_dataset_id), "entry").alias("ext_file_id"),
-                # name = basename sans extension (ref :531)
-                F.regexp_extract(
-                    F.element_at(F.split("entry", "/"), -1), r"^(.*?)(\.[^.]*)?$", 1
-                ).alias("ext_name"),
-            ).collect()
-            n_entries = len(per_entry)
-            if n_entries == 0:
+            # the driver decodes the archive once; its per-entry facts are
+            # the gate (O21, geoJsonPipeError extract-load-service.ts:41-49)
+            # and carry the headers that the extension-registration (O16)
+            # and metadata (O15) stages consume, so a rejected load builds
+            # no plan and runs no job
+            table, files = zip_fanout(archive_path)
+            if not files:
                 raise NoGeoJsonEntriesError(
                     f"No GeoJSON files found in the archive for dataset {tdei_dataset_id}"
                 )
-            bad_entry = min((r["entry"] for r in per_entry if r["bad"]), default=None)
-            if bad_entry is not None:
+            rejected = min((f.entry for f in files if f.meta is None), default=None)
+            if rejected is not None:
                 raise MalformedGeoJsonError(
-                    f"Unable to parse GeoJSON: invalid JSON in entry {bad_entry}"
+                    f"Unable to parse GeoJSON: invalid JSON in entry {rejected}"
                 )
-            # per kind: features, and the distinct entries that hold any
-            # (zero-feature files add no stats row and no sink file)
-            counts: dict[str, int] = {}
-            kind_files: dict[str, set[str]] = {}
-            for r in per_entry:
-                if r["n_features"] > 0:
-                    counts[r["kind"]] = counts.get(r["kind"], 0) + r["n_features"]
-                    kind_files.setdefault(r["kind"], set()).add(r["entry"])
-            ext_entries = [r for r in per_entry if r["kind"] == "extension"]
-            total_entry_bytes = sum(r["entry_bytes"] or 0 for r in per_entry)
+            ext_files = [f for f in files if f.kind == "extension"]
+            ext_ids = [ext_file_id(tdei_dataset_id, f.entry) for f in ext_files]
+            entries = spark.createDataFrame(table)
             timings["extract"] = time.perf_counter() - t0
 
             # -- transform: plan construction only; its execution is the
@@ -326,7 +305,7 @@ def load_dataset(
             # still fans out to hundreds of tasks. An archive of at most
             # 1 MB needs no shuffle at all.
             n_repart = min(
-                -(-total_entry_bytes // (1 << 20)),
+                -(-sum(f.chars for f in files) // (1 << 20)),
                 4 * spark.sparkContext.defaultParallelism,
             )
             if n_repart > 1:
@@ -335,37 +314,49 @@ def load_dataset(
             timings["transform"] = time.perf_counter() - t0
 
             # -- load: one parameterized writer (O12) over ONE collect -------
-            # every kind's transformed features come back in one job as
-            # Arrow; each kind table is then written from the driver with no
-            # job (the reference's per-kind bulkInsert calls, one
-            # transaction)
+            # every kind's transformed features, and Jackson's verdict on
+            # each entry, come back in one job as Arrow; each kind table is
+            # then written from the driver with no job (the reference's
+            # per-kind bulkInsert calls, one transaction)
             t0 = time.perf_counter()
-            # (an archive of zero-feature files has nothing to collect)
-            rows = features.select("kind", "entry", "feature").toArrow() if counts else None
-            ext_ids = {r["entry"]: r["ext_file_id"] for r in ext_entries}
+            rows = features.select("kind", "entry", "feature", "bad").toArrow()
+            bad = pc.filter(rows["entry"], rows["bad"]).to_pylist()
+            if bad:
+                raise MalformedGeoJsonError(
+                    f"Unable to parse GeoJSON: invalid JSON in entry {min(bad)}"
+                )
+            # per kind: features, the distinct entries that hold any and
+            # those carrying ``ext:elevation`` (zero-feature files add no
+            # stats row and no sink file)
+            counts: dict[str, int] = {}
+            n_files: dict[str, int] = {}
             elevation: dict[str, int] = {}
-            for kind in counts:
+            for kind in dict.fromkeys(f.kind for f in files):
                 part = rows.filter(pc.equal(rows["kind"], kind))
+                if not part.num_rows:
+                    continue
+                counts[kind] = part.num_rows
+                n_files[kind] = pc.count_distinct(part["entry"]).as_py()
                 elevation[kind] = pc.sum(
                     pc.match_substring(part["feature"], '"ext:elevation"')
                 ).as_py() or 0
                 cols = {"feature": part["feature"], "entry": part["entry"]}
                 if kind == "extension":
-                    # the FK the gate computed for extension_file.id
-                    ids = pc.index_in(part["entry"], value_set=pa.array(list(ext_ids)))
-                    cols["ext_file_id"] = pa.array(list(ext_ids.values()), pa.int64()).take(ids)
+                    # the FK of extension_file.id
+                    ids = pc.index_in(part["entry"], pa.array([f.entry for f in ext_files]))
+                    cols["ext_file_id"] = pa.array(ext_ids, pa.int64()).take(ids)
                 sink_write(SINK_TABLES[kind], **cols)
 
             # extension-file registration (O16, extract-load-service.ts:
             # 515-536): one row per extension entry, created even when it
             # has 0 features (empty-insert fallback O14, :230). Zero
             # extension entries write nothing.
-            if ext_entries:
+            if ext_files:
                 sink_write(
                     "extension_file",
-                    id=list(ext_ids.values()),
-                    name=[r["ext_name"] for r in ext_entries],
-                    file_meta=[r["meta"] for r in ext_entries],
+                    id=ext_ids,
+                    name=[ext_file_name(f.entry) for f in ext_files],
+                    file_meta=[f.meta for f in ext_files],
                 )
             timings["load"] = time.perf_counter() - t0
 
@@ -373,17 +364,15 @@ def load_dataset(
             # an archive of only extension files updates no metadata column
             # in the reference's per-kind switch — no row
             t0 = time.perf_counter()
-            if n_entries > len(ext_entries):
+            if len(files) > len(ext_files):
                 # Several files of one kind each overwrite the same column in
                 # the reference's sequential processing — last write wins;
                 # entry-name order is the deterministic distributed
                 # equivalent (== the previous max_by(meta, entry) pivot)
                 last_meta: dict[str, str] = {}
-                for r in sorted(
-                    (r for r in per_entry if r["kind"] != "extension"),
-                    key=lambda r: r["entry"],
-                ):
-                    last_meta[r["kind"]] = r["meta"]
+                for f in sorted(files, key=lambda f: f.entry):
+                    if f.kind != "extension":
+                        last_meta[f.kind] = f.meta
                 sink_write(
                     "dataset",
                     **{col: [last_meta.get(k)] for k, col in META_COLUMNS.items()},
@@ -391,15 +380,14 @@ def load_dataset(
             timings["metadata"] = time.perf_counter() - t0
 
             # -- stats: the tdei_update_osw_stats analogue (O19) -------------
-            # every figure is already known: feature and file counts from the
-            # gate pass, elevation counts from the collected features
+            # every figure is already known from the collected features
             t0 = time.perf_counter()
             if counts:
                 sink_write(
                     "dataset_stats",
                     kind=list(counts),
                     n_features=list(counts.values()),
-                    n_files=[len(kind_files[k]) for k in counts],
+                    n_files=[n_files[k] for k in counts],
                     n_with_elevation=[elevation[k] for k in counts],
                 )
             timings["stats"] = time.perf_counter() - t0

@@ -6,14 +6,14 @@ extract-load-service.ts:262-267, :298-321, :20,:61-72). Spark has no
 built-in zip datasource, so the driver reads each archive's bytes through
 ``pyarrow.fs`` (local paths, ``file:`` URIs and the object stores pyarrow
 supports), decodes the matched entries with ``zipfile`` and hands them to
-Spark as a ``pyarrow.Table`` of one record batch per entry.
+Spark as a ``pyarrow.Table`` of ``(kind, entry, entry_text)`` rows, one
+record batch per entry, so a relation past the Arrow local-relation
+threshold is parallelized one entry per partition.
 
-Below ``spark.sql.execution.arrow.localRelationThreshold`` that table
-becomes a ``LocalRelation``: the optimizer evaluates a projection over it
-on the driver (``ConvertToLocalRelation``), so a per-entry select runs no
-Spark job, and later plans re-read the in-memory rows without a cache.
-Above it the rows are a parallelized RDD of one partition per entry. No
-Python worker runs either way.
+The same pass is the load's gate: for each entry the driver also returns
+an ``EntryFacts`` of its route (O9), its header (O7) and its character
+length, so the load checks for missing and malformed entries and fills
+the extension-file and metadata rows before Spark runs.
 
 Deliberate departures from the reference (SURVEY.md §4):
 - the reference must visit entries *sequentially* because its zip parser is
@@ -24,12 +24,12 @@ Deliberate departures from the reference (SURVEY.md §4):
   (``zipfile`` reads the central directory and seeks to matched members
   only).
 
-Each entry row also carries ``meta``, the entry's header (O7: root keys
-minus ``features``/``type``, null values -> ``''`` as the metadata
-projection writes them, extract-load-service.ts:139-178, :496-502) as a
-JSON object string, or null when the text is not a JSON object. ``json``
-round-trips numeric header values exactly, which a ``map<string,string>``
-parse would flatten.
+``meta`` is the entry's header (O7: root keys minus ``features``/``type``,
+null values -> ``''`` as the metadata projection writes them,
+extract-load-service.ts:139-178, :496-502) as a JSON object string, or
+null when the text does not parse as a JSON object (the load rejects the
+entry). ``json`` round-trips numeric header values exactly, which a
+``map<string,string>`` parse would flatten.
 
 Scale notes: a ZIP is not splittable, so one reader decodes an archive
 whichever process does it. The driver holds one archive's matched entry
@@ -47,17 +47,16 @@ import posixpath
 import zipfile
 import zlib
 from collections.abc import Iterator
+from typing import NamedTuple
 
 import pyarrow as pa
 import pyarrow.fs as pafs
-from pyspark.sql import DataFrame, SparkSession
 
 from tdei_extract_load_service_spark.functions.maps import HEADER_EXCLUDED_KEYS
-from tdei_extract_load_service_spark.operators.relational import OSW_ROUTES, route_case
+from tdei_extract_load_service_spark.operators.relational import OSW_ROUTES
 
 #: Output schema of the fan-out.
-ENTRY_SCHEMA = "archive string, entry string, entry_text string, meta string"
-_ENTRY_ARROW = pa.schema([(name.split()[0], pa.string()) for name in ENTRY_SCHEMA.split(", ")])
+ENTRY_SCHEMA = pa.schema([(name, pa.string()) for name in ("kind", "entry", "entry_text")])
 
 #: Entry filter, ported from extract-load-service.ts:303.
 GEOJSON_SUFFIX = ".geojson"
@@ -65,6 +64,15 @@ MACOSX_PREFIX = "__MACOSX/"
 
 #: Archive filter, applied to a single path as to a directory's files.
 ARCHIVE_SUFFIX = ".zip"
+
+
+class EntryFacts(NamedTuple):
+    """What the load needs to know of one entry besides its features."""
+
+    entry: str
+    kind: str
+    meta: str | None
+    chars: int
 
 
 class InvalidArchiveError(Exception):
@@ -95,25 +103,30 @@ def archive_files(path: str) -> tuple[pafs.FileSystem, list[str]]:
     )
 
 
+def entry_kind(name: str) -> str:
+    """The reference's filename router (O9, extract-load-service.ts:74-82):
+    the first ``OSW_ROUTES`` substring the entry path contains, default
+    ``extension`` — ``operators.relational.route_case``'s rule."""
+    return next((kind for sub, kind in OSW_ROUTES if sub in name), "extension")
+
+
 def header_meta(text: str) -> str | None:
-    """The entry's header as a JSON object string (see module docstring)."""
+    """The entry's header as a JSON object string (see module docstring).
+    Nesting past Python's recursion limit is a rejection like any other."""
     try:
         doc = json.loads(text)
-    except ValueError:
+        if not isinstance(doc, dict):
+            return None
+        return json.dumps(
+            {k: "" if v is None else v for k, v in doc.items() if k not in HEADER_EXCLUDED_KEYS},
+            separators=(", ", ": "),
+        )
+    except (ValueError, RecursionError):
         return None
-    if not isinstance(doc, dict):
-        return None
-    return json.dumps(
-        {k: "" if v is None else v for k, v in doc.items() if k not in HEADER_EXCLUDED_KEYS},
-        separators=(", ", ": "),
-    )
 
 
-def _entry_batches(
-    fs: pafs.FileSystem, archive: str, entry_suffix: str, exclude_substring: str
-) -> Iterator[pa.RecordBatch]:
-    """One record batch per matched entry of one archive, so a large
-    relation is parallelized one entry per partition."""
+def _entries(fs: pafs.FileSystem, archive: str) -> Iterator[tuple[str, str]]:
+    """``(name, text)`` of each matched entry of one archive."""
     basename = posixpath.basename(archive)
     # one sequential read of the archive, as the reference streams it
     with fs.open_input_stream(archive) as fh:
@@ -125,7 +138,7 @@ def _entry_batches(
     with zf:
         for info in zf.infolist():
             name = info.filename
-            if info.is_dir() or not name.endswith(entry_suffix) or exclude_substring in name:
+            if info.is_dir() or not name.endswith(GEOJSON_SUFFIX) or MACOSX_PREFIX in name:
                 continue
             try:
                 text = zf.read(info).decode("utf-8")
@@ -137,36 +150,22 @@ def _entry_batches(
                 raise InvalidArchiveError(
                     f"Invalid archive: entry {name} of {basename} is corrupt"
                 ) from None
-            yield pa.record_batch(
-                [[archive], [name], [text], [header_meta(text)]], schema=_ENTRY_ARROW
-            )
+            yield name, text
 
 
-def zip_fanout(
-    spark: SparkSession,
-    path: str,
-    entry_suffix: str = GEOJSON_SUFFIX,
-    exclude_substring: str = MACOSX_PREFIX,
-) -> DataFrame:
-    """Fan the archive(s) at ``path`` out into ``(archive, entry,
-    entry_text, meta)`` rows, decoded on the driver.
+def zip_fanout(path: str) -> tuple[pa.Table, list[EntryFacts]]:
+    """Fan the archive(s) at ``path`` out into ``(kind, entry, entry_text)``
+    rows and one ``EntryFacts`` per row, decoded on the driver.
 
     The suffix/exclude filter runs before decompression (entry bytes of
     filtered entries are never inflated — the moral equivalent of the
     reference's autodrain at :310-316, but free).
     """
     fs, archives = archive_files(path)
-    batches = [
-        batch
-        for archive in archives
-        for batch in _entry_batches(fs, archive, entry_suffix, exclude_substring)
-    ]
-    table = pa.Table.from_batches(batches, schema=_ENTRY_ARROW)
-    return spark.createDataFrame(table, schema=ENTRY_SCHEMA)
-
-
-def routed_entries(entries_df: DataFrame) -> DataFrame:
-    """Attach the ``kind`` column via the reference's filename router
-    (O9, extract-load-service.ts:74-82) — first-match-wins substring CASE
-    on the entry path, default ``extension``."""
-    return route_case(entries_df, "entry", OSW_ROUTES, default="extension", output_col="kind")
+    batches, facts = [], []
+    for archive in archives:
+        for name, text in _entries(fs, archive):
+            kind = entry_kind(name)
+            batches.append(pa.record_batch([[kind], [name], [text]], schema=ENTRY_SCHEMA))
+            facts.append(EntryFacts(name, kind, header_meta(text), len(text)))
+    return pa.Table.from_batches(batches, schema=ENTRY_SCHEMA), facts

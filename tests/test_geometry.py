@@ -98,6 +98,15 @@ MATRIX = [
     ("backslash_in_feature_type", "edges", "LineString",
      [[-122.1, 47.6, 1.0], [-122.2, 47.7]], ID,
      [[-122.1, 47.6], [-122.2, 47.7]], ID, {"type": "Fea\\ture"}),
+    # a non-string feature type is kept as the JSON value it was
+    ("number_feature_type", "nodes", "Point", [-122.1, 47.6, 5.0], ID,
+     [-122.1, 47.6], {**ID, "ext:elevation": 5.0}, {"type": 5}),
+    ("null_feature_type", "edges", "LineString", [[-122.1, 47.6, 1.0], [-122.2, 47.7]], ID,
+     [[-122.1, 47.6], [-122.2, 47.7]], ID, {"type": None}),
+    ("bool_feature_type", "points", "Point", [-122.1, 47.6], ID,
+     [-122.1, 47.6], ID, {"type": True}),
+    ("array_feature_type", "zones", "Polygon", [[[-122.1, 47.6, 1.0], [-122.2, 47.7, 2.0]]], ID,
+     [[[-122.1, 47.6], [-122.2, 47.7]]], ID, {"type": [1]}),
 ]
 
 
@@ -149,6 +158,14 @@ def test_elevation_suffix_escalation(spark, path, props, z, want_key):
     assert got_props[want_key] == z
     for k, v in props.items():  # originals kept
         assert got_props[k] == v
+
+
+def test_missing_feature_type_is_written_as_feature(spark):
+    # the canonical envelope names the type the oracle leaves out
+    feature = {"geometry": {"type": "Point", "coordinates": [1.0, 2.0, 3.0]}, "properties": ID}
+    df = spark.createDataFrame([("edges", json.dumps(feature))], "kind string, feature_raw string")
+    result = json.loads(G.transform_features(df).first()["feature"])
+    assert result == {"type": "Feature", **FJ.process_geometry_elevation(feature, "edges")}
 
 
 @pytest.mark.parametrize("path", ["jvm", "udf"])

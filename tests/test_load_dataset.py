@@ -251,6 +251,65 @@ def test_entry_either_parser_rejects_fails(spark, tmp_path, text):
     )
 
 
+@pytest.mark.parametrize("features", [NODES["features"], []], ids=["features", "no_features"])
+def test_entry_only_jackson_rejects_fails(spark, tmp_path, features):
+    """An entry that Python parses but Jackson refuses (nesting past its
+    1000 levels, under Python's raised recursion limit) fails the load in
+    the features collect, also when it holds no feature, and lands no sink
+    row."""
+    import sys
+
+    from tdei_extract_load_service_spark.plans.load_dataset import SINK_TABLES, read_sink
+
+    doc = {"type": "FeatureCollection", "features": features}
+    text = json.dumps(doc)[:-1] + ', "deep": ' + "[" * 1200 + "]" * 1200 + "}"
+    archive = str(tmp_path / "deep.zip")
+    make_zip(archive, {"nodes.geojson": text, "edges.geojson": EDGES_TEXT})
+    warehouse = str(tmp_path / "wh")
+    limit = sys.getrecursionlimit()
+    sys.setrecursionlimit(3000)
+    try:
+        result = load_dataset(spark, archive, "ds-deep", "u", warehouse)
+    finally:
+        sys.setrecursionlimit(limit)
+    assert not result.success
+    assert result.message == (
+        "Invalid GeoJSON content: Unable to parse GeoJSON: invalid JSON in entry nodes.geojson"
+    )
+    for table in (*SINK_TABLES.values(), "extension_file", "dataset", "dataset_stats"):
+        assert read_sink(spark, warehouse, table).count() == 0, table
+
+
+def test_header_rejected_entry_runs_no_spark_job(spark, tmp_path):
+    """An entry the driver's header parse rejects fails the load before
+    any plan is built: no Spark job and no SQL execution."""
+    archive = str(tmp_path / "bad.zip")
+    make_zip(archive, {"nodes.geojson": json.dumps(NODES), "edges.geojson": EDGES_TEXT + " x"})
+    jobs_before, plans_before = set(_engine_jobs(spark)), set(_sql_plans(spark))
+    result = load_dataset(spark, archive, "ds-header", "u", str(tmp_path / "wh"))
+    assert not result.success
+    assert result.message.endswith("invalid JSON in entry edges.geojson")
+    assert set(_engine_jobs(spark)) == jobs_before
+    assert set(_sql_plans(spark)) == plans_before
+
+
+def test_driver_routing_matches_route_case(spark):
+    """The fan-out routes each entry on the driver by ``route_case``'s
+    rule: first ``OSW_ROUTES`` substring of the path, default extension."""
+    from tdei_extract_load_service_spark.operators.relational import OSW_ROUTES, route_case
+    from tdei_extract_load_service_spark.sources.zip_fanout import entry_kind
+
+    names = [
+        "a/nodes_edges.geojson", "edges/nodes.geojson", "__zones/lines.geojson",
+        "custom.geojson", "points.geojson", "x/polygons/zones.geojson", "Nodes.geojson",
+    ]
+    df = spark.createDataFrame([(n,) for n in names], "entry string")
+    routed = {r.entry: r.kind for r in route_case(df, "entry", OSW_ROUTES).collect()}
+    assert {n: entry_kind(n) for n in names} == routed
+    assert entry_kind("a/nodes_edges.geojson") == "nodes"
+    assert entry_kind("custom.geojson") == "extension"
+
+
 def test_failed_loads_release_cached_frames(spark, tmp_path):
     """A failed load (here: the malformed gate) leaves no persisted frame
     behind — a consumer draining many bad archives must not grow the
@@ -326,11 +385,12 @@ PYTHON_RUNNERS = ("MapInPandas", "PythonMapInArrow", "ArrowEvalPython")
 
 @pytest.mark.parametrize("commit_mode", ["partition", "manifest"])
 def test_small_archive_runs_one_job_and_no_shuffle(spark, tmp_path, commit_mode):
-    """An archive of at most 1 MB loads in one job in either commit mode:
-    the collect of every kind's transformed features. The gate select over
-    the driver-decoded entries runs no job, no plan of the load starts a
-    Python worker, and every sink table (kind tables, extension files,
-    dataset and stats rows) is written from the driver without a job."""
+    """An archive of at most 1 MB loads in one job and one SQL execution
+    in either commit mode: the collect of every kind's transformed
+    features. The gate runs on the driver without Spark, no plan of the
+    load starts a Python worker, and every sink table (kind tables,
+    extension files, dataset and stats rows) is written from the driver
+    without a job."""
     archive = str(tmp_path / "osw.zip")
     make_zip(archive, {
         "data/nodes.geojson": json.dumps(NODES),
@@ -352,9 +412,12 @@ def test_small_archive_runs_one_job_and_no_shuffle(spark, tmp_path, commit_mode)
     assert len(new) == 1, new
     assert _shuffle_write_bytes(spark, [s for j in new for s in after[j]]) == 0
     load_plans = [p for i, p in plans.items() if i not in plans_before]
-    assert load_plans  # the gate and the collect are SQL executions
+    assert len(load_plans) == 1, load_plans  # the features collect
     for plan in load_plans:
         assert not any(runner in plan for runner in PYTHON_RUNNERS), plan
+        # the entries are parsed in the job, not folded into the local
+        # relation on the driver while the plan is optimized
+        assert "entry_text" in plan, plan
 
 
 @pytest.mark.parametrize("commit_mode", ["partition", "manifest"])
@@ -677,8 +740,8 @@ def test_non_zip_path_has_no_geojson_entries(spark, tmp_path):
 
 def test_large_relation_lands_the_same_rows(spark, tmp_path):
     """Past the Arrow local-relation threshold the entries are an RDD: the
-    gate becomes one job of its own next to the features collect, and the
-    same rows land."""
+    load still runs one job, the features collect, and the same rows
+    land."""
     archive = str(tmp_path / "osw.zip")
     make_zip(archive, {
         "data/nodes.geojson": json.dumps(NODES),
@@ -693,14 +756,16 @@ def test_large_relation_lands_the_same_rows(spark, tmp_path):
     previous = spark.conf.get(conf)
     spark.conf.set(conf, "1")
     try:
-        before = set(_engine_jobs(spark))
+        before, plans_before = set(_engine_jobs(spark)), set(_sql_plans(spark))
         result = load_dataset(spark, archive, "ds-rel", "u", rdd_wh)
         new = set(_engine_jobs(spark)) - before
+        new_plans = set(_sql_plans(spark)) - plans_before
     finally:
         spark.conf.set(conf, previous)
     assert result.success, result.message
-    # gate, features collect
-    assert len(new) == 2, new
+    # the features collect
+    assert len(new) == 1, new
+    assert len(new_plans) == 1, new_plans
     assert _sink_rows(spark, rdd_wh) == _sink_rows(spark, local_wh)
 
 
