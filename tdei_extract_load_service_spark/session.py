@@ -135,6 +135,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")
+        # PySpark's call-site capture (on by default) walks the Python
+        # stack on every Column and DataFrame call of every per-request
+        # plan, and its first call imports IPython, whose jedi raises the
+        # process's recursion limit from 1000 to 3000: whether a deep JSON
+        # document parsed depended on what ran first
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # ANSI sweep hook: SPARK_GRAFT_ANSI=1 runs the whole engine under
     # spark.sql.ansi.enabled=true (strict out-of-bounds/overflow/cast

@@ -21,18 +21,34 @@ both parses read the whole document, so key order does not matter.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import functools
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from tdei_extract_load_service_spark.session import PLAN_MEMO_SIZE
 
 #: Entry-level schema capturing each feature as raw text, plus the whole
 #: entry text when Jackson rejects it.
 FEATURES_RAW_SCHEMA = "features array<string>, _corrupt_record string"
 
 
+@functools.lru_cache(maxsize=PLAN_MEMO_SIZE)
+def _explode_exprs() -> tuple[Column, Column, Column]:
+    # Memoized as geometry._transform_exprs is: the Columns are unresolved
+    # name-based trees, so one build serves every load in the process.
+    doc = F.from_json(
+        F.col("entry_text"), FEATURES_RAW_SCHEMA, {"columnNameOfCorruptRecord": "_corrupt_record"}
+    )
+    bad = F.col("_corrupt_record").isNotNull()
+    feats = F.when(bad, F.array(F.lit(None).cast("string"))).otherwise(F.col("features"))
+    return F.inline(F.array(doc)), bad.alias("bad"), F.explode(feats).alias("feature_raw")
+
+
 def explode_features(entries_df: DataFrame) -> DataFrame:
     """One output row per feature: carries every entry column but
-    ``entry_text``, plus ``feature_raw`` (the feature's own JSON text,
-    byte-faithful) and ``bad``.
+    ``entry_text``, plus ``bad`` and ``feature_raw`` (the feature's own
+    JSON text, byte-faithful).
 
     An entry Jackson rejects (broken syntax, nesting past its 1000 levels)
     gives exactly one row, with a null ``feature_raw`` and ``bad`` true.
@@ -41,15 +57,10 @@ def explode_features(entries_df: DataFrame) -> DataFrame:
     the reference's empty-batch insert (O14, :230) is a metadata concern
     handled by ``plans.load_dataset``, not a row here.
     """
-    doc = F.from_json(
-        F.col("entry_text"), FEATURES_RAW_SCHEMA, {"columnNameOfCorruptRecord": "_corrupt_record"}
-    )
+    parse, bad, feature_raw = _explode_exprs()
     # the parse is a generator (one row per entry), not a projection: the
     # optimizer folds a projection over a local relation into the relation,
     # which would run it interpreted on the driver instead of in the job;
     # ``bad`` and the explode then read its one result
     cols = [c for c in entries_df.columns if c != "entry_text"]
-    parsed = entries_df.select(*cols, F.inline(F.array(doc)))
-    parsed = parsed.withColumn("bad", F.col("_corrupt_record").isNotNull())
-    feats = F.when(F.col("bad"), F.array(F.lit(None).cast("string"))).otherwise(F.col("features"))
-    return parsed.withColumn("feature_raw", F.explode(feats)).drop("features", "_corrupt_record")
+    return entries_df.select(*cols, parse).select(*cols, bad, feature_raw)

@@ -159,12 +159,18 @@ def zip_fanout(path: str) -> tuple[pa.Table, list[EntryFacts]]:
 
     The suffix/exclude filter runs before decompression (entry bytes of
     filtered entries are never inflated — the moral equivalent of the
-    reference's autodrain at :310-316, but free).
+    reference's autodrain at :310-316, but free). An entry path that
+    appears twice in the upload (in two archives of a directory, or twice
+    in one archive) is refused: the sinks name a file by its path (the
+    ``entry`` column, the extension-file id, the metadata order).
     """
     fs, archives = archive_files(path)
-    batches, facts = [], []
+    batches, facts, seen = [], [], set()
     for archive in archives:
         for name, text in _entries(fs, archive):
+            if name in seen:
+                raise InvalidArchiveError(f"Invalid archive: entry {name} appears more than once")
+            seen.add(name)
             kind = entry_kind(name)
             batches.append(pa.record_batch([[kind], [name], [text]], schema=ENTRY_SCHEMA))
             facts.append(EntryFacts(name, kind, header_meta(text), len(text)))

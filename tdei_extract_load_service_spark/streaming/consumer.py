@@ -10,9 +10,18 @@ Sources are pluggable behind ``run_queue_consumer(request_stream=...)``:
 ``request_stream_from_files`` is the dependency-free stand-in,
 ``request_stream_from_kafka`` the broker ingress (gated on the
 spark-sql-kafka connector); both feed the identical ``process_request`` /
-response-publish contract. Bounded intake (``maxFilesPerTrigger`` /
-``maxOffsetsPerTrigger``) carries over MAX_CONCURRENT_MESSAGES=2
-(environment.ts:12, applied queue-service.ts:29).
+response-publish contract.
+
+The reference bounds messages *in flight*, not intake:
+``MAX_CONCURRENT_MESSAGES`` = 2 handlers (environment.ts:12, applied
+queue-service.ts:29). Here each micro-batch admits every message that has
+arrived (``availableNow`` drains the backlog in one micro-batch; an
+explicit ``max_messages_per_trigger`` still caps intake through
+``maxFilesPerTrigger`` / ``maxOffsetsPerTrigger``), and a pool of
+``MAX_CONCURRENT_MESSAGES`` threads runs the loads. The messages of one
+``tdei_dataset_id`` run in arrival order (the file source's ``ARRIVAL_KEY``;
+a broker's offset order) as one pool task, so two loads of one dataset
+never overlap in this process and the later upload wins.
 """
 
 from __future__ import annotations
@@ -24,6 +33,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from tdei_extract_load_service_spark.plans.load_dataset import load_dataset
 
@@ -34,6 +44,15 @@ REQUEST_SCHEMA = (
     "data struct<data_type string, file_upload_path string, "
     "tdei_dataset_id string, user_id string>"
 )
+
+#: Loads in flight at once, per consumer (maxConcurrentMessages,
+#: environment.ts:12): the size of each micro-batch's pool.
+MAX_CONCURRENT_MESSAGES = 2
+
+#: Column the file source adds to each message: its file's modification
+#: time, then its path. The file scan packs a micro-batch's files by size,
+#: so the collect's order is not arrival order; this key is.
+ARRIVAL_KEY = "_arrival"
 
 #: data_type dispatch (O2, extract-load-service.ts:242-260): flex and
 #: pathways are declared but unimplemented in the reference (:269-274).
@@ -104,16 +123,20 @@ def publish_response(response_dir: str, batch_id: int, response: dict) -> None:
 
 
 def request_stream_from_files(
-    spark: SparkSession, request_dir: str, max_messages_per_trigger: int = 2
+    spark: SparkSession, request_dir: str, max_messages_per_trigger: int | None = None
 ) -> DataFrame:
     """File-directory request source — the dependency-free broker stand-in.
-    One JSON file per message; ``maxFilesPerTrigger`` carries the
-    reference's maxConcurrentMessages intake bound."""
-    return (
-        spark.readStream.schema(REQUEST_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_messages_per_trigger))
-        .json(request_dir)
+    One JSON file per message, carrying its ``ARRIVAL_KEY``. Intake is
+    every file that has arrived, or at most ``max_messages_per_trigger``
+    (``maxFilesPerTrigger``, oldest first) per micro-batch."""
+    reader = spark.readStream.schema(REQUEST_SCHEMA)
+    if max_messages_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_messages_per_trigger))
+    arrival = F.struct(
+        F.col("_metadata.file_modification_time").alias("mtime"),
+        F.col("_metadata.file_path").alias("path"),
     )
+    return reader.json(request_dir).select("*", arrival.alias(ARRIVAL_KEY))
 
 
 def decode_broker_requests(raw: DataFrame) -> DataFrame:
@@ -136,24 +159,29 @@ def request_stream_from_kafka(
     spark: SparkSession,
     bootstrap_servers: str,
     topic: str,
-    max_offsets_per_trigger: int = 2,
+    max_offsets_per_trigger: int | None = None,
 ) -> DataFrame:
     """Kafka request source mirroring the reference's broker ingress
     (queue-service.ts:38-61): same message payloads, same downstream
-    ``process_request`` seam, intake bounded per trigger.
+    ``process_request`` seam. Intake is every offset that has arrived, or
+    at most ``max_offsets_per_trigger`` per micro-batch. The frame has no
+    arrival key: a micro-batch's collect order is offset order within each
+    topic partition, so two messages for one dataset keep their order only
+    when they share a partition (key the topic by ``tdei_dataset_id``).
 
     Requires the spark-sql-kafka connector on the JVM classpath (shipped
     separately from pyspark); raises ``NotImplementedError`` when absent
     so deployments without the jar fail at build time, not mid-stream.
     """
     try:
-        raw = (
+        reader = (
             spark.readStream.format("kafka")
             .option("kafka.bootstrap.servers", bootstrap_servers)
             .option("subscribe", topic)
-            .option("maxOffsetsPerTrigger", str(max_offsets_per_trigger))
-            .load()
         )
+        if max_offsets_per_trigger is not None:
+            reader = reader.option("maxOffsetsPerTrigger", str(max_offsets_per_trigger))
+        raw = reader.load()
     except Exception as exc:  # connector jar absent -> DATA_SOURCE_NOT_FOUND
         raise NotImplementedError(
             "Kafka source requires the spark-sql-kafka-0-10 connector on the "
@@ -168,15 +196,20 @@ def run_queue_consumer(
     response_dir: str = "",
     warehouse: str = "",
     checkpoint_dir: str = "",
-    max_messages_per_trigger: int = 2,
+    max_messages_per_trigger: int | None = None,
     available_now: bool = True,
     request_stream: DataFrame | None = None,
     commit_mode: str = "partition",
-) -> None:
-    """Consume request messages, run loads, publish responses.
+) -> StreamingQuery:
+    """Consume request messages, run loads, publish responses; returns the
+    started query.
 
     ``available_now=True`` drains the backlog and stops (test/batch mode);
-    ``False`` runs continuously like the reference service. The source is
+    ``False`` runs continuously like the reference service until the
+    returned query is stopped. Each micro-batch admits every message that
+    has arrived, or at most ``max_messages_per_trigger`` of the file
+    source's. At most ``MAX_CONCURRENT_MESSAGES`` loads run at once, and
+    the messages of one dataset run one after another. The source is
     pluggable: pass ``request_stream`` (any streaming DataFrame with
     REQUEST_SCHEMA columns — ``request_stream_from_kafka`` for broker
     deployments) or let ``request_dir`` build the file source.
@@ -199,23 +232,29 @@ def run_queue_consumer(
     def handle_batch(batch_df, batch_id: int) -> None:
         # messages are jobs: each drives a full distributed load; the
         # driver-side pool is the queue handler, not a data path. The
-        # reference runs its <=2 messages CONCURRENTLY
-        # (maxConcurrentMessages, queue-service.ts:29) — mirrored here with
-        # a thread per message: the loads are independent Spark actions and
-        # the scheduler interleaves their stages (FAIR pool would also
-        # round-robin; FIFO still overlaps at stage granularity).
+        # loads are independent Spark actions and the scheduler
+        # interleaves their stages; one dataset's messages are one task,
+        # so its loads never overlap and the later upload wins.
         from concurrent.futures import ThreadPoolExecutor
 
-        def run_one(message: dict) -> None:
-            publish_response(
-                response_dir, batch_id, process_request(spark, message, warehouse, commit_mode)
-            )
-
         messages = [row.asDict(recursive=True) for row in batch_df.collect()]
-        if not messages:
-            return
-        with ThreadPoolExecutor(max_workers=max_messages_per_trigger) as pool:
-            list(pool.map(run_one, messages))
+        if messages and ARRIVAL_KEY in messages[0]:
+            messages.sort(key=lambda m: (m[ARRIVAL_KEY]["mtime"], m[ARRIVAL_KEY]["path"]))
+            for message in messages:
+                del message[ARRIVAL_KEY]
+        by_dataset: dict[str | None, list[dict]] = {}
+        for message in messages:
+            dataset = (message.get("data") or {}).get("tdei_dataset_id")
+            by_dataset.setdefault(dataset, []).append(message)
+
+        def run_in_order(queue: list[dict]) -> None:
+            for message in queue:
+                publish_response(
+                    response_dir, batch_id, process_request(spark, message, warehouse, commit_mode)
+                )
+
+        with ThreadPoolExecutor(max_workers=MAX_CONCURRENT_MESSAGES) as pool:
+            list(pool.map(run_in_order, by_dataset.values()))
 
     writer = (
         stream.writeStream.foreachBatch(handle_batch)
@@ -226,3 +265,4 @@ def run_queue_consumer(
     ).start()
     if available_now:
         query.awaitTermination()
+    return query

@@ -722,6 +722,59 @@ def test_directory_of_archives_loads_every_archive(spark, tmp_path):
     assert result.feature_counts == {"nodes": 3, "edges": 1}
 
 
+def test_upload_repeating_an_entry_path_fails_before_spark(spark, tmp_path):
+    """An upload whose archives both hold ``custom.geojson`` is refused
+    before any Spark job, naming the path: the sinks name a file by its
+    entry path, so the two files would share one ``extension_file.id``,
+    count as one file in the stats and tie in the metadata order."""
+    from tdei_extract_load_service_spark.plans.load_dataset import SINK_TABLES, read_sink
+
+    src = tmp_path / "uploads"
+    src.mkdir()
+    make_zip(str(src / "a.zip"), {"nodes.geojson": json.dumps(NODES),
+                                  "custom.geojson": json.dumps(EXTENSION)})
+    make_zip(str(src / "b.zip"), {"custom.geojson": json.dumps(EXTENSION)})
+    warehouse = str(tmp_path / "wh")
+    jobs_before, plans_before = set(_engine_jobs(spark)), set(_sql_plans(spark))
+    result = load_dataset(spark, str(src), "ds-dup", "u", warehouse)
+    assert not result.success
+    assert result.message == "Invalid archive: entry custom.geojson appears more than once"
+    assert set(_engine_jobs(spark)) == jobs_before
+    assert set(_sql_plans(spark)) == plans_before
+    for table in (*SINK_TABLES.values(), "extension_file", "dataset", "dataset_stats"):
+        assert read_sink(spark, warehouse, table).count() == 0, table
+
+
+def test_building_the_load_plan_leaves_the_recursion_limit(spark, tmp_path):
+    """Building the load's plan captures no call site. PySpark's capture,
+    on by default, imports IPython on its first Column call, and jedi then
+    raises the process's recursion limit from 1000 to 3000: whether the
+    header parse accepted a deep document depended on what ran first."""
+    import sys
+
+    from pyspark.errors import utils as errors_utils
+
+    from tdei_extract_load_service_spark.functions.geometry import transform_features
+    from tdei_extract_load_service_spark.sources.geojson import explode_features
+    from tdei_extract_load_service_spark.sources.zip_fanout import zip_fanout
+
+    archive = str(tmp_path / "osw.zip")
+    make_zip(archive, {"nodes.geojson": json.dumps(NODES), "edges.geojson": EDGES_TEXT})
+    limit = sys.getrecursionlimit()
+    # PySpark caches the conf on its first read; read this session's
+    errors_utils._enable_debugging_cache = None
+    sys.setrecursionlimit(1000)
+    try:
+        table, _facts = zip_fanout(archive)
+        features = transform_features(explode_features(spark.createDataFrame(table)))
+        features.select("kind", "entry", "feature", "bad")
+        after = sys.getrecursionlimit()
+    finally:
+        sys.setrecursionlimit(limit)
+    assert not errors_utils.is_debugging_enabled()
+    assert after == 1000
+
+
 def test_file_uri_loads(spark, tmp_path):
     archive = str(tmp_path / "osw.zip")
     make_zip(archive, {"nodes.geojson": json.dumps(NODES)})

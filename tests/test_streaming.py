@@ -6,7 +6,9 @@ from __future__ import annotations
 import json
 import os
 
-from tests.test_load_dataset import NODES, make_zip
+import pytest
+
+from tests.test_load_dataset import EDGES_TEXT, EXTENSION, NODES, _sink_rows, make_zip
 
 from tdei_extract_load_service_spark.streaming.consumer import run_queue_consumer
 
@@ -580,3 +582,163 @@ def test_replayed_batch_publishes_one_response_per_message(spark, tmp_path):
             mid = json.load(fh)["messageId"]
         per_id[mid] = per_id.get(mid, 0) + 1
     assert per_id == {mid: 1 for mid in ids}
+
+
+def _write_requests(request_dir, bodies) -> None:
+    """One request file per body, in arrival (modification-time) order."""
+    import time as _time
+
+    request_dir.mkdir()
+    base = _time.time() - 100
+    for i, (name, body) in enumerate(bodies):
+        p = request_dir / name
+        p.write_text(json.dumps(body))
+        os.utime(p, (base + i, base + i))
+
+
+def _request(mid, archive, ds, user="u1", data_type="osw"):
+    return {"messageId": mid, "messageType": "workflow", "data": {
+        "data_type": data_type, "file_upload_path": archive,
+        "tdei_dataset_id": ds, "user_id": user}}
+
+
+def test_default_intake_keeps_two_loads_in_flight(spark, tmp_path, monkeypatch):
+    """However many messages a micro-batch admits, at most
+    ``MAX_CONCURRENT_MESSAGES`` (2) loads run at once, and two do overlap
+    (maxConcurrentMessages, queue-service.ts:29)."""
+    import threading
+
+    from tdei_extract_load_service_spark.streaming import consumer as consumer_mod
+
+    archive = str(tmp_path / "osw.zip")
+    make_zip(archive, {"nodes.geojson": json.dumps(NODES)})
+    lock = threading.Lock()
+    in_flight, peak = [0], [0]
+    real_load = consumer_mod.load_dataset
+
+    def counted_load(*args, **kwargs):
+        with lock:
+            in_flight[0] += 1
+            peak[0] = max(peak[0], in_flight[0])
+        try:
+            return real_load(*args, **kwargs)
+        finally:
+            with lock:
+                in_flight[0] -= 1
+
+    monkeypatch.setattr(consumer_mod, "load_dataset", counted_load)
+    n = 6
+    request_dir = tmp_path / "req"
+    _write_requests(
+        request_dir, [(f"m{i}.json", _request(f"f{i}", archive, f"ds-f{i}")) for i in range(n)]
+    )
+    response_dir = tmp_path / "resp"
+    run_queue_consumer(
+        spark,
+        request_dir=str(request_dir),
+        response_dir=str(response_dir),
+        warehouse=str(tmp_path / "wh"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    answers = [json.loads(p.read_text())["data"]["success"] for p in response_dir.iterdir()]
+    assert answers == [True] * n
+    assert peak[0] == 2
+
+
+@pytest.mark.parametrize("commit_mode", ["partition", "manifest"])
+def test_one_datasets_messages_run_in_arrival_order(spark, tmp_path, monkeypatch, commit_mode):
+    """Two uploads of one dataset in one micro-batch run one after the
+    other, in arrival order, so the later upload is the dataset's whole
+    final state. The later load's fan-out waits (bounded) until the
+    earlier load has finished: loads that overlapped would let the later
+    load's pre-delete run first and the earlier load's rows survive."""
+    import threading
+
+    from tdei_extract_load_service_spark.plans import load_dataset as ld_mod
+    from tdei_extract_load_service_spark.streaming import consumer as consumer_mod
+
+    earlier = str(tmp_path / "earlier.zip")
+    make_zip(earlier, {"nodes.geojson": json.dumps(NODES), "custom.geojson": json.dumps(EXTENSION)})
+    later = str(tmp_path / "later.zip")
+    make_zip(later, {"edges.geojson": EDGES_TEXT,
+                     "nodes.geojson": json.dumps({**NODES, "features": NODES["features"][:1]})})
+    earlier_done = threading.Event()
+    order = []
+    real_load, real_fanout = consumer_mod.load_dataset, ld_mod.zip_fanout
+
+    def tracked_load(spark_, archive_path, *args, **kwargs):
+        order.append(archive_path)
+        try:
+            return real_load(spark_, archive_path, *args, **kwargs)
+        finally:
+            if archive_path == earlier:
+                earlier_done.set()
+
+    def gated_fanout(path):
+        if path == later:
+            earlier_done.wait(timeout=120)
+        return real_fanout(path)
+
+    monkeypatch.setattr(consumer_mod, "load_dataset", tracked_load)
+    monkeypatch.setattr(ld_mod, "zip_fanout", gated_fanout)
+    request_dir = tmp_path / "req"
+    # the later request's file sorts first by name and is the larger one,
+    # so neither path order nor the scan's size packing is arrival order
+    _write_requests(request_dir, [
+        ("m1.json", _request("first", earlier, "ds-same", "u-earlier")),
+        ("m0.json", _request("second" + "-" * 200, later, "ds-same", "u-later")),
+    ])
+    response_dir = tmp_path / "resp"
+    warehouse = str(tmp_path / "wh")
+    run_queue_consumer(
+        spark,
+        request_dir=str(request_dir),
+        response_dir=str(response_dir),
+        warehouse=warehouse,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        commit_mode=commit_mode,
+    )
+    monkeypatch.undo()
+    answers = [json.loads(p.read_text())["data"]["success"] for p in response_dir.iterdir()]
+    assert answers == [True, True]
+    reference = str(tmp_path / "ref")
+    result = consumer_mod.load_dataset(
+        spark, later, "ds-same", "u-later", reference, commit_mode=commit_mode
+    )
+    assert result.success, result.message
+    assert _sink_rows(spark, warehouse) == _sink_rows(spark, reference)
+    assert order == [earlier, later]
+
+
+def test_continuous_consumer_answers_backlog_in_first_trigger(spark, tmp_path):
+    """A continuous consumer admits every message that has arrived: ten
+    instant requests are all answered by its first micro-batch, and the
+    returned query stops it."""
+    import time as _time
+
+    n = 10
+    request_dir = tmp_path / "req"
+    _write_requests(request_dir, [
+        (f"m{i}.json", _request(f"c{i}", "/unused.zip", f"ds-c{i}", data_type="flex"))
+        for i in range(n)
+    ])
+    response_dir = tmp_path / "resp"
+    query = run_queue_consumer(
+        spark,
+        request_dir=str(request_dir),
+        response_dir=str(response_dir),
+        warehouse=str(tmp_path / "wh"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        available_now=False,
+    )
+    try:
+        deadline = _time.monotonic() + 120
+        while len(os.listdir(response_dir)) < n and _time.monotonic() < deadline:
+            _time.sleep(0.2)
+    finally:
+        query.stop()
+    assert not query.isActive
+    names = os.listdir(response_dir)
+    assert len(names) == n
+    # response-<batch_id>-<key>.json: all from micro-batch 0
+    assert {name.split("-")[1] for name in names} == {"0"}
