@@ -114,7 +114,7 @@ def q_strip_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     xy = F.concat_ws(
         ",",
         F.transform(
-            strip_z("embedding", depth=1),
+            strip_z("embedding"),
             lambda x: F.format_string("%.6f", x.cast("double")),
         ),
     )

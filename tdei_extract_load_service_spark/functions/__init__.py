@@ -1,15 +1,15 @@
 """Column-expression library (the engine's scalar-function surface).
 
-JVM-side higher-order functions only (whole-stage codegen, no Python on
-the hot path). ``geometry.transform_features`` is the one feature
-transform the load runs; ``feature_json`` is the recursive pure-Python
+JVM-side expressions only (whole-stage codegen, no Python on the hot
+path). ``geometry.transform_features`` is the one feature transform the
+load runs: one leaf rule over the coordinates' JSON text, at any depth and
+for any geometry type. ``feature_json`` is the recursive pure-Python
 reference implementation that tests compare its documents against.
 """
 
 from tdei_extract_load_service_spark.functions.geometry import (  # noqa: F401
     add_property_json,
     count_elevation_keys,
-    first_z_json,
     strip_z,
 )
 from tdei_extract_load_service_spark.functions.maps import (  # noqa: F401

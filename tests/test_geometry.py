@@ -25,9 +25,10 @@ ID = {"_id": "f1"}
 
 
 def _feature(geom_type, coords, properties=ID, extra=None):
-    f = {"type": "Feature", "properties": copy.deepcopy(properties)}
-    if geom_type is not None:
-        f["geometry"] = {"type": geom_type, "coordinates": coords}
+    f = {"type": "Feature", "properties": copy.deepcopy(properties),
+         "geometry": {"type": geom_type, "coordinates": coords}}
+    if geom_type is None:
+        del f["geometry"]["type"]
     if extra:
         f.update(extra)
     return f
@@ -107,6 +108,18 @@ MATRIX = [
      [-122.1, 47.6], ID, {"type": True}),
     ("array_feature_type", "zones", "Polygon", [[[-122.1, 47.6, 1.0], [-122.2, 47.7, 2.0]]], ID,
      [[[-122.1, 47.6], [-122.2, 47.7]]], ID, {"type": [1]}),
+    # the leaf rule never reads geometry.type: a geometry without a type,
+    # of an unknown type, of a type whose depth its coordinates do not
+    # have, or with a non-string type is stripped and gives its first Z
+    ("no_type_geometry_z", "nodes", None, [1, 2, 3], ID, [1, 2], {**ID, "ext:elevation": 3}),
+    ("unknown_type_3d", "points", "Curve", [[1.5, 2.5, 3.5], [4, 5, 6]], ID,
+     [[1.5, 2.5], [4, 5]], {**ID, "ext:elevation": 3.5}),
+    ("type_depth_mismatch", "nodes", "Point", [[1, 2, 3]], ID, [[1, 2]], {**ID, "ext:elevation": 3}),
+    ("number_geometry_type_z", "nodes", 5, [1, 2, 3], ID, [1, 2], {**ID, "ext:elevation": 3}),
+    # coordinates that are no array pass through, a string kept a string
+    ("string_coordinates", "nodes", "Point", "[1,2,3]", ID, "[1,2,3]", ID),
+    ("text_coordinates", "edges", "LineString", "abc", ID, "abc", ID),
+    ("object_coordinates", "points", "Point", {"a": [1, 2, 3]}, ID, {"a": [1, 2, 3]}, ID),
 ]
 
 
@@ -166,6 +179,31 @@ def test_missing_feature_type_is_written_as_feature(spark):
     df = spark.createDataFrame([("edges", json.dumps(feature))], "kind string, feature_raw string")
     result = json.loads(G.transform_features(df).first()["feature"])
     assert result == {"type": "Feature", **FJ.process_geometry_elevation(feature, "edges")}
+
+
+# (name, coordinates in, coordinates text out): where a string, an object
+# or an array inside a leaf could make the text rule and the reference's
+# recursion differ, the coordinates pass through as they were (a
+# non-finite number written as a string, as Jackson writes it), where the
+# reference strips the leaves around them.
+DEPARTURES = [
+    ("string_in_coordinates", [[1, 2, 3], "[1,2,3]"], '[[1,2,3],"[1,2,3]"]'),
+    ("object_in_coordinates", [[1, 2, 3], {"a": [1, 2, 3]}], '[[1,2,3],{"a":[1,2,3]}]'),
+    ("number_then_array", [1, 2, [3]], "[1,2,[3]]"),
+    ("leaf_holding_a_leaf", [1, 2, [3, 4, 5]], "[1,2,[3,4,5]]"),
+    ("non_finite_z", [1, 2, float("nan")], '[1,2,"NaN"]'),
+    ("non_finite_x", [[float("inf"), 1, 2], [3, 4, 5]], '[["Infinity",1,2],[3,4,5]]'),
+]
+
+
+@pytest.mark.parametrize("name,coords,want", DEPARTURES, ids=[d[0] for d in DEPARTURES])
+def test_opaque_coordinates_pass_through(spark, name, coords, want):
+    feature = _feature("Point", coords)
+    df = spark.createDataFrame([("nodes", json.dumps(feature))], "kind string, feature_raw string")
+    text = G.transform_features(df).first()["feature"]
+    assert f'"coordinates": {want}}}' in text
+    assert json.loads(text)["properties"] == ID
+    assert json.loads(text) != FJ.process_geometry_elevation(copy.deepcopy(feature), "nodes")
 
 
 @pytest.mark.parametrize("path", ["jvm", "udf"])

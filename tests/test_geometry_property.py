@@ -36,6 +36,15 @@ geometry_strategies = {
     ),
 }
 
+#: Nesting depth of ``coordinates`` per GeoJSON geometry type.
+DEPTHS = {"Point": 1, "MultiPoint": 2, "LineString": 2, "MultiLineString": 3, "Polygon": 3,
+          "MultiPolygon": 4}
+
+
+def _depth(c) -> int:
+    return 1 + _depth(c[0]) if isinstance(c[0], list) else 1
+
+
 kinds = st.sampled_from(["nodes", "points", "edges", "lines", "polygons", "zones", "extension"])
 gtypes = st.sampled_from(sorted(geometry_strategies))
 
@@ -129,6 +138,13 @@ def test_jvm_and_udf_paths_agree_on_random_batch(spark):
         shape = rng.random()
         if shape < 0.9:
             feature["geometry"] = {"type": gtype, "coordinates": rand_coords(gtype)}
+            # the leaf rule reads no type: none, or one of another depth
+            if shape < 0.05:
+                del feature["geometry"]["type"]
+            elif shape < 0.1:
+                feature["geometry"]["type"] = rng.choice(
+                    [t for t in gtypes_l if DEPTHS[t] != DEPTHS[gtype]] + ["Curve"]
+                )
         elif shape < 0.95:
             feature["geometry"] = {"type": gtype, "coordinates": None}
         props = rand_props(i)
@@ -139,6 +155,9 @@ def test_jvm_and_udf_paths_agree_on_random_batch(spark):
     assert sum("properties" not in f for f in features) > 50
     assert sum("properties" in f and f["properties"] is None for f in features) > 50
     assert sum("geometry" not in f for f in features) > 10
+    geometries = [f["geometry"] for f in features if f.get("geometry", {}).get("coordinates")]
+    assert sum("type" not in g for g in geometries) > 20
+    assert sum("type" in g and DEPTHS.get(g["type"]) != _depth(g["coordinates"]) for g in geometries) > 20
     assert sum(not isinstance(f.get("properties", {}), (dict, type(None))) for f in features) > 50
 
     df = spark.createDataFrame(rows, "i int, kind string, feature_raw string")

@@ -688,10 +688,11 @@ def test_escaped_ids_land_where_spark_puts_them(spark, tmp_path, commit_mode):
 
 
 def test_transform_parses_each_feature_once(spark):
-    """The feature is decomposed by one parse, and the first Z and the
-    elevation-key count are projected once, so the optimized transform
-    plan holds at most 18 ``from_json`` nodes (84 when each was inlined
-    at every use)."""
+    """The feature is decomposed by one parse and the coordinates are
+    transformed as text, so the optimized transform plan holds at most 4
+    ``from_json`` nodes: the feature, the ``properties`` member's type and
+    value, and the elevation-key count (84 when each parse was inlined at
+    every use, 17 with a typed coordinates parse per geometry type)."""
     from tdei_extract_load_service_spark.plans.load_dataset import transform_features
 
     feature = json.dumps(NODES["features"][0])
@@ -700,7 +701,7 @@ def test_transform_parses_each_feature_once(spark):
     df = spark.createDataFrame([("nodes", feature)], "kind string, feature_raw string")
     out = transform_features(df)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("from_json(") <= 18, plan
+    assert plan.count("from_json(") <= 4, plan
     assert json.loads(out.first()["feature"])["properties"] == {"_id": "n1", "ext:elevation": 123.45}
 
 
