@@ -31,8 +31,8 @@ bounded by ``spark.driver.maxResultSize`` (SCALE.md).
 
 Atomicity: the reference wraps all inserts in one Postgres transaction
 (O18). The default here is a key-scoped partition swap per sink table
-(``sinks.writers.overwrite_by_key``: stage, then delete-and-rename each
-dataset partition), and ``commit_mode="manifest"`` publishes every table
+(``sinks.writers.overwrite_by_key``: stage, then delete-and-rename the
+dataset's partition), and ``commit_mode="manifest"`` publishes every table
 with one pointer swap. Stage timers mirror the reference's
 ``console.time`` instrumentation (:301,:322,:327,:336); ``transform``
 times plan construction only, since its execution happens inside the
@@ -148,15 +148,12 @@ def ext_file_name(entry: str) -> str:
     return m.group(1) if m else ""
 
 
-class NoGeoJsonEntriesError(Exception):
-    """Archive contained zero .geojson entries
-    (extract-load-service.ts:319-321)."""
-
-
-class MalformedGeoJsonError(Exception):
-    """A .geojson entry failed to parse — the reference normalizes JSON
-    syntax errors into a friendly pipeline failure (geoJsonPipeError,
-    extract-load-service.ts:41-49)."""
+def _invalid_geojson(detail: str) -> InvalidArchiveError:
+    """The load's refusal of an archive without entries
+    (extract-load-service.ts:319-321) or with an entry that does not parse
+    — the reference normalizes JSON syntax errors into a friendly pipeline
+    failure (geoJsonPipeError, extract-load-service.ts:41-49)."""
+    return InvalidArchiveError(f"Invalid GeoJSON content: {detail[:200]}")
 
 
 @dataclass
@@ -274,12 +271,12 @@ def load_dataset(
             # no plan and runs no job
             table, files = zip_fanout(archive_path)
             if not files:
-                raise NoGeoJsonEntriesError(
+                raise _invalid_geojson(
                     f"No GeoJSON files found in the archive for dataset {tdei_dataset_id}"
                 )
             rejected = min((f.entry for f in files if f.meta is None), default=None)
             if rejected is not None:
-                raise MalformedGeoJsonError(
+                raise _invalid_geojson(
                     f"Unable to parse GeoJSON: invalid JSON in entry {rejected}"
                 )
             ext_files = [f for f in files if f.kind == "extension"]
@@ -322,7 +319,7 @@ def load_dataset(
             rows = features.select("kind", "entry", "feature", "bad").toArrow()
             bad = pc.filter(rows["entry"], rows["bad"]).to_pylist()
             if bad:
-                raise MalformedGeoJsonError(
+                raise _invalid_geojson(
                     f"Unable to parse GeoJSON: invalid JSON in entry {min(bad)}"
                 )
             # per kind: features, the distinct entries that hold any and
@@ -407,22 +404,15 @@ def load_dataset(
             timings={k: round(v, 4) for k, v in timings.items()},
         )
     except Exception as exc:  # noqa: BLE001 — O21: normalize into a failure publish
-        from tdei_extract_load_service_spark.errors import DatabaseError, classify_db_error
-
-        exc = classify_db_error(exc)
+        # the load's own refusals carry their response text, and any other
+        # failure's text passes through, except that the features collect
+        # bounded by spark.driver.maxResultSize reports its cause line, not
+        # the JVM stack that carries it
         message = str(exc)
-        if isinstance(exc, DatabaseError):
-            # typed integrity failure (23505/23503) — reference
-            # data-source.ts:96-107 surfaces the class name + short message
-            message = f"{type(exc).__name__}: {message}"
-        elif isinstance(exc, InvalidArchiveError):
-            pass  # already the short normalized message
-        elif too_large := _RESULT_SIZE_ERROR.search(message):
-            # the features collect is bounded by spark.driver.maxResultSize:
-            # its cause line, not the JVM stack that carries it
+        if not isinstance(exc, InvalidArchiveError) and (
+            too_large := _RESULT_SIZE_ERROR.search(message)
+        ):
             message = f"Archive too large to load: {too_large.group(0)}"
-        elif "JSON" in message or "Malformed" in message:
-            message = f"Invalid GeoJSON content: {message[:200]}"
         return LoadResult(
             success=False,
             message=message,

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 
 from tdei_extract_load_service_spark.sinks.manifest import (
@@ -57,22 +58,11 @@ def compact_table(
     cur = read_table(spark, root, table, dataset_id=dataset_id)
     # Row count from the parquet footers (driver-side metadata read, the
     # session.spread footer-probe discipline) instead of a count() job:
-    # the count previously cost a full scheduled scan of the fragmented
-    # table just to size the rewrite — the rewrite then scanned it again
-    # (guide §1/§5: fold driver round-trips). Footer num_rows is the
-    # bit-exact committed count (parquet writers record it per file). At
-    # warehouse scale footer reads are O(files) driver-side — the same
-    # metadata a count() job's tasks would each open anyway, minus the
-    # job; engines that outgrow that store counts in the manifest.
-    try:
-        import pyarrow.parquet as pq
-
-        rows = sum(
-            pq.ParquetFile(os.path.join(root, reldir, f)).metadata.num_rows
-            for f in files
-        )
-    except Exception:  # pragma: no cover - pyarrow is baked in
-        rows = cur.count()
+    # footer num_rows is the bit-exact committed count, and the rewrite
+    # is the only scan of the fragmented table.
+    rows = sum(
+        pq.ParquetFile(os.path.join(root, reldir, f)).metadata.num_rows for f in files
+    )
     n_files = max(1, -(-rows // target_rows_per_file))
     with ManifestTxn(root) as txn:
         new_dir = txn.write(table, cur.repartition(n_files), str(dataset_id))

@@ -5,10 +5,9 @@ extension-file registry, the dataset metadata row, and the stats table —
 inside ONE Postgres transaction (O18, ``src/database/data-source.ts:33-65``):
 a concurrent reader sees either the complete old state or the complete new
 state of every table. The dependency-free parquet path could not say that:
-``overwrite_by_key`` commits per partition directory and
-``staged_swap_write`` has a two-rename window, so a reader racing a load
-could observe table A already swapped while table B still held the old
-rows.
+``overwrite_by_key`` commits per partition directory, so a reader racing
+a load could observe table A already swapped while table B still held
+the old rows.
 
 This module closes that gap with the classic manifest-pointer design
 (the mechanism behind Delta/Iceberg snapshots, reduced to one JSON file):
@@ -38,11 +37,10 @@ pointer is untouched) and re-raises.
 
 A load writes every table from the driver: each (table, dataset) version
 is staged as Arrow files straight into its version directory (``write``
-with a ``pyarrow.Table``, no Spark job); other writers stage a Spark
-frame the same way in one job. Both stage through
-``sinks.writers.write_frame``, and the version directories keep the
-``data/<table>/<version>`` layout that ``gc_orphans`` and
-``read_table_at`` walk.
+with a ``pyarrow.Table``, through ``sinks.writers.write_arrow``, no Spark
+job); other writers stage a Spark frame the same way in one job. The
+version directories keep the ``data/<table>/<version>`` layout that
+``gc_orphans`` and ``read_table_at`` walk.
 
 The transaction itself holds no data: every write lands in a fresh
 directory before the pointer swap makes it visible, the pointer swap is
@@ -64,7 +62,7 @@ import uuid
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
-from tdei_extract_load_service_spark.sinks.writers import _path_lock, write_frame
+from tdei_extract_load_service_spark.sinks.writers import _arrow_schema, _path_lock, write_arrow
 
 MANIFEST_NAME = "_MANIFEST.json"
 LOCK_NAME = "_MANIFEST.lock"
@@ -138,6 +136,16 @@ def _safe_component(value: str) -> str:
     return safe
 
 
+def _table_dirs(m: dict, table: str, dataset_id: str | None) -> list[str]:
+    """The directories manifest ``m`` maps ``table`` to: every dataset's,
+    or only ``dataset_id``'s."""
+    table_map = m["tables"].get(table, {})
+    if dataset_id is None:
+        return sorted(table_map.values())
+    one = table_map.get(str(dataset_id))
+    return [one] if one is not None else []
+
+
 def read_table(
     spark: SparkSession,
     root: str,
@@ -158,16 +166,11 @@ def read_table(
     win ``tdei_dataset_id=...`` partition filters give the partition
     layout)."""
     m = manifest if manifest is not None else read_manifest(root)
-    table_map = m["tables"].get(table, {})
-    if dataset_id is not None:
-        one = table_map.get(str(dataset_id))
-        reldirs = [one] if one is not None else []
-    else:
-        reldirs = sorted(table_map.values())
+    reldirs = _table_dirs(m, table, dataset_id)
     if not reldirs:
         if schema is None:
             raise ValueError(
-                f"table {table!r} has no committed data and no schema was given"
+                f"table {table!r} has no data at txn {m['txn']} and no schema was given"
             )
         return spark.createDataFrame([], schema)
     paths = [os.path.join(root, d) for d in reldirs]
@@ -241,7 +244,10 @@ class ManifestTxn:
         ``schema`` (no Spark job). Returns the staged directory."""
         reldir = self._version_dir(table, dataset_id)
         path = os.path.join(self.root, reldir)
-        write_frame(df, path, schema)
+        if isinstance(df, pa.Table):
+            write_arrow(df, _arrow_schema(schema), path)
+        else:
+            df.write.mode("overwrite").parquet(path)
         self._writes.append((table, str(dataset_id), reldir))
         return path
 
@@ -427,19 +433,10 @@ def read_table_at(
             f"no history snapshot for txn {txn} in {root!r} "
             f"(available: {list_versions(root)})"
         ) from None
-    table_map = m["tables"].get(table, {})
-    if dataset_id is not None:
-        one = table_map.get(str(dataset_id))
-        reldirs = [one] if one is not None else []
-    else:
-        reldirs = sorted(table_map.values())
-    if not reldirs:
-        if schema is None:
-            raise ValueError(
-                f"table {table!r} had no data at txn {txn} and no schema was given"
-            )
-        return spark.createDataFrame([], schema)
-    missing = [d for d in reldirs if not os.path.isdir(os.path.join(root, d))]
+    missing = [
+        d for d in _table_dirs(m, table, dataset_id)
+        if not os.path.isdir(os.path.join(root, d))
+    ]
     if missing:
         raise ValueError(
             f"version {txn} of table {table!r} has expired: {len(missing)} "
@@ -447,11 +444,7 @@ def read_table_at(
             "raise keep_commits on the writing transactions to retain "
             "deeper history"
         )
-    paths = [os.path.join(root, d) for d in reldirs]
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(*paths)
+    return read_table(spark, root, table, schema, manifest=m, dataset_id=dataset_id)
 
 
 def write_audit_publish(

@@ -1,22 +1,17 @@
-"""Sinks: batched writes, key-scoped overwrite, staging-and-swap.
+"""Sinks: batched writes, key-scoped overwrite.
 
 Replaces the reference's seven near-identical 38-line bulk-insert methods
 (O12, extract-load-service.ts:357-844) with ONE parameterized writer, and
 its delete-then-reload-inside-a-transaction pattern (O17/O18,
-:290-295 + data-source.ts:33-65) with two Spark-native atomicity patterns:
+:290-295 + data-source.ts:33-65) with a key-scoped partition swap:
 
-- ``overwrite_by_key``: key-scoped partition overwrite — rewriting exactly
-  the partitions present in the incoming frame (per-dataset replace) and
-  leaving all other datasets' partitions untouched. The frame lands in a
-  private staging directory first (one Spark job for a Spark frame; for a
-  driver-side Arrow table, Arrow files written with no job), then each
-  staged partition directory is swapped in: delete the live partition,
-  rename the staged one — the step Spark's dynamic partition overwrite
-  commits with. A dataset load writes every sink table from the driver,
-  so its one Spark job is the collect of its transformed features.
-- ``staged_swap_write``: write everything to a staging location, then one
-  atomic rename into place — single-table replace with a two-rename
-  visibility window on existing targets.
+- ``overwrite_by_key``: rewrites exactly one dataset's partition and
+  leaves all other datasets' partitions untouched. A dataset load writes
+  every sink table from the driver, so the rows are a driver-side Arrow
+  table of one ``tdei_dataset_id``: ``write_arrow`` lands them in a
+  private staging directory (no Spark job), then that one partition
+  directory is swapped in — delete the live partition, rename the staged
+  one — the step Spark's dynamic partition overwrite commits with.
 - For a single commit point covering SEVERAL sinks at once (the
   reference's one-transaction load), use ``sinks.manifest.ManifestTxn``:
   versioned directories + one atomic pointer-file swap.
@@ -25,9 +20,10 @@ Every partition directory the driver names comes from ``partition_dir``,
 the escaped name Spark's writer gives it, so an id holding ``/`` or
 ``..`` can never address a path outside its table.
 
-JDBC writing (the reference's actual sink) is supported but not exercised
-in tests (no Postgres in the container); the 1,000-row batch default is
-carried from BULK_INSERT_BATCH_SIZE (environment.ts:26).
+JDBC writing (the reference's actual sink, ``write_batched`` and
+``jdbc_staged_swap``) is tested against embedded Derby only (no Postgres
+in the container); the 1,000-row batch default is carried from
+BULK_INSERT_BATCH_SIZE (environment.ts:26).
 """
 
 from __future__ import annotations
@@ -63,45 +59,34 @@ def _path_lock(path: str) -> threading.Lock:
 
 def write_batched(
     df: DataFrame,
-    path: str | None = None,
-    jdbc_url: str | None = None,
-    table: str | None = None,
+    jdbc_url: str,
+    table: str,
     batch_size: int = DEFAULT_BATCH_SIZE,
-    partition_by: tuple[str, ...] = (),
     mode: str = "append",
     jdbc_options: dict[str, str] | None = None,
 ) -> None:
-    """The single parameterized writer behind all seven per-kind sinks.
-
-    Parquet path: columnar files, optionally partitioned (partition pruning
-    on read). JDBC path: multi-row batched INSERTs; parallelism = number of
-    DataFrame partitions, so callers bound DB connections by coalescing
-    (the reference bounds its pool at 20, environment.ts:21 — on Spark,
+    """The single parameterized JDBC writer behind all seven per-kind
+    sinks: multi-row batched INSERTs; parallelism = number of DataFrame
+    partitions, so callers bound DB connections by coalescing (the
+    reference bounds its pool at 20, environment.ts:21 — on Spark,
     ``df.coalesce(n)`` is that knob).
     """
-    if jdbc_url is not None:
-        if table is None:
-            raise ValueError("table is required for the JDBC sink")
-        writer = (
-            df.write.format("jdbc")
-            .option("url", jdbc_url)
-            .option("dbtable", table)
-            .option("batchsize", str(batch_size))
-        )
-        for k, v in (jdbc_options or {}).items():
-            writer = writer.option(k, v)
-        try:
-            writer.mode(mode).save()
-        except Exception as exc:  # noqa: BLE001 — normalize integrity codes (O21)
-            raise classify_db_error(exc) from exc
-        return
-    if path is None:
-        raise ValueError("either path or jdbc_url must be given")
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    writer = (
+        df.write.format("jdbc")
+        .option("url", jdbc_url)
+        .option("dbtable", table)
+        .option("batchsize", str(batch_size))
+    )
+    for k, v in (jdbc_options or {}).items():
+        writer = writer.option(k, v)
+    try:
+        writer.mode(mode).save()
+    except Exception as exc:  # noqa: BLE001 — normalize integrity codes (O21)
+        raise classify_db_error(exc) from exc
 
+
+#: The one key every sink table is partitioned and replaced by.
+DATASET_KEY = "tdei_dataset_id"
 
 #: Characters Spark's writer escapes in a partition directory name as
 #: ``%XX`` (``ExternalCatalogUtils.escapePathName``): control characters,
@@ -116,15 +101,15 @@ def _escape_path_name(name: str) -> str:
     return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPES else c for c in name)
 
 
-def partition_dir(key_col: str, value) -> str:
-    """The directory name ``partitionBy(key_col)`` gives ``value`` —
-    Spark's ``ExternalCatalogUtils.getPartitionPathString``: both sides
+def partition_dir(value) -> str:
+    """The directory name ``partitionBy(DATASET_KEY)`` gives ``value`` —
+    Spark's ``ExternalCatalogUtils.getPartitionPathString``: the value
     ``%XX``-escaped, a null or empty value mapped to the default
     partition. A path joined from it stays inside its table whatever the
     value holds (``/`` and ``..`` become plain characters of one name)."""
     text = "" if value is None else str(value)
     escaped = _escape_path_name(text) if text else _DEFAULT_PARTITION
-    return f"{_escape_path_name(key_col)}={escaped}"
+    return f"{DATASET_KEY}={escaped}"
 
 
 @functools.lru_cache(maxsize=64)  # bounded, session-free: a DDL -> Arrow schema
@@ -141,121 +126,62 @@ def _arrow_schema(schema: str):
 ROWS_PER_FILE = 250_000
 
 
-def write_arrow(
-    table: pa.Table, schema: str, directory: str, partition_cols: tuple[str, ...] = ()
-) -> None:
-    """Write a driver-side Arrow table as parquet without a Spark job:
-    one leaf per combination of ``partition_cols`` values, in the
-    directories a Spark ``partitionBy`` write makes, each leaf in
-    ``max(1, rows // ROWS_PER_FILE)`` files. Columns are typed by the
-    Spark DDL ``schema`` (an all-null column keeps its declared type),
-    partition columns live only in the path, and no Arrow schema
-    metadata is stored (Spark reads the parquet types back as
-    ``schema``; the footer stays as small as a Spark-written one)."""
-    import pyarrow.compute as pc
+def write_arrow(table: pa.Table, schema: pa.Schema, directory: str) -> None:
+    """Write a driver-side Arrow table's ``schema`` columns into
+    ``directory`` as parquet without a Spark job, in
+    ``max(1, rows // ROWS_PER_FILE)`` files. Columns are cast to
+    ``schema`` (an all-null column keeps its declared type), and no Arrow
+    schema metadata is stored (Spark reads the parquet types back as the
+    Spark schema; the footer stays as small as a Spark-written one)."""
     import pyarrow.parquet as pq
 
-    arrow = pa.schema([f for f in _arrow_schema(schema) if f.name not in partition_cols])
-    if partition_cols:
-        keys = table.select(partition_cols).group_by(list(partition_cols)).aggregate([])
-        leaves = [
-            (
-                key,
-                table.filter(
-                    functools.reduce(
-                        pc.and_,
-                        [pc.is_null(table[c]) if v is None else pc.equal(table[c], v)
-                         for c, v in key.items()],
-                    )
-                ),
-            )
-            for key in keys.to_pylist()
-        ]
-    else:
-        leaves = [({}, table)]
-    for key, rows in leaves:
-        leaf = os.path.join(directory, *(partition_dir(c, v) for c, v in key.items()))
-        os.makedirs(leaf, exist_ok=True)
-        rows = rows.select(arrow.names).cast(arrow)
-        n_files = max(1, rows.num_rows // ROWS_PER_FILE)
-        bounds = [i * rows.num_rows // n_files for i in range(n_files + 1)]
-        for lo, hi in zip(bounds, bounds[1:]):
-            pq.write_table(
-                rows.slice(lo, hi - lo),
-                os.path.join(leaf, f"part-00000-{uuid.uuid4()}.snappy.parquet"),
-                store_schema=False,
-            )
+    os.makedirs(directory, exist_ok=True)
+    rows = table.select(schema.names).cast(schema)
+    n_files = max(1, rows.num_rows // ROWS_PER_FILE)
+    bounds = [i * rows.num_rows // n_files for i in range(n_files + 1)]
+    for lo, hi in zip(bounds, bounds[1:]):
+        pq.write_table(
+            rows.slice(lo, hi - lo),
+            os.path.join(directory, f"part-00000-{uuid.uuid4()}.snappy.parquet"),
+            store_schema=False,
+        )
 
 
-def write_frame(
-    df: DataFrame | pa.Table,
-    path: str,
-    schema: str | None = None,
-    partition_cols: tuple[str, ...] = (),
-) -> None:
-    """Stage ``df`` at ``path``, partitioned by ``partition_cols``: a
-    Spark frame in one distributed parquet write, a driver-side Arrow
-    table by ``write_arrow`` typed by the DDL ``schema`` (no Spark job).
-    The one staging body behind ``overwrite_by_key`` and the manifest
-    transaction's writes."""
-    if isinstance(df, pa.Table):
-        write_arrow(df, schema, path, partition_cols)
-    else:
-        writer = df.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(path)
-
-
-def _swap_partitions(staged: str, table_path: str, partition_cols: tuple[str, ...]) -> None:
-    """Move every leaf partition directory of ``staged`` into the live
-    table: delete the live partition, then rename the staged one in."""
-    leaves = [""]
-    for col in partition_cols:
-        prefix = f"{_escape_path_name(col)}="
-        leaves = [
-            os.path.join(rel, name)
-            for rel in leaves
-            for name in sorted(os.listdir(os.path.join(staged, rel)))
-            if name.startswith(prefix)
-        ]
-    with _path_lock(table_path):
-        for rel in leaves:
-            live = os.path.join(table_path, rel)
-            if os.path.exists(live):
-                shutil.rmtree(live)
-            os.makedirs(os.path.dirname(live), exist_ok=True)
-            os.rename(os.path.join(staged, rel), live)
-
-
-def overwrite_by_key(
-    df: DataFrame | pa.Table,
-    path: str,
-    key_col: str = "tdei_dataset_id",
-    extra_partition_cols: tuple[str, ...] = (),
-    schema: str | None = None,
-) -> None:
-    """Idempotent delete-then-reload keyed on ``key_col`` (O17,
+def overwrite_by_key(rows: pa.Table, path: str, schema: str) -> None:
+    """Idempotent delete-then-reload of one dataset (O17,
     ``delete_dataset_records_by_id`` extract-load-service.ts:290-295).
 
-    Only the partitions present in ``df`` are replaced — a re-run of the
-    same dataset replaces exactly that dataset's directory, other
-    datasets are untouched, and readers see the old data until each
-    partition's swap. ``df`` is written to ``path/.load-<uuid>`` first:
-    a Spark frame in one job, an Arrow table (rows the driver holds,
-    typed by the DDL ``schema``) by ``write_arrow`` with no job. A failed
-    write leaves every live partition as it was.
+    ``rows`` are driver-held rows of ONE ``DATASET_KEY`` value, typed by
+    the DDL ``schema``. They are written by ``write_arrow`` (no Spark
+    job) to that value's partition directory under ``path/.load-<uuid>``,
+    the key living only in the directory name as in a Spark
+    ``partitionBy`` write. Then that one directory is swapped in under
+    the table's lock: delete the live partition, rename the staged one.
+    A re-run replaces exactly that dataset's directory, other datasets
+    are untouched, readers see the old data until the swap, and a failed
+    write leaves the live partition as it was.
     """
-    partition_cols = (key_col, *extra_partition_cols)
+    import pyarrow.compute as pc
+
+    (dataset_id,) = pc.unique(rows[DATASET_KEY]).to_pylist()  # exactly one key
+    leaf = partition_dir(dataset_id)
     staging = os.path.join(path, f".load-{uuid.uuid4().hex}")
     try:
-        write_frame(df, staging, schema, partition_cols)
-        _swap_partitions(staging, path, partition_cols)
+        write_arrow(
+            rows,
+            pa.schema([f for f in _arrow_schema(schema) if f.name != DATASET_KEY]),
+            os.path.join(staging, leaf),
+        )
+        with _path_lock(path):
+            live = os.path.join(path, leaf)
+            if os.path.exists(live):
+                shutil.rmtree(live)
+            os.rename(os.path.join(staging, leaf), live)
     finally:
         shutil.rmtree(staging, ignore_errors=True)
 
 
-def _replace_where_predicate(key_col: str, keys: list) -> str:
+def _replace_where_predicate(keys: list) -> str:
     """Render the ``replaceWhere`` predicate for a keyed overwrite.
 
     Strings are single-quoted with embedded quotes doubled (the one escape
@@ -272,7 +198,7 @@ def _replace_where_predicate(key_col: str, keys: list) -> str:
             return repr(k)
         return "'" + str(k).replace("'", "''") + "'"
 
-    return f"{key_col} IN ({', '.join(render(k) for k in keys)})"
+    return f"{DATASET_KEY} IN ({', '.join(render(k) for k in keys)})"
 
 
 #: ``overwrite_by_key_delta`` derives its replaceWhere keys from the frame
@@ -284,16 +210,16 @@ def _replace_where_predicate(key_col: str, keys: list) -> str:
 MAX_REPLACE_KEYS = 10_000
 
 
-def _collect_replace_keys(df: DataFrame, key_col: str, max_keys: int) -> list:
+def _collect_replace_keys(df: DataFrame, max_keys: int) -> list:
     """Distinct key values of ``df``, bounded collect (pure helper so the
     bound is testable without the Delta package): reads at most
     ``max_keys + 1`` rows and raises beyond the bound instead of hauling
     an unbounded key set onto the driver."""
-    rows = df.select(key_col).distinct().limit(max_keys + 1).collect()
+    rows = df.select(DATASET_KEY).distinct().limit(max_keys + 1).collect()
     if len(rows) > max_keys:
         raise ValueError(
             f"overwrite_by_key_delta: more than {max_keys} distinct "
-            f"{key_col!r} values — pass keys= explicitly (or raise "
+            f"{DATASET_KEY!r} values — pass keys= explicitly (or raise "
             "max_keys) rather than deriving a predicate this large from "
             "a full distinct scan"
         )
@@ -303,16 +229,14 @@ def _collect_replace_keys(df: DataFrame, key_col: str, max_keys: int) -> list:
 def overwrite_by_key_delta(
     df: DataFrame,
     path: str,
-    key_col: str = "tdei_dataset_id",
     keys: list | None = None,
-    extra_partition_cols: tuple[str, ...] = (),
     max_keys: int = MAX_REPLACE_KEYS,
 ) -> None:
     """``overwrite_by_key`` with true single-commit-point semantics: Delta's
     ``replaceWhere`` replaces the key's rows and commits one transaction-log
     entry, so concurrent readers see either the old or the new version —
-    never the missing-directory window of the two-rename parquet path
-    (``staged_swap_write`` docstring).
+    never the window between ``overwrite_by_key``'s partition delete and
+    rename.
 
     Optional dependency: requires the ``delta-spark`` package and a session
     with the Delta catalog extensions; raises ``NotImplementedError`` with
@@ -335,16 +259,16 @@ def overwrite_by_key_delta(
             "spark.sql.extensions=io.delta.sql.DeltaSparkSessionExtension"
         ) from exc
     if keys is None:
-        keys = _collect_replace_keys(df, key_col, max_keys)
+        keys = _collect_replace_keys(df, max_keys)
         if not keys:
             return  # nothing to replace, nothing to write
-    predicate = _replace_where_predicate(key_col, keys)
+    predicate = _replace_where_predicate(keys)
     with _path_lock(path):
         (
             df.write.format("delta")
             .mode("overwrite")
             .option("replaceWhere", predicate)
-            .partitionBy(key_col, *extra_partition_cols)
+            .partitionBy(DATASET_KEY)
             .save(path)
         )
 
@@ -492,7 +416,7 @@ def _merge_move(src: str, dst: str) -> None:
     os.rmdir(src)
 
 
-def delete_by_key(path: str, key_value: str, key_col: str = "tdei_dataset_id") -> None:
+def delete_by_key(path: str, key_value: str) -> None:
     """Remove one key's partition directory from a sink — the engine's form
     of the pre-load ``delete_dataset_records_by_id`` stored procedure (O17,
     extract-load-service.ts:290-295), which wipes ALL prior rows of the
@@ -504,87 +428,7 @@ def delete_by_key(path: str, key_value: str, key_col: str = "tdei_dataset_id") -
     catalog tables use ``DELETE WHERE`` / Delta ``replaceWhere`` — same
     contract.
     """
-    part_dir = os.path.join(path, partition_dir(key_col, key_value))
+    part_dir = os.path.join(path, partition_dir(key_value))
     with _path_lock(path):
         if os.path.exists(part_dir):
             shutil.rmtree(part_dir)
-
-
-def compact_table(
-    spark,
-    path: str,
-    target_file_bytes: int = 128 << 20,
-    partition_by: tuple[str, ...] = (),
-) -> int:
-    """Small-files compaction for long-lived sinks. Incremental loads
-    write one file per task per job; thousands of loads leave a table in
-    KB-sized fragments whose per-file open/footer costs dominate scans.
-    Rewrites the table at ~``target_file_bytes`` per file (the
-    scan-efficient size; 128 MB default matches HDFS/object-store sweet
-    spots) with staged-swap visibility — readers see the old layout until
-    the swap. Returns the new file count.
-
-    The read streams straight into the staged write (one pass, no
-    collect); partitioned tables re-cluster within ``partition_by`` so
-    partition pruning is preserved.
-    """
-    import math
-
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        total += sum(
-            os.path.getsize(os.path.join(root, f))
-            for f in files
-            if f.endswith(".parquet")
-        )
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    out = (
-        df.repartition(n_files, *partition_by) if partition_by else df.repartition(n_files)
-    )
-    staged_swap_write(out, path, partition_by=partition_by)
-    return n_files
-
-
-def staged_swap_write(
-    df: DataFrame,
-    final_path: str,
-    partition_by: tuple[str, ...] = (),
-) -> None:
-    """Transaction-boundary analogue (O18, data-source.ts:33-65): write the
-    full output to a staging directory, then rename into place. Any
-    failure leaves ``final_path`` with valid data (rollback = delete
-    staging; a failure between the two renames of the existing-target path
-    restores the displaced previous output).
-
-    Atomicity note: each rename is atomic on HDFS/local FS, but replacing
-    an EXISTING target takes two renames (old out, staging in) — readers
-    racing that window can observe a missing ``final_path``. When true
-    single-commit-point semantics over concurrent readers are required,
-    use ``sinks.manifest.ManifestTxn`` (dependency-free pointer-swap
-    commit, also multi-table) or a catalog-backed sink (Delta/Iceberg
-    ``replaceWhere``); this function is the simplest form whose
-    crash-recovery guarantee is "final_path, if present, is always a
-    complete dataset".
-    """
-    staging = f"{final_path}.staging-{uuid.uuid4().hex}"
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    old: str | None = None
-    try:
-        writer.parquet(staging)
-        if os.path.exists(final_path):
-            old = f"{final_path}.old-{uuid.uuid4().hex}"
-            os.rename(final_path, old)
-            os.rename(staging, final_path)
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            os.rename(staging, final_path)
-    except Exception:
-        # roll back: if the previous output was displaced but the new one
-        # did not land, put the previous output back
-        if old is not None and os.path.exists(old) and not os.path.exists(final_path):
-            os.rename(old, final_path)
-        shutil.rmtree(staging, ignore_errors=True)
-        raise

@@ -76,9 +76,9 @@ class EntryFacts(NamedTuple):
 
 
 class InvalidArchiveError(Exception):
-    """An archive or entry the fan-out cannot decode. The message is the
-    load's normalized failure message (O21): short, and free of server
-    paths."""
+    """An upload the load refuses: an archive or entry the fan-out cannot
+    decode, no entries, or an entry that does not parse. The message is
+    the load's response text (O21): short, and free of server paths."""
 
 
 def archive_files(path: str) -> tuple[pafs.FileSystem, list[str]]:

@@ -45,6 +45,13 @@ REQUEST_SCHEMA = (
     "tdei_dataset_id string, user_id string>"
 )
 
+#: The one rule both sources decode requests by: a payload that does not
+#: parse reads as an all-null record, dropped on the required
+#: ``messageId`` (the reference nacks unparseable messages,
+#: queue-service.ts:44-52), so it neither publishes a response nor shares
+#: another junk record's response name.
+IS_REQUEST = "messageId IS NOT NULL"
+
 #: Loads in flight at once, per consumer (maxConcurrentMessages,
 #: environment.ts:12): the size of each micro-batch's pool.
 MAX_CONCURRENT_MESSAGES = 2
@@ -126,7 +133,8 @@ def request_stream_from_files(
     spark: SparkSession, request_dir: str, max_messages_per_trigger: int | None = None
 ) -> DataFrame:
     """File-directory request source — the dependency-free broker stand-in.
-    One JSON file per message, carrying its ``ARRIVAL_KEY``. Intake is
+    One JSON file per message, carrying its ``ARRIVAL_KEY``; a file that
+    does not parse as a request is dropped (``IS_REQUEST``). Intake is
     every file that has arrived, or at most ``max_messages_per_trigger``
     (``maxFilesPerTrigger``, oldest first) per micro-batch."""
     reader = spark.readStream.schema(REQUEST_SCHEMA)
@@ -136,7 +144,7 @@ def request_stream_from_files(
         F.col("_metadata.file_modification_time").alias("mtime"),
         F.col("_metadata.file_path").alias("path"),
     )
-    return reader.json(request_dir).select("*", arrival.alias(ARRIVAL_KEY))
+    return reader.json(request_dir).select("*", arrival.alias(ARRIVAL_KEY)).where(IS_REQUEST)
 
 
 def decode_broker_requests(raw: DataFrame) -> DataFrame:
@@ -146,13 +154,11 @@ def decode_broker_requests(raw: DataFrame) -> DataFrame:
     Split from the source builder so the payload contract is testable
     without a broker on the classpath: the same expression must decode a
     batch DataFrame of encoded messages to exactly what the file source
-    reads. Malformed payloads parse (PERMISSIVE) to an all-null record —
-    dropped on the required ``messageId`` (the reference nacks
-    unparseable messages, queue-service.ts:44-52)."""
+    reads, and drops what it drops (``IS_REQUEST``)."""
     parsed = raw.select(
         F.from_json(F.col("value").cast("string"), REQUEST_SCHEMA).alias("m")
     )
-    return parsed.where(F.col("m.messageId").isNotNull()).select("m.*")
+    return parsed.select("m.*").where(IS_REQUEST)
 
 
 def request_stream_from_kafka(

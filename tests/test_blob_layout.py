@@ -44,32 +44,6 @@ def test_hive_style_layout_keeps_partition_discovery(spark, tmp_path):
     assert back.where("project_group_id = 'pg-b' AND year = 2025").count() == 1
 
 
-def test_compact_table_reduces_files_preserves_rows(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from tdei_extract_load_service_spark.sinks.writers import compact_table
-
-    path = str(tmp_path / "fragmented")
-    df = spark.range(10_000).select(
-        F.col("id"), (F.col("id") % 7).alias("grp"), F.md5(F.col("id").cast("string")).alias("payload")
-    )
-    df.repartition(64).write.parquet(path)  # 64 tiny fragments
-    import os as _os
-
-    def count_parquet(p):
-        return sum(f.endswith(".parquet") for _, _, fs in _os.walk(p) for f in fs)
-
-    before = count_parquet(path)
-    assert before >= 32
-    checksum_before = spark.read.parquet(path).agg(F.sum(F.crc32("payload"))).collect()[0][0]
-    compact_table(spark, path, target_file_bytes=1 << 30)
-    after = count_parquet(path)
-    assert after < before and after <= 4
-    back = spark.read.parquet(path)
-    assert back.count() == 10_000
-    assert back.agg(F.sum(F.crc32("payload"))).collect()[0][0] == checksum_before
-
-
 def test_blob_layout_double_append_merges(spark, tmp_path):
     """A second append into an already-flattened base must merge into the
     existing raw directories, not crash on ENOTEMPTY (ADVICE r2)."""
@@ -102,13 +76,13 @@ def test_blob_layout_double_append_merges(spark, tmp_path):
 def test_replace_where_predicate_rendering():
     from tdei_extract_load_service_spark.sinks.writers import _replace_where_predicate
 
-    assert _replace_where_predicate("tdei_dataset_id", ["ds-1"]) == "tdei_dataset_id IN ('ds-1')"
-    assert _replace_where_predicate("k", ["a'b", "c"]) == "k IN ('a''b', 'c')"
-    assert _replace_where_predicate("k", [1, 2.5]) == "k IN (1, 2.5)"
+    assert _replace_where_predicate(["ds-1"]) == "tdei_dataset_id IN ('ds-1')"
+    assert _replace_where_predicate(["a'b", "c"]) == "tdei_dataset_id IN ('a''b', 'c')"
+    assert _replace_where_predicate([1, 2.5]) == "tdei_dataset_id IN (1, 2.5)"
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
-        _replace_where_predicate("k", [])
+        _replace_where_predicate([])
 
 
 def test_collect_replace_keys_bound(spark):
@@ -124,12 +98,12 @@ def test_collect_replace_keys_bound(spark):
         _collect_replace_keys,
     )
 
-    small = spark.range(0, 50).select((F.col("id") % 5).alias("k"))
-    assert sorted(_collect_replace_keys(small, "k", 10)) == [0, 1, 2, 3, 4]
-    assert sorted(_collect_replace_keys(small, "k", 5)) == [0, 1, 2, 3, 4]
-    wide = spark.range(0, 100).select(F.col("id").alias("k"))
+    small = spark.range(0, 50).select((F.col("id") % 5).alias("tdei_dataset_id"))
+    assert sorted(_collect_replace_keys(small, 10)) == [0, 1, 2, 3, 4]
+    assert sorted(_collect_replace_keys(small, 5)) == [0, 1, 2, 3, 4]
+    wide = spark.range(0, 100).select(F.col("id").alias("tdei_dataset_id"))
     with _pytest.raises(ValueError, match="pass keys= explicitly"):
-        _collect_replace_keys(wide, "k", 99)
+        _collect_replace_keys(wide, 99)
 
 
 def test_overwrite_by_key_delta_gate(spark, tmp_path):

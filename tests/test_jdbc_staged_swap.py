@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from tdei_extract_load_service_spark.sinks.writers import jdbc_staged_swap
@@ -78,37 +80,44 @@ def test_wrong_dialect_string_rolls_back(spark, derby_url):
     assert [(r.k, r.v) for r in _read(spark, derby_url, "swap_pg").collect()] == [("live", "1")]
 
 
-def test_overwrite_by_key_failed_job_leaves_old_data(spark, tmp_path):
-    """Atomicity of the file-layout keyed overwrite: a write job that
-    FAILS mid-flight (task exception during the new data's computation)
-    must leave the previously committed dataset fully readable — the
-    commit point is the partition-directory swap, which never runs for an
-    aborted job."""
-    import pytest
-    from pyspark.sql import functions as F
+def test_overwrite_by_key_failed_write_leaves_old_data(spark, tmp_path, monkeypatch):
+    """Atomicity of the file-layout keyed overwrite: a write that FAILS
+    part-way (its second parquet file raises) leaves the previously
+    committed dataset fully readable and no staging directory behind —
+    the commit point is the partition-directory swap, which never runs
+    for an aborted write."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    from tdei_extract_load_service_spark.sinks.writers import overwrite_by_key
+    from tdei_extract_load_service_spark.sinks import writers
+
+    schema = "tdei_dataset_id string, n bigint, payload string"
+
+    def rows(payload):
+        return pa.table({"tdei_dataset_id": ["ds-a"] * 100, "n": list(range(100)),
+                         "payload": [payload] * 100})
 
     path = str(tmp_path / "atomic_sink")
-    v1 = spark.range(100).select(
-        F.lit("ds-a").alias("tdei_dataset_id"),
-        F.col("id").alias("n"),
-        F.lit("v1").alias("payload"),
-    )
-    overwrite_by_key(v1, path)
+    writers.overwrite_by_key(rows("v1"), path, schema=schema)
     assert spark.read.parquet(path).where("payload = 'v1'").count() == 100
 
-    poisoned = spark.range(100).select(
-        F.lit("ds-a").alias("tdei_dataset_id"),
-        F.col("id").alias("n"),
-        F.when(F.col("id") < 50, F.lit("v2")).otherwise(
-            F.raise_error(F.lit("injected mid-job failure"))
-        ).alias("payload"),
-    )
-    with pytest.raises(Exception, match="injected"):
-        overwrite_by_key(poisoned, path)
+    monkeypatch.setattr(writers, "ROWS_PER_FILE", 50)
+    real_write = pq.write_table
+    written = []
+
+    def fail_second(table, where, **kw):
+        written.append(where)
+        if len(written) == 2:
+            raise OSError("injected mid-write failure")
+        real_write(table, where, **kw)
+
+    monkeypatch.setattr(pq, "write_table", fail_second)
+    with pytest.raises(OSError, match="injected"):
+        writers.overwrite_by_key(rows("v2"), path, schema=schema)
+    assert len(written) == 2
 
     # the failed overwrite committed nothing: v1 fully intact, no v2 rows
     after = spark.read.parquet(path)
     assert after.where("payload = 'v1'").count() == 100
     assert after.where("payload = 'v2'").count() == 0
+    assert sorted(os.listdir(path)) == ["tdei_dataset_id=ds-a"]

@@ -225,6 +225,32 @@ def test_malformed_geojson_entry_fails(spark, tmp_path):
     assert "lines.geojson" in result.message
 
 
+@pytest.mark.parametrize(
+    "case",
+    ["sqlstate_like_dataset_id", "sqlstate_like_entry", "json_in_missing_path"],
+)
+def test_failure_message_is_set_where_it_is_raised(spark, tmp_path, case):
+    """A load writes to no database, so no failure text is classified as
+    an integrity error or re-labelled by what it happens to contain: the
+    load's own refusals carry their response text, and any other
+    failure's text passes through as it is."""
+    dataset = "ds-msg"
+    archive = str(tmp_path / "upload.zip")
+    if case == "sqlstate_like_dataset_id":
+        dataset = "[23505]"
+        make_zip(archive, {"readme.txt": "nope"})
+        want = f"Invalid GeoJSON content: No GeoJSON files found in the archive for dataset {dataset}"
+    elif case == "sqlstate_like_entry":
+        make_zip(archive, {"'23503/nodes.geojson": "{not json"})
+        want = "Invalid GeoJSON content: Unable to parse GeoJSON: invalid JSON in entry '23503/nodes.geojson"
+    else:
+        archive = str(tmp_path / "JSON" / "missing.zip")
+        want = f"Path does not exist: {archive}"
+    result = load_dataset(spark, archive, dataset, "u", str(tmp_path / "wh"))
+    assert not result.success
+    assert result.message == want
+
+
 NODES_TEXT = json.dumps(NODES)
 
 
@@ -578,8 +604,8 @@ def test_partition_dir_matches_spark_escaping(spark):
     utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     every_ascii = "".join(map(chr, range(1, 128)))
     for value in [every_ascii, *ESCAPED_IDS, "x/../../.."]:
-        assert partition_dir("k", value) == "k=" + utils.escapePathName(value)
-    assert partition_dir("k", "") == partition_dir("k", None) == "k=__HIVE_DEFAULT_PARTITION__"
+        assert partition_dir(value) == "tdei_dataset_id=" + utils.escapePathName(value)
+    assert partition_dir("") == partition_dir(None) == "tdei_dataset_id=__HIVE_DEFAULT_PARTITION__"
 
 
 def test_reload_clears_disappeared_kind_for_escaped_id(spark, tmp_path):

@@ -584,6 +584,31 @@ def test_replayed_batch_publishes_one_response_per_message(spark, tmp_path):
     assert per_id == {mid: 1 for mid in ids}
 
 
+def test_unparseable_request_files_publish_nothing(spark, tmp_path):
+    """The file source drops a request file that does not parse, by the
+    rule the broker decode drops an unparseable payload with: two junk
+    files beside one valid request publish exactly one response, not a
+    response without a ``messageId`` that the other junk file overwrites."""
+    request_dir = tmp_path / "req"
+    request_dir.mkdir()
+    (request_dir / "junk0.json").write_text("{not json")
+    (request_dir / "junk1.json").write_text("[1, 2")
+    valid = _request("v1", "/nowhere.zip", "ds-v1", data_type="flex")
+    (request_dir / "ok.json").write_text(json.dumps(valid))
+    response_dir = tmp_path / "resp"
+    run_queue_consumer(
+        spark,
+        request_dir=str(request_dir),
+        response_dir=str(response_dir),
+        warehouse=str(tmp_path / "wh"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    responses = [json.loads(p.read_text()) for p in response_dir.iterdir()]
+    assert [(r["messageId"], r["data"]["message"]) for r in responses] == [
+        ("v1", "Method not implemented for data_type: flex")
+    ]
+
+
 def _write_requests(request_dir, bodies) -> None:
     """One request file per body, in arrival (modification-time) order."""
     import time as _time
