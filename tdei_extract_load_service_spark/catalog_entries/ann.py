@@ -592,7 +592,7 @@ def q_similarity_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_drift_history_shadow(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """FOURTEENTH streaming certification: streaming drift-history
+    """Streaming certification of drift-history
     maintenance (streaming/shadow.py drift_history_shadow →
     streaming/sink.drift_history_sink → operators/similarity.
     drift_history_stats). Four snapshot-ALIGNED embedding micro-batches

@@ -591,7 +591,7 @@ def q_corpus_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_dedup_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The THIRD streaming certification: watermarked streaming dedup
+    """Streaming certification of watermarked dedup
     (withWatermark + dropDuplicatesWithinWatermark — the bounded-state
     production API) over four staged micro-batches, append-mode
     emissions vs batch DISTINCT (streaming/shadow.py dedup_shadow; the
@@ -627,7 +627,7 @@ def q_stream_dedup_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_session_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FOURTH streaming certification — MERGING session-window state
+    """Streaming certification of MERGING session-window state
     (streaming/shadow.py session_shadow): F.session_window state
     extends/merges across four staged micro-batches, final complete-mode
     snapshot vs the batch gaps-and-islands recurrence (the same oracle
@@ -663,7 +663,7 @@ def q_stream_session_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_join_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FIFTH streaming certification — the stream-stream JOIN state
+    """Streaming certification of the stream-stream JOIN state
     store (streaming/shadow.py interval_join_shadow): view and click
     streams replay from the same staged micro-batches, per-user ±1 hour
     interval join, append emissions vs the batch self-join; with this
@@ -726,14 +726,14 @@ def q_events_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_sink_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SIXTH streaming certification — the exactly-once WRITE path
+    """Streaming certification of the exactly-once WRITE path
     (streaming/sink.py + shadow.sink_shadow): a streaming aggregation
     replays four staged micro-batches and publishes each complete-mode
     snapshot through one manifest transaction (batch-id ledger and data
     in the same atomic pointer swap); the entry reads the final
     snapshot back through the manifest pointer, closing the loop the
     batch GROUP BY oracle checks. Replay idempotence pinned in pytest
-    (tests/test_streaming_shadow.py)."""
+    (tests/test_streaming_windows.py TestSinkShadow)."""
     from tdei_extract_load_service_spark.streaming.shadow import sink_shadow
 
     return sink_shadow(spark, sf_dir, n_batches=4)
@@ -749,7 +749,7 @@ def q_stream_sink_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_restart_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SEVENTH streaming certification — checkpoint restart RECOVERY
+    """Streaming certification of checkpoint restart RECOVERY
     (shadow.restart_shadow, VERDICT r9 #6): the stateful aggregation
     dies after 2 of 4 micro-batches, late batches arrive while it is
     down, and a new query resumes from the same checkpoint — the
@@ -757,9 +757,9 @@ def q_stream_restart_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
     restore the running aggregates, so the final snapshot equals the
     batch GROUP BY over ALL events (this oracle). No-reprocessing and
     batch-id continuity pinned in pytest
-    (tests/test_streaming_shadow restart tests). Behavioral ancestor:
-    the reference's graceful drain + broker redelivery-from-last-ack
-    (app-context.ts:28-67)."""
+    (tests/test_streaming_windows.py TestRestartShadow). Behavioral
+    ancestor: the reference's graceful drain + broker
+    redelivery-from-last-ack (app-context.ts:28-67)."""
     from tdei_extract_load_service_spark.streaming.shadow import restart_shadow
 
     return restart_shadow(spark, sf_dir, n_batches=4, stop_after=2)
@@ -775,7 +775,7 @@ def q_stream_restart_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_enrich_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EIGHTH streaming certification — the stream-STATIC join
+    """Streaming certification of the stream-STATIC join
     (shadow.enrich_shadow, VERDICT r10 #7): the staged event stream is
     enriched per micro-batch against a static customer dimension
     (user_id -> segment), append mode, no watermark — the stateless
@@ -784,7 +784,7 @@ def q_stream_enrich_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every fact row joins exactly once, so the final sink equals this
     batch join oracle. Dimension-republish semantics (drain ->
     republish -> resume on the same checkpoint picks up v2) pinned in
-    pytest (tests/test_streaming_shadow.py enrich tests)."""
+    pytest (tests/test_streaming_windows.py TestEnrichShadow)."""
     from tdei_extract_load_service_spark.streaming.shadow import enrich_shadow
 
     return enrich_shadow(spark, sf_dir, n_batches=4)
@@ -807,7 +807,7 @@ def q_stream_enrich_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_outer_join_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TENTH streaming certification — stream-stream LEFT OUTER join
+    """Streaming certification of the stream-stream LEFT OUTER join
     (shadow.outer_join_shadow): null-padded rows for views that never
     got a click emit only when the watermark passes the view's join
     horizon and its buffered state EXPIRES, so this certifies the
@@ -819,7 +819,7 @@ def q_stream_outer_join_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
     is COALESCEd to -1 on both engines (NULL bigints would downcast
     both pandas frames to float64). Unmatched emission counts and
     sentinel containment pinned in pytest
-    (tests/test_streaming_shadow.py)."""
+    (tests/test_streaming_windows.py TestOuterJoinShadow)."""
     from tdei_extract_load_service_spark.streaming.shadow import (
         outer_join_shadow,
     )
@@ -854,7 +854,7 @@ def q_stream_outer_join_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_timeout_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ELEVENTH streaming certification — GroupState EVENT-TIME TIMEOUT
+    """Streaming certification of the GroupState EVENT-TIME TIMEOUT
     (shadow.timeout_session_shadow): per-user sessions close on the data
     path (next event a full 2h gap later) or on the EXPIRY CALLBACK
     (state.hasTimedOut — the watermark passes last_event + gap and the
@@ -896,7 +896,7 @@ def q_stream_timeout_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_late_data_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NINTH streaming certification — watermark LATE-DATA DROP
+    """Streaming certification of the watermark LATE-DATA DROP
     (shadow.late_data_shadow, r11): the staged octile micro-batches
     replay with slice 4 arriving LAST, a week behind the watermark, so
     the append-mode hourly aggregation must drop its rows entirely and
@@ -1103,7 +1103,7 @@ def q_corpus_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_merge_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TWELFTH streaming certification: foreachBatch MERGE/upsert —
+    """Streaming certification of foreachBatch MERGE/upsert —
     the Delta-style streaming-upsert sink (streaming/shadow.py
     merge_shadow -> streaming/sink.manifest_merge_sink ->
     operators/cdc.merge_upsert). State lives in the TABLE: each
@@ -1135,9 +1135,9 @@ def q_stream_merge_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_dedup_incremental_shadow(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """THIRTEENTH streaming certification (VERDICT r12 #6b): streaming
-    incremental dedup — foreachBatch feeding the stored exact-dedup
-    survivor state (streaming/shadow.py dedup_incremental_shadow ->
+    """Streaming certification of incremental dedup — foreachBatch
+    feeding the stored exact-dedup survivor state
+    (streaming/shadow.py dedup_incremental_shadow ->
     streaming/sink.dedup_merge_sink -> operators/dedup.
     merge_survivor_states). Four document micro-batches merge into an
     initially empty manifest table, one exactly-once transaction per
@@ -1274,7 +1274,7 @@ def q_events_rolling_active(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_bm25_index_shadow(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """FIFTEENTH streaming certification: streaming BM25 index
+    """Streaming certification of BM25 index
     maintenance (streaming/shadow.py bm25_index_shadow ->
     streaming/sink.bm25_index_sink -> operators/text.bm25_batch_stats).
     Four document micro-batches append full-vocabulary postings + doc

@@ -133,11 +133,12 @@ def request_stream_from_files(
     spark: SparkSession, request_dir: str, max_messages_per_trigger: int | None = None
 ) -> DataFrame:
     """File-directory request source — the dependency-free broker stand-in.
-    One JSON file per message, carrying its ``ARRIVAL_KEY``; a file that
-    does not parse as a request is dropped (``IS_REQUEST``). Intake is
+    One JSON file per message, read as one document (``multiLine``, so a
+    pretty-printed request parses), carrying its ``ARRIVAL_KEY``; a file
+    that does not parse as a request is dropped (``IS_REQUEST``). Intake is
     every file that has arrived, or at most ``max_messages_per_trigger``
     (``maxFilesPerTrigger``, oldest first) per micro-batch."""
-    reader = spark.readStream.schema(REQUEST_SCHEMA)
+    reader = spark.readStream.schema(REQUEST_SCHEMA).option("multiLine", "true")
     if max_messages_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_messages_per_trigger))
     arrival = F.struct(

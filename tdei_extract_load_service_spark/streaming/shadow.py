@@ -1,12 +1,31 @@
 """Batch-shadow certification of the streaming surface.
 
-The streaming operators (windows.py) carry batch-equivalence pytest
-proofs, but until round 8 nothing in the CATALOG executed a real
-Structured Streaming query — the driver never certified the streaming
-path itself (VERDICT r7 #8). This module runs a streaming query over a
-BOUNDED multi-file source (so state genuinely crosses micro-batches)
-and exposes the final result as a plain DataFrame an SQL oracle can
-check: the streaming twin must equal the relational recurrence.
+Each shadow runs a real Structured Streaming query over a BOUNDED
+multi-file source (so state genuinely crosses micro-batches) and
+exposes the final result as a plain DataFrame an SQL oracle can check:
+the streaming twin must equal the relational recurrence.
+
+Every shadow runs its query through one runner, ``_replay``, and the
+runner owns the whole lifecycle of a run:
+
+- source: a file source over the staged batch files with
+  ``maxFilesPerTrigger=1`` (one micro-batch per file, in mtime order),
+  or over a private live copy of them when the shadow needs a custom
+  arrival order, an appended sentinel batch or delivery in legs;
+- legs: one ``Trigger.AvailableNow`` run per leg, all legs on one
+  checkpoint, each leg's files copied into the live copy before it
+  starts (the files of later legs arrive while the query is down);
+- sink: the memory sink, a parquet file sink, or a ``foreachBatch``
+  handler, in the shadow's output mode;
+- state: the checkpoint, the live copy, the sink output and the
+  manifest root all live under one ``tempfile.mkdtemp`` directory per
+  run, deleted when the run ends together with every memory-sink temp
+  view, so a run leaves nothing behind but its materialized
+  (``localCheckpoint(eager=True)``) result and per-leg progress.
+
+A fresh checkpoint directory per run means no run can resume a stale
+one. The staged batch files themselves are a content-addressed cache
+under ``/tmp/spark_graft_stream_stage``, shared across runs.
 
 Timezone discipline: the staged stream carries ``ts`` as
 TIMESTAMP_NTZ end-to-end. The GroupState path converts timestamps to
@@ -14,33 +33,24 @@ pandas, and an instant-typed TIMESTAMP renders as session-local naive
 there — under a non-UTC driver session its epoch value would shift by
 the UTC offset. NTZ is timezone-free in Arrow, so
 ``Timestamp.value // 1000`` is exactly DuckDB's ``epoch_us(ts)`` in
-every session timezone (probed under America/Los_Angeles).
+every session timezone (probed under America/Los_Angeles). Where a
+watermark is needed (``withWatermark`` rejects TIMESTAMP_NTZ),
+``_instant`` maps ``ts`` to the instant with the same UTC wall clock.
 """
 
 from __future__ import annotations
 
-import itertools
+import functools
+import json
 import os
-import uuid
+import shutil
+import tempfile
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 
 from tdei_extract_load_service_spark.operators.staging import staged_build
 from pyspark.sql import functions as F
-
-_QUERY_COUNTER = itertools.count()
-
-
-def _query_name() -> str:
-    """Unique memory-sink/checkpoint name per query RUN.  A pid+counter
-    key is NOT unique across interpreter restarts (recycled pid -> the
-    new query resumes from the stale checkpoint, which already marks the
-    staged files processed, and the memory sink comes back empty —
-    ADVICE r8), so every run gets a uuid4 suffix; the counter stays for
-    readable ordering in /tmp listings."""
-    return (
-        f"shadow_{os.getpid()}_{next(_QUERY_COUNTER)}_{uuid.uuid4().hex[:12]}"
-    )
 
 
 def _stage_parquet_batches(
@@ -181,35 +191,202 @@ def stage_event_stream(
     )
 
 
-def run_bounded_stream(
+def _write_sentinel(
     spark: SparkSession,
-    stage_dir: str,
-    transform,
-    output_mode: str = "update",
+    stage: str,
+    rows: list[tuple[int, int, str]],
+    path: str,
+) -> str:
+    """Write one far-future micro-batch (30 days past the staged
+    horizon) holding one event per ``(event_id, user_id, event_type)``
+    of ``rows`` as a single parquet file under ``path``, and return the
+    file: the watermark-advancer that lets a bounded replay flush
+    eviction- and timeout-driven state (outer-join null rows, timed-out
+    sessions). Sentinel ids are negative so the shadows can filter them
+    out."""
+    events = spark.read.parquet(stage)
+    horizon = events.agg(F.expr("max(ts) + INTERVAL 30 DAYS").alias("ts"))
+    batch = functools.reduce(
+        DataFrame.unionByName,
+        [
+            horizon.select(
+                F.lit(eid).cast("long").alias("event_id"),
+                "ts",
+                F.lit(uid).cast("long").alias("user_id"),
+                F.lit(etype).alias("event_type"),
+                F.lit(0.0).alias("value"),
+                F.lit("").alias("props"),
+            )
+            for eid, uid, etype in rows
+        ],
+    )
+    batch.select(events.columns).coalesce(1).write.parquet(path)
+    return next(
+        os.path.join(path, p) for p in os.listdir(path) if p.endswith(".parquet")
+    )
+
+
+def _replay(
+    spark: SparkSession,
+    stage: str,
+    query,
+    mode: str,
+    sink="memory",
+    read=None,
+    arrivals: list[str] | None = None,
+    legs: tuple[int, ...] = (),
+    before_leg=None,
+    sentinel: list[tuple[int, int, str]] | None = None,
+) -> tuple[DataFrame, list[list[dict]]]:
+    """Run ``query`` as a Structured Streaming query over the staged
+    batch files ``stage`` and return ``(result, progress)``: the result
+    materialized before the run's directory is deleted, and one list of
+    progress dicts per leg (the module docstring states the lifecycle).
+
+    ``query(source, out)`` builds the streaming frame from ``source()``,
+    a fresh file-source frame (a stream-stream join calls it once per
+    side), and ``out``, the run's output directory. ``sink`` is
+    ``"memory"``, ``"parquet"`` (a file sink at ``out``) or
+    ``sink(out)`` returning a ``foreachBatch`` handler, built once per
+    run. ``read(out)`` builds the result; by default it is the last
+    leg's memory table or the parquet sink's output.
+
+    A live copy replaces the stage as the source when the shadow gives
+    ``arrivals`` (the staged file names in arrival order), ``legs``
+    (the arrival counts after which a leg ends; the query is down
+    between legs, and ``before_leg(leg, out)`` runs before each leg
+    starts) or ``sentinel`` rows (``_write_sentinel``, arriving last).
+    """
+    run = tempfile.mkdtemp(prefix="spark_graft_stream_run_")
+    out = os.path.join(run, "out")
+    views: list[str] = []
+    try:
+        files = [
+            os.path.join(stage, f) for f in arrivals or sorted(os.listdir(stage))
+        ]
+        if sentinel:
+            files.append(
+                _write_sentinel(
+                    spark, stage, sentinel, os.path.join(run, "sentinel")
+                )
+            )
+        copied = bool(arrivals or legs or sentinel)
+        live = os.path.join(run, "live") if copied else stage
+        if copied:
+            os.makedirs(live)
+        schema = spark.read.parquet(stage).schema
+
+        def source() -> DataFrame:
+            return (
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", "1")
+                .parquet(live)
+            )
+
+        handler = sink(out) if callable(sink) else None
+        first_mtime = time.time() - 1000
+        progress = []
+        arrived = 0
+        for leg, cut in enumerate((*legs, len(files))):
+            if copied:
+                # past, strictly increasing mtimes: the file source's
+                # batch order is arrival order
+                for i in range(arrived, cut):
+                    dst = os.path.join(live, f"{i:03d}.parquet")
+                    shutil.copyfile(files[i], dst)
+                    os.utime(dst, (first_mtime + 10 * i,) * 2)
+            arrived = cut
+            if before_leg is not None:
+                before_leg(leg, out)
+            writer = (
+                query(source, out)
+                .writeStream.outputMode(mode)
+                .option("checkpointLocation", os.path.join(run, "checkpoint"))
+                .trigger(availableNow=True)
+            )
+            if handler is not None:
+                writer = writer.foreachBatch(handler)
+            elif sink == "parquet":
+                writer = writer.format("parquet").option("path", out)
+            else:
+                views.append(f"{os.path.basename(run)}_{leg}")
+                writer = writer.format("memory").queryName(views[-1])
+            q = writer.start()
+            q.awaitTermination()
+            progress.append([json.loads(p.json) for p in q.recentProgress])
+        if read is not None:
+            result = read(out)
+        elif views:
+            result = spark.table(views[-1])
+        else:
+            result = spark.read.parquet(out)
+        return result.localCheckpoint(eager=True), progress
+    finally:
+        for view in views:
+            spark.catalog.dropTempView(view)
+        shutil.rmtree(run, ignore_errors=True)
+
+
+def _instant(events: DataFrame) -> DataFrame:
+    """The staged NTZ ``ts`` as the instant with the same UTC wall clock
+    (the catalog._read recipe): exact under any session zone (probed
+    under America/Los_Angeles), and a type ``withWatermark`` accepts."""
+    return events.withColumn(
+        "ts",
+        F.from_utc_timestamp(F.col("ts").cast("timestamp"), F.current_timezone()),
+    )
+
+
+def _type_aggs(events: DataFrame) -> DataFrame:
+    """The stateful per-type aggregation of the restart and sink
+    shadows; ``_tv`` is a DECIMAL sum, so it is exact in any order."""
+    return events.groupBy("event_type").agg(
+        F.count("*").alias("n_events"),
+        F.sum(F.col("value").cast("decimal(18,6)")).alias("_tv"),
+    )
+
+
+def _type_totals(aggs: DataFrame) -> DataFrame:
+    """``_type_aggs``' rows in the oracle's shape."""
+    return aggs.select(
+        "event_type",
+        "n_events",
+        F.round(F.col("_tv").cast("double"), 2).alias("total_value"),
+    ).orderBy(F.col("event_type").asc())
+
+
+def _view_click_pairs(
+    source, watermark_delay: str, how: str = "inner"
 ) -> DataFrame:
-    """Run ``transform(stream_df)`` as a real Structured Streaming query
-    over the staged bounded source — one micro-batch per staged file
-    (``maxFilesPerTrigger=1`` + ``Trigger.AvailableNow``) — and return
-    the memory-sink table of every emitted row."""
-    schema = spark.read.parquet(stage_dir).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage_dir)
+    """Each user's views joined to their clicks within one hour
+    (windows.stream_interval_join), each side on its own file source:
+    ``(user_id, view_id, click_id)``, payload-free so within-batch
+    arrival order cannot leak into the result, with ``click_id`` -1 for
+    an unmatched view (a NULL bigint would downcast both engines' pandas
+    frames to float64 and leave NULLS-ordering divergence in the sort)."""
+    from tdei_extract_load_service_spark.streaming.windows import (
+        stream_interval_join,
     )
-    name = _query_name()
-    ckpt = f"/tmp/spark_graft_stream_ckpt/{name}"
-    q = (
-        transform(src)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+
+    def side(event_type: str) -> DataFrame:
+        return (
+            _instant(source())
+            .where(F.col("event_type") == event_type)
+            .select("user_id", "event_id", "ts")
+        )
+
+    return stream_interval_join(
+        side("view"),
+        side("click"),
+        "user_id",
+        within="1 hour",
+        watermark_delay=watermark_delay,
+        how=how,
+    ).select(
+        "user_id",
+        F.col("event_id").alias("view_id"),
+        F.coalesce(F.col("event_id_r"), F.lit(-1)).alias("click_id"),
     )
-    q.awaitTermination()
-    return spark.table(name)
 
 
 def windowed_aggs_shadow(
@@ -228,29 +405,23 @@ def windowed_aggs_shadow(
     total_value)`` — the same contract as the batch twin
     ``window_tumbling``, whose oracle shape this entry shares.
     Timezone discipline differs from the funnel shadow because
-    ``withWatermark`` REJECTS TIMESTAMP_NTZ: the staged NTZ column is
-    mapped to the instant with the same UTC wall clock via the
-    catalog._read recipe (``from_utc_timestamp(cast(ts),
-    current_timezone())`` — exact under any session zone, probed under
-    America/Los_Angeles), F.window buckets those epoch-aligned
-    instants, and normalize_ts renders UTC — so the buckets equal
-    DuckDB's ``date_trunc('hour', naive)`` everywhere."""
+    ``withWatermark`` REJECTS TIMESTAMP_NTZ: ``_instant`` maps the
+    staged NTZ column to the instant with the same UTC wall clock,
+    F.window buckets those epoch-aligned instants, and normalize_ts
+    renders UTC — so the buckets equal DuckDB's
+    ``date_trunc('hour', naive)`` everywhere."""
     from tdei_extract_load_service_spark.functions import timestamps as TS
     from tdei_extract_load_service_spark.streaming.windows import (
         windowed_event_aggs,
     )
 
-    def transform(src: DataFrame) -> DataFrame:
-        ev = src.withColumn(
-            "ts",
-            F.from_utc_timestamp(
-                F.col("ts").cast("timestamp"), F.current_timezone()
-            ),
-        )
-        return windowed_event_aggs(ev)
-
     stage = stage_event_stream(spark, sf_dir, n_batches)
-    snap = run_bounded_stream(spark, stage, transform, output_mode="complete")
+    snap, _ = _replay(
+        spark,
+        stage,
+        lambda source, out: windowed_event_aggs(_instant(source())),
+        "complete",
+    )
     return snap.select(
         TS.normalize_ts(F.col("window_start"), "yyyy-MM-dd'T'HH:mm:ss").alias(
             "window_start"
@@ -277,7 +448,9 @@ def funnel_shadow(spark: SparkSession, sf_dir: str, n_batches: int = 4) -> DataF
     from tdei_extract_load_service_spark.streaming.windows import stream_funnel
 
     stage = stage_event_stream(spark, sf_dir, n_batches)
-    emits = run_bounded_stream(spark, stage, stream_funnel)
+    emits, _ = _replay(
+        spark, stage, lambda source, out: stream_funnel(source()), "update"
+    )
 
     def reached_min(i: int):
         t = F.col("step_times")[i]
@@ -318,27 +491,21 @@ def dedup_shadow(
     Within a micro-batch, WHICH duplicate row survives is
     task-order-nondeterministic, so the streaming frame is projected to
     the dedup key columns BEFORE the dedup — emissions then carry no
-    arrival-dependent payload. Timezone discipline: the watermark
-    rejects TIMESTAMP_NTZ, so the staged NTZ ``ts`` maps to same-UTC-
-    wall instants via the catalog._read recipe (as stream_window_shadow
-    does); ``ts`` itself is dropped after the watermark is planted."""
+    arrival-dependent payload. ``ts`` goes through ``_instant`` (the
+    watermark rejects TIMESTAMP_NTZ) and is dropped after the watermark
+    is planted."""
 
-    def transform(src: DataFrame) -> DataFrame:
-        ev = src.withColumn(
-            "ts",
-            F.from_utc_timestamp(
-                F.col("ts").cast("timestamp"), F.current_timezone()
-            ),
-        )
+    def query(source, out) -> DataFrame:
         return (
-            ev.select("ts", "user_id", "event_type")
+            _instant(source())
+            .select("ts", "user_id", "event_type")
             .withWatermark("ts", "90 days")
             .dropDuplicatesWithinWatermark(["user_id", "event_type"])
             .select("user_id", "event_type")
         )
 
     stage = stage_event_stream(spark, sf_dir, n_batches)
-    emits = run_bounded_stream(spark, stage, transform, output_mode="append")
+    emits, _ = _replay(spark, stage, query, "append")
     return emits.orderBy(F.col("user_id").asc(), F.col("event_type").asc())
 
 
@@ -354,143 +521,51 @@ def session_shadow(
     ``session_window`` entry proves, so the streaming path must land on
     identical sessions after its state crossed four batch boundaries.
 
-    Timezone discipline: as stream_window_shadow — the watermark
-    rejects TIMESTAMP_NTZ, so staged NTZ maps to same-UTC-wall instants
-    (catalog._read recipe) and session_start renders via normalize_ts."""
+    Timezone discipline: as windowed_aggs_shadow — ``_instant`` before
+    the watermark, and session_start renders via normalize_ts."""
     from tdei_extract_load_service_spark.streaming.windows import (
         sessionized_event_aggs,
     )
 
-    def transform(src: DataFrame) -> DataFrame:
-        ev = src.withColumn(
-            "ts",
-            F.from_utc_timestamp(
-                F.col("ts").cast("timestamp"), F.current_timezone()
-            ),
-        )
-        return sessionized_event_aggs(ev.withWatermark("ts", "90 days"))
-
     stage = stage_event_stream(spark, sf_dir, n_batches)
-    return run_bounded_stream(spark, stage, transform, output_mode="complete")
+    snap, _ = _replay(
+        spark,
+        stage,
+        lambda source, out: sessionized_event_aggs(
+            _instant(source()).withWatermark("ts", "90 days")
+        ),
+        "complete",
+    )
+    return snap
 
 
 def interval_join_shadow(
     spark: SparkSession, sf_dir: str, n_batches: int = 4
 ) -> DataFrame:
     """Stream-STREAM interval join, certified end to end — the JOIN
-    state store, the one state type the other four shadows don't touch
+    state store, the one state type the other shadows above don't touch
     (with it, all five Structured Streaming state stores are
     driver-certified: aggregation, dedup, flatMapGroupsWithState,
     session, join). The view stream joins the click stream per user
-    within ±1 hour (windows.stream_interval_join); both sides replay
-    from the same staged micro-batch sequence, each with its own
-    buffer, and every within-bound pair must emit exactly once in
-    append mode — exact against the batch self-join oracle because the
-    90-day watermark delay means no buffered row is ever evicted before
-    its last possible match (the state lifecycle still runs; production
+    within ±1 hour (``_view_click_pairs``); both sides replay from the
+    same staged micro-batch sequence, each with its own buffer, and
+    every within-bound pair must emit exactly once in append mode —
+    exact against the batch self-join oracle because the 90-day
+    watermark delay means no buffered row is ever evicted before its
+    last possible match (the state lifecycle still runs; production
     uses a tight delay and accepts bounded lateness).
 
-    Returns ``(user_id, view_id, click_id)`` — payload-free so
-    within-batch arrival order can't leak into the result."""
-    from tdei_extract_load_service_spark.streaming.windows import (
-        stream_interval_join,
-    )
-
+    Returns ``(user_id, view_id, click_id)``."""
     stage = stage_event_stream(spark, sf_dir, n_batches)
-    schema = spark.read.parquet(stage).schema
-
-    def _src() -> DataFrame:
-        raw = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stage)
-        )
-        return raw.withColumn(
-            "ts",
-            F.from_utc_timestamp(
-                F.col("ts").cast("timestamp"), F.current_timezone()
-            ),
-        ).select("user_id", "event_type", "event_id", "ts")
-
-    views = _src().where(F.col("event_type") == "view").drop("event_type")
-    clicks = _src().where(F.col("event_type") == "click").drop("event_type")
-    joined = stream_interval_join(
-        views,
-        clicks,
-        "user_id",
-        within="1 hour",
-        watermark_delay="90 days",
-    ).select(
-        "user_id",
-        F.col("event_id").alias("view_id"),
-        F.col("event_id_r").alias("click_id"),
+    pairs, _ = _replay(
+        spark,
+        stage,
+        lambda source, out: _view_click_pairs(source, "90 days"),
+        "append",
     )
-    name = _query_name()
-    ckpt = f"/tmp/spark_graft_stream_ckpt/{name}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).orderBy(
+    return pairs.orderBy(
         F.col("user_id").asc(), F.col("view_id").asc(), F.col("click_id").asc()
     )
-
-
-def _stage_with_sentinel(
-    spark: SparkSession, stage: str, sentinel_rows: list[tuple[int, int, str]]
-) -> str:
-    """Copy the staged micro-batch files into a fresh live dir and append
-    one FINAL micro-batch of far-future sentinel rows (30 days past the
-    fixture horizon), one per ``(event_id, user_id, event_type)`` spec —
-    the watermark-advancer that lets bounded replays flush eviction- and
-    timeout-driven state (outer-join null rows, timed-out sessions).
-    Sentinel ids must be negative so downstream filters can contain
-    them. Caller owns removing the returned dir."""
-    import shutil
-    import tempfile
-
-    files = sorted(f for f in os.listdir(stage) if f.endswith(".parquet"))
-    schema = spark.read.parquet(stage).schema
-    live = tempfile.mkdtemp(prefix="stream_sentinel_live_")
-    last_mtime = 0.0
-    for f in files:
-        src_f = os.path.join(stage, f)
-        shutil.copy2(src_f, os.path.join(live, f))
-        last_mtime = max(last_mtime, os.stat(src_f).st_mtime)
-    base = (
-        spark.read.parquet(stage)
-        .orderBy(F.col("ts").desc())
-        .limit(1)
-        .select(F.expr("ts + INTERVAL 30 DAYS").alias("ts"))
-    )
-    frames = [
-        base.select(
-            F.lit(eid).cast("long").alias("event_id"),
-            "ts",
-            F.lit(uid).cast("long").alias("user_id"),
-            F.lit(etype).alias("event_type"),
-            F.lit(0.0).alias("value"),
-            F.lit("").alias("props"),
-        )
-        for (eid, uid, etype) in sentinel_rows
-    ]
-    sentinel = frames[0]
-    for fr in frames[1:]:
-        sentinel = sentinel.unionByName(fr)
-    sentinel = sentinel.select([f.name for f in schema.fields])
-    chunk = tempfile.mkdtemp(prefix="stream_sentinel_chunk_")
-    sentinel.coalesce(1).write.mode("overwrite").parquet(chunk)
-    part = next(p for p in os.listdir(chunk) if p.endswith(".parquet"))
-    dst = os.path.join(live, "999_sentinel.parquet")
-    os.replace(os.path.join(chunk, part), dst)
-    shutil.rmtree(chunk, ignore_errors=True)
-    os.utime(dst, (last_mtime + 1, last_mtime + 1))
-    return live
 
 
 def timeout_session_shadow(
@@ -500,20 +575,20 @@ def timeout_session_shadow(
     metrics: dict | None = None,
     impl: str = "group_state",
 ) -> DataFrame:
-    """GroupState EVENT-TIME TIMEOUT, certified end to end — the
-    ELEVENTH streaming certification, and the one custom-stateful-op
-    mechanism no other cert touches: ``windows.stream_session_timeout``
-    closes a per-user session either on the data path (a new event a
-    full gap later) or on the TIMEOUT path (``state.hasTimedOut`` — the
-    watermark passes ``last_event + gap`` and Spark re-invokes the
-    function for the quiet group in a no-data batch). The funnel cert
-    runs GroupState with NoTimeout and the session cert runs the
-    built-in merging state; neither ever executes the expiry callback,
-    which is exactly the code path a production TTL'd stateful operator
-    (abandoned-cart, session finalization) lives or dies on.
+    """GroupState EVENT-TIME TIMEOUT, certified end to end — the one
+    custom-stateful-op mechanism no other shadow touches:
+    ``windows.stream_session_timeout`` closes a per-user session either
+    on the data path (a new event a full gap later) or on the TIMEOUT
+    path (``state.hasTimedOut`` — the watermark passes
+    ``last_event + gap`` and Spark re-invokes the function for the quiet
+    group in a no-data batch). The funnel shadow runs GroupState with
+    NoTimeout and the session shadow runs the built-in merging state;
+    neither ever executes the expiry callback, which is exactly the code
+    path a production TTL'd stateful operator (abandoned-cart, session
+    finalization) lives or dies on.
 
-    The staged replay appends one far-future sentinel event (user -1)
-    so the final watermark passes every open session's deadline and the
+    The replay appends one far-future sentinel event (user -1) so the
+    final watermark passes every open session's deadline and the
     trailing no-data batch flushes them all through the timeout branch.
     Every session emits exactly once (the docstring of the operator
     carries the non-overlap argument); the oracle is the SAME
@@ -526,16 +601,9 @@ def timeout_session_shadow(
     ``impl`` selects the stateful API: ``group_state`` (GroupState +
     implicit timeout, windows.stream_session_timeout) or ``tws`` (the
     Spark-4 transformWithStateInPandas v2 API with typed ValueState and
-    REGISTERED TIMERS, windows.stream_session_tws — the TWELFTH
-    certification's subject; its timer-closed rows carry
-    ``closed_by='timer'``). Both must land on the identical session
-    set — the cross-API equality is pinned in pytest."""
-    import shutil
-
-    stage = stage_event_stream(spark, sf_dir, n_batches)
-    live = _stage_with_sentinel(spark, stage, [(-1, -1, "view")])
-    schema = spark.read.parquet(stage).schema
-
+    REGISTERED TIMERS, windows.stream_session_tws; its timer-closed rows
+    carry ``closed_by='timer'``). Both must land on the identical
+    session set — the cross-API equality is pinned in pytest."""
     from tdei_extract_load_service_spark.streaming.windows import (
         stream_session_timeout,
         stream_session_tws,
@@ -545,36 +613,14 @@ def timeout_session_shadow(
         raise ValueError("impl must be 'group_state' or 'tws'")
     op = stream_session_timeout if impl == "group_state" else stream_session_tws
 
-    def transform(src: DataFrame) -> DataFrame:
-        ev = src.withColumn(
-            "ts",
-            F.from_utc_timestamp(
-                F.col("ts").cast("timestamp"), F.current_timezone()
-            ),
-        )
-        ev = ev.withWatermark("ts", "0 seconds").select(
-            "user_id", "ts", F.unix_micros("ts").alias("ts_us")
-        )
-        return op(ev)
+    def query(source, out) -> DataFrame:
+        ev = _instant(source()).withWatermark("ts", "0 seconds")
+        return op(ev.select("user_id", "ts", F.unix_micros("ts").alias("ts_us")))
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(live)
+    stage = stage_event_stream(spark, sf_dir, n_batches)
+    emits, _ = _replay(
+        spark, stage, query, "update", sentinel=[(-1, -1, "view")]
     )
-    name = _query_name()
-    ckpt = f"/tmp/spark_graft_stream_ckpt/{name}"
-    q = (
-        transform(src)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    emits = spark.table(name)
     if metrics is not None:
         metrics["closed_by_data"] = emits.where(
             (F.col("user_id") >= 0) & (F.col("closed_by") == "data")
@@ -584,14 +630,11 @@ def timeout_session_shadow(
             & (F.col("closed_by").isin("timeout", "timer"))
         ).count()
         metrics["sentinel_leaked"] = emits.where(F.col("user_id") < 0).count()
-    result = (
+    return (
         emits.where(F.col("user_id") >= 0)
         .select("user_id", "session_start", "session_end", "n_events")
         .orderBy(F.col("user_id").asc(), F.col("session_start").asc())
-        .localCheckpoint(eager=True)
     )
-    shutil.rmtree(live, ignore_errors=True)
-    return result
 
 
 def outer_join_shadow(
@@ -601,101 +644,51 @@ def outer_join_shadow(
     metrics: dict | None = None,
 ) -> DataFrame:
     """Stream-stream LEFT OUTER interval join, certified end to end —
-    the TENTH streaming certification, and the join semantics the inner
-    cert (interval_join_shadow) cannot touch: a null-padded row for an
-    unmatched left event is emitted only when its buffered state
-    EXPIRES — the watermark must pass ``view_ts + within`` before Spark
-    can prove no future click will ever match — so correctness hangs on
-    the eviction machinery itself, not just on pair matching.
+    the join semantics the inner shadow (interval_join_shadow) cannot
+    touch: a null-padded row for an unmatched left event is emitted only
+    when its buffered state EXPIRES — the watermark must pass
+    ``view_ts + within`` before Spark can prove no future click will
+    ever match — so correctness hangs on the eviction machinery itself,
+    not just on pair matching.
 
     Deterministic final flush: on bounded input a too-long watermark
     delay would leave every unmatched view buffered forever (nothing
     evicts, the outer rows never emit — the inner shadows exploit
     exactly that with their 90-day delay). Here the delay is 0 seconds
     and the replay appends a SENTINEL micro-batch — one far-future view
-    and one far-future click on impossible user ids (-1/-2), 30 days
-    past the fixture's horizon — so BOTH sides' watermarks (the global
-    watermark is their min) jump past every real view's expiry and the
-    trailing no-data batch flushes the complete unmatched set. The
-    sentinels themselves match nothing and cannot emit: the sentinel
-    view's own expiry sits above the final watermark, and an unmatched
-    RIGHT row never emits from a left join (belt-and-braces: ids < 0
-    are filtered anyway).
+    and one far-future click on impossible user ids (-1/-2) — so BOTH
+    sides' watermarks (the global watermark is their min, and each
+    side's filter would drop the other side's sentinel before its
+    watermark node) jump past every real view's expiry and the trailing
+    no-data batch flushes the complete unmatched set. The sentinels
+    themselves match nothing and cannot emit: the sentinel view's own
+    expiry sits above the final watermark, and an unmatched RIGHT row
+    never emits from a left join (belt-and-braces: ids < 0 are filtered
+    anyway).
 
     Delay-0 is exact here, not an approximation: the staged replay is
     globally event-time-ordered, so a click in batch i+1 that could
     still match a view (``click_ts <= view_ts + within``) implies the
     view's expiry is >= the watermark in force — it is still buffered.
-    The oracle is therefore the plain batch LEFT JOIN. ``click_id`` is
-    COALESCEd to -1 on both engines (a NULL bigint would downcast both
-    pandas frames to float64 and leave NULLS-ordering divergence in the
-    sort). ``metrics`` receives matched/unmatched emission counts so the
-    pytest can pin that null-padded rows actually flowed."""
-    import shutil
-
+    The oracle is therefore the plain batch LEFT JOIN, with ``click_id``
+    COALESCEd to -1 on both engines. ``metrics`` receives
+    matched/unmatched emission counts so the pytest can pin that
+    null-padded rows actually flowed."""
     stage = stage_event_stream(spark, sf_dir, n_batches)
-    schema = spark.read.parquet(stage).schema
-    # sentinel batch: one view + one click far past the horizon, on user
-    # ids no real event carries — advances BOTH sides' watermarks (the
-    # global watermark is their min, and each side's filter would drop
-    # the other side's sentinel before its watermark node)
-    live = _stage_with_sentinel(
-        spark, stage, [(-1, -1, "view"), (-2, -2, "click")]
+    pairs, _ = _replay(
+        spark,
+        stage,
+        lambda source, out: _view_click_pairs(source, "0 seconds", "left_outer"),
+        "append",
+        sentinel=[(-1, -1, "view"), (-2, -2, "click")],
     )
-
-    from tdei_extract_load_service_spark.streaming.windows import (
-        stream_interval_join,
-    )
-
-    def _src() -> DataFrame:
-        raw = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(live)
-        )
-        return raw.withColumn(
-            "ts",
-            F.from_utc_timestamp(
-                F.col("ts").cast("timestamp"), F.current_timezone()
-            ),
-        ).select("user_id", "event_type", "event_id", "ts")
-
-    views = _src().where(F.col("event_type") == "view").drop("event_type")
-    clicks = _src().where(F.col("event_type") == "click").drop("event_type")
-    joined = stream_interval_join(
-        views,
-        clicks,
-        "user_id",
-        within="1 hour",
-        watermark_delay="0 seconds",
-        how="left_outer",
-    ).select(
-        "user_id",
-        F.col("event_id").alias("view_id"),
-        F.coalesce(F.col("event_id_r"), F.lit(-1)).alias("click_id"),
-    )
-    name = _query_name()
-    ckpt = f"/tmp/spark_graft_stream_ckpt/{name}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    emits = spark.table(name).where(F.col("user_id") >= 0)
-    result = emits.orderBy(
+    result = pairs.where(F.col("user_id") >= 0).orderBy(
         F.col("user_id").asc(), F.col("view_id").asc(), F.col("click_id").asc()
-    ).localCheckpoint(eager=True)
+    )
     if metrics is not None:
         metrics["n_matched"] = result.where(F.col("click_id") >= 0).count()
         metrics["n_unmatched"] = result.where(F.col("click_id") == -1).count()
-        metrics["sentinel_leaked"] = (
-            spark.table(name).where(F.col("user_id") < 0).count()
-        )
-    shutil.rmtree(live, ignore_errors=True)
+        metrics["sentinel_leaked"] = pairs.where(F.col("user_id") < 0).count()
     return result
 
 
@@ -706,11 +699,10 @@ def restart_shadow(
     stop_after: int = 2,
     metrics: dict | None = None,
 ) -> DataFrame:
-    """Checkpoint restart RECOVERY, certified end to end — the seventh
-    streaming certification, and the one that exercises the contract the
-    others assume: a stateful query that dies mid-stream resumes from
-    its checkpoint with (a) processed micro-batches never re-read and
-    (b) aggregation state intact.
+    """Checkpoint restart RECOVERY, certified end to end — the contract
+    the other shadows assume: a stateful query that dies mid-stream
+    resumes from its checkpoint with (a) processed micro-batches never
+    re-read and (b) aggregation state intact.
 
     Deterministic crash shape (a hard kill between micro-batches is a
     race): leg 1 runs the stateful per-type aggregation with
@@ -732,83 +724,37 @@ def restart_shadow(
     the last ack — here the checkpoint IS the ack ledger. No timestamps
     cross the state path (plain count/sum), so the result is trivially
     session-tz independent."""
-    import json
-    import shutil
-    import tempfile
-
     stage = stage_event_stream(spark, sf_dir, n_batches)
-    files = sorted(
-        f for f in os.listdir(stage) if f.endswith(".parquet")
-    )
-    if not 0 < stop_after < len(files):
+    if not 0 < stop_after < len(os.listdir(stage)):
         raise ValueError("stop_after must split the staged batches")
-    name = _query_name()
-    live = tempfile.mkdtemp(prefix="stream_restart_live_")
-    ckpt = f"/tmp/spark_graft_stream_ckpt/{name}"
-    schema = spark.read.parquet(stage).schema
-
-    def _leg(tag: str) -> tuple[str, list]:
-        qname = f"{name}_{tag}"
-        src = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(live)
-        )
-        agg = src.groupBy("event_type").agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)")).alias("_tv"),
-        )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        progress = [
-            p if isinstance(p, dict) else json.loads(p.json)
-            for p in q.recentProgress
-        ]
-        return qname, progress
-
-    for f in files[:stop_after]:
-        shutil.copy2(os.path.join(stage, f), os.path.join(live, f))
-    _, prog1 = _leg("leg1")
-    # --- the crash window: the query is down; late batches arrive ---
-    for f in files[stop_after:]:
-        shutil.copy2(os.path.join(stage, f), os.path.join(live, f))
-    qname2, prog2 = _leg("leg2")
+    snap, (leg1, leg2) = _replay(
+        spark,
+        stage,
+        lambda source, out: _type_aggs(source()),
+        "complete",
+        legs=(stop_after,),
+    )
     if metrics is not None:
-        metrics["leg1_rows"] = sum(p["numInputRows"] for p in prog1)
-        metrics["leg2_rows"] = sum(p["numInputRows"] for p in prog2)
+        metrics["leg1_rows"] = sum(p["numInputRows"] for p in leg1)
+        metrics["leg2_rows"] = sum(p["numInputRows"] for p in leg2)
         metrics["leg2_batch_ids"] = [
-            p["batchId"] for p in prog2 if p["numInputRows"] > 0
+            p["batchId"] for p in leg2 if p["numInputRows"] > 0
         ]
         metrics["staged_total_rows"] = spark.read.parquet(stage).count()
-    # the memory sink holds the materialized snapshot; the live source
-    # dir (a per-call copy of the shared stage) is done
-    shutil.rmtree(live, ignore_errors=True)
-    snap = spark.table(qname2)
-    return snap.select(
-        "event_type",
-        "n_events",
-        F.round(F.col("_tv").cast("double"), 2).alias("total_value"),
-    ).orderBy(F.col("event_type").asc())
+    return _type_totals(snap)
 
 
 def sink_shadow(
     spark: SparkSession, sf_dir: str, n_batches: int = 4
 ) -> DataFrame:
-    """The exactly-once SINK path, certified end to end — the sixth
-    streaming certification, and the only one where the thing under
-    test is the WRITE side: a streaming per-type aggregation replays
-    the staged micro-batches and publishes every complete-mode snapshot
-    through ``streaming/sink.py``'s foreachBatch handler — one manifest
-    transaction per micro-batch, the committed batch id riding the same
-    atomic pointer swap as the data (sinks/manifest.py; the streaming
-    form of O18's single-Postgres-transaction guarantee,
+    """The exactly-once SINK path, certified end to end — the only
+    shadow where the thing under test is the WRITE side: a streaming
+    per-type aggregation replays the staged micro-batches and publishes
+    every complete-mode snapshot through ``streaming/sink.py``'s
+    foreachBatch handler — one manifest transaction per micro-batch,
+    the committed batch id riding the same atomic pointer swap as the
+    data (sinks/manifest.py; the streaming form of O18's
+    single-Postgres-transaction guarantee,
     src/database/data-source.ts:33-65).
 
     The returned frame is read BACK from the warehouse through the
@@ -820,45 +766,21 @@ def sink_shadow(
     pytest, where the handler is invoked directly with a stale id and
     corrupted payload. No timestamps cross the state path, so the
     result is trivially session-tz independent."""
-    import tempfile
-
     from tdei_extract_load_service_spark.sinks.manifest import read_table
     from tdei_extract_load_service_spark.streaming.sink import (
         manifest_snapshot_sink,
     )
 
     stage = stage_event_stream(spark, sf_dir, n_batches)
-    root = tempfile.mkdtemp(prefix="stream_sink_shadow_")
-    schema = spark.read.parquet(stage).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
+    final, _ = _replay(
+        spark,
+        stage,
+        lambda source, out: _type_aggs(source()).coalesce(1),
+        "complete",
+        sink=lambda out: manifest_snapshot_sink(out, "event_type_aggs"),
+        read=lambda out: read_table(spark, out, "event_type_aggs"),
     )
-    agg = src.groupBy("event_type").agg(
-        F.count("*").alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,6)")).alias("_tv"),
-    )
-    name = _query_name()
-    q = (
-        agg.coalesce(1)
-        .writeStream.foreachBatch(
-            manifest_snapshot_sink(root, "event_type_aggs")
-        )
-        .outputMode("complete")
-        .option(
-            "checkpointLocation", f"/tmp/spark_graft_stream_ckpt/{name}"
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    final = read_table(spark, root, "event_type_aggs")
-    return final.select(
-        "event_type",
-        "n_events",
-        F.round(F.col("_tv").cast("double"), 2).alias("total_value"),
-    ).orderBy(F.col("event_type").asc())
+    return _type_totals(final)
 
 
 def enrich_shadow(
@@ -869,22 +791,26 @@ def enrich_shadow(
     dim_mutate=None,
     metrics: dict | None = None,
 ) -> DataFrame:
-    """Stream-STATIC join, certified end to end — the EIGHTH streaming
-    certification, and the one state-bearing shape the other seven
-    don't touch: a streaming fact enriched against a static dimension
-    (stateless on the stream side — no watermark, no buffer — but the
-    static sub-plan is re-executed per micro-batch by Structured
-    Streaming's incremental planner). The behavioral ancestor is the
-    reference's extension features joining the minted ``ext_file_id``
-    dimension as they load (extract-load-service.ts:456-473): facts
-    stream in, the dimension is table state maintained by the ETL path.
+    """Stream-STATIC join, certified end to end — the one state-bearing
+    shape the shadows above don't touch: a streaming fact enriched
+    against a static dimension (stateless on the stream side — no
+    watermark, no buffer — but the static sub-plan is re-executed per
+    micro-batch by Structured Streaming's incremental planner). The
+    behavioral ancestor is the reference's extension features joining
+    the minted ``ext_file_id`` dimension as they load
+    (extract-load-service.ts:456-473): facts stream in, the dimension is
+    table state maintained by the ETL path.
 
     The event stream replays the staged micro-batch sequence; the
     dimension is the customer table projected to
     ``(user_id, segment, dim_version)`` and written to a private
     parquet dir the static side scans. Every fact row joins exactly
     once (append mode, inner equi-join), so the final sink equals the
-    batch join — the catalog oracle.
+    batch join — the catalog oracle. The sink is parquet, not memory:
+    the memory sink cannot recover an append-mode query from a
+    checkpoint (leg 2 would refuse to start); the file sink's commit
+    log is the recovery-capable append sink — and the
+    production-faithful one.
 
     Dimension-update semantics (pinned in pytest via ``stop_after`` +
     ``dim_mutate``): the static side's PLAN is re-executed each
@@ -903,85 +829,42 @@ def enrich_shadow(
     that leg 2 read ONLY the post-crash files (offset continuity), and
     the ``dim_version`` column pins which dimension generation each
     fact row actually joined."""
-    import shutil
-    import tempfile
 
-    stage = stage_event_stream(spark, sf_dir, n_batches)
-    files = sorted(f for f in os.listdir(stage) if f.endswith(".parquet"))
-    schema = spark.read.parquet(stage).schema
-    name = _query_name()
-    ckpt = f"/tmp/spark_graft_stream_ckpt/{name}"
-    live = tempfile.mkdtemp(prefix="stream_enrich_live_")
-    dim_dir = tempfile.mkdtemp(prefix="stream_enrich_dim_")
-    # parquet sink, not memory: the memory sink cannot recover an
-    # append-mode query from a checkpoint (leg 2 would refuse to start);
-    # the file sink's commit log is the recovery-capable append sink —
-    # and the production-faithful one
-    out_dir = tempfile.mkdtemp(prefix="stream_enrich_out_")
+    def dim_dir(out: str) -> str:
+        # beside the sink's files: its reader lists only its commit log
+        return os.path.join(out, "dimension")
 
-    def _write_dim(version: int) -> None:
+    def before_leg(leg: int, out: str) -> None:
+        if leg and dim_mutate is not None:
+            dim_mutate()
+            return
         cust = spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
         cust.select(
             F.col("c_custkey").alias("user_id"),
             F.col("c_mktsegment").alias("segment"),
-            F.lit(version).alias("dim_version"),
-        ).coalesce(1).write.mode("overwrite").parquet(dim_dir)
+            F.lit(leg + 1).alias("dim_version"),
+        ).coalesce(1).write.mode("overwrite").parquet(dim_dir(out))
 
-    def _leg(tag: str) -> int:
-        src = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(live)
-            .select("event_id", "user_id", "event_type", "value")
+    def query(source, out) -> DataFrame:
+        facts = source().select("event_id", "user_id", "event_type", "value")
+        return facts.join(spark.read.parquet(dim_dir(out)), "user_id").select(
+            "event_id", "user_id", "event_type", "segment", "dim_version"
         )
-        dim = spark.read.parquet(dim_dir)
-        joined = src.join(dim, "user_id").select(
-            "event_id",
-            "user_id",
-            "event_type",
-            "segment",
-            "dim_version",
-        )
-        q = (
-            joined.writeStream.format("parquet")
-            .queryName(f"{name}_{tag}")
-            .outputMode("append")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return sum(p.numInputRows for p in q.recentProgress)
 
-    _write_dim(1)
-    cut = stop_after if stop_after is not None else len(files)
-    for f in files[:cut]:
-        shutil.copy2(os.path.join(stage, f), os.path.join(live, f))
-    rows1 = _leg("leg1")
-    if stop_after is not None:
-        # the drain window: dimension republished, late batches arrive
-        if dim_mutate is not None:
-            dim_mutate()
-        else:
-            _write_dim(2)
-        for f in files[stop_after:]:
-            shutil.copy2(os.path.join(stage, f), os.path.join(live, f))
-        rows2 = _leg("leg2")
-        if metrics is not None:
-            metrics["leg1_rows"] = rows1
-            metrics["leg2_rows"] = rows2
-    elif metrics is not None:
-        metrics["leg1_rows"] = rows1
-    result = (
-        spark.read.parquet(out_dir)
-        .orderBy(F.col("event_id").asc())
-        .localCheckpoint(eager=True)
+    stage = stage_event_stream(spark, sf_dir, n_batches)
+    rows, progress = _replay(
+        spark,
+        stage,
+        query,
+        "append",
+        sink="parquet",
+        legs=() if stop_after is None else (stop_after,),
+        before_leg=before_leg,
     )
-    shutil.rmtree(live, ignore_errors=True)
-    shutil.rmtree(dim_dir, ignore_errors=True)
-    shutil.rmtree(out_dir, ignore_errors=True)
-    return result
+    if metrics is not None:
+        for leg, prog in enumerate(progress, 1):
+            metrics[f"leg{leg}_rows"] = sum(p["numInputRows"] for p in prog)
+    return rows.orderBy(F.col("event_id").asc())
 
 
 def late_data_shadow(
@@ -991,14 +874,13 @@ def late_data_shadow(
     late_file: int = 4,
     metrics: dict | None = None,
 ) -> DataFrame:
-    """Watermark LATE-DATA DROP, certified end to end — the NINTH
-    streaming certification, and the one watermark behavior the
-    windowed shadows don't exercise: every prior cert replays batches
-    in event-time order, so nothing is ever late. Here the staged
-    micro-batch sequence is replayed with slice ``late_file`` arriving
-    LAST (arrival order is file mtime — the bounded source's batch
-    order), i.e. its rows show up after the watermark has advanced a
-    full week past them.
+    """Watermark LATE-DATA DROP, certified end to end — the one
+    watermark behavior the windowed shadows don't exercise: every other
+    shadow replays batches in event-time order, so nothing is ever
+    late. Here the staged micro-batch sequence is replayed with slice
+    ``late_file`` arriving LAST (arrival order is file mtime — the
+    bounded source's batch order), i.e. its rows show up after the
+    watermark has advanced a full week past them.
 
     Semantics pinned: an append-mode hourly aggregation with a
     0-second watermark delay must (a) DROP every row of the late slice
@@ -1015,86 +897,48 @@ def late_data_shadow(
     value pin (output == on-time-only aggregation), so a semantics
     drift fails loudly rather than shifting values.
 
-    Arrival-lag note (measured, r11): the watermark used to FILTER a
-    batch lags the reported watermark by one batch, so a slice only
-    one batch out of order is NOT dropped — the late slice here
-    arrives multiple batches after newer data, which is the regime the
-    drop guarantee covers (and the realistic one: a partition replayed
+    Arrival-lag note (measured): the watermark used to FILTER a batch
+    lags the reported watermark by one batch, so a slice only one
+    batch out of order is NOT dropped — the late slice here arrives
+    multiple batches after newer data, which is the regime the drop
+    guarantee covers (and the realistic one: a partition replayed
     hours late, not a boundary race)."""
-    import json
-    import shutil
-    import tempfile
-    import time
+    from tdei_extract_load_service_spark.functions import timestamps as TS
 
     if not 0 < late_file < n_batches - 1:
         raise ValueError("late_file must be an interior slice")
-    stage = stage_event_stream(spark, sf_dir, n_batches)
-    files = sorted(f for f in os.listdir(stage) if f.endswith(".parquet"))
-    schema = spark.read.parquet(stage).schema
-    name = _query_name()
-    ckpt = f"/tmp/spark_graft_stream_ckpt/{name}"
-    live = tempfile.mkdtemp(prefix="stream_late_live_")
-    out_dir = tempfile.mkdtemp(prefix="stream_late_out_")
-    order = [f for i, f in enumerate(files) if i != late_file]
-    order.append(files[late_file])
-    base = time.time() - 1000
-    for i, f in enumerate(order):
-        dst = os.path.join(live, f)
-        shutil.copy2(os.path.join(stage, f), dst)
-        os.utime(dst, (base + i * 10, base + i * 10))
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(live)
-    )
-    ev = src.withColumn(
-        "ts",
-        F.from_utc_timestamp(
-            F.col("ts").cast("timestamp"), F.current_timezone()
-        ),
-    )
-    agg = (
-        ev.withWatermark("ts", "0 seconds")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-    )
-    q = (
-        agg.select(F.col("w.start").alias("ws"), "event_type", "n_events")
-        .writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if metrics is not None:
-        dropped = 0
-        for p in q.recentProgress:
-            d = p if isinstance(p, dict) else json.loads(p.json)
-            for op in d.get("stateOperators", []):
-                dropped += op.get("numRowsDroppedByWatermark", 0)
-        metrics["rows_dropped_by_watermark"] = dropped
-        metrics["late_file_rows"] = spark.read.parquet(
-            os.path.join(stage, files[late_file])
-        ).count()
-    from tdei_extract_load_service_spark.functions import timestamps as TS
 
-    result = (
-        spark.read.parquet(out_dir)
-        .select(
-            TS.normalize_ts(
-                F.col("ws"), "yyyy-MM-dd'T'HH:mm:ss"
-            ).alias("window_start"),
-            "event_type",
-            "n_events",
+    def query(source, out) -> DataFrame:
+        return (
+            _instant(source())
+            .withWatermark("ts", "0 seconds")
+            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            .agg(F.count("*").alias("n_events"))
+            .select(F.col("w.start").alias("ws"), "event_type", "n_events")
         )
-        .orderBy(F.col("window_start").asc(), F.col("event_type").asc())
-        .localCheckpoint(eager=True)
+
+    stage = stage_event_stream(spark, sf_dir, n_batches)
+    files = sorted(os.listdir(stage))
+    late = files.pop(late_file)
+    windows, (progress,) = _replay(
+        spark, stage, query, "append", sink="parquet", arrivals=[*files, late]
     )
-    shutil.rmtree(live, ignore_errors=True)
-    shutil.rmtree(out_dir, ignore_errors=True)
-    return result
+    if metrics is not None:
+        metrics["rows_dropped_by_watermark"] = sum(
+            op.get("numRowsDroppedByWatermark", 0)
+            for p in progress
+            for op in p.get("stateOperators", [])
+        )
+        metrics["late_file_rows"] = spark.read.parquet(
+            os.path.join(stage, late)
+        ).count()
+    return windows.select(
+        TS.normalize_ts(F.col("ws"), "yyyy-MM-dd'T'HH:mm:ss").alias(
+            "window_start"
+        ),
+        "event_type",
+        "n_events",
+    ).orderBy(F.col("window_start").asc(), F.col("event_type").asc())
 
 
 def merge_shadow(
@@ -1102,14 +946,13 @@ def merge_shadow(
     sf_dir: str,
     n_batches: int = 4,
 ) -> DataFrame:
-    """Streaming MERGE/upsert into a warehouse table — the TWELFTH
-    streaming certification, and the incremental dual of the sixth
-    (sink_shadow replaces a complete-mode snapshot per batch; here the
-    state lives IN THE TABLE and each micro-batch evolves it through
-    ``streaming/sink.manifest_merge_sink`` -> ``operators/cdc.
-    merge_upsert`` — the Delta-style ``foreachBatch`` streaming-upsert
-    recipe, which no prior cert exercises because every other sink is
-    append or snapshot-replace).
+    """Streaming MERGE/upsert into a warehouse table — the incremental
+    dual of sink_shadow (which replaces a complete-mode snapshot per
+    batch; here the state lives IN THE TABLE and each micro-batch
+    evolves it through ``streaming/sink.manifest_merge_sink`` ->
+    ``operators/cdc.merge_upsert`` — the Delta-style ``foreachBatch``
+    streaming-upsert recipe, which no other shadow exercises because
+    every other sink is append or snapshot-replace).
 
     Harness: the customer snapshot seeds the table (one manifest
     transaction, dataset key 'seed'); the staged event micro-batches
@@ -1141,58 +984,43 @@ def merge_shadow(
         manifest_merge_sink,
     )
 
-    stage = stage_event_stream(spark, sf_dir, n_batches)
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="stream_merge_shadow_")
-    seed = (
-        spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
-        .select(
-            F.col("c_custkey").alias("user_id"),
-            F.col("c_acctbal").alias("balance"),
+    def seeded_sink(out: str):
+        seed = spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
+        with ManifestTxn(out) as txn:
+            txn.write(
+                "balances",
+                seed.select(
+                    F.col("c_custkey").alias("user_id"),
+                    F.col("c_acctbal").alias("balance"),
+                ).coalesce(1),
+                "seed",
+            )
+        return manifest_merge_sink(
+            out,
+            "balances",
+            "user_id",
+            ("ts", "event_id"),
+            "op",
+            "balance",
+            delete_op="error",
         )
-    )
-    with ManifestTxn(root) as txn:
-        txn.write("balances", seed.coalesce(1), "seed")
-    schema = spark.read.parquet(stage).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-        .select(
+
+    stage = stage_event_stream(spark, sf_dir, n_batches)
+    table, _ = _replay(
+        spark,
+        stage,
+        lambda source, out: source().select(
             "user_id",
             "ts",
             "event_id",
             F.col("event_type").alias("op"),
             F.col("value").alias("balance"),
-        )
+        ),
+        "append",
+        sink=seeded_sink,
+        read=lambda out: read_table(spark, out, "balances"),
     )
-    name = _query_name()
-    q = (
-        src.writeStream.foreachBatch(
-            manifest_merge_sink(
-                root,
-                "balances",
-                "user_id",
-                ("ts", "event_id"),
-                "op",
-                "balance",
-                delete_op="error",
-            )
-        )
-        .outputMode("append")
-        .option(
-            "checkpointLocation", f"/tmp/spark_graft_stream_ckpt/{name}"
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return (
-        read_table(spark, root, "balances")
-        .select("user_id", "balance")
-        .orderBy(F.col("user_id").asc())
-    )
+    return table.select("user_id", "balance").orderBy(F.col("user_id").asc())
 
 
 def stage_document_stream(
@@ -1220,8 +1048,7 @@ def dedup_incremental_shadow(
     sf_dir: str,
     n_batches: int = 4,
 ) -> DataFrame:
-    """Streaming incremental dedup — the THIRTEENTH streaming
-    certification (VERDICT r12 #6b): a document stream feeds the stored
+    """Streaming incremental dedup: a document stream feeds the stored
     exact-dedup survivor state through ``foreachBatch`` →
     ``streaming/sink.dedup_merge_sink`` → ``operators/dedup.
     merge_survivor_states`` — closing the loop between the streaming
@@ -1243,8 +1070,6 @@ def dedup_incremental_shadow(
     ``merge_shadow`` there is no prefix-order caveat to argue: min/+
     over hash groups compose under ANY partition.
     """
-    import tempfile
-
     from tdei_extract_load_service_spark.sinks.manifest import read_table
     from tdei_extract_load_service_spark.streaming.sink import (
         DEDUP_STATE_SCHEMA,
@@ -1252,29 +1077,17 @@ def dedup_incremental_shadow(
     )
 
     stage = stage_document_stream(spark, sf_dir, n_batches)
-    root = tempfile.mkdtemp(prefix="stream_dedup_incr_")
-    schema = spark.read.parquet(stage).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-        .select("doc_id", "text")
+    state, _ = _replay(
+        spark,
+        stage,
+        lambda source, out: source().select("doc_id", "text"),
+        "append",
+        sink=lambda out: dedup_merge_sink(out, "dedup_state", "doc_id", ["text"]),
+        read=lambda out: read_table(
+            spark, out, "dedup_state", schema=DEDUP_STATE_SCHEMA
+        ),
     )
-    name = _query_name()
-    q = (
-        src.writeStream.foreachBatch(
-            dedup_merge_sink(root, "dedup_state", "doc_id", ["text"])
-        )
-        .outputMode("append")
-        .option("checkpointLocation", f"/tmp/spark_graft_stream_ckpt/{name}")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return (
-        read_table(spark, root, "dedup_state", schema=DEDUP_STATE_SCHEMA)
-        .orderBy(F.col("content_hash").asc())
-    )
+    return state.orderBy(F.col("content_hash").asc())
 
 
 def drift_history_shadow(
@@ -1285,9 +1098,9 @@ def drift_history_shadow(
     dim: int = 64,
     min_mean_cosine_fp: int = 300_000,
 ) -> DataFrame:
-    """Streaming drift-history maintenance — the FOURTEENTH streaming
-    certification: an embedding stream feeds the stored drift history
-    through ``foreachBatch`` → ``streaming/sink.drift_history_sink`` →
+    """Streaming drift-history maintenance: an embedding stream feeds
+    the stored drift history through ``foreachBatch`` →
+    ``streaming/sink.drift_history_sink`` →
     ``operators/similarity.drift_history_stats``, and the alert rules
     evaluate over the streamed table — closing the loop between the
     streaming story and the MONITORING story
@@ -1309,8 +1122,6 @@ def drift_history_shadow(
     stored index pins), which is exactly the SQL the catalog oracle
     states — streamed == recomputed, value-certified every round.
     """
-    import tempfile
-
     from tdei_extract_load_service_spark.operators.similarity import (
         drift_alerts_over_history,
         ivf_centroids,
@@ -1335,42 +1146,28 @@ def drift_history_shadow(
         key_suffix=":driftsnap",
         split_expr=f"vec_id % {n_snapshots}",
     )
-    root = tempfile.mkdtemp(prefix="stream_drift_hist_")
-    schema = spark.read.parquet(stage).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-        .select("vec_id", "embedding")
+    alerts, _ = _replay(
+        spark,
+        stage,
+        lambda source, out: source().select("vec_id", "embedding"),
+        "append",
+        sink=lambda out: drift_history_sink(
+            out,
+            "drift_history",
+            "vec_id",
+            "embedding",
+            lambda c: c % n_snapshots,
+            model_rows,
+            dim,
+        ),
+        read=lambda out: drift_alerts_over_history(
+            read_table(spark, out, "drift_history", schema=DRIFT_HISTORY_SCHEMA),
+            cell_ids,
+            snapshots=list(range(n_snapshots)),
+            min_mean_cosine_fp=min_mean_cosine_fp,
+        ),
     )
-    name = _query_name()
-    q = (
-        stream.writeStream.foreachBatch(
-            drift_history_sink(
-                root,
-                "drift_history",
-                "vec_id",
-                "embedding",
-                lambda c: c % n_snapshots,
-                model_rows,
-                dim,
-            )
-        )
-        .outputMode("append")
-        .option("checkpointLocation", f"/tmp/spark_graft_stream_ckpt/{name}")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    hist = read_table(
-        spark, root, "drift_history", schema=DRIFT_HISTORY_SCHEMA
-    )
-    return drift_alerts_over_history(
-        hist,
-        cell_ids,
-        snapshots=list(range(n_snapshots)),
-        min_mean_cosine_fp=min_mean_cosine_fp,
-    )
+    return alerts
 
 
 def bm25_index_shadow(
@@ -1380,13 +1177,13 @@ def bm25_index_shadow(
     n_batches: int = 4,
     k: int = 10,
 ) -> DataFrame:
-    """Streaming BM25 index maintenance — the FIFTEENTH streaming
-    certification: a document stream feeds the stored inverted index
-    through ``foreachBatch`` → ``streaming/sink.bm25_index_sink`` →
-    ``operators/text.bm25_batch_stats``, then the query serves from the
-    STREAMED postings/doclen tables — closing the loop between the
-    streaming story and the SEARCH story (``build_bm25_index``'s
-    nightly build run continuously).
+    """Streaming BM25 index maintenance: a document stream feeds the
+    stored inverted index through ``foreachBatch`` →
+    ``streaming/sink.bm25_index_sink`` → ``operators/text.
+    bm25_batch_stats``, then the query serves from the STREAMED
+    postings/doclen tables — closing the loop between the streaming
+    story and the SEARCH story (``build_bm25_index``'s nightly build
+    run continuously).
 
     Harness: the documents fixture replays as ``n_batches`` file-source
     micro-batches (doc_id-range split — NOT load-bearing: per-batch
@@ -1403,10 +1200,7 @@ def bm25_index_shadow(
     BIT-IDENTICAL to the full-corpus query — which is exactly the SQL
     the catalog oracle states: streamed == recomputed, value-certified
     every round."""
-    import tempfile
-
     from tdei_extract_load_service_spark.operators.text import _bm25_rank
-    from tdei_extract_load_service_spark.session import persist_scoped
     from tdei_extract_load_service_spark.sinks.manifest import read_table
     from tdei_extract_load_service_spark.streaming.sink import (
         BM25_DOCLEN_SCHEMA,
@@ -1414,39 +1208,30 @@ def bm25_index_shadow(
         bm25_index_sink,
     )
 
-    stage = stage_document_stream(spark, sf_dir, n_batches)
-    root = tempfile.mkdtemp(prefix="stream_bm25_idx_")
-    schema = spark.read.parquet(stage).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-        .select("doc_id", "text")
-    )
-    name = _query_name()
-    q = (
-        src.writeStream.foreachBatch(
-            bm25_index_sink(root, "bm25_postings", "bm25_doclen", "doc_id", "text")
+    def serve(out: str) -> DataFrame:
+        postings = read_table(
+            spark, out, "bm25_postings", schema=BM25_POSTINGS_SCHEMA
         )
-        .outputMode("append")
-        .option("checkpointLocation", f"/tmp/spark_graft_stream_ckpt/{name}")
-        .trigger(availableNow=True)
-        .start()
+        dl = read_table(spark, out, "bm25_doclen", schema=BM25_DOCLEN_SCHEMA)
+        scal = dl.agg(
+            F.count("*").alias("n_docs"),
+            (
+                F.sum(F.col("dl").cast("decimal(18,6)")).cast("double")
+                / F.count("*")
+            ).alias("avgdl"),
+        )
+        tf = postings.where(F.col("term").isin(list(terms)))
+        return _bm25_rank(tf, dl, scal, k=k, k1=1.2, b=0.75)
+
+    stage = stage_document_stream(spark, sf_dir, n_batches)
+    ranked, _ = _replay(
+        spark,
+        stage,
+        lambda source, out: source().select("doc_id", "text"),
+        "append",
+        sink=lambda out: bm25_index_sink(
+            out, "bm25_postings", "bm25_doclen", "doc_id", "text"
+        ),
+        read=serve,
     )
-    q.awaitTermination()
-    postings = read_table(
-        spark, root, "bm25_postings", schema=BM25_POSTINGS_SCHEMA
-    )
-    dl = read_table(spark, root, "bm25_doclen", schema=BM25_DOCLEN_SCHEMA)
-    scal = dl.agg(
-        F.count("*").alias("n_docs"),
-        (
-            F.sum(F.col("dl").cast("decimal(18,6)")).cast("double")
-            / F.count("*")
-        ).alias("avgdl"),
-    )
-    tf = persist_scoped(
-        postings.where(F.col("term").isin(list(terms))),
-        "streaming.bm25_index_shadow.tf",
-    )
-    return _bm25_rank(tf, dl, scal, k=k, k1=1.2, b=0.75)
+    return ranked

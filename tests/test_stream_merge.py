@@ -7,7 +7,6 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-import uuid
 
 import pandas as pd
 import pytest
@@ -229,7 +228,7 @@ def test_merge_sink_tolerates_non_batch_dataset_keys(spark, sink):
         assert _state(spark, root) == {1: 11.0}
 
 
-def test_merge_shadow_drain_resume_converges(spark):
+def test_merge_shadow_drain_resume_converges(spark, tmp_path):
     """Kill the stream after two micro-batches, resume on the SAME
     checkpoint with the full stage visible: offsets skip the committed
     prefix and the final table equals the uninterrupted run's."""
@@ -251,12 +250,13 @@ def test_merge_shadow_drain_resume_converges(spark):
         f for f in os.listdir(full_stage) if f.endswith(".parquet")
     )
     assert len(files) == 4
-    part_stage = tempfile.mkdtemp(prefix="merge_resume_stage_")
+    part_stage = str(tmp_path / "stage")
+    os.makedirs(part_stage)
     for f in files[:2]:
         shutil.copy2(
             os.path.join(full_stage, f), os.path.join(part_stage, f)
         )
-    root = tempfile.mkdtemp(prefix="merge_resume_root_")
+    root = str(tmp_path / "root")
     seed = spark.read.parquet(os.path.join(sf_dir, "customer.parquet")).select(
         F.col("c_custkey").alias("user_id"),
         F.col("c_acctbal").alias("balance"),
@@ -264,7 +264,7 @@ def test_merge_shadow_drain_resume_converges(spark):
     txn = ManifestTxn(root)
     txn.write("balances", seed.coalesce(1), "seed")
     txn.commit()
-    ckpt = f"/tmp/spark_graft_stream_ckpt/merge_resume_{uuid.uuid4().hex[:12]}"
+    ckpt = str(tmp_path / "ckpt")
     schema = spark.read.parquet(full_stage).schema
 
     def _leg():

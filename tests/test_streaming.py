@@ -609,6 +609,28 @@ def test_unparseable_request_files_publish_nothing(spark, tmp_path):
     ]
 
 
+def test_pretty_printed_request_file_gets_a_response(spark, tmp_path):
+    """A request file is one JSON document, whatever its layout: a
+    pretty-printed request and a single-line one publish one response
+    each."""
+    request_dir = tmp_path / "req"
+    request_dir.mkdir()
+    pretty = _request("m1", "/nowhere.zip", "ds-p1", data_type="flex")
+    (request_dir / "pretty.json").write_text(json.dumps(pretty, indent=2))
+    line = _request("m2", "/nowhere.zip", "ds-p2", data_type="flex")
+    (request_dir / "line.json").write_text(json.dumps(line))
+    response_dir = tmp_path / "resp"
+    run_queue_consumer(
+        spark,
+        request_dir=str(request_dir),
+        response_dir=str(response_dir),
+        warehouse=str(tmp_path / "wh"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    responses = [json.loads(p.read_text()) for p in response_dir.iterdir()]
+    assert sorted(r["messageId"] for r in responses) == ["m1", "m2"]
+
+
 def _write_requests(request_dir, bodies) -> None:
     """One request file per body, in arrival (modification-time) order."""
     import time as _time

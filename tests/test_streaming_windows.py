@@ -1057,3 +1057,49 @@ class TestLateDataShadow:
         ).collect()
         # slice 6 arrives after slice 7 only — one batch of lag
         assert metrics["rows_dropped_by_watermark"] == 0
+
+
+class TestShadowRunCleanup:
+    """A shadow run leaves nothing behind: no checkpoint, live copy,
+    sink output or manifest root in the temp directory, and no
+    memory-sink temp view in the catalog."""
+
+    def test_shadow_runs_leave_no_temp_entries_or_views(self, spark, tmp_path):
+        import os
+        import tempfile
+
+        from tdei_extract_load_service_spark.streaming.shadow import (
+            dedup_shadow,
+            restart_shadow,
+            sink_shadow,
+            stage_event_stream,
+        )
+
+        sf = "/root/testdata/sf0.001"
+        # warm the session: the stage cache and Spark's once-per-process
+        # temp entries (artifacts-*, liblz4-java-*, snappy-*) exist before
+        # the snapshot
+        stage_event_stream(spark, sf, n_batches=4)
+        warm = spark.range(100).groupBy((F.col("id") % 4).alias("k")).count()
+        warm.write.parquet(str(tmp_path / "warm"))
+        spark.read.parquet(str(tmp_path / "warm")).collect()
+
+        ckpt_root = "/tmp/spark_graft_stream_ckpt"
+
+        def entries() -> tuple[set, set]:
+            tmp = set(os.listdir(tempfile.gettempdir()))
+            ckpts = set(os.listdir(ckpt_root)) if os.path.isdir(ckpt_root) else set()
+            return tmp - {"spark_graft_stream_stage"}, ckpts
+
+        def views() -> set:
+            return {t.name for t in spark.catalog.listTables()}
+
+        tmp0, ckpts0 = entries()
+        views0 = views()
+        assert dedup_shadow(spark, sf, n_batches=4).count() > 0
+        assert sink_shadow(spark, sf, n_batches=4).count() > 0
+        assert restart_shadow(spark, sf, n_batches=4, stop_after=2).count() > 0
+        tmp1, ckpts1 = entries()
+        assert tmp1 - tmp0 == set()
+        assert ckpts1 - ckpts0 == set()
+        assert views() - views0 == set()
